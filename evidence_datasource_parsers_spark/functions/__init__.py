@@ -3,88 +3,3 @@
 Everything here returns ``pyspark.sql.Column`` expressions composed from
 built-in functions so they stay inside whole-stage codegen; no Python UDFs.
 """
-
-from evidence_datasource_parsers_spark.functions.hashing import (  # noqa: F401
-    minhash_base,
-    portable_hash,
-)
-from evidence_datasource_parsers_spark.functions.pvalues import (  # noqa: F401
-    pvalue_mantissa_exponent,
-)
-from evidence_datasource_parsers_spark.functions.textstats import (  # noqa: F401
-    dominant_script,
-    duplicate_line_fraction,
-    punct_ratio,
-    repetition_signals,
-    script_count,
-    stopword_ratio,
-    token_count,
-    tokens,
-    top_ngram_char_fraction,
-)
-from evidence_datasource_parsers_spark.functions.quality import (  # noqa: F401
-    lexical_quality_score,
-    placeholder_weight_table,
-    score_with_weight_table,
-)
-from evidence_datasource_parsers_spark.functions.urls import (  # noqa: F401
-    canonicalize_url,
-    dedupe_by_url,
-    parse_sitemaps,
-    registrable_domain,
-    robots_directives,
-    schedule_fetches,
-)
-from evidence_datasource_parsers_spark.functions.mp4 import (  # noqa: F401
-    mp4_sample_ranges,
-    mp4_stream_bytes,
-    parse_mp4,
-)
-from evidence_datasource_parsers_spark.functions.audiometa import (  # noqa: F401
-    parse_flac,
-    parse_mp3,
-    parse_ogg,
-)
-from evidence_datasource_parsers_spark.functions.imagemeta import (  # noqa: F401
-    parse_avif,
-    parse_webp,
-)
-from evidence_datasource_parsers_spark.functions.charset import (  # noqa: F401
-    decode_payload,
-    decode_text_frame,
-    repair_mojibake,
-    sniff_charset,
-)
-from evidence_datasource_parsers_spark.functions.html import (  # noqa: F401
-    extract_links,
-    looks_like_html,
-    strip_html,
-)
-from evidence_datasource_parsers_spark.functions.pdf import (  # noqa: F401
-    encode_pdf,
-    parse_pdf,
-    pdf_text_frame,
-)
-from evidence_datasource_parsers_spark.functions.tfidf import (  # noqa: F401
-    bm25_query_scores,
-    term_relevance,
-)
-from evidence_datasource_parsers_spark.functions.bpe import (  # noqa: F401
-    apply_bpe,
-    bpe_token_count,
-    learn_bpe_merges,
-)
-from evidence_datasource_parsers_spark.functions.ngram_lm import (  # noqa: F401
-    doc_perplexity,
-    train_ngram_lm,
-)
-from evidence_datasource_parsers_spark.functions.textnorm import (  # noqa: F401
-    dedup_key,
-    normalize_unicode,
-    strip_accents,
-)
-from evidence_datasource_parsers_spark.functions.fingerprint import (  # noqa: F401
-    document_fingerprints,
-    fingerprint_documents,
-    fingerprint_overlap,
-)

@@ -28,8 +28,8 @@ module is the step between the WARC byte rows and every text operator:
      double-encoded text.  Vectorized Arrow ``pandas_udf``.
 
 Parity note: the reference engine ingests pre-decoded JSON and never
-faces raw bytes; this tier exists because the crawl sources
-(sources/warc.py) do.  Detection order follows the HTML5 encoding sniff
+faces raw bytes; this tier exists because raw crawl payloads
+do.  Detection order follows the HTML5 encoding sniff
 (BOM > transport > in-band declaration > content heuristic).
 """
 

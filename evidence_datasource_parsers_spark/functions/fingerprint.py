@@ -143,7 +143,7 @@ def shared_fingerprint_pairs(
     (shuffle key = the 43-bit hash — uniform), count per pair.  By the
     winnowing guarantee a shared run of ≥ w+k−1 characters WILL collide
     here, so this finds copied passages that word-level shingles
-    (passage_dedup) miss under reflowing/punctuation edits.  Ubiquitous
+    miss under reflowing/punctuation edits.  Ubiquitous
     boilerplate hashes fan out quadratically — at corpus scale drop
     hashes with document-frequency above a cap first (the same heavy-
     hitter guard as every inverted index); ``max_doc_freq`` is that cap.
@@ -188,8 +188,8 @@ def fingerprint_documents(
     way they do plain column references) — measured O(n²) blowup: ~6 s
     per 300-char document, vs microseconds here.  The same lesson as the
     ANN cosine kernels, one layer deeper.  Explode ``out_col`` and group
-    by hash to find cross-document shared regions (the passage_dedup
-    shape, at character granularity)."""
+    by hash to find cross-document shared regions at character
+    granularity."""
     import re
 
     from pyspark.sql.functions import pandas_udf

@@ -72,8 +72,8 @@ def looks_like_html(text: Column | str) -> Column:
 
 
 def extract_links(text: Column | str) -> Column:
-    """array<string> of href targets from anchor tags — the input to the
-    link graph (operators/pagerank.domain_authority).
+    """array<string> of href targets from anchor tags — the input to a
+    link graph or to the crawl frontier (pipelines/crawl_frontier).
 
     Native regexp_extract_all over ``<a ... href="...">`` (single or
     double quotes, case-insensitive, whitespace-tolerant); relative,

@@ -1,8 +1,7 @@
 """Minimal PDF text extraction for crawl ingestion (stdlib only).
 
 ``application/pdf`` is the largest non-HTML text slice of a real crawl;
-this tier turns those payloads into ``documents``-shaped text rows the
-same way functions/html.py does for pages.  It implements a tolerant
+this tier turns those payloads into ``documents``-shaped text rows.  It implements a tolerant
 subset of ISO 32000-1 (the open PDF spec):
 
   * **object scan, not xref trust** — crawled PDFs routinely carry

@@ -648,7 +648,7 @@ def schedule_fetches(
     them with :func:`filter_urls`).
 
     ``recrawl_share`` (requires ``max_urls_per_domain`` and a boolean
-    ``is_recrawl`` column, see ``plan_fetch_batch``'s freshness probe)
+    ``is_recrawl`` column)
     splits each domain's budget: re-crawls get at most
     ``floor(share × max)`` slots and new URLs the rest, with either class
     borrowing slots the other leaves unfilled — so a burst of TTL
@@ -697,8 +697,7 @@ def schedule_fetches(
             raise ValueError("recrawl_share requires max_urls_per_domain")
         if "is_recrawl" not in out.columns:
             raise ValueError(
-                "recrawl_share needs an is_recrawl column (produced by "
-                "plan_fetch_batch's freshness probe)"
+                "recrawl_share needs a boolean is_recrawl column"
             )
         r_cap = int(float(recrawl_share) * max_urls_per_domain)
         n_cap = max_urls_per_domain - r_cap

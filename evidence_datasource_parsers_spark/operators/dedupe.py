@@ -535,9 +535,7 @@ class IncrementalExactResult(NamedTuple):
     store) — persist the on-disk store by APPENDING ``delta``, never by
     rewriting ``store``: the sides are disjoint by construction (the
     anti-join removed every carried hash from the batch), so append-only
-    advance is exact and O(batch) instead of O(store) per round — the
-    same discipline as the frontier seen store
-    (pipelines/crawl_frontier.advance_seen_store)."""
+    advance is exact and O(batch) instead of O(store) per round."""
 
     fresh: DataFrame
     store: DataFrame

@@ -138,9 +138,19 @@ def ivf_topk(
     e.g. a slice of ``similarity.corpus_index_rows`` or a persisted
     :func:`assign_cells` index — sharing one corpus assignment pass
     between consumers instead of re-running the cell kernel per search.
-    The assignment MUST come from the same centroids."""
+    The assignment MUST come from the same centroids; a frame missing any
+    of the three columns raises ``ValueError``."""
     probe = _cells_udf(centroids, n_probe)
     if corpus_assigned is not None:
+        missing = sorted(
+            {corpus_id, "__cv", "__cell"} - set(corpus_assigned.columns)
+        )
+        if missing:
+            raise ValueError(
+                f"ivf_topk: corpus_assigned lacks columns {missing}; it "
+                f"must carry ({corpus_id}, __cv, __cell) rows assigned "
+                "against the SAME centroids passed here"
+            )
         c = corpus_assigned
     else:
         assign = _cells_udf(centroids, 1)

@@ -61,8 +61,8 @@ def key_skew_report(
     sample_fraction: float | None = None,
 ) -> DataFrame:
     """MEASURE the skew of a would-be shuffle on ``keys`` before paying
-    for it — the measurement half :func:`salted_join` never had (the
-    layout-audit pattern: measure, then recommend, never guess).
+    for it — the measurement half :func:`salted_join` never had
+    (measure, then recommend, never guess).
 
     One map-side-combined aggregation over the keys, then the top
     ``top`` heaviest keys with, per key:
@@ -129,8 +129,7 @@ def skew_advice(
       capped at ``max_salts`` — enough to spread it back to ~1 quantum).
 
     Driver-side by design: the report is top-N rows, bounded by its
-    ``top`` argument, never by the data (same driver-tier contract as
-    ``layout_advice``).
+    ``top`` argument, never by the data.
     """
     import math
 

@@ -2,9 +2,9 @@
 formulation (Lee et al. 2022, "Deduplicating Training Data Makes Language
 Models Better") re-expressed Spark-first.
 
-operators/passage_dedup.py removes boilerplate at fixed non-overlapping
-window granularity — fast, but a duplicated passage that straddles two
-windows survives.  This module is the EXACT formulation at word-L-gram
+Removing boilerplate at fixed non-overlapping window granularity is
+fast, but a duplicated passage that straddles two windows survives.  This
+module is the EXACT formulation at word-L-gram
 granularity: a token is removed iff it sits inside some length-L token
 window whose content occurs at least ``min_occurrences`` times in the
 corpus.  That is precisely the token set covered by duplicated substrings

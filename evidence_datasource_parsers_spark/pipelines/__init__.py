@@ -6,15 +6,3 @@ These are *capability* pipelines: they run on fixture-shaped inputs (see
 FIXTURES.md / tests) rather than the reference's live biomedical feeds, and
 exercise every operator family of SURVEY §2 in its original composition.
 """
-
-from evidence_datasource_parsers_spark.pipelines.slapenrich import (  # noqa: F401
-    slapenrich_evidence,
-)
-from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (  # noqa: F401
-    RefreshResult,
-    refresh_corpus_batch,
-)
-from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (  # noqa: F401
-    FrontierResult,
-    plan_fetch_batch,
-)

@@ -301,8 +301,7 @@ def plan_fetch_batch(
     # ready KEEPS url_hash: a caller that materializes the fetch list
     # advances the on-disk store with advance_seen_store(materialized)
     # instead of re-running the whole dedup/gate/schedule lineage that
-    # `store` otherwise recomputes — the CLI `frontier` command does
-    # exactly that
+    # `store` otherwise recomputes
     return FrontierResult(ready=ready, store=store)
 
 
@@ -462,7 +461,7 @@ def compact_seen_store(
                 "(_bucket_spec.json): compacting it without store_table "
                 "would rewrite it as plain parquet while its catalog "
                 "name still claims the bucket layout. Pass store_table "
-                "(CLI: --table) to keep the identity."
+                "to keep the identity."
             )
     df = read_seen_store(spark, store_dir)
     if TS_COL in df.columns:

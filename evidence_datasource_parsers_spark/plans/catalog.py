@@ -550,8 +550,7 @@ def q11(spark: SparkSession, sf: str) -> DataFrame:
     structure; the final round(…, 6) absorbs libm's 1-ulp ln() spread
     between the JVM and DuckDB.
 
-    ``zipf_slope`` (constant column) is the corpus-health number from
-    operators/profiling.token_distribution_profile: the log-log
+    ``zipf_slope`` (constant column) is the corpus-health number: the log-log
     least-squares Zipf exponent over the ranked token frequencies.  Float
     SUMS are partition-order-dependent, so the fit's accumulators go
     through exact DECIMAL(28,12) sums of per-row 12-dp-rounded ln values —
@@ -1010,8 +1009,7 @@ def q25(spark: SparkSession, sf: str) -> DataFrame:
     bench=True,
 )
 def q27(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling-window aggregation (batch analog of the Structured-Streaming
-    path in streaming/events.py) — exact cents sum."""
+    """Tumbling-window aggregation — exact cents sum."""
     e = load(spark, sf, "events")
     return (
         e.groupBy(

@@ -1610,8 +1610,7 @@ SPAN_MIN_TOKENS = 8
 )
 def q63(spark: SparkSession, sf: str) -> DataFrame:
     """Exact duplicated-span dedup — Lee et al. 2022 substring dedup at
-    word-{SPAN_MIN_TOKENS}-gram anchor granularity (operators/span_dedup.py;
-    the exact formulation passage_dedup.py approximates with fixed windows).
+    word-{SPAN_MIN_TOKENS}-gram anchor granularity (operators/span_dedup.py).
 
     Leg 1 (src='span'): every maximal duplicated token span per document —
     0-based inclusive word indices — value-checking the full anchor →

@@ -81,7 +81,7 @@ def get_spark(
     # not set: setting the conf trips a Spark 4 deprecation warning.)
     if (
         spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        == "true"
+        .lower() == "true"
     ):
         raise RuntimeError(
             "spark.sql.parser.escapedStringLiterals=true is unsupported: "

@@ -1,41 +1,2 @@
-from evidence_datasource_parsers_spark.sources.obo import (  # noqa: F401
-    OboOntology,
-    phenotype_class_map,
-)
-from evidence_datasource_parsers_spark.sources.owl import (  # noqa: F401
-    load_ontology,
-    parse_owl_file,
-    parse_owl_text,
-)
-from evidence_datasource_parsers_spark.sources.readers import read_path  # noqa: F401
-from evidence_datasource_parsers_spark.sources.sinks import (  # noqa: F401
-    corpus_checksum,
-    read_bucketed_store,
-    write_bucketed_store,
-    write_evidence_strings,
-    write_output,
-    write_with_manifest,
-)
-from evidence_datasource_parsers_spark.sources.arc import (  # noqa: F401
-    arc_documents,
-    iter_arc_records,
-    read_arc,
-)
-from evidence_datasource_parsers_spark.sources.cdx import (  # noqa: F401
-    best_capture_per_digest,
-    fetch_captures,
-    surt_key,
-    warc_cdx,
-)
-from evidence_datasource_parsers_spark.sources.warc import (  # noqa: F401
-    iter_warc_records,
-    read_warc,
-    stream_warc_documents,
-    warc_documents,
-    warc_media,
-)
-from evidence_datasource_parsers_spark.sources.webdataset import (  # noqa: F401
-    group_samples,
-    read_webdataset,
-    write_webdataset,
-)
+"""Readers, sinks and ontology/REST sources.  Import each from its leaf
+module."""

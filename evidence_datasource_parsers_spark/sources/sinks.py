@@ -343,8 +343,7 @@ def append_bucketed_store(
     validates and refuses a mismatch); each append adds one file set per
     bucket, so schedule an occasional compaction (re-write via
     :func:`write_bucketed_store`) on an explicit cadence when file counts
-    grow — the same advance/compaction split as the frontier seen store
-    (pipelines/crawl_frontier.py).  Correctness needs the delta to be
+    grow.  Correctness needs the delta to be
     DISJOINT from the stored rows; every incremental operator's
     ``delta`` field satisfies that by construction.
 

@@ -308,8 +308,7 @@ def warc_documents(
     (functions/urls.py — tracking params, fragments, default ports gone),
     ``doc_id`` the portable 60-bit hash of the RECORD id, so re-parsing
     the same archives yields identical ids (and downstream
-    split/shard/dedup decisions) on any engine.  Feed the result straight
-    to ``pipelines.corpus_refresh.refresh_corpus_batch``.
+    split/shard/dedup decisions) on any engine.
 
     ``main_content=True`` swaps the conservative expression-tier
     ``strip_html`` for the readability tier

@@ -1,4 +1,2 @@
-from evidence_datasource_parsers_spark.streaming.events import (  # noqa: F401
-    read_event_stream,
-    windowed_event_counts,
-)
+"""Structured Streaming ``foreachBatch`` sinks that advance the persistent
+incremental stores (``incremental.py``)."""

@@ -1,9 +1,8 @@
 """Streaming ingestion against the persistent dedup store.
 
-``dedupe_stream_by_content`` (events.py) is watermark-bounded: it forgets
-every hash older than the horizon, which is correct for in-flight duplicate
-events but useless against a re-crawl arriving days later.  This module
-closes the loop between Structured Streaming and the batch-side
+A watermark-bounded stream dedup forgets every hash older than the
+horizon, which is correct for in-flight duplicate events but useless
+against a re-crawl arriving days later.  This module closes the loop between Structured Streaming and the batch-side
 fingerprint-store pattern (``operators.dedupe.incremental_exact_dedupe``):
 each micro-batch is deduped against the ON-DISK store that batch refreshes
 also maintain, so the live stream and nightly backfills share ONE notion of

@@ -155,66 +155,3 @@ def test_warc_audio_crawl_loop(spark, tmp_path):
     clip = out["http://a.example/clip.wav"]
     assert clip["sample_rate"] == 8000 and abs(clip["duration_s"] - 1.0) < 0.01
     assert out["http://a.example/x.mp3"]["sample_rate"] is None  # NULL row
-
-
-def test_refresh_audio_batch_with_duration_gate(spark):
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_audio_batch,
-    )
-
-    r1 = refresh_audio_batch(
-        spark.createDataFrame(
-            [(1, _wav(_tone_mix(8000, 2.0, _SONG), 8000))],
-            "media_id long, blob binary",
-        ),
-        None,
-    )
-    store = r1.store.localCheckpoint(eager=True)
-    r1.done()
-
-    short = _wav(_tone_mix(8000, 0.5, _OTHER), 8000)
-    r2 = refresh_audio_batch(
-        spark.createDataFrame(
-            [
-                (10, _wav(_tone_mix(16000, 2.0, _SONG), 16000)),  # re-render
-                (11, _wav(_tone_mix(8000, 2.0, _OTHER), 8000)),   # new, long
-                (12, short),                                       # gated short
-            ],
-            "media_id long, blob binary",
-        ),
-        store,
-        min_duration_s=1.0,
-    )
-    assert {r["media_id"] for r in r2.ready.collect()} == {11}
-    stored = {r["media_id"] for r in r2.store.collect()}
-    assert stored == {1, 11, 12}  # gated clip still SEEN by the store
-    r2.done()
-
-
-def test_refresh_crawl_batch_three_modalities(spark):
-    from evidence_datasource_parsers_spark.functions.jpeg import encode_jpeg
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_crawl_batch,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "one sufficiently long doc about engines")],
-        "doc_id long, text string",
-    )
-    img = np.full((8, 8, 3), 70, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(7, encode_jpeg(img, quality=95))], "media_id long, blob binary"
-    )
-    audio = spark.createDataFrame(
-        [(9, _wav(_tone_mix(8000, 1.0, _SONG), 8000))],
-        "media_id long, blob binary",
-    )
-    res = refresh_crawl_batch(
-        docs, media, None, None,
-        doc_kwargs={"mode": "exact", "num_shards": 2},
-        audio_batch=audio,
-    )
-    assert res.docs.ready.count() == 1
-    assert res.media.ready.count() == 1
-    assert res.audio is not None and res.audio.store.count() == 1
-    res.done()

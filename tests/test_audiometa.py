@@ -170,50 +170,6 @@ def test_audio_stream_hash_wav_flac_cross_container(spark):
         == {1, 2}
 
 
-def test_audio_refresh_stream_tier(spark):
-    """refresh_audio_batch(stream_tier=True): a lossless FLAC re-encode
-    of a stored WAV dies on the PCM-hash equi-join before the spectral
-    tier; the stream store carries forward."""
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_audio_batch,
-    )
-
-    pcm = ((np.arange(16000) * 13) % 2001 - 1000).astype("<i2")
-    wav = _wav(pcm, rate=8000)
-    flac_same = encode_flac_header(
-        rate=8000, channels=1, bits=16, total_samples=16000,
-        pcm_md5=hashlib.md5(pcm.tobytes()).digest(),
-    )
-    other = _wav(((np.arange(16000) * 29) % 2001 - 1000).astype("<i2"),
-                 rate=8000)
-
-    b1 = spark.createDataFrame(
-        [(1, bytearray(wav))], "media_id long, blob binary"
-    )
-    r1 = refresh_audio_batch(b1, None, stream_tier=True)
-    sstore = r1.stream_store.localCheckpoint(eager=True)
-    astore = r1.store.localCheckpoint(eager=True)
-    assert sstore.count() == 1
-    r1.done()
-
-    b2 = spark.createDataFrame(
-        [(10, bytearray(flac_same)), (11, bytearray(other))],
-        "media_id long, blob binary",
-    )
-    r2 = refresh_audio_batch(
-        b2, astore, stream_tier=True, stream_store=sstore
-    )
-    assert {r.media_id for r in r2.ready.select("media_id").collect()} \
-        == {11}
-    assert {r.media_id for r in
-            r2.stream_store.select("media_id").collect()} == {1, 11}
-    r2.done()
-
-    r3 = refresh_audio_batch(b1, None)
-    assert r3.stream_store is None
-    r3.done()
-
-
 def test_warc_media_audio_container_tier(spark, tmp_path):
     """warc_media(content_prefix='audio/'): compressed payloads get
     container-tier rate/channels/duration + format + FLAC pcm_md5; WAV
@@ -264,25 +220,3 @@ def test_warc_media_audio_container_tier(spark, tmp_path):
     mp3 = rows["c.mp3"]
     assert mp3.audio_format == "mp3" and mp3.sample_rate == 44100
     assert mp3.duration_s == pytest.approx(30 * 1152 / 44100)
-
-
-def test_audio_refresh_duration_gate_sees_compressed(spark):
-    """min_duration_s applies to MP3/FLAC via the container tier: a
-    short FLAC is gated out (but still SEEN by the spectral store path),
-    a long MP3 passes, WAV keeps decoded behavior."""
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_audio_batch,
-    )
-
-    pcm = ((np.arange(32000) * 7) % 2001 - 1000).astype("<i2")
-    b = spark.createDataFrame(
-        [(1, bytearray(_wav(pcm, rate=8000))),                 # 4 s wav
-         (2, bytearray(encode_flac_header(
-             rate=44100, channels=1, total_samples=44100))),   # 1 s flac
-         (3, bytearray(encode_mp3_frames(200)))],              # ~5.2 s mp3
-        "media_id long, blob binary",
-    )
-    r = refresh_audio_batch(b, None, min_duration_s=2.0)
-    ready = {x.media_id for x in r.ready.select("media_id").collect()}
-    assert ready == {1, 3}  # short flac gated out on container duration
-    r.done()

@@ -182,55 +182,6 @@ def test_scrub_pii_preserves_dates_and_timestamps(spark):
     assert "<PHONE>" in got[4]
 
 
-def test_repeated_passages_audit(spark):
-    from evidence_datasource_parsers_spark.operators.passage_dedup import (
-        repeated_passages,
-    )
-
-    banner = " ".join(f"b{i}" for i in range(4))     # one 4-token window
-    df = spark.createDataFrame(
-        [
-            (1, banner + " " + " ".join(f"x{i}" for i in range(4))),
-            (2, banner + " " + " ".join(f"y{i}" for i in range(4))),
-            (3, " ".join(f"z{i}" for i in range(4))),
-        ],
-        "doc_id long, text string",
-    )
-    out = repeated_passages(df, passage_tokens=4).collect()
-    assert len(out) == 1
-    assert out[0]["occurrences"] == 2 and out[0]["n_docs"] == 2
-    assert out[0]["sample_text"] == banner
-
-
-def test_remove_repeated_passages(spark):
-    from evidence_datasource_parsers_spark.operators.passage_dedup import (
-        remove_repeated_passages,
-    )
-
-    banner = " ".join(f"b{i}" for i in range(4))
-    uniq1 = " ".join(f"x{i}" for i in range(4))
-    uniq2 = " ".join(f"y{i}" for i in range(4))
-    selfrep = " ".join(["r0 r1 r2 r3"] * 3)  # repeats only WITHIN doc 4
-    df = spark.createDataFrame(
-        [
-            (1, f"{banner} {uniq1}"),
-            (2, f"{banner} {uniq2}"),
-            (3, banner),                    # pure boilerplate
-            (4, selfrep),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id: r.text
-        for r in remove_repeated_passages(df, passage_tokens=4).collect()
-    }
-    assert got[1] == uniq1                  # banner cut, unique tail kept
-    assert got[2] == uniq2
-    assert got[3] == ""                     # survives as empty, not dropped
-    assert got[4] == selfrep                # single-doc repetition protected
-    assert set(got) == {1, 2, 3, 4}
-
-
 def test_duplicate_line_fraction_literal_separator(spark):
     """sep is a literal string, not a regex: '|' must not split on every
     character."""

@@ -1,130 +1,18 @@
-"""End-to-end LLM training-data pipeline over the real documents table:
+"""Multi-stage training-data pipelines over the real documents table:
+the incremental lexical refresh, the pretokenization half (BPE → chunk →
+shard) and the embedding-side refresh loop — every stage a repo operator,
+chained on one DataFrame lineage.
 
-profile → PII scrub → quality/repetition filter → exact dedup →
-repeated-passage removal → decontamination → domain mixing → chunking →
-sequence packing — every stage a repo operator, chained on one DataFrame
-lineage, collected exactly once at the end.
-
-This is the integration surface a user of the engine actually runs; the
-assertions check the contracts BETWEEN stages (ids survive, text only
-shrinks, proportions land, packing covers every chunk) rather than any
-single operator's internals.
+The assertions check the contracts BETWEEN stages (ids survive, text only
+shrinks, shards are topology-free) rather than any single operator's
+internals.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from evidence_datasource_parsers_spark.functions.textstats import (
-    repetition_signals,
-    scrub_pii,
-)
 from evidence_datasource_parsers_spark.operators.chunking import chunk_documents
-from evidence_datasource_parsers_spark.operators.decontaminate import (
-    decontaminate,
-)
-from evidence_datasource_parsers_spark.operators.dedupe import exact_dedupe
-from evidence_datasource_parsers_spark.operators.passage_dedup import (
-    remove_repeated_passages,
-)
-from evidence_datasource_parsers_spark.operators.profiling import corpus_profile
-from evidence_datasource_parsers_spark.operators.sampling import (
-    domain_mixture_sample,
-)
-
-
-def test_full_corpus_pipeline(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n0 = docs.count()
-
-    # 0. profile — the numbers later stages consume
-    prof = corpus_profile(docs, "text", group_col="lang").collect()
-    langs = {r["lang"] for r in prof}
-    assert sum(r["n_docs"] for r in prof) == n0
-
-    # 1. scrub PII (text may only shrink or stay; ids untouched)
-    scrubbed = docs.withColumn("text", scrub_pii("text"))
-
-    # 2. drop high-repetition docs (boilerplate) via the Gopher signals
-    filtered = repetition_signals(scrubbed).where(
-        (F.col("dup_line_frac") <= 0.9) & (F.col("top_2gram_frac") <= 0.9)
-    )
-
-    # 3. exact dedup on normalized content, keep min doc_id
-    deduped = exact_dedupe(filtered, "text", "doc_id")
-    # pin the expensive repetition-signal + dedup lineage: every assertion
-    # below re-evaluates its inputs otherwise
-    survivors = filtered.join(
-        deduped.select("doc_id"), on="doc_id", how="left_semi"
-    ).localCheckpoint(eager=False)
-
-    # 4. cut corpus-recurrent passages
-    cleaned = remove_repeated_passages(
-        survivors, passage_tokens=16, min_occurrences=3, min_distinct_docs=3
-    ).localCheckpoint(eager=False)
-    # passage removal preserves the document set and only removes text
-    joined = survivors.select(
-        "doc_id", F.length("text").alias("len_before")
-    ).join(
-        cleaned.select("doc_id", F.length("text").alias("len_after")),
-        on="doc_id",
-    )
-    assert joined.count() == survivors.count()
-    assert joined.where(F.col("len_after") > F.col("len_before")).count() == 0
-
-    # 5. decontaminate against a fake benchmark built from 5 corpus docs
-    evals = docs.orderBy("doc_id").limit(5).selectExpr(
-        "doc_id AS eval_id", "text"
-    )
-    # re-attach lang for the mixing stage
-    decon = decontaminate(cleaned, evals, n=8).join(
-        docs.select("doc_id", "lang"), on="doc_id"
-    ).localCheckpoint(eager=False)
-    # the invariant that matters: the surviving corpus shares NO 8-gram
-    # with the benchmark (a source doc whose contaminating text was
-    # already scrubbed/passage-cut upstream may legitimately survive)
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        find_contaminated,
-    )
-
-    assert find_contaminated(decon, evals, n=8).count() == 0
-
-    # 6. mix to a target language distribution
-    weights = {lang: 1.0 / len(langs) for lang in langs}
-    mixed = domain_mixture_sample(decon, "lang", "doc_id", weights).localCheckpoint(
-        eager=False
-    )
-    counts = {
-        r["lang"]: r["n"]
-        for r in mixed.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    assert counts, "mixture produced an empty corpus"
-    lo, hi = min(counts.values()), max(counts.values())
-    assert hi <= lo * 1.5 + 5 * (lo ** 0.5)  # near-equal proportions
-
-    # 7. chunk + 8. pack: every non-empty doc chunks; chunk mass adds up
-    chunks = chunk_documents(mixed, chunk_tokens=64, overlap=8)
-    assert chunks.select("doc_id").distinct().count() == mixed.count()
-    per_doc = chunks.groupBy("doc_id").agg(
-        F.sum("chunk_token_count").alias("s"), F.count("*").alias("k")
-    )
-    orig = mixed.select(
-        "doc_id",
-        F.when(F.length(F.trim("text")) == 0, 0)
-        .otherwise(F.size(F.split(F.trim("text"), r"\s+")))
-        .alias("n_tokens"),
-    )
-    mismatch = (
-        per_doc.join(orig, "doc_id")
-        .where(F.col("s") - (F.col("k") - 1) * 8 != F.col("n_tokens"))
-        .count()
-    )
-    assert mismatch == 0
-
-    # the whole chain stayed lazy until here: one final materialization
-    total_chunks = chunks.count()
-    assert total_chunks >= mixed.count()
 
 
 def test_incremental_refresh_pipeline(spark, sf_dir):
@@ -327,46 +215,3 @@ def test_semantic_refresh_pipeline(spark, sf_dir):
     occ = cell_occupancy(idx2)
     assert occ.agg(F2.sum("n")).collect()[0][0] == idx2.count()
     assert isinstance(needs_refit(occ, 8), bool)
-
-
-def test_semantic_decontaminate(spark):
-    """Embedding-space eval decontamination: a paraphrase-close corpus doc
-    (cosine ≥ θ to an eval vector) drops — including an exact re-ingest —
-    while orthogonal and merely-similar-below-θ docs survive.  NULL
-    vectors pass through (no fingerprint to match)."""
-    import numpy as np
-
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        semantic_decontaminate,
-    )
-
-    def unit(i, dim=16):
-        v = np.zeros(dim)
-        v[i] = 1.0
-        return v
-
-    def mix(a, b, t, dim=16):
-        v = (1 - t) * unit(a, dim) + t * unit(b, dim)
-        return v / np.linalg.norm(v)
-
-    eval_df = spark.createDataFrame(
-        [(100, unit(0).tolist()), (101, unit(1).tolist())],
-        "doc_id long, embedding array<double>",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (1, unit(0).tolist()),          # exact eval item → drop
-            (2, mix(0, 2, 0.1).tolist()),   # paraphrase-close → drop
-            (3, mix(1, 2, 0.9).tolist()),   # similar-below-θ → keep
-            (4, unit(5).tolist()),          # orthogonal → keep
-            (5, None),                      # NULL vector → keep
-        ],
-        "doc_id long, embedding array<double>",
-    )
-    clean, pinned = semantic_decontaminate(
-        corpus, eval_df, dim=16, threshold=0.9,
-        n_planes=4, n_tables=8,  # high recall at this tiny scale
-    )
-    kept = {r["doc_id"] for r in clean.collect()}
-    pinned.unpersist()
-    assert kept == {3, 4, 5}

@@ -28,6 +28,7 @@ from evidence_datasource_parsers_spark.operators.multimodal import (  # noqa: E4
     decode_blob,
     decoded_image_stats,
     image_phash_frame,
+    incremental_phash_dedupe,
     incremental_video_dedupe,
     video_frame_phashes,
     video_meta_frame,
@@ -182,45 +183,36 @@ def test_incremental_video_dedupe_with_hook(spark):
     r2.pinned.unpersist()
 
 
-def test_refresh_media_batch_with_hook(spark):
-    """The refresh media branch accepts the hook: FIMG images dedupe
-    against the carried pHash store and the dimension gate runs over
-    hook-decoded stats."""
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_media_batch,
-    )
-
-    r1 = refresh_media_batch(
+def test_incremental_phash_dedupe_with_hook(spark):
+    """Hook-decoded FIMG images flow into the pHash store: run 2 drops a
+    re-crawl of the stored image and stores every fresh one."""
+    r1 = incremental_phash_dedupe(
         spark.createDataFrame(
             [(1, fake_image_blob(w=48, h=40, kind=0))],
             "media_id long, blob binary",
         ),
         None,
         decode_hook=fake_decode_hook,
-        min_width=32,
     )
-    ready1 = {r["media_id"]: r for r in r1.ready.collect()}
-    assert set(ready1) == {1} and ready1[1]["width"] == 48
+    assert {r["media_id"] for r in r1.fresh.collect()} == {1}
     store = r1.store.localCheckpoint(eager=True)
-    r1.done()
+    r1.pinned.unpersist()
 
-    r2 = refresh_media_batch(
+    r2 = incremental_phash_dedupe(
         spark.createDataFrame(
             [
                 (10, fake_image_blob(w=48, h=40, kind=0)),  # re-crawl → drop
-                (11, fake_image_blob(w=48, h=40, kind=1)),  # fresh, wide
-                (12, fake_image_blob(w=16, h=40, kind=3)),  # fresh, gated
+                (11, fake_image_blob(w=48, h=40, kind=1)),  # fresh
+                (12, fake_image_blob(w=16, h=40, kind=3)),  # fresh
             ],
             "media_id long, blob binary",
         ),
         store,
         decode_hook=fake_decode_hook,
-        min_width=32,
     )
-    assert {r["media_id"] for r in r2.ready.collect()} == {11}
-    # gated image 12 was still SEEN — its pHash persists in the store
+    assert {r["media_id"] for r in r2.fresh.collect()} == {11, 12}
     assert {r["media_id"] for r in r2.store.collect()} == {1, 11, 12}
-    r2.done()
+    r2.pinned.unpersist()
 
 
 def test_meta_only_audio_hook_yields_null_row(spark):

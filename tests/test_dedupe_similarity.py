@@ -376,61 +376,6 @@ def test_blocked_cosine_pairs_salting_is_exact(spark):
     assert n_groups == 2  # both labels still produce output
 
 
-def test_decontamination_ngram_overlap(spark):
-    """A corpus doc embedding an eval question verbatim (or cosmetically
-    reformatted) is flagged; clean docs and sub-n overlaps are not."""
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        decontaminate,
-        find_contaminated,
-    )
-
-    eval_q = "what is the capital city of the republic of france"
-    corpus = spark.createDataFrame(
-        [
-            (1, f"quiz dump: {eval_q} answer paris"),          # verbatim
-            (2, "WHAT   is the Capital city of the Republic,"
-                " of France?? asked nobody"),                   # reformatted
-            (3, "the capital of germany is berlin obviously"),  # clean
-            (4, "capital city of the"),                         # < n tokens
-        ],
-        "doc_id long, text string",
-    )
-    evals = spark.createDataFrame(
-        [(100, eval_q)], "eval_id long, text string"
-    )
-    hits = {
-        r.doc_id for r in find_contaminated(corpus, evals, n=8).collect()
-    }
-    assert hits == {1, 2}
-    kept = {r.doc_id for r in decontaminate(corpus, evals, n=8).collect()}
-    assert kept == {3, 4}
-
-
-def test_decontamination_plan_broadcasts_eval_side(spark, tmp_path):
-    """Scale shape: a file-backed (stats-bearing) eval set under the
-    threshold broadcasts its gram set — the corpus side is never shuffled
-    for the semi-join.  The gate reads the EVAL SET's scan stats as a
-    proxy because the exploded gram stream has none; an in-memory eval
-    frame (no stats) falls back to AQE's runtime broadcast conversion."""
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        find_contaminated,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, f"doc number {i} with some words " * 3) for i in range(50)],
-        "doc_id long, text string",
-    )
-    spark.createDataFrame(
-        [(1, "eval text here")], "eval_id long, text string"
-    ).write.mode("overwrite").parquet(str(tmp_path / "evals"))
-    evals = spark.read.parquet(str(tmp_path / "evals"))
-    plan = find_contaminated(corpus, evals, n=4)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_blocked_cosine_pairs_keeps_null_blocks(spark):
     """A NULL block key is a real block (upstream join misses produce
     them): its pairs must be scored, not silently dropped by a
@@ -598,86 +543,6 @@ def test_estimated_jaccard_bounds(spark):
         estimated_jaccard(F.col("a"), F.col("c"), 4).alias("diff"),
     ).first()
     assert row.same == 1.0 and row.diff == 0.0
-
-
-def test_decontamination_broadcast_gate_falls_back(spark):
-    """An oversized 'eval set' must not be force-broadcast: with the
-    session threshold disabled the gate refuses the hint and the
-    semi-join degrades to a shuffle join instead of an executor OOM."""
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        find_contaminated,
-    )
-
-    eval_q = "what is the capital city of the republic of france"
-    corpus = spark.createDataFrame(
-        [(1, f"quiz dump: {eval_q} answer paris"), (2, "clean doc " * 5)],
-        "doc_id long, text string",
-    )
-    evals = spark.createDataFrame([(100, eval_q)], "eval_id long, text string")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = find_contaminated(corpus, evals, n=8)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "BroadcastHashJoin" not in plan
-        # results identical under the fallback plan
-        assert {r.doc_id for r in df.collect()} == {1}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_decontamination_overlap_fraction_mode(spark):
-    """The fraction rule only fires when >= X of an eval doc's distinct
-    grams are reproduced — a single shared boilerplate gram no longer
-    kills the training doc."""
-    from evidence_datasource_parsers_spark.operators.decontaminate import (
-        decontaminate,
-        find_contaminated,
-    )
-
-    # eval doc has 3 distinct 2-grams: "a b", "b c", "c d"
-    evals = spark.createDataFrame([(100, "a b c d")], "eval_id long, text string")
-    corpus = spark.createDataFrame(
-        [
-            (1, "x y a b z"),        # shares 1/3 of eval grams
-            (2, "q a b c d r"),      # contains all 3/3
-            (3, "totally clean words here"),
-        ],
-        "doc_id long, text string",
-    )
-    # >=1-gram rule: both 1 and 2 are hits
-    assert {
-        r.doc_id for r in find_contaminated(corpus, evals, n=2).collect()
-    } == {1, 2}
-    # fraction 0.5: only the full reproduction fires
-    assert {
-        r.doc_id
-        for r in find_contaminated(
-            corpus, evals, n=2, min_eval_overlap=0.5
-        ).collect()
-    } == {2}
-    kept = {
-        r.doc_id
-        for r in decontaminate(
-            corpus, evals, n=2, min_eval_overlap=0.5
-        ).collect()
-    }
-    assert kept == {1, 3}
-    # fraction at the boundary: 1/3 >= 1/3 fires doc 1 too
-    assert {
-        r.doc_id
-        for r in find_contaminated(
-            corpus, evals, n=2, min_eval_overlap=1 / 3
-        ).collect()
-    } == {1, 2}
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="min_eval_overlap"):
-        find_contaminated(corpus, evals, n=2, min_eval_overlap=1.5).count()
 
 
 def _py_combo_keys(sim: int, nbits: int, d: int, n_blocks: int):
@@ -1006,6 +871,27 @@ def test_ivf_index_maintenance(spark):
     )
     assert needs_refit(cell_occupancy(skew), n_cells=4)
 
+
+
+def test_ivf_topk_rejects_unassigned_corpus(spark):
+    """A corpus_assigned frame without the index columns fails loudly,
+    naming what is missing, instead of an analysis error deep in the join."""
+    import pytest
+
+    from evidence_datasource_parsers_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
+
+    cents = deterministic_centroids(4, 2)
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0])], "query_id long, embedding array<double>"
+    )
+    unassigned = vecs.select(
+        F.col("query_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
+    )
+    with pytest.raises(ValueError, match=r"\['__cell'\].*SAME centroids"):
+        ivf_topk(vecs, None, cents, corpus_assigned=unassigned)
 
 def test_multiprobe_lsh_recall_dominates_base(spark, sf_dir):
     """Multi-probe candidates are a superset of base candidates per query,

@@ -238,66 +238,6 @@ def test_streaming_df_sink_two_batches_and_replay(spark, tmp_path):
     assert agg2 == agg
 
 
-def test_compact_cli_df_kind(spark, tmp_path):
-    from evidence_datasource_parsers_spark.__main__ import main
-
-    store = str(tmp_path / "df_cli")
-    b1 = _corpus(spark, DOCS[:3])
-    b2 = _corpus(spark, DOCS[3:])
-    df_store_delta(b1, "text", "doc_id").write.parquet(store)
-    df_store_delta(b2, "text", "doc_id").write.mode("append").parquet(store)
-    assert main(["compact", "--store", store, "--kind", "df"]) == 0
-    rows = {
-        (r.kind, r.term): r.n for r in spark.read.parquet(store).collect()
-    }
-    one_shot = {
-        (r.kind, r.term): r.n
-        for r in df_store_delta(_corpus(spark), "text", "doc_id").collect()
-    }
-    assert rows == one_shot
-
-
-def test_refresh_cli_df_store_two_rounds(spark, tmp_path):
-    """`refresh --df-store`: each round appends the READY docs' additive
-    delta; after two rounds the compacted store equals a one-shot delta
-    over both ready sets (re-crawled docs contribute nothing — they
-    never reach ready)."""
-    from evidence_datasource_parsers_spark.__main__ import main
-
-    b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
-    store = str(tmp_path / "fp_store")
-    dfs = str(tmp_path / "df_store_cli")
-    out = str(tmp_path / "ready_out")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha delta")],
-        "doc_id long, text string",
-    ).write.parquet(b1)
-    spark.createDataFrame(
-        [(10, "alpha beta gamma"),   # re-crawl of doc 1 — dropped
-         (11, "epsilon zeta")],
-        "doc_id long, text string",
-    ).write.parquet(b2)
-    base = ["refresh", "--store", store, "--out", out, "--mode", "exact",
-            "--df-store", dfs]
-    assert main(base + ["--batch", b1]) == 0
-    assert main(base + ["--batch", b2]) == 0
-    got = {
-        (r.kind, r.term): r.n
-        for r in compact_df_store(spark.read.parquet(dfs)).collect()
-    }
-    ready = spark.read.parquet(out)
-    assert sorted(r.doc_id for r in ready.collect()) == [1, 2, 11]
-    expect = {
-        (r.kind, r.term): r.n
-        for r in df_store_delta(
-            ready.select("doc_id", "text"), "text", "doc_id"
-        ).collect()
-    }
-    assert got == expect
-    assert got[("df", "alpha")] == 2   # doc 10's re-crawl never counted
-    assert got[("meta", "__n_docs")] == 3
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -350,40 +290,6 @@ def test_property_df_advance_algebra(spark_prop, texts, split):
     b = {(r.kind, r.term): r.n
          for r in df_store_delta(both, "text", "doc_id").collect()}
     assert a == b
-
-
-def test_refresh_cli_df_store_recovers_interrupted_swap(spark, tmp_path):
-    """A compact --kind df crash mid-swap leaves the store as a lone
-    __old_* sibling; the next refresh must restore it BEFORE appending,
-    or the carried statistics silently fork (round-11 review finding)."""
-    import os
-
-    from evidence_datasource_parsers_spark.__main__ import main
-
-    b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
-    store = str(tmp_path / "fp_store")
-    dfs = str(tmp_path / "df_store_rec")
-    out = str(tmp_path / "ready_out")
-    spark.createDataFrame(
-        [(1, "alpha beta")], "doc_id long, text string"
-    ).write.parquet(b1)
-    spark.createDataFrame(
-        [(2, "alpha gamma")], "doc_id long, text string"
-    ).write.parquet(b2)
-    base = ["refresh", "--store", store, "--out", out, "--mode", "exact",
-            "--df-store", dfs]
-    assert main(base + ["--batch", b1]) == 0
-    # simulate the crash window: store renamed away, swap dir lost
-    os.rename(dfs, f"{dfs}__old_deadbeef")
-    assert main(base + ["--batch", b2]) == 0
-    got = {
-        (r.kind, r.term): r.n
-        for r in compact_df_store(spark.read.parquet(dfs)).collect()
-    }
-    # batch-1 history survived the recovery
-    assert got[("df", "alpha")] == 2
-    assert got[("df", "beta")] == 1
-    assert got[("meta", "__n_docs")] == 2
 
 
 def test_exclude_ids_enforces_disjointness(spark):

@@ -92,36 +92,6 @@ def test_extract_links(spark):
     assert got[1] == []
 
 
-def test_warc_to_domain_authority(spark, tmp_path):
-    """The crawl-curation loop: WARC pages → outbound links → domain
-    PageRank."""
-    import gzip
-
-    from pyspark.sql import functions as F2
-
-    from evidence_datasource_parsers_spark.functions.html import extract_links
-    from evidence_datasource_parsers_spark.operators.pagerank import (
-        domain_authority,
-    )
-    from evidence_datasource_parsers_spark.sources.warc import read_warc
-    from tests.test_warc import _http, _record
-
-    page_a = b'<html><a href="https://wiki.example.org/ref">r</a></html>'
-    page_b = b'<html><a href="https://wiki.example.org/r2">r</a></html>'
-    raw = (
-        _record("response", _http(page_a), "http://blog.example.com/1")
-        + _record("response", _http(page_b), "http://news.example.net/2")
-    )
-    (tmp_path / "c.warc.gz").write_bytes(gzip.compress(raw))
-
-    pages = read_warc(spark, str(tmp_path), responses_only=True).select(
-        "url", F2.col("payload").cast("string").alias("html")
-    ).withColumn("links", extract_links("html"))
-    ranks = {r.domain: r.rank
-             for r in domain_authority(pages, "url", "links").collect()}
-    assert ranks["example.org"] == max(ranks.values())
-
-
 def test_extract_main_text_drops_chrome(spark):
     """The readability tier: nav/footer link chrome and script payloads
     vanish, body prose and the title survive, and the block counters

@@ -1,6 +1,6 @@
 """WebP/AVIF container walks (functions/imagemeta.py) and their
 dispatch through the image tier (decode_blob, decoded_image_stats,
-refresh gates)."""
+the pHash store)."""
 
 from __future__ import annotations
 
@@ -60,17 +60,14 @@ def test_decode_blob_routes_image_vs_video_brands(spark):
     assert v["media_type"] == "video" and v["format"] == "mp4"
 
 
-def test_image_stats_and_gates_on_container_dims(spark):
+def test_image_stats_on_container_dims(spark):
     """decoded_image_stats reports REAL dims with honestly-NULL pixel
-    stats for the meta-only tier; refresh_media_batch's min_width gate
-    therefore applies to WebP, while its pHash store never ingests a
+    stats for the meta-only tier, while the pHash store never ingests a
     fake fingerprint (NULL phash → fresh, unstored)."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
         decoded_image_stats,
         encode_ppm,
-    )
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_media_batch,
+        incremental_phash_dedupe,
     )
 
     import numpy as np
@@ -86,17 +83,16 @@ def test_image_stats_and_gates_on_container_dims(spark):
     stats = {r.media_id: r for r in
              decoded_image_stats(df, "blob", "media_id").collect()}
     assert stats[1].img_format == "webp" and stats[1].width == 640
+    assert stats[2].width == 32
     assert stats[1].pixel_sum is None
     assert stats[3].img_format == "ppm" and stats[3].pixel_sum == \
         77 * 10 * 200 * 3
     assert stats[4].img_format is None
 
-    r = refresh_media_batch(df, None, min_width=100)
-    ready = {x.media_id for x in r.ready.select("media_id").collect()}
-    # webp 640 passes the gate, webp 32 is gated OUT on real dims;
-    # garbage has NULL dims and passes ungated (undecodable contract)
-    assert ready == {1, 3, 4}
+    r = incremental_phash_dedupe(df, None)
+    fresh = {x.media_id for x in r.fresh.select("media_id").collect()}
+    assert fresh == {1, 2, 3, 4}
     # only the decodable PPM contributed a pHash to the store
     assert [x.media_id for x in r.store.select("media_id").collect()] \
         == [3]
-    r.done()
+    r.pinned.unpersist()

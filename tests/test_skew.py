@@ -127,18 +127,3 @@ def test_report_shuffles_combined_rows_not_input(spark):
     assert "partial_count" in plan
     assert "BroadcastNestedLoopJoin" in plan  # the 1-row scalar join
     assert "CartesianProduct" not in plan
-
-
-def test_skew_audit_cli(spark, tmp_path, capsys):
-    from evidence_datasource_parsers_spark.__main__ import main
-
-    p = str(tmp_path / "facts")
-    _skewed(spark, hot_rows=900, cold_keys=100).write.parquet(p)
-    assert main(["skew-audit", p, "--keys", "k",
-                 "--partitions", "10"]) == 0
-    out = capsys.readouterr().out
-    assert "HOT" in out
-    assert "skew-audit: salt" in out and "n_salts=9" in out
-
-    assert main(["skew-audit", p, "--keys", "nope"]) == 2
-    assert main(["skew-audit", p, "--keys", " "]) == 2

@@ -25,3 +25,17 @@ def test_reject_reserved_columns():
     reject_reserved_columns(["a", "__other"], {"__ts"}, "op")  # no raise
     with pytest.raises(ValueError, match=r"__ts"):
         reject_reserved_columns(["a", "__ts"], {"__ts"}, "op")
+
+
+def test_session_refuses_escaped_string_literals_in_any_case(spark):
+    """The escapedStringLiterals guard compares case-insensitively: Spark
+    accepts "TRUE" as true, so the guard must refuse it too."""
+    from evidence_datasource_parsers_spark.session import get_spark
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    try:
+        with pytest.raises(RuntimeError, match="escapedStringLiterals"):
+            get_spark("tests", shuffle_partitions=4, extra_conf={key: "TRUE"})
+    finally:
+        spark.conf.unset(key)
+    assert spark.conf.get(key, "false") == "false"

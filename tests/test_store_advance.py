@@ -136,31 +136,26 @@ def test_append_bucketed_store_advance(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_refresh_store_delta_matches_store(spark):
-    """refresh_corpus_batch exposes store_delta; carried ∪ delta == store
-    and gate-rejected docs still contribute (seen-not-shipped)."""
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_corpus_batch,
+def test_exact_store_delta_matches_store(spark):
+    """incremental_exact_dedupe's delta is the store's complement of the
+    carried rows: carried ∪ delta == store, and a re-crawl adds nothing."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        incremental_exact_dedupe,
     )
 
     b1 = _docs(spark, [(1, "a long enough real document body here")])
-    r1 = refresh_corpus_batch(b1, None, "text", "doc_id", mode="exact")
-    carried = r1.store_delta.localCheckpoint(eager=True)
-    r1.done()
+    r1 = incremental_exact_dedupe(b1, None, "text", "doc_id")
+    carried = r1.delta.localCheckpoint(eager=True)
     b2 = _docs(
         spark,
         [(10, "a long enough real document body here"),  # re-crawl
-         (11, "x")],                                     # gated by quality
+         (11, "x")],
     )
-    r2 = refresh_corpus_batch(
-        b2, carried, "text", "doc_id", mode="exact", min_quality=0.5
-    )
+    r2 = incremental_exact_dedupe(b2, carried, "text", "doc_id")
     rows = lambda df: sorted(r[0] for r in df.collect())  # noqa: E731
-    assert rows(carried) + rows(r2.store_delta) == rows(r2.store)
-    # doc 11 was quality-gated out of ready but IS in the delta (seen)
-    assert r2.ready.where(F.col("doc_id") == 11).count() == 0
-    assert len(rows(r2.store_delta)) == 1
-    r2.done()
+    assert rows(carried) + rows(r2.delta) == rows(r2.store)
+    assert [r.doc_id for r in r2.fresh.select("doc_id").collect()] == [11]
+    assert len(rows(r2.delta)) == 1
 
 
 def test_span_delta_append_advance_equivalence(spark, tmp_path):

@@ -1,222 +1,7 @@
-"""Structured Streaming: file-source micro-batches, event-time windows,
-watermarked aggregation drained with trigger(availableNow)."""
+"""Structured Streaming foreachBatch sinks over the persistent incremental
+stores (streaming/incremental.py), drained with trigger(availableNow)."""
 
 from __future__ import annotations
-
-import json
-
-from evidence_datasource_parsers_spark.streaming.events import (
-    read_event_stream,
-    run_to_memory,
-    windowed_event_counts,
-)
-
-
-def test_windowed_stream_matches_batch(spark, tmp_path):
-    events = [
-        {"event_id": 1, "ts": "2024-01-01T00:10:00Z", "user_id": 1,
-         "event_type": "click", "value": 1.5, "props": "{}"},
-        {"event_id": 2, "ts": "2024-01-01T00:40:00Z", "user_id": 1,
-         "event_type": "click", "value": 2.25, "props": "{}"},
-        {"event_id": 3, "ts": "2024-01-01T01:05:00Z", "user_id": 2,
-         "event_type": "view", "value": 0.5, "props": "{}"},
-    ]
-    src = tmp_path / "stream"
-    src.mkdir()
-    # two files → two micro-batch candidates
-    (src / "f1.json").write_text("\n".join(json.dumps(e) for e in events[:2]))
-    (src / "f2.json").write_text(json.dumps(events[2]))
-
-    stream = read_event_stream(spark, str(src))
-    assert stream.isStreaming
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    run_to_memory(agg, "windowed_counts")
-    rows = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value_c"])
-        for r in spark.sql("SELECT * FROM windowed_counts").collect()
-    }
-    assert rows == {
-        ("2024-01-01 00:00:00", "click"): (2, 375),
-        ("2024-01-01 01:00:00", "view"): (1, 50),
-    }
-
-    # batch/stream symmetry: same operator over a static frame
-    static = spark.read.schema(
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string"
-    ).json(str(src))
-    batch_rows = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value_c"])
-        for r in windowed_event_counts(static).collect()
-    }
-    assert batch_rows == rows
-
-
-def test_streaming_dedupe(spark, tmp_path):
-    import json as _json
-
-    from evidence_datasource_parsers_spark.streaming.events import dedupe_stream
-
-    ev = {"event_id": 1, "ts": "2024-01-01T00:10:00Z", "user_id": 1,
-          "event_type": "click", "value": 1.0, "props": "{}"}
-    ev2 = dict(ev, event_id=2, ts="2024-01-01T00:20:00Z")
-    src = tmp_path / "dstream"
-    src.mkdir()
-    # duplicate event_id=1 across two files → must deduplicate
-    (src / "f1.json").write_text(_json.dumps(ev) + "\n" + _json.dumps(ev2))
-    (src / "f2.json").write_text(_json.dumps(ev))
-
-    from evidence_datasource_parsers_spark.streaming.events import (
-        read_event_stream,
-    )
-
-    deduped = dedupe_stream(read_event_stream(spark, str(src)))
-    (
-        deduped.writeStream.format("memory")
-        .queryName("deduped_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    rows = spark.sql("SELECT event_id FROM deduped_events").collect()
-    assert sorted(r["event_id"] for r in rows) == [1, 2]
-
-
-def test_stream_static_join_and_foreachbatch_sink(spark, tmp_path):
-    import glob as _glob
-    import gzip as _gzip
-    import json as _json
-
-    from evidence_datasource_parsers_spark.streaming.events import (
-        enrich_stream_with_dim,
-        stream_to_evidence_sink,
-    )
-
-    src = tmp_path / "enrich_stream"
-    src.mkdir()
-    (src / "f1.json").write_text(
-        _json.dumps({"event_id": 1, "ts": "2024-01-01T00:00:00Z",
-                     "user_id": 1, "event_type": "click", "value": 1.0,
-                     "props": "{}"})
-    )
-    dim = spark.createDataFrame(
-        [("click", "interaction")], "event_type string, category string"
-    )
-    enriched = enrich_stream_with_dim(
-        read_event_stream(spark, str(src)), dim, on="event_type"
-    )
-    q = stream_to_evidence_sink(
-        enriched, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    parts = _glob.glob(str(tmp_path / "out" / "*.json.gz"))
-    assert parts
-    recs = []
-    for p in parts:
-        with _gzip.open(p, "rt") as fh:
-            recs += [_json.loads(line) for line in fh]
-    assert recs[0]["category"] == "interaction"
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Impression/click streams joined on user within ±15 minutes; the
-    watermark + interval predicate bound the join state.  Append-mode drain
-    must produce exactly the batch-join pairs."""
-    from evidence_datasource_parsers_spark.streaming.events import (
-        interval_join_streams,
-    )
-
-    def ev(eid, ts, uid, etype):
-        return {"event_id": eid, "ts": ts, "user_id": uid,
-                "event_type": etype, "value": 1.0, "props": "{}"}
-
-    imps = [
-        ev(1, "2024-01-01T00:10:00Z", 1, "impression"),
-        ev(2, "2024-01-01T00:50:00Z", 1, "impression"),
-        ev(3, "2024-01-01T00:10:00Z", 2, "impression"),
-    ]
-    clicks = [
-        ev(10, "2024-01-01T00:20:00Z", 1, "click"),   # within 15m of imp 1
-        ev(11, "2024-01-01T01:30:00Z", 1, "click"),   # within 15m of nothing
-        ev(12, "2024-01-01T00:12:00Z", 2, "click"),   # within 15m of imp 3
-    ]
-    lsrc, rsrc = tmp_path / "imps", tmp_path / "clicks"
-    lsrc.mkdir(); rsrc.mkdir()
-    (lsrc / "f1.json").write_text("\n".join(json.dumps(e) for e in imps))
-    (rsrc / "f1.json").write_text("\n".join(json.dumps(e) for e in clicks))
-
-    joined = interval_join_streams(
-        read_event_stream(spark, str(lsrc)),
-        read_event_stream(spark, str(rsrc)),
-        on="user_id",
-        within="15 minutes",
-    )
-    assert joined.isStreaming
-    (
-        joined.writeStream.format("memory").queryName("ssj")
-        .outputMode("append").trigger(availableNow=True)
-        .start().awaitTermination()
-    )
-    got = {
-        (r.user_id, r.l_event_id, r.r_event_id)
-        for r in spark.sql("SELECT * FROM ssj").collect()
-    }
-    assert got == {(1, 1, 10), (2, 3, 12)}
-
-    # batch twin: identical pairs from a static interval join
-    schema = ("event_id bigint, ts timestamp, user_id bigint, "
-              "event_type string, value double, props string")
-    lb = spark.read.schema(schema).json(str(lsrc))
-    rb = spark.read.schema(schema).json(str(rsrc))
-    batch = interval_join_streams(lb, rb, on="user_id", within="15 minutes")
-    batch_got = {
-        (r.user_id, r.l_event_id, r.r_event_id) for r in batch.collect()
-    }
-    assert batch_got == got
-
-
-def test_streaming_content_dedupe(spark, tmp_path):
-    """Content dedup on a stream: same normalized text (case/whitespace
-    variants) across micro-batches collapses to one event; state is the
-    8-byte content hash."""
-    import json as _json
-
-    from evidence_datasource_parsers_spark.streaming.events import (
-        dedupe_stream_by_content,
-        read_event_stream,
-    )
-
-    base = {"user_id": 1, "event_type": "post", "value": 0.0}
-    evs = [
-        dict(base, event_id=1, ts="2024-01-01T00:10:00Z",
-             props="the quick brown fox"),
-        dict(base, event_id=2, ts="2024-01-01T00:11:00Z",
-             props="THE  QUICK   brown fox"),   # dup after normalization
-        dict(base, event_id=3, ts="2024-01-01T00:12:00Z",
-             props="something else entirely"),
-    ]
-    src = tmp_path / "cstream"
-    src.mkdir()
-    (src / "f1.json").write_text("\n".join(_json.dumps(e) for e in evs[:2]))
-    (src / "f2.json").write_text(_json.dumps(evs[2]))
-
-    deduped = dedupe_stream_by_content(
-        read_event_stream(spark, str(src)), text_col="props"
-    )
-    (
-        deduped.writeStream.format("memory")
-        .queryName("content_deduped")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    ids = sorted(
-        r["event_id"]
-        for r in spark.sql("SELECT event_id FROM content_deduped").collect()
-    )
-    assert len(ids) == 2 and 3 in ids  # one of {1,2} survived, plus 3
 
 
 def test_incremental_dedupe_sink_remembers_across_runs(spark, tmp_path):
@@ -821,6 +606,1096 @@ def test_incremental_dedupe_sink_remux_mode(spark, tmp_path):
     assert got == [1, 11]  # 10 = remux of stored stream, dropped
     assert {r.media_id for r in spark.read.parquet(store).collect()} \
         == {1, 11}
+
+
+def test_streaming_histogram_and_frequency_sinks(spark, tmp_path):
+    """The histogram and CMS counter stores get the same streaming
+    maintenance as the HLL sink: each run appends the batch's own
+    mergeable rows, and the collapsing probes read the accumulated
+    history exactly."""
+    import json as _json
+
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        cms_estimate,
+        compact_histogram_store,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        streaming_frequency_sink,
+        streaming_histogram_sink,
+    )
+
+    src = tmp_path / "vals_in"
+    src.mkdir()
+    hstore = str(tmp_path / "hist_store")
+    cstore = str(tmp_path / "cms_store")
+    edges = [10.0, 20.0]
+
+    def write_batch(name, rows):
+        (src / name).write_text(
+            "\n".join(
+                _json.dumps({"g": "a", "v": v, "tok": t}) for v, t in rows
+            )
+        )
+
+    def run():
+        # REUSED checkpoint dirs: run 2 processes only the new file —
+        # the cross-run incremental behavior under test
+        stream = spark.readStream.schema(
+            "g string, v double, tok string"
+        ).json(str(src))
+        streaming_histogram_sink(
+            stream, hstore, str(tmp_path / "ckh"), ["g"], "v", edges
+        ).awaitTermination()
+        stream2 = spark.readStream.schema(
+            "g string, v double, tok string"
+        ).json(str(src))
+        streaming_frequency_sink(
+            stream2, cstore, str(tmp_path / "ckc"), ["g"], "tok"
+        ).awaitTermination()
+
+    write_batch("b1.json", [(5.0, "x"), (15.0, "x"), (25.0, "y")])
+    run()
+    write_batch("b2.json", [(15.0, "x"), (15.0, "z")])
+    run()
+
+    hist = {
+        r["g"]: r["counts"]
+        for r in compact_histogram_store(
+            spark.read.parquet(hstore), ["g"]
+        ).collect()
+    }
+    assert hist["a"] == [1, 3, 1]  # 5 | 15,15,15 | 25
+    items = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("a", "z"), ("a", "w")],
+        "g string, tok string",
+    )
+    est = {
+        r.tok: r.est_count
+        for r in cms_estimate(
+            spark.read.parquet(cstore), items, ["g"], "tok"
+        ).collect()
+    }
+    assert est == {"x": 3, "y": 1, "z": 1, "w": 0}
+    # append-only history: run 2 added rows beside run 1's
+    assert spark.read.parquet(hstore).count() == 2  # one counts row/run
+
+
+def test_counter_sink_replay_is_idempotent(spark, tmp_path):
+    """A foreachBatch replay (crash between the append and the checkpoint
+    commit) must NOT double-count: each batch lands as one
+    deterministically named file that a replay overwrites
+    (write_batch_summary, the primitive under all three counter sinks)."""
+    import os
+
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        compact_histogram_store,
+        histogram_store,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        write_batch_summary,
+    )
+
+    store = str(tmp_path / "hstore")
+    batch = spark.createDataFrame(
+        [("a", 5.0), ("a", 15.0)], "g string, v double"
+    )
+    summary = histogram_store(batch, ["g"], "v", [10.0, 20.0])
+    write_batch_summary(summary, store, "tok1", 0)
+    write_batch_summary(summary, store, "tok1", 0)  # replay of batch 0
+    hist = {
+        r["g"]: r["counts"]
+        for r in compact_histogram_store(
+            spark.read.parquet(store), ["g"]
+        ).collect()
+    }
+    assert hist["a"] == [1, 1, 0]  # counted once, not twice
+    # a genuinely NEW batch (same stream) adds; a different stream's
+    # batch 0 does not clobber this stream's batch 0
+    write_batch_summary(summary, store, "tok1", 1)
+    write_batch_summary(summary, store, "tok2", 0)
+    hist = {
+        r["g"]: r["counts"]
+        for r in compact_histogram_store(
+            spark.read.parquet(store), ["g"]
+        ).collect()
+    }
+    assert hist["a"] == [3, 3, 0]
+    names = sorted(os.listdir(store))
+    assert names == [
+        "batch-tok1-0.parquet", "batch-tok1-1.parquet",
+        "batch-tok2-0.parquet",
+    ]
+
+
+def test_streaming_sample_sink(spark, tmp_path):
+    """The bottom-k sink appends each batch's sample beside the history
+    and sample_quantiles re-reduces it raw — same cross-run incremental
+    contract as the other counter sinks."""
+    import json as _json
+
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        sample_quantiles,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        streaming_sample_sink,
+    )
+
+    src = tmp_path / "bk_in"
+    src.mkdir()
+    store = str(tmp_path / "bk_store")
+
+    def write_batch(name, rows):
+        (src / name).write_text(
+            "\n".join(
+                _json.dumps({"g": "a", "id": i, "v": v}) for i, v in rows
+            )
+        )
+
+    def run():
+        stream = spark.readStream.schema(
+            "g string, id long, v double"
+        ).json(str(src))
+        streaming_sample_sink(
+            stream, store, str(tmp_path / "ckbk"), ["g"], "id", "v", k=64
+        ).awaitTermination()
+
+    write_batch("b1.json", [(i, float(i)) for i in range(100)])
+    run()
+    write_batch("b2.json", [(100 + i, float(100 + i)) for i in range(100)])
+    run()
+    got = sample_quantiles(
+        spark.read.parquet(store), ["g"], [0.5], k=64, out_cols=["p50"]
+    ).collect()[0]
+    # uniform 0..199 → sample median within rank error of 100
+    assert 40 <= got["p50"] <= 160
+    # two appended batch files (one deterministic file per batch)
+    import os
+
+    assert len([f for f in os.listdir(store) if f.endswith(".parquet")]) == 2
+    # the sink stamped k as store identity; a differently-configured
+    # later run is refused before touching the store
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        read_bottomk_store_meta,
+    )
+
+    import pytest as _pytest
+
+    assert read_bottomk_store_meta(store) == 64
+    write_batch("b3.json", [(999, 1.0)])
+    stream3 = spark.readStream.schema("g string, id long, v double").json(
+        str(src)
+    )
+    q3 = streaming_sample_sink(
+        stream3, store, str(tmp_path / "ckbk_conflict"),
+        ["g"], "id", "v", k=128,
+    )
+    with _pytest.raises(Exception, match="k="):
+        q3.awaitTermination()
+    assert read_bottomk_store_meta(store) == 64
+    # stamp-first self-heal: a sidecar-only dir (crash between the stamp
+    # and the first append) is accepted by a matching re-run, not wedged
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        write_bottomk_store_meta,
+    )
+
+    healed = str(tmp_path / "bk_store_healed")
+    write_bottomk_store_meta(healed, 64)  # sidecar-only dir
+    stream4 = spark.readStream.schema("g string, id long, v double").json(
+        str(src)
+    )
+    streaming_sample_sink(
+        stream4, healed, str(tmp_path / "ckbk_heal"), ["g"], "id", "v",
+        k=64,
+    ).awaitTermination()
+    assert spark.read.parquet(healed).count() > 0
+
+
+def test_incremental_dedupe_sink_canon_mode(spark, tmp_path):
+    """mode='canon': every streamed doc is appended ENRICHED with
+    canonical_id/canonical; batch-2 labels converge on batch-1
+    representatives; a full replay advances the store by NOTHING (all
+    replayed labels map to stored reps, so the delta is empty); a
+    mismatched max_dist is refused via the identity sidecar."""
+    import json as _json
+
+    import pytest as _pytest
+
+    from evidence_datasource_parsers_spark.operators.fuzzy_join import (
+        read_canon_store_meta,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+    )
+
+    src = tmp_path / "canon_in"
+    src.mkdir()
+    out = str(tmp_path / "canon_out")
+    store = str(tmp_path / "canon_store")
+
+    def doc(i, label):
+        return _json.dumps({"doc_id": i, "label": label})
+
+    def run(ckpt, **opts):
+        stream = (
+            spark.readStream.schema("doc_id long, label string")
+            .json(str(src))
+        )
+        q = incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / ckpt),
+            "label", "doc_id", mode="canon", **opts,
+        )
+        q.awaitTermination()
+
+    (src / "b1.json").write_text(
+        doc(1, "colour") + "\n" + doc(2, "color")
+    )
+    run("ck_shared", max_dist=1)
+    rows = {r.doc_id: (r.canonical_id, r.canonical)
+            for r in spark.read.parquet(out).collect()}
+    assert rows == {1: (1, "colour"), 2: (1, "colour")}
+    # store carries k+1=2 segment rows for the single elected rep
+    st = spark.read.parquet(store).collect()
+    assert {(r.canonical_id, r.canonical) for r in st} == {(1, "colour")}
+    assert len(st) == 2
+    assert read_canon_store_meta(store) == 1
+
+    # batch 2 (same checkpoint → only the new file): near-re-crawl
+    # converges on the STORED rep; a new label elects a new one
+    (src / "b2.json").write_text(
+        doc(10, "colouur") + "\n" + doc(11, "brand new")
+    )
+    run("ck_shared", max_dist=1)
+    rows = {r.doc_id: (r.canonical_id, r.canonical)
+            for r in spark.read.parquet(out).collect()}
+    assert rows[10] == (1, "colour")
+    assert rows[11] == (11, "brand new")
+    assert set(rows) == {1, 2, 10, 11}
+    st = spark.read.parquet(store).collect()
+    assert {(r.canonical_id, r.canonical) for r in st} == {
+        (1, "colour"), (11, "brand new")
+    }
+    assert len(st) == 4
+
+    # full replay (fresh checkpoint re-reads every file): all four docs
+    # map to stored reps, the delta is empty, the store does NOT grow —
+    # store-advance idempotence under replay
+    run("ck_replay", max_dist=1)
+    st2 = spark.read.parquet(store).collect()
+    assert len(st2) == 4
+    replayed = [
+        (r.doc_id, r.canonical_id)
+        for r in spark.read.parquet(out).collect()
+    ]
+    assert sorted(replayed) == sorted(
+        [(1, 1), (2, 1), (10, 1), (11, 11)] * 2
+    )
+
+    # identity: a run at a different k is refused before touching the store
+    (src / "b3.json").write_text(doc(20, "whatever"))
+    stream_bad = (
+        spark.readStream.schema("doc_id long, label string")
+        .json(str(src))
+    )
+    q_bad = incremental_dedupe_sink(
+        stream_bad, out, store, str(tmp_path / "ck_bad"),
+        "label", "doc_id", mode="canon", max_dist=2,
+    )
+    with _pytest.raises(Exception, match="max_dist"):
+        q_bad.awaitTermination()
+    assert read_canon_store_meta(store) == 1
+    assert spark.read.parquet(store).count() == 4
+    # a legacy sidecar-less store is ambiguous — refused, not adopted
+    legacy = str(tmp_path / "canon_store_legacy")
+    spark.read.parquet(store).write.parquet(legacy)
+    stream_leg = (
+        spark.readStream.schema("doc_id long, label string")
+        .json(str(src))
+    )
+    q_leg = incremental_dedupe_sink(
+        stream_leg, out, legacy, str(tmp_path / "ck_leg"),
+        "label", "doc_id", mode="canon", max_dist=1,
+    )
+    with _pytest.raises(Exception, match="_canon_store_meta"):
+        q_leg.awaitTermination()
+
+
+def test_incremental_dedupe_sink_bucketed_store_table(spark, tmp_path):
+    """store_table: the sink carries the exact-hash store as a BUCKETED
+    catalog table — round-12 closure of the O(store)-shuffle-per-batch
+    weak.  Semantics must be identical to the plain-dir sink (re-ingests
+    dropped across runs), the table must exist with its sidecar, and a
+    RESTARTED stream (simulated by dropping the in-memory catalog entry)
+    must re-register from the sidecar instead of degrading."""
+    import json as _json
+    import uuid
+
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        BUCKET_SPEC_FILE,
+        read_bucket_spec,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+    )
+
+    table = f"sink_store_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "bt_in"
+    src.mkdir()
+    out = str(tmp_path / "bt_out")
+    store = str(tmp_path / "bt_store")
+
+    def doc(i, text):
+        return _json.dumps({"doc_id": i, "text": text})
+
+    (src / "b1.json").write_text(
+        doc(1, "the first document body") + "\n" + doc(2, "another body")
+    )
+
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        q = incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"bt_ck{runs[0]}"),
+            "text", "doc_id", store_table=table, store_buckets=8,
+        )
+        q.awaitTermination()
+
+    try:
+        run()
+        assert sorted(
+            r.doc_id for r in spark.read.parquet(out).collect()
+        ) == [1, 2]
+        # the store is a real bucketed table with its durable sidecar
+        assert spark.catalog.tableExists(table)
+        spec = read_bucket_spec(store)
+        assert spec == {
+            "bucket_cols": ["content_hash"],
+            "n_buckets": 8,
+            "schema": "`content_hash` bigint",
+        }, spec
+        assert (tmp_path / "bt_store" / BUCKET_SPEC_FILE).is_file()
+
+        # restart: a new session's in-memory catalog would be empty — the
+        # sidecar re-registration path must restore the table, and the
+        # cross-run dedup memory with it
+        spark.sql(f"DROP TABLE {table}")
+        (src / "b2.json").write_text(
+            doc(10, "the first document body")  # re-crawl of doc 1
+            + "\n"
+            + doc(11, "a genuinely new document")
+        )
+        run()
+        got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+        assert got == [1, 2, 11]
+        assert spark.catalog.tableExists(table)  # re-registered
+        assert spark.table(table).count() == 3
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_incremental_lsh_sink_bucketed_store_table(spark, tmp_path):
+    """mode='lsh' through the bucketed table path: the non-trivial store
+    schema (band/key/sig array/content_hash/id) survives the bucketed
+    write+append round-trip and near-dup re-crawls are still dropped."""
+    import json as _json
+    import uuid
+
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+    )
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm windowsill in the late afternoon sun"
+    )
+    recrawl = base.replace("afternoon", "evening")
+    novel = (
+        "completely unrelated content about distributed query engines "
+        "partitioning shuffle exchanges and adaptive execution plans"
+    )
+    table = f"sink_lsh_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "btl_in"
+    src.mkdir()
+    out = str(tmp_path / "btl_out")
+    store = str(tmp_path / "btl_store")
+
+    def doc(i, text):
+        return _json.dumps({"doc_id": i, "text": text})
+
+    (src / "b1.json").write_text(doc(1, base))
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        q = incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"btl_ck{runs[0]}"),
+            "text", "doc_id", mode="lsh", shingle_mode="word", k=3,
+            store_table=table, store_buckets=8,
+        )
+        q.awaitTermination()
+
+    try:
+        run()
+        (src / "b2.json").write_text(doc(10, recrawl) + "\n" + doc(11, novel))
+        run()
+        got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+        assert got == [1, 11]
+        assert {
+            r.doc_id for r in spark.table(table).collect()
+        } == {1, 11}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_sink_store_table_guards(spark, tmp_path):
+    """The three refusal paths: a derived-key mode cannot take
+    store_table; a plain-parquet dir (no sidecar) cannot be declared
+    bucketed; a catalog name already bound to a DIFFERENT directory is a
+    stale registration, not a store."""
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        write_bucketed_store,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+        incremental_dedupe_sink,
+    )
+
+    never = tmp_path / "never_read"
+    never.mkdir()
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .json(str(never))
+    )
+    with pytest.raises(ValueError, match="derives its probe-join keys"):
+        incremental_dedupe_sink(
+            stream, "o", "s", "c", "text", "doc_id",
+            mode="video", store_table="nope",
+        )
+
+    # plain-parquet dir: refusing to lie to the planner
+    plain = tmp_path / "plain_store"
+    spark.range(3).selectExpr("id AS content_hash").write.parquet(str(plain))
+    with pytest.raises(ValueError, match="_bucket_spec.json"):
+        read_store(spark, str(plain), f"t_{uuid.uuid4().hex[:8]}")
+
+    # stale catalog entry pointing elsewhere
+    table = f"stale_{uuid.uuid4().hex[:8]}"
+    other = tmp_path / "other_store"
+    try:
+        write_bucketed_store(
+            spark.range(3).selectExpr("id AS content_hash"),
+            str(other), table, ["content_hash"], 4,
+        )
+        with pytest.raises(ValueError, match="stale registration"):
+            read_store(spark, str(tmp_path / "elsewhere"), table)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_rewrite_bucketed_store_compaction_lifecycle(spark, tmp_path):
+    """The table store's full lifecycle: sink batches append one file set
+    per bucket per batch; rewrite_bucketed_store collapses the history
+    UNDER THE SAME bucket identity, re-registers the table, and the next
+    sink batch still dedupes against it with the bucketed plan."""
+    import json as _json
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucket_spec,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+        incremental_dedupe_sink,
+        rewrite_bucketed_store,
+    )
+
+    table = f"lifec_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "lc_in"
+    src.mkdir()
+    out = str(tmp_path / "lc_out")
+    store = str(tmp_path / "lc_store")
+
+    def doc(i, text):
+        return _json.dumps({"doc_id": i, "text": text})
+
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"lc_ck{runs[0]}"),
+            "text", "doc_id", store_table=table, store_buckets=4,
+        ).awaitTermination()
+
+    try:
+        (src / "b1.json").write_text(
+            "\n".join(doc(i, f"body number {i}") for i in range(20))
+        )
+        run()
+        (src / "b2.json").write_text(
+            "\n".join(doc(i, f"body number {i}") for i in range(20, 40))
+        )
+        run()
+        import glob as _glob
+
+        files_before = len(_glob.glob(f"{store}/*.parquet"))
+        # two appends x 4 buckets: the history holds one file set per
+        # bucket per batch; compaction collapses it to one per bucket
+        assert files_before > 4
+        # exact-store compaction is file consolidation (rows disjoint)
+        n = rewrite_bucketed_store(
+            spark, table, store, spark.table(table)
+        )
+        assert n == 40
+        files_after = len(_glob.glob(f"{store}/*.parquet"))
+        assert files_after <= 4 < files_before
+        # identity preserved through the swap
+        spec = read_bucket_spec(store)
+        assert spec["bucket_cols"] == ["content_hash"]
+        assert spec["n_buckets"] == 4
+        # the compacted store still serves the zero-Exchange probe (a
+        # bare scan reports Bucketed:false by design — autoBucketedScan
+        # only engages the layout when a join exploits it)
+        st = read_store(spark, store, table)
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            probe = spark.range(10).selectExpr(
+                "id AS content_hash"
+            ).join(st, "content_hash", "left_anti")
+            plan = probe._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                .fromString("formatted")
+            )
+            assert "Bucketed: true" in plan
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        # ...and the cross-run dedup memory survived compaction
+        (src / "b3.json").write_text(
+            doc(100, "body number 7")  # re-crawl of doc 7's content
+            + "\n" + doc(101, "a genuinely new body")
+        )
+        run()
+        got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+        assert got == list(range(40)) + [101]
+        assert spark.table(table).count() == 41
+
+        # a frame that lost the bucket column is refused
+        with pytest.raises(ValueError, match="bucket column"):
+            rewrite_bucketed_store(
+                spark, table, store,
+                spark.table(table).selectExpr(
+                    "content_hash AS other"
+                ),
+            )
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_sink_refuses_temp_view_and_plain_append_poisoning(spark, tmp_path):
+    """Review-finding guards: (1) a temp view shadowing store_table is
+    refused — spark.table() would resolve the view and silently dedupe
+    against its rows; (2) a flag-less run against a bucketed table dir
+    refuses the plain parquet append that would poison the bucket
+    layout (Spark's own failure is a later, opaque 'Invalid bucket
+    file')."""
+    import json as _json
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+        read_store,
+    )
+
+    view = f"shadow_{uuid.uuid4().hex[:8]}"
+    spark.range(3).selectExpr(
+        "id AS content_hash"
+    ).createOrReplaceTempView(view)
+    try:
+        with pytest.raises(ValueError, match="view"):
+            read_store(spark, str(tmp_path / "whatever"), view)
+    finally:
+        spark.catalog.dropTempView(view)
+
+    table = f"poison_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "pz_in"
+    src.mkdir()
+    out = str(tmp_path / "pz_out")
+    store = str(tmp_path / "pz_store")
+    (src / "b1.json").write_text(
+        _json.dumps({"doc_id": 1, "text": "first body"})
+    )
+
+    def run(k, **kw):
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        q = incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"pz_ck{k}"),
+            "text", "doc_id", **kw,
+        )
+        q.awaitTermination()
+
+    try:
+        run(1, store_table=table, store_buckets=4)
+        (src / "b2.json").write_text(
+            _json.dumps({"doc_id": 2, "text": "second body"})
+        )
+        # restarted stream whose config LOST store_table: refused before
+        # any plain part file lands between the bucketed ones
+        with pytest.raises(Exception, match="poison its bucket layout"):
+            run(2)
+        # the store is intact and the correctly-configured stream resumes
+        run(3, store_table=table, store_buckets=4)
+        assert spark.table(table).count() == 2
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_incremental_simhash_sink_bucketed_store_table(spark, tmp_path):
+    """mode='simhash' + store_table rides the KEY-INDEX store: near-dup
+    re-crawls streamed in later runs are dropped against the carried
+    (combo, key) table, the combo-split identity sidecar refuses a
+    mismatched probe, and the cross-session resume path works."""
+    import json as _json
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucket_spec,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+    )
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm windowsill in the late afternoon sun "
+        "and distant birds sing quietly across the shaded garden path"
+    )
+    table = f"sh_idx_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "sh_in"
+    src.mkdir()
+    out = str(tmp_path / "sh_out")
+    store = str(tmp_path / "sh_store")
+
+    def doc(i, text):
+        return _json.dumps({"doc_id": i, "text": text})
+
+    runs = [0]
+
+    def run(**kw):
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        q = incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"sh_ck{runs[0]}"),
+            "text", "doc_id", mode="simhash", store_table=table,
+            store_buckets=8, **kw,
+        )
+        q.awaitTermination()
+
+    try:
+        (src / "b1.json").write_text(doc(1, base))
+        run()
+        assert read_bucket_spec(store)["bucket_cols"] == ["combo", "key"]
+        # restart: catalog lost, sidecars survive
+        spark.sql(f"DROP TABLE {table}")
+        (src / "b2.json").write_text(
+            doc(10, base.replace("afternoon", "evening"))  # near re-crawl
+            + "\n"
+            + doc(11, "completely unrelated content about distributed "
+                      "query engines partitioning shuffle exchanges")
+        )
+        run()
+        got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+        assert got == [1, 11]  # 10 dropped against the carried index
+        assert spark.table(table).count() == 2 * 20  # 20 combos per doc
+
+        # combo-split identity: probing at a different split refuses
+        (src / "b3.json").write_text(doc(30, "whatever new text body"))
+        with pytest.raises(Exception, match="not comparable"):
+            run(n_blocks=5)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_hamming_index_identity_matches_operator_defaults():
+    """HAMMING_INDEX_IDENTITY is the ONE place the combo-split defaults
+    live for the validate-and-stamp gate; if an operator signature's
+    default drifts from it, the sidecar would certify a split the probe
+    didn't use — the exact silent near-dup miss the sidecar exists to
+    prevent (review finding r12).  No Spark session needed."""
+    import inspect
+
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        incremental_simhash_dedupe_indexed,
+    )
+    from evidence_datasource_parsers_spark.operators.multimodal import (
+        incremental_audio_dedupe_indexed,
+        incremental_phash_dedupe_indexed,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        HAMMING_INDEX_IDENTITY,
+    )
+
+    def defaults(fn, *names):
+        ps = inspect.signature(fn).parameters
+        return {n: ps[n].default for n in names}
+
+    assert HAMMING_INDEX_IDENTITY["simhash"] == defaults(
+        incremental_simhash_dedupe_indexed,
+        "nbits", "max_hamming", "n_blocks",
+    )
+    assert HAMMING_INDEX_IDENTITY["phash"] == {
+        "nbits": 63,  # fixed inside the perceptual core
+        **defaults(
+            incremental_phash_dedupe_indexed, "max_hamming", "n_blocks"
+        ),
+    }
+    assert HAMMING_INDEX_IDENTITY["audio"] == {
+        "nbits": 63,
+        **defaults(
+            incremental_audio_dedupe_indexed, "max_hamming", "n_blocks"
+        ),
+    }
+    # remux is fixed by construction (full hash, one combo)
+    assert HAMMING_INDEX_IDENTITY["remux"] == {
+        "nbits": 63, "max_hamming": 0, "n_blocks": 1,
+    }
+
+
+def test_compact_preserves_key_index_sidecar(spark, tmp_path):
+    """`compact --table` on a hamming KEY-INDEX store must carry the
+    `_simhash_index_meta.json` identity sidecar through the dir swap:
+    write_bucketed_store recreates only `_bucket_spec.json`, so without
+    the sidecar copy the next batch/refresh refuses with the misleading
+    'classic store must be MIGRATED' message and the store is stranded
+    (ADVICE r13 medium)."""
+    import json as _json
+    import uuid
+
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        read_simhash_index_meta,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+        rewrite_bucketed_store,
+    )
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat "
+        "watches from the warm windowsill in the late afternoon sun "
+        "and distant birds sing quietly across the shaded garden path"
+    )
+    table = f"kidx_cp_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "kc_in"
+    src.mkdir()
+    out = str(tmp_path / "kc_out")
+    store = str(tmp_path / "kc_store")
+
+    def doc(i, text):
+        return _json.dumps({"doc_id": i, "text": text})
+
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / f"kc_ck{runs[0]}"),
+            "text", "doc_id", mode="simhash", store_table=table,
+            store_buckets=4,
+        ).awaitTermination()
+
+    try:
+        (src / "b1.json").write_text(doc(1, base))
+        run()
+        ident = read_simhash_index_meta(store)
+        assert ident == {"nbits": 32, "max_hamming": 3, "n_blocks": 6}
+        n = rewrite_bucketed_store(spark, table, store, spark.table(table))
+        assert n == 20  # 20 combos for the one stored doc
+        # the swap must NOT have dropped the combo-split identity
+        assert read_simhash_index_meta(store) == ident
+        # ...and the compacted store still serves the near-dup probe
+        (src / "b2.json").write_text(
+            doc(10, base.replace("afternoon", "evening"))
+            + "\n"
+            + doc(11, "completely unrelated content about distributed "
+                      "query engines partitioning shuffle exchanges")
+        )
+        run()
+        got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+        assert got == [1, 11]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_first_batch_table_create_is_atomic(spark, tmp_path):
+    """The table store's FIRST batch is all-or-nothing: the identity
+    sidecars are stamped inside the `__swap_*` tmp dir before the one
+    rename that makes the store visible, so no crash can leave a store
+    whose combo split is unrecorded (ADVICE r13 low).  An orphaned tmp
+    from a crashed first batch is swept by recover_store_dir."""
+    import json as _json
+    import os
+    import uuid
+
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        read_simhash_index_meta,
+    )
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucket_spec,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        incremental_dedupe_sink,
+        recover_store_dir,
+    )
+
+    table = f"atom_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "at_in"
+    src.mkdir()
+    out = str(tmp_path / "at_out")
+    store = str(tmp_path / "at_store")
+
+    # a first batch that crashed before its rename leaves only a tmp
+    # sibling — recover_store_dir treats it as uncommitted garbage
+    orphan = f"{store}__swap_deadbeef"
+    os.makedirs(orphan)
+    with open(os.path.join(orphan, "junk.parquet"), "w") as f:
+        f.write("x")
+    assert recover_store_dir(store) is False
+    assert not os.path.isdir(orphan)
+    assert not os.path.isdir(store)
+
+    (src / "b1.json").write_text(
+        _json.dumps({"doc_id": 1, "text": "first ever body"})
+    )
+    try:
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .json(str(src))
+        )
+        incremental_dedupe_sink(
+            stream, out, store, str(tmp_path / "at_ck"),
+            "text", "doc_id", mode="simhash", store_table=table,
+            store_buckets=4,
+        ).awaitTermination()
+        # the store appeared complete: bucket spec AND combo-split
+        # sidecar both present, no leftover tmp siblings
+        assert read_bucket_spec(store)["bucket_cols"] == ["combo", "key"]
+        assert read_simhash_index_meta(store) is not None
+        parent = os.path.dirname(store)
+        assert not [
+            d for d in os.listdir(parent)
+            if d.startswith(os.path.basename(store) + "__")
+        ]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_binding_memo_invalidated_on_reregister(spark, tmp_path):
+    """The validated-binding memo must not outlive the binding it
+    certified: after the library drops + re-registers a table at a
+    DIFFERENT directory, read_store against the OLD directory must
+    refuse (a stale memo would let it silently probe the new dir's
+    files — ADVICE r13 low)."""
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        register_bucketed_store,
+        write_bucketed_store,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+    )
+
+    table = f"memo_{uuid.uuid4().hex[:8]}"
+    dir_a = str(tmp_path / "memo_a")
+    dir_b = str(tmp_path / "memo_b")
+    try:
+        write_bucketed_store(
+            spark.range(5).selectExpr("id AS content_hash"),
+            dir_a, table, ["content_hash"], 2,
+        )
+        # validate (and memoize) the (table, dir_a) binding
+        assert read_store(spark, dir_a, table).count() == 5
+        # library-controlled re-register at a DIFFERENT directory
+        write_bucketed_store(
+            spark.range(7).selectExpr("id AS content_hash"),
+            dir_b, f"{table}_b", ["content_hash"], 2,
+        )
+        spark.sql(f"DROP TABLE {table}")
+        register_bucketed_store(spark, table, dir_b)
+        # the old binding is gone — a stale memo would return dir_b's
+        # rows for a dir_a read; the guard must refuse instead
+        with pytest.raises(ValueError, match="points at"):
+            read_store(spark, dir_a, table)
+        assert read_store(spark, dir_b, table).count() == 7
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}_b")
+
+
+def test_streaming_membership_sink_store_table(spark, tmp_path):
+    """Table-backed Bloom counter sink (VERDICT r12 item 5): batches
+    append into a bucketed (group, word) table; the probe reads the
+    carried table; a catalog-losing restart re-registers from the
+    sidecar; replays are absorbed by the OR-merge alone."""
+    import json as _json
+    import uuid
+
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        bloom_member,
+    )
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucket_spec,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+        streaming_membership_sink,
+    )
+
+    table = f"bloom_sink_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "bl_in"
+    src.mkdir()
+    store = str(tmp_path / "bl_store")
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("g string, url string")
+            .json(str(src))
+        )
+        streaming_membership_sink(
+            stream, store, str(tmp_path / f"bl_ck{runs[0]}"),
+            ["g"], "url", k=4, m_bits=1 << 16,
+            store_table=table, store_buckets=4,
+        ).awaitTermination()
+
+    def member(url):
+        items = spark.createDataFrame([("g0", url)], "g string, url string")
+        return bloom_member(
+            read_store(spark, store, table), items, ["g"], "url",
+            4, 1 << 16,
+        ).collect()[0]["maybe_member"]
+
+    try:
+        (src / "b1.json").write_text(
+            "\n".join(
+                _json.dumps({"g": "g0", "url": f"u{i}"}) for i in range(200)
+            )
+        )
+        run()
+        assert read_bucket_spec(store)["bucket_cols"] == ["g", "__w"]
+        assert member("u5") is True
+        # restart: catalog lost; replay of b1 (fresh checkpoint) + new
+        # batch — the OR-merge absorbs the replayed words
+        spark.sql(f"DROP TABLE {table}")
+        (src / "b2.json").write_text(
+            _json.dumps({"g": "g0", "url": "brand-new-url"})
+        )
+        run()
+        assert member("u5") is True
+        assert member("brand-new-url") is True
+        assert member("never-ingested-url-zzz") is False
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_streaming_distinct_count_sink_store_table(spark, tmp_path):
+    """Table-backed HLL counter sink: same lifecycle, estimates track
+    the union across runs without replay inflation."""
+    import json as _json
+    import uuid
+
+    import pytest
+
+    from evidence_datasource_parsers_spark.operators.sketches import (
+        sketch_store_estimates,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+        streaming_distinct_count_sink,
+    )
+
+    table = f"hll_sink_{uuid.uuid4().hex[:8]}"
+    src = tmp_path / "hl_in"
+    src.mkdir()
+    store = str(tmp_path / "hl_store")
+    runs = [0]
+
+    def run():
+        runs[0] += 1
+        stream = (
+            spark.readStream.schema("domain string, url string")
+            .json(str(src))
+        )
+        streaming_distinct_count_sink(
+            stream, store, str(tmp_path / f"hl_ck{runs[0]}"),
+            ["domain"], "url", store_table=table, store_buckets=4,
+        ).awaitTermination()
+
+    def probe():
+        return {
+            r.domain: r.approx_distinct
+            for r in sketch_store_estimates(
+                read_store(spark, store, table), ["domain"]
+            ).collect()
+        }
+
+    try:
+        (src / "b1.json").write_text(
+            "\n".join(
+                _json.dumps({"domain": "a", "url": f"u{i}"})
+                for i in range(100)
+            )
+        )
+        run()
+        assert probe()["a"] == pytest.approx(100, rel=0.05)
+        spark.sql(f"DROP TABLE {table}")  # restart
+        (src / "b2.json").write_text(
+            "\n".join(
+                _json.dumps({"domain": "a", "url": f"u{i}"})
+                for i in range(100, 150)
+            )
+        )
+        run()
+        est = probe()
+        assert est["a"] == pytest.approx(150, rel=0.05)
+        assert est["a"] < 220  # replay did NOT double-count
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_stream_warc_documents_live_crawl(spark, tmp_path):

@@ -191,40 +191,6 @@ def test_incremental_video_dedupe_two_runs(spark):
     r2.pinned.unpersist()
 
 
-def test_refresh_video_batch_with_length_gate(spark):
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_video_batch,
-    )
-
-    clip = _clip(0)
-    r1 = refresh_video_batch(
-        spark.createDataFrame(
-            [(1, encode_avi_mjpeg(clip, quality=95))],
-            "media_id long, blob binary",
-        ),
-        None,
-    )
-    store = r1.store.localCheckpoint(eager=True)
-    r1.done()
-
-    r2 = refresh_video_batch(
-        spark.createDataFrame(
-            [
-                (10, encode_avi_mjpeg(clip, quality=60)),       # re-encode
-                (11, encode_avi_mjpeg(_clip(5), quality=95)),   # new, 6 frames
-                (12, encode_avi_mjpeg(_clip(9, 2), quality=95)),  # short → gate
-            ],
-            "media_id long, blob binary",
-        ),
-        store,
-        min_n_frames=4,
-    )
-    assert {r["media_id"] for r in r2.ready.collect()} == {11}
-    stored = {r["media_id"] for r in r2.store.collect()}
-    assert stored == {1, 11, 12}  # gated clip still SEEN
-    r2.done()
-
-
 def test_streaming_video_mode(spark, tmp_path):
     from evidence_datasource_parsers_spark.streaming.incremental import (
         incremental_dedupe_sink,

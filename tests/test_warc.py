@@ -212,45 +212,6 @@ def test_malformed_tail_only_flags_once():
     assert types == ["response", "__malformed__"]
 
 
-def test_warc_to_refresh_pipeline_end_to_end(spark, tmp_path):
-    """The full crawl-ingest story: WARC archives → documents table
-    (HTML stripped, URLs canonical, portable ids) → incremental refresh
-    (duplicate page dropped) → split/shard-ready output."""
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_corpus_batch,
-    )
-    from evidence_datasource_parsers_spark.sources.warc import warc_documents
-
-    page = b"<html><head><script>x()</script></head>" \
-           b"<body><p>Unique article text body here</p></body></html>"
-    dup = b"<html><body><p>Copied press release body</p></body></html>"
-    raw = (
-        _record("response", _http(page),
-                "HTTP://Site.Example:80/a?utm_source=x&id=1#frag")
-        + _record("response", _http(dup), "http://site.example/b")
-        + _record("response", _http(dup),
-                  "http://mirror.example/c")  # same content, other site
-        + _record("response", _http(b"irrelevant", b"image/png"),
-                  "http://site.example/img")  # non-text: filtered
-    )
-    (tmp_path / "crawl.warc.gz").write_bytes(gzip.compress(raw))
-
-    docs = warc_documents(spark, str(tmp_path))
-    rows = {r.url: r for r in docs.collect()}
-    # canonicalized: scheme/host lowered, :80 stripped, utm + fragment gone
-    assert "http://site.example/a?id=1" in rows
-    assert len(rows) == 3  # png response filtered out
-    assert rows["http://site.example/a?id=1"].text == \
-        "Unique article text body here"
-
-    res = refresh_corpus_batch(docs, None, mode="exact", num_shards=2)
-    ready = res.ready.collect()
-    # the mirrored press release collapses to ONE kept doc
-    assert len(ready) == 2
-    assert {"split", "shard", "quality"} <= set(res.ready.columns)
-    res.done()
-
-
 def test_warc_documents_crawl_ts_feeds_temporal_split(spark, tmp_path):
     from evidence_datasource_parsers_spark.operators.sampling import (
         temporal_split,

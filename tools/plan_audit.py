@@ -37,16 +37,6 @@ ALLOW = {
         "bounded probe set (vec_id < 5) broadcast by contract — "
         "O(|Q|·|C|) is q37's documented baseline semantics"
     ),
-    "langid_weights": (
-        "dense-table cross joins are MODEL-size-bounded (seen buckets × "
-        "training languages ≤ n_buckets·|langs| rows, corpus-independent) "
-        "— the dense table is what keeps missing log-probs from reading "
-        "as 0 at inference (functions/langid.py module doc)"
-    ),
-    "langid_classify": (
-        "inherits the training plan's model-bounded densification cross "
-        "joins; the per-document path is explode + broadcast equi-join"
-    ),
 }
 
 
@@ -149,20 +139,18 @@ def audit_plan(plan: str, optimized: str = "") -> list[str]:
 
 def pipeline_plans(spark) -> dict:
     """Fixture-driven plans for every pipeline surface the catalog sweep
-    cannot reach (frontier, refresh modes, incremental dedup, langid) —
-    the round-8 verdict's item 5.  Frames are tiny but STRUCTURALLY
+    cannot reach (frontier, incremental dedup stores, counter stores,
+    fuzzy joins, the document-frequency store).  Frames are tiny but STRUCTURALLY
     faithful: the audit checks plan shapes (cartesians, row-at-a-time
     Python, unbounded global sorts/windows), which do not depend on row
     counts.  Arrow stages (pandas_udf / mapInPandas) render as
     ArrowEvalPython and pass by design."""
     from pyspark.sql import functions as F
 
-    from evidence_datasource_parsers_spark.functions.langid import (
-        classify_language,
-        train_langid_classifier,
-    )
     from evidence_datasource_parsers_spark.operators.dedupe import (
+        incremental_exact_dedupe,
         incremental_lsh_dedupe,
+        incremental_simhash_dedupe,
         lsh_fingerprints,
     )
     from evidence_datasource_parsers_spark.operators.multimodal import (
@@ -174,9 +162,6 @@ def pipeline_plans(spark) -> dict:
     )
     from evidence_datasource_parsers_spark.operators.span_dedup import (
         incremental_span_dedupe,
-    )
-    from evidence_datasource_parsers_spark.pipelines.corpus_refresh import (
-        refresh_corpus_batch,
     )
     from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
         plan_fetch_batch,
@@ -217,13 +202,14 @@ def pipeline_plans(spark) -> dict:
     )
     plans["frontier_recrawl_budget_ready"] = frb.ready
 
-    for mode in ("exact", "lsh", "simhash"):
-        res = refresh_corpus_batch(
-            docs, None, "text", "doc_id", mode=mode, min_quality=None
-        )
-        plans[f"refresh_{mode}_ready"] = res.ready
-        plans[f"refresh_{mode}_delta"] = res.store_delta
-        res.done()
+    xres = incremental_exact_dedupe(docs, None, "text", "doc_id")
+    plans["incremental_exact_fresh"] = xres.fresh
+    plans["incremental_exact_delta"] = xres.delta
+
+    hres = incremental_simhash_dedupe(docs, None, "text", "doc_id")
+    plans["incremental_simhash_fresh"] = hres.fresh
+    plans["incremental_simhash_delta"] = hres.delta
+    hres.pinned.unpersist()
 
     carried_fp = lsh_fingerprints(
         docs.filter(F.col("doc_id") % 2 == 0), "text", "doc_id"
@@ -290,17 +276,6 @@ def pipeline_plans(spark) -> dict:
     )
     plans["incremental_embedding_fresh"] = eres.fresh
     eres.pinned.unpersist()
-
-    langs = spark.createDataFrame(
-        [("aa", "shared token stream alpha beta gamma"),
-         ("bb", "totally different words here entirely")],
-        "lang string, text string",
-    )
-    w = train_langid_classifier(langs, "text", "lang")
-    plans["langid_weights"] = w
-    plans["langid_classify"] = classify_language(
-        docs, w, "text", "doc_id"
-    )
 
     # counter stores: the append-history probe/compaction plans
     from evidence_datasource_parsers_spark.operators.sketches import (
@@ -403,22 +378,6 @@ def pipeline_plans(spark) -> dict:
         df_docs, df_st, ["beta"], "text", "doc_id"
     )
 
-    # layout audit: the depth probe must ride the bucketed interval join
-    from evidence_datasource_parsers_spark.operators.layout_audit import (
-        STATS_SCHEMA,
-        layout_metrics,
-    )
-
-    stats = spark.createDataFrame(
-        [
-            ("f1", 0, "x", 4, 4, 0, 100, True, 0.0, 1.0, None, None),
-            ("f2", 0, "x", 4, 4, 0, 100, True, 1.0, 2.0, None, None),
-        ],
-        STATS_SCHEMA,
-    )
-    # eager=False: the auditor must see the bucketed interval-join PLAN,
-    # not the checkpoint leaf the eager default returns
-    plans["layout_metrics"] = layout_metrics(stats, eager=False)
     return plans
 
 
