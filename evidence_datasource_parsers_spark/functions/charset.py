@@ -4,7 +4,7 @@ ingestion.
 A real crawl is ~90% UTF-8 and a long tail of windows-1252, Shift-JIS,
 GBK, ISO-8859-*, and UTF-16 — ``CAST(payload AS STRING)`` (the UTF-8-only
 path) silently turns that tail into replacement-character soup.  This
-module is the step between the WARC byte rows and every text operator:
+module is the step between raw byte rows and every text operator:
 
   1. :func:`sniff_charset` — deterministic detection: BOM, then the HTTP
      ``Content-Type`` charset parameter, then an HTML ``<meta>`` /  XML
@@ -209,7 +209,7 @@ def decode_text_frame(
     charset_source)`` are appended.  One narrow Arrow ``mapInPandas``
     pass — no shuffle, no join-back; at 100 TB the cost is the same
     byte-stream scan any decode must pay, and partition parallelism is
-    whatever the upstream WARC scan produced."""
+    whatever the upstream byte scan produced."""
     from collections.abc import Iterator
 
     keep = [f.name for f in df.schema.fields if f.name != payload_col]

@@ -6,8 +6,8 @@ subset of ISO 32000-1 (the open PDF spec):
 
   * **object scan, not xref trust** — crawled PDFs routinely carry
     truncated or lying cross-reference tables, so objects are located by
-    scanning ``N G obj … endobj`` spans directly (the same resync
-    philosophy as the WARC record parser);
+    scanning ``N G obj … endobj`` spans directly (resync on the next
+    object header rather than trusting offsets);
   * **FlateDecode content streams** (zlib is stdlib); other filters
     (DCT, LZW, …) skip that stream rather than failing the document;
   * **text-showing operators** ``Tj`` ``'`` ``"`` ``TJ`` with

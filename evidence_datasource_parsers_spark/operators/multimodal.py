@@ -496,8 +496,8 @@ def decode_blob(blob: bytes, decode_hook: DecodeHook = None) -> dict:
     NULL rows).  The hook's output flows into the SAME stats / pHash /
     fingerprint-store tiers with no plan change — every consumer
     (decoded_image_stats, image_phash_frame, video_frame_phashes,
-    resize_images, the incremental dedups, warc_media, the refresh
-    pipelines) threads this parameter through.
+    resize_images, the incremental dedups) threads this parameter
+    through.
     """
     import numpy as np
 

@@ -391,7 +391,11 @@ def corpus_index_rows(
         out["cell"] = order[:, -1].astype(np.int32)
         return pd.DataFrame(out)
 
-    idx_udf = F.pandas_udf(kernel, schema)
+    # Pure, but flagged like ivf._cells_udf: without the flag Catalyst
+    # clones the kernel into the pushed-down isnotnull(__cell) filter of an
+    # un-persisted ivf_topk(corpus_assigned=...) join, and the fused pass
+    # runs twice (pinned by test_corpus_index_kernel_runs_once_unpersisted)
+    idx_udf = F.pandas_udf(kernel, schema).asNondeterministic()
     return (
         corpus.where(F.col(vec_col).isNotNull())
         .select(

@@ -4,9 +4,9 @@ a plain-Python stage registry over ONE SparkSession.
 Each registered pipeline is a named ``(spark, config) -> DataFrame`` function
 with two optional output contracts (M2 — the reference validates emitted
 JSON against a versioned JSON Schema per Snakefile rule): a Spark
-``StructType`` check before the sink (structural), and a JSON-Schema check
-after it (value-level: required/enum/pattern/bounds/nesting, validated
-distributed via ``validation.assert_json_schema``).
+``StructType`` check (structural) and a JSON-Schema check (value-level:
+required/enum/pattern/bounds/nesting, validated distributed via
+``validation.assert_json_schema``), both before the sink.
 """
 
 from __future__ import annotations
@@ -100,26 +100,27 @@ class Runner:
             if spec.output_schema is not None:
                 self.check_schema(df, spec.output_schema)
             results[name] = df
-            # sink + JSON-Schema validation are two actions over the same
+            # JSON-Schema validation + sink are two actions over the same
             # frame: persist around them so the pipeline's DAG runs once,
-            # and the rows validated ARE the rows that were sunk (matters
+            # and the rows sunk ARE the rows that were validated (matters
             # if any upstream stage is nondeterministic)
             both_actions = out_dir and spec.json_schema is not None
             if both_actions:
                 df.persist()
             try:
-                if out_dir:
-                    write_evidence_strings(df, f"{out_dir}/{name}.json.gz")
                 if spec.json_schema is not None:
-                    # JSON-Schema contract (M2), validated AFTER the sink
-                    # like the reference's per-rule opentargets_validator
-                    # step (Snakefile:110) — but distributed, not a driver
-                    # re-read
+                    # JSON-Schema contract (M2), distributed rather than a
+                    # driver re-read, and checked BEFORE the sink (the
+                    # reference's opentargets_validator step, Snakefile:110,
+                    # runs after the file is written) so a violating output
+                    # raises without leaving a file behind
                     from evidence_datasource_parsers_spark.validation import (
                         assert_json_schema,
                     )
 
                     assert_json_schema(df, spec.json_schema)
+                if out_dir:
+                    write_evidence_strings(df, f"{out_dir}/{name}.json.gz")
             finally:
                 if both_actions:
                     df.unpersist()

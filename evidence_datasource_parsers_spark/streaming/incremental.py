@@ -22,8 +22,9 @@ whose probes take the capped sum per gram) is appended beside the
 carried files, O(batch) I/O per micro-batch regardless of store size.
 The HLL sketch store advances the same way (mergeable sketches: the
 batch's own sketch rows append; probes merge per group).  Compaction
-(``compact_gram_store``, ``compact_seen_store``, ``compact_sketch_store``,
-a bucketed rewrite) is an explicit-cadence operation, never per-batch.
+(``span_dedup.compact_gram_store``, ``sketches.compact_sketch_store``,
+:func:`rewrite_bucketed_store`) is an explicit-cadence operation, never
+per-batch.
 
 Scale: the per-batch cost is the batch scan + one anti-join against the
 store (AQE broadcast while the store is small; see

@@ -118,39 +118,24 @@ def test_incremental_audio_store_two_runs(spark):
     r2.pinned.unpersist()
 
 
-def test_warc_audio_crawl_loop(spark, tmp_path):
-    """warc_media(content_prefix='audio/') → audio rows with REAL WAV
-    features; non-audio responses excluded; compressed codecs NULL."""
-    import gzip
-
-    from evidence_datasource_parsers_spark.sources.warc import warc_media
-
-    def record(payload, ctype, url):
-        headers = [
-            b"WARC/1.0",
-            b"WARC-Type: response",
-            b"WARC-Record-ID: <urn:uuid:a-%d>" % (hash(url) % 10**6),
-            b"WARC-Date: 2024-01-01T00:00:00Z",
-            b"Content-Length: " + str(len(_h(payload, ctype))).encode(),
-            b"WARC-Target-URI: " + url.encode(),
-        ]
-        return (b"\r\n".join(headers) + b"\r\n\r\n"
-                + _h(payload, ctype) + b"\r\n\r\n")
-
-    def _h(body, ctype):
-        return (b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype
-                + b"\r\n\r\n" + body)
+def test_warc_audio_crawl_loop(spark):
+    """Crawled audio responses (WARC-style rows: record id, url, payload)
+    → audio_features gives REAL WAV features; compressed codecs NULL."""
+    from evidence_datasource_parsers_spark.operators.multimodal import (
+        audio_features,
+    )
 
     wav = _wav(_tone_mix(8000, 1.0, _SONG), 8000)
-    raw = (
-        record(wav, b"audio/wav", "http://a.example/clip.wav")
-        + record(b"\xff\xfbMP3DATA", b"audio/mpeg", "http://a.example/x.mp3")
-        + record(b"<html>x</html>", b"text/html", "http://a.example/page")
+    media = spark.createDataFrame(
+        [
+            (1, "http://a.example/clip.wav", wav),
+            (2, "http://a.example/x.mp3", b"\xff\xfbMP3DATA"),
+        ],
+        "media_id long, url string, blob binary",
     )
-    (tmp_path / "a.warc.gz").write_bytes(gzip.compress(raw))
-    out = {r["url"]: r for r in warc_media(
-        spark, str(tmp_path), content_prefix="audio/"
-    ).collect()}
+    stats = audio_features(media, "blob", "media_id")
+    out = {r["url"]: r for r in
+           media.join(stats, on="media_id", how="left").collect()}
     assert set(out) == {"http://a.example/clip.wav", "http://a.example/x.mp3"}
     clip = out["http://a.example/clip.wav"]
     assert clip["sample_rate"] == 8000 and abs(clip["duration_s"] - 1.0) < 0.01

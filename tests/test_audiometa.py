@@ -170,53 +170,44 @@ def test_audio_stream_hash_wav_flac_cross_container(spark):
         == {1, 2}
 
 
-def test_warc_media_audio_container_tier(spark, tmp_path):
-    """warc_media(content_prefix='audio/'): compressed payloads get
-    container-tier rate/channels/duration + format + FLAC pcm_md5; WAV
-    keeps its decoded stats (decoded values win the coalesce)."""
-    from evidence_datasource_parsers_spark.sources.warc import warc_media
-
-    def record(payload: bytes, ctype: bytes, url: str, rid: str) -> bytes:
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype
-            + b"\r\nContent-Length: " + str(len(payload)).encode()
-            + b"\r\n\r\n" + payload
-        )
-        hdr = (
-            b"WARC/1.0\r\nWARC-Type: response\r\n"
-            b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">\r\n"
-            b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-            b"WARC-Target-URI: " + url.encode() + b"\r\n"
-            b"Content-Type: application/http; msgtype=response\r\n"
-            b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
-        )
-        return hdr + http + b"\r\n\r\n"
+def test_warc_media_audio_container_tier(spark):
+    """Crawled audio responses (WARC-style rows): compressed payloads get
+    container-tier rate/channels/duration + format + FLAC pcm_md5 from
+    audio_meta_frame; WAV also keeps its decoded stats from
+    audio_features, while the sample-derived columns of the compressed
+    payloads stay NULL."""
+    from evidence_datasource_parsers_spark.operators.multimodal import (
+        audio_features,
+        audio_meta_frame,
+    )
 
     pcm = ((np.arange(8000) * 11) % 2001 - 1000).astype("<i2")
-    recs = (
-        record(_wav(pcm, rate=8000), b"audio/wav", "http://s/a.wav", "w1")
-        + record(
-            encode_flac_header(
+    media = spark.createDataFrame(
+        [
+            (1, "http://s/a.wav", _wav(pcm, rate=8000)),
+            (2, "http://s/b.flac", encode_flac_header(
                 rate=44100, channels=2, total_samples=44100 * 3,
                 pcm_md5=hashlib.md5(b"x").digest(),
-            ),
-            b"audio/flac", "http://s/b.flac", "f1",
-        )
-        + record(encode_mp3_frames(30), b"audio/mpeg",
-                 "http://s/c.mp3", "m1")
+            )),
+            (3, "http://s/c.mp3", encode_mp3_frames(30)),
+        ],
+        "media_id long, url string, blob binary",
     )
-    (tmp_path / "a.warc").write_bytes(recs)
+    meta = audio_meta_frame(media, "blob", "media_id")
+    feats = audio_features(media, "blob", "media_id").select(
+        "media_id", "rms"
+    )
     rows = {r.url.rsplit("/", 1)[-1]: r for r in
-            warc_media(spark, str(tmp_path), content_prefix="audio/")
+            media.join(meta, on="media_id").join(feats, on="media_id")
             .collect()}
     wav = rows["a.wav"]
-    assert wav.audio_format == "wav" and wav.duration_s == 1.0
+    assert wav.format == "wav" and wav.duration_s == 1.0
     assert wav.rms is not None  # decoded stats intact
     flac = rows["b.flac"]
-    assert flac.audio_format == "flac" and flac.duration_s == 3.0
+    assert flac.format == "flac" and flac.duration_s == 3.0
     assert flac.sample_rate == 44100 and flac.channels == 2
     assert flac.pcm_md5 == hashlib.md5(b"x").digest().hex()
     assert flac.rms is None  # sample-derived columns honestly NULL
     mp3 = rows["c.mp3"]
-    assert mp3.audio_format == "mp3" and mp3.sample_rate == 44100
+    assert mp3.format == "mp3" and mp3.sample_rate == 44100
     assert mp3.duration_s == pytest.approx(30 * 1152 / 44100)

@@ -237,55 +237,6 @@ def test_repair_mojibake_column(spark):
     assert got[3] is None
 
 
-def test_warc_documents_charset_sniff(spark, tmp_path):
-    """End-to-end: a cp1252-declared page and a Shift-JIS meta page come
-    out of warc_documents(charset='sniff') correctly decoded, with
-    provenance columns; the default utf8 path would mangle both."""
-    from evidence_datasource_parsers_spark.sources.warc import (
-        warc_documents,
-    )
-
-    def record(rid, url, body, ctype):
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype + b"\r\n\r\n"
-            + body
-        )
-        hdr = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: response\r\n"
-            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-            + f"WARC-Target-URI: {url}\r\n".encode()
-            + b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
-            + b"Content-Type: application/http; msgtype=response\r\n"
-            + f"Content-Length: {len(http)}\r\n".encode()
-            + b"\r\n"
-        )
-        return hdr + http + b"\r\n\r\n"
-
-    body1 = "<p>São Paulo — café</p>".encode("cp1252")
-    body2 = (
-        b'<meta charset="shift_jis"><p>'
-        + "東京".encode("shift_jis")
-        + b"</p>"
-    )
-    warc = record(
-        "r1", "http://a.example/x", body1,
-        b"text/html; charset=iso-8859-1",
-    ) + record("r2", "http://b.example/y", body2, b"text/html")
-    (tmp_path / "t.warc").write_bytes(warc)
-
-    out = warc_documents(spark, str(tmp_path), charset="sniff")
-    rows = {r["url"]: r for r in out.collect()}
-    assert rows["http://a.example/x"]["text"] == (
-        "São Paulo — café"
-    )
-    assert rows["http://a.example/x"]["charset"] == "cp1252"
-    assert rows["http://a.example/x"]["charset_source"] == "http"
-    assert "東京" in rows["http://b.example/y"]["text"]
-    assert rows["http://b.example/y"]["charset"] == "shift_jis"
-    assert rows["http://b.example/y"]["charset_source"] == "meta"
-
-
 # ---------------------------------------------------------------------------
 # robustness: the decode/repair kernels must NEVER raise — a poisoned
 # payload must yield replacement text, not a dead Spark task
@@ -336,3 +287,47 @@ def test_decode_text_frame_without_content_type_column(spark):
     row = decode_text_frame(df, "payload").collect()[0]
     assert row["text"] == "café"
     assert row["charset_source"] == "utf8"
+
+
+def test_warc_documents_charset_sniff(spark):
+    """End-to-end over crawled response rows (record id, url, HTTP
+    Content-Type, payload): a cp1252-declared page and a Shift-JIS meta
+    page come out of decode_text_frame → strip_html correctly decoded,
+    with provenance columns; the utf8 cast would mangle both."""
+    from evidence_datasource_parsers_spark.functions.html import strip_html
+
+    body1 = "<p>São Paulo — café</p>".encode("cp1252")
+    body2 = (
+        b'<meta charset="shift_jis"><p>'
+        + "東京".encode("shift_jis")
+        + b"</p>"
+    )
+    recs = spark.createDataFrame(
+        [
+            ("r1", "http://a.example/x", "text/html; charset=iso-8859-1",
+             body1),
+            ("r2", "http://b.example/y", "text/html", body2),
+        ],
+        "record_id string, url string, http_content_type string,"
+        " payload binary",
+    )
+    out = decode_text_frame(
+        recs, "payload", "http_content_type", text_col="__body"
+    ).select(
+        "url", strip_html(F.col("__body")).alias("text"),
+        "charset", "charset_source",
+    )
+    rows = {r["url"]: r for r in out.collect()}
+    assert rows["http://a.example/x"]["text"] == (
+        "São Paulo — café"
+    )
+    assert rows["http://a.example/x"]["charset"] == "cp1252"
+    assert rows["http://a.example/x"]["charset_source"] == "http"
+    assert "東京" in rows["http://b.example/y"]["text"]
+    assert rows["http://b.example/y"]["charset"] == "shift_jis"
+    assert rows["http://b.example/y"]["charset_source"] == "meta"
+    # the UTF-8 cast is the mangling path the sniff replaces
+    raw = {r["url"]: r["t"] for r in recs.select(
+        "url", F.col("payload").cast("string").alias("t")
+    ).collect()}
+    assert "São Paulo" not in raw["http://a.example/x"]

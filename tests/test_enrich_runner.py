@@ -139,8 +139,9 @@ def test_json_schema_validator_unit():
 
 def test_runner_json_schema_gate(spark, tmp_path):
     """M2 parity end-to-end: a pipeline with a JSON-Schema contract fails
-    loudly on a deliberately broken record and passes on golden output —
-    the distributed twin of the reference's opentargets_validator step."""
+    loudly on a deliberately broken record, before writing it, and passes
+    on golden output — the distributed twin of the reference's
+    opentargets_validator step."""
     from evidence_datasource_parsers_spark.runner import Runner
 
     schema = {
@@ -172,6 +173,13 @@ def test_runner_json_schema_gate(spark, tmp_path):
     r2.register("bad", broken, json_schema=schema)
     with pytest.raises(SchemaContractError, match="BRCA2"):
         r2.run(spark, {})
+    # the contract is checked before the sink: a violating output leaves
+    # neither the evidence file nor the sink's staging directory
+    with pytest.raises(SchemaContractError, match="BRCA2"):
+        r2.run(spark, {}, out_dir=str(tmp_path))
+    assert not (tmp_path / "bad.json.gz").exists()
+    assert not (tmp_path / "bad.json.gz.spark-tmp").exists()
+    assert (tmp_path / "good.json.gz").exists()
 
 
 def test_json_schema_catches_dropped_nulls(spark):

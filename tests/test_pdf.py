@@ -1,5 +1,5 @@
 """PDF text-extraction tier (functions/pdf.py): writer/parser roundtrip,
-damage tolerance, the Spark frame surface, and the WARC documents wiring."""
+damage tolerance and the Spark frame surface."""
 
 from __future__ import annotations
 
@@ -198,55 +198,6 @@ def test_pdf_text_frame_no_shuffle(spark):
     assert "Exchange" not in plan
 
 
-def test_warc_documents_include_pdf(spark, tmp_path):
-    from evidence_datasource_parsers_spark.sources.warc import (
-        warc_documents,
-    )
-
-    def record(rid, url, body, ctype):
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype + b"\r\n\r\n"
-            + body
-        )
-        hdr = (
-            b"WARC/1.0\r\n"
-            b"WARC-Type: response\r\n"
-            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-            + f"WARC-Target-URI: {url}\r\n".encode()
-            + b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
-            + b"Content-Type: application/http; msgtype=response\r\n"
-            + f"Content-Length: {len(http)}\r\n".encode()
-            + b"\r\n"
-        )
-        return hdr + http + b"\r\n\r\n"
-
-    warc = record(
-        "h1", "http://a.example/page", b"<p>html text</p>",
-        b"text/html",
-    ) + record(
-        "p1", "http://a.example/report.pdf",
-        encode_pdf([["pdf report text"]], title="Report"),
-        b"application/pdf",
-    )
-    (tmp_path / "t.warc").write_bytes(warc)
-
-    out = warc_documents(spark, str(tmp_path), include_pdf=True)
-    rows = {r["url"]: r for r in out.collect()}
-    assert rows["http://a.example/page"]["text"] == "html text"
-    assert rows["http://a.example/report.pdf"]["text"] == (
-        "pdf report text"
-    )
-    # default path excludes PDFs
-    out2 = warc_documents(spark, str(tmp_path))
-    assert out2.count() == 1
-    # main_content=True carries the PDF /Title through the title column
-    out3 = warc_documents(
-        spark, str(tmp_path), include_pdf=True, main_content=True
-    )
-    rows3 = {r["url"]: r for r in out3.collect()}
-    assert rows3["http://a.example/report.pdf"]["title"] == "Report"
-
-
 # ---------------------------------------------------------------------------
 # review regressions (round 8): indirect /Length, incremental updates,
 # Info-vs-annotation titles
@@ -381,3 +332,37 @@ def test_objstm_never_shadows_toplevel():
     m = parse_pdf(b"%PDF-1.5\n" + objstm + top)
     assert m["text"] == "top level wins"
     assert m["n_pages"] == 1
+
+
+def test_warc_documents_include_pdf(spark):
+    """Crawled response rows (record id, url, HTTP Content-Type,
+    payload): the HTML page goes through strip_html, the PDF through
+    pdf_text_frame, which also carries the PDF /Title."""
+    from pyspark.sql import functions as F
+
+    from evidence_datasource_parsers_spark.functions.html import strip_html
+
+    recs = spark.createDataFrame(
+        [
+            ("h1", "http://a.example/page", "text/html",
+             b"<p>html text</p>"),
+            ("p1", "http://a.example/report.pdf", "application/pdf",
+             encode_pdf([["pdf report text"]], title="Report")),
+        ],
+        "record_id string, url string, http_content_type string,"
+        " payload binary",
+    )
+    html = recs.where(F.col("http_content_type").startswith("text/html"))
+    pages = {r["url"]: r["text"] for r in html.select(
+        "url", strip_html(F.col("payload").cast("string")).alias("text")
+    ).collect()}
+    assert pages == {"http://a.example/page": "html text"}
+    pdfs = recs.where(
+        F.col("http_content_type").startswith("application/pdf")
+    )
+    rows = {r["url"]: r for r in pdf_text_frame(
+        pdfs, "payload", text_col="text"
+    ).collect()}
+    assert set(rows) == {"http://a.example/report.pdf"}
+    assert rows["http://a.example/report.pdf"]["text"] == "pdf report text"
+    assert rows["http://a.example/report.pdf"]["pdf_title"] == "Report"

@@ -133,10 +133,10 @@ def test_global_rank_matches_window_rank(spark):
 
 
 def test_pipeline_sweep_no_red_flags(spark):
-    """The auditor walks the PIPELINE surfaces (frontier, incremental
-    exact / LSH / SimHash / span / media / embedding dedup, counter stores,
-    fuzzy joins, the document-frequency store) over seeded fixtures — 0 flagged
-    outside the documented ALLOW entries."""
+    """The auditor walks the PIPELINE surfaces (incremental exact / LSH /
+    SimHash / span / media / embedding dedup, counter stores, fuzzy joins,
+    the document-frequency store) over seeded fixtures — 0 flagged outside
+    the documented ALLOW entries."""
     from tools.plan_audit import ALLOW, audit_plan, pipeline_plans
 
     flagged = {}

@@ -160,6 +160,58 @@ def test_q39_ann_plan_shape(spark, sf_dir):
     assert len(imr_args) == 1, sorted(imr_args)
 
 
+def test_corpus_index_kernel_runs_once_unpersisted(spark):
+    """An UN-persisted corpus_index_rows frame feeding
+    ivf_topk(corpus_assigned=...) runs the fused kernel in ONE Arrow stage:
+    the kernel is flagged nondeterministic, so Catalyst cannot clone it
+    into the join's pushed-down isnotnull(__cell) filter (without the flag
+    the plan holds two ArrowEvalPython nodes over the same embedding
+    input).  The answer equals the unshared path's, which assigns cells
+    with ivf's own kernel."""
+    import random
+    import re
+
+    from evidence_datasource_parsers_spark.operators.ivf import (
+        deterministic_centroids,
+        ivf_topk,
+    )
+    from evidence_datasource_parsers_spark.operators.similarity import (
+        corpus_index_rows,
+    )
+
+    rng = random.Random(3)
+    e = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    q = e.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+    cents = deterministic_centroids(8, 4)
+    idx = corpus_index_rows(c, "neighbor_id", "embedding", 8, 4, 2, cents)
+    shared = ivf_topk(
+        q, c, cents, k=3, n_probe=2,
+        corpus_assigned=idx.select("neighbor_id", "__cv", "__cell"),
+    )
+    plan = shared._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    fused = {
+        m.group(1)
+        for m in re.finditer(
+            r"^\((\d+)\) ArrowEvalPython\n[^\n]*\nArguments: "
+            r"\[\w+\(embedding#",
+            plan, flags=re.MULTILINE,
+        )
+    }
+    assert len(fused) == 1, plan
+    unshared = ivf_topk(q, c, cents, k=3, n_probe=2)
+    assert sorted(shared.collect()) == sorted(unshared.collect())
+
+
 def test_q34_no_cartesian(spark, sf_dir):
     plan = _plan(spark, "q34_lsh_candidates", sf_dir)
     assert "CartesianProduct" not in plan
@@ -562,6 +614,69 @@ def test_sink_bucketed_store_read_never_shuffles(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_seen_store_table_read_never_shuffles(spark, tmp_path):
+    """A seen-URL store written by ``write_bucketed_store`` and read back
+    through ``read_store``: a batch's anti-join on the canonical-URL hash
+    reads the store in place.  Comparative assert — the table-read plan
+    has exactly ONE fewer Exchange than the identical plain-read plan (the
+    store side's) — plus bucket metadata on the scan, through the
+    fresh-session re-registration path too."""
+    import uuid
+
+    from evidence_datasource_parsers_spark.functions.hashing import (
+        portable_hash,
+    )
+    from evidence_datasource_parsers_spark.functions.urls import (
+        canonicalize_url_sql,
+    )
+    from evidence_datasource_parsers_spark.sources.sinks import (
+        write_bucketed_store,
+    )
+    from evidence_datasource_parsers_spark.streaming.incremental import (
+        read_store,
+    )
+
+    table = f"seenplan_{uuid.uuid4().hex[:8]}"
+    store = str(tmp_path / "seen_store")
+    plain = str(tmp_path / "seen_plain")
+    rows = spark.range(500).select(
+        portable_hash(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"),
+        F.lit(1.0).alias("last_fetch_ts"),
+    )
+    rows.write.parquet(plain)
+    batch = spark.range(200).select(
+        portable_hash(F.expr(canonicalize_url_sql(
+            "concat('http://d', CAST(id % 7 AS STRING), '.example/p', "
+            "CAST(id AS STRING))"
+        ))).alias("url_hash")
+    )
+
+    def exchanges(seen):
+        plan = (
+            batch.join(seen, on="url_hash", how="left_anti")
+            ._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                .fromString("formatted")
+            )
+        )
+        return _nodes(plan).count("Exchange"), plan
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        write_bucketed_store(rows, store, table, ["url_hash"], 8)
+        n_plain, _ = exchanges(spark.read.parquet(plain))
+        for leg in ("registered", "re-registered"):
+            if leg == "re-registered":
+                spark.sql(f"DROP TABLE {table}")
+            n_table, plan = exchanges(read_store(spark, store, table))
+            assert n_table == n_plain - 1, (leg, plan)
+            assert "Bucketed: true" in plan, (leg, plan)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_simhash_key_index_store_never_shuffles(spark, sf_dir, tmp_path):
     """The simhash KEY-INDEX store bucketed on (combo, key): a batch
     probe's candidate join reads the store in place — no store-side
@@ -620,69 +735,6 @@ def test_simhash_key_index_store_never_shuffles(spark, sf_dir, tmp_path):
         assert nodes.count("Generate") == 1, plan     # batch explode only
         assert "SortMergeJoin" in plan
         assert cand.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_seen_store_table_read_never_shuffles(spark, tmp_path):
-    """Table-backed frontier seen store (VERDICT r12 item 5): the
-    round's candidate anti-join reads the crawl history in place.
-    Comparative assert — the table-read plan has exactly ONE fewer
-    Exchange than the identical plain-read plan (the store side's) —
-    plus bucket metadata on the scan, through the fresh-session
-    re-registration path too."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from evidence_datasource_parsers_spark.functions.hashing import (
-        portable_hash,
-    )
-    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
-        plan_fetch_batch,
-    )
-    from evidence_datasource_parsers_spark.sources.sinks import (
-        write_bucketed_store,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
-    )
-
-    table = f"seenplan_{uuid.uuid4().hex[:8]}"
-    store = str(tmp_path / "seen_store")
-    plain = str(tmp_path / "seen_plain")
-    rows = spark.range(500).select(
-        portable_hash(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"),
-        F.lit(1.0).alias("last_fetch_ts"),
-    )
-    rows.write.parquet(plain)
-    batch = spark.range(200).select(
-        F.concat(
-            F.lit("http://d"), (F.col("id") % 7).cast("string"),
-            F.lit(".example/p"), F.col("id").cast("string"),
-        ).alias("url")
-    )
-
-    def exchanges(seen):
-        res = plan_fetch_batch(batch, seen, None, max_urls_per_domain=50)
-        plan = res.ready._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted")
-        )
-        return _nodes(plan).count("Exchange"), plan
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed_store(rows, store, table, ["url_hash"], 8)
-        n_plain, _ = exchanges(spark.read.parquet(plain))
-        for leg in ("registered", "re-registered"):
-            if leg == "re-registered":
-                spark.sql(f"DROP TABLE {table}")
-            n_table, plan = exchanges(read_store(spark, store, table))
-            assert n_table == n_plain - 1, (leg, plan)
-            assert "Bucketed: true" in plan, (leg, plan)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -5,13 +5,18 @@
     runtime root: ``__spark_entry__``, ``bench.py``, ``perfbench/``, the CLI,
     the release pipelines, ``runner``, ``validation`` and ``enrich``.  The
     only exceptions are the modules in ``KEPT``, each kept for the reason
-    given, and the crawl/curation modules in ``DEFERRED``, which no root
-    reaches either and which are next in line for deletion (ROADMAP).  A
-    module that nothing reaches is dead code: delete it, or add it to
-    ``KEPT`` with the SURVEY row it implements.
+    given, and the curation and web-format modules in ``DEFERRED``, which
+    no root reaches either and which are next in line for deletion
+    (ROADMAP).  A module that nothing reaches is dead code: delete it, or
+    add it to ``KEPT`` with the SURVEY row it implements.
 (b) The subpackage ``__init__`` files re-export nothing, so importing a
     release pipeline loads only the leaves it names, not the similarity and
     dedup operator stack.
+(c) Every import of a package module, in the package, the tests, the tools
+    and the benchmarks, names a module that exists and, for ``from X import
+    n``, a submodule or top-level name of ``X``.  Function-level imports
+    only run when their function does, so without this a deleted module or
+    name would fail no import at collection time.
 """
 
 from __future__ import annotations
@@ -35,17 +40,16 @@ KEPT = {
     f"{PKG}.plans.q62_audit": "tools/verify_local.py per-leg forensics",
 }
 
-#: Unreached crawl/curation modules still on their way out; each is covered
-#: by its own test file until it is deleted.
+#: Unreached curation modules still on their way out; each is covered by
+#: its own test file until it is deleted.
 DEFERRED = {
     f"{PKG}.{m}"
     for m in (
-        "sources.warc", "sources.arc", "sources.cdx", "sources.webdataset",
-        "pipelines.crawl_frontier",
-        "functions.html", "functions.bpe", "functions.textnorm",
+        "functions.bpe", "functions.textnorm",
         "operators.sampling", "operators.profiling", "operators.chunking",
         "operators.compaction", "operators.mmr", "operators.packing",
         "operators.skew", "operators.zorder",
+        "functions.html", "sources.webdataset",
     )
 }
 
@@ -75,7 +79,8 @@ def _imported_names(path: str):
 
 def _closure(root_files: list[str], modules: dict[str, str]) -> set[str]:
     """Package modules reached from the root files; importing a module
-    also runs every enclosing package ``__init__``."""
+    also runs every enclosing package ``__init__``.  Names that are not
+    package modules are skipped here; test (c) checks they resolve."""
     reached: set[str] = set()
     todo = list(root_files)
     while todo:
@@ -87,6 +92,33 @@ def _closure(root_files: list[str], modules: dict[str, str]) -> set[str]:
                     reached.add(mod)
                     todo.append(modules[mod])
     return reached
+
+
+def _top_level_names(path: str) -> set[str]:
+    """Names a module binds at import time: its defs, classes, assignments
+    and imports, including those under a top-level ``if``/``try``/``with``."""
+    names: set[str] = set()
+
+    def visit(body) -> None:
+        for node in body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                names.update(n.id for t in targets for n in ast.walk(t)
+                             if isinstance(n, ast.Name))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names.update((a.asname or a.name).split(".")[0]
+                             for a in node.names)
+            elif isinstance(node, (ast.If, ast.Try, ast.With)):
+                for field in ("body", "orelse", "finalbody"):
+                    visit(getattr(node, field, []))
+                for handler in getattr(node, "handlers", []):
+                    visit(handler.body)
+
+    visit(ast.parse(open(path).read()).body)
+    return names
 
 
 def _runtime_roots(modules: dict[str, str]) -> list[str]:
@@ -147,3 +179,36 @@ def test_release_pipelines_load_no_similarity_or_dedupe_stack():
 def test_single_pipeline_import_stays_narrow():
     loaded = _loaded_after(f"import {PKG}.pipelines.slapenrich")
     assert len(loaded) <= 8, loaded
+
+
+def test_package_imports_resolve():
+    modules = _package_modules()
+    files = list(modules.values()) + [
+        os.path.join(REPO, "__spark_entry__.py"),
+        os.path.join(REPO, "bench.py"),
+    ]
+    for sub in ("tests", "tools", "perfbench"):
+        files += glob.glob(os.path.join(REPO, sub, "*.py"))
+    names: dict[str, set[str]] = {}
+    bad = []
+    for path in sorted(files):
+        where = os.path.relpath(path, REPO)
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Import):
+                bad += [f"{where}:{node.lineno}: import {a.name}"
+                        for a in node.names
+                        if a.name.split(".")[0] == PKG
+                        and a.name not in modules]
+            elif (isinstance(node, ast.ImportFrom) and node.module
+                  and node.module.split(".")[0] == PKG):
+                mod = node.module
+                if mod not in modules:
+                    bad.append(f"{where}:{node.lineno}: no module {mod}")
+                    continue
+                if mod not in names:
+                    names[mod] = _top_level_names(modules[mod])
+                bad += [f"{where}:{node.lineno}: {mod} has no {a.name}"
+                        for a in node.names
+                        if a.name != "*" and a.name not in names[mod]
+                        and f"{mod}.{a.name}" not in modules]
+    assert bad == [], bad

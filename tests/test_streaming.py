@@ -1698,83 +1698,6 @@ def test_streaming_distinct_count_sink_store_table(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_stream_warc_documents_live_crawl(spark, tmp_path):
-    """Round-8 streaming ingest: WARC archives land in a watched
-    directory; stream_warc_documents turns them into documents rows per
-    micro-batch (charset-sniffed, PDFs extracted) and the store sink
-    drops a later-run re-crawl while passing the genuinely new page."""
-    import gzip as _gzip
-
-    from evidence_datasource_parsers_spark.functions.pdf import encode_pdf
-    from evidence_datasource_parsers_spark.sources.warc import (
-        stream_warc_documents,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        incremental_dedupe_sink,
-    )
-
-    def record(rid, url, body, ctype):
-        http = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype + b"\r\n\r\n"
-            + body
-        )
-        hdr = (
-            b"WARC/1.0\r\nWARC-Type: response\r\n"
-            + f"WARC-Record-ID: <urn:uuid:{rid}>\r\n".encode()
-            + f"WARC-Target-URI: {url}\r\n".encode()
-            + b"WARC-Date: 2026-03-03T00:00:00Z\r\n"
-            + b"Content-Type: application/http; msgtype=response\r\n"
-            + f"Content-Length: {len(http)}\r\n".encode() + b"\r\n"
-        )
-        return hdr + http + b"\r\n\r\n"
-
-    watch = tmp_path / "incoming"
-    watch.mkdir()
-    out = str(tmp_path / "docs_out")
-    store = str(tmp_path / "docs_store")
-
-    (watch / "c1.warc.gz").write_bytes(_gzip.compress(
-        record("s1", "http://live.example/a",
-               "<p>artigo São — logística</p>".encode("cp1252"),
-               b"text/html; charset=iso-8859-1")
-        + record("s2", "http://live.example/r.pdf",
-                 encode_pdf([["streamed pdf body"]]),
-                 b"application/pdf")
-    ))
-
-    def run():
-        stream = stream_warc_documents(
-            spark, str(watch), charset="sniff", include_pdf=True
-        )
-        assert stream.isStreaming
-        ckpt = str(tmp_path / f"ck_{len(list(tmp_path.iterdir()))}")
-        q = incremental_dedupe_sink(
-            stream.select("doc_id", "url", "text"),
-            out, store, ckpt, "text", "doc_id",
-        )
-        q.awaitTermination()
-
-    run()
-    rows = {r["url"]: r for r in spark.read.parquet(out).collect()}
-    assert rows["http://live.example/a"]["text"] == (
-        "artigo São — logística"
-    )
-    assert rows["http://live.example/r.pdf"]["text"] == "streamed pdf body"
-
-    # run 2: one re-crawl (same bytes, new record id + url) + one new page
-    (watch / "c2.warc.gz").write_bytes(_gzip.compress(
-        record("s3", "http://live.example/a-mirror",
-               "<p>artigo São — logística</p>".encode("cp1252"),
-               b"text/html; charset=iso-8859-1")
-        + record("s4", "http://live.example/b",
-                 b"<p>a brand new page about ports</p>", b"text/html")
-    ))
-    run()
-    urls = {r["url"] for r in spark.read.parquet(out).collect()}
-    assert "http://live.example/b" in urls
-    assert "http://live.example/a-mirror" not in urls  # cross-run dedupe
-
-
 def test_streaming_histogram_and_frequency_sinks(spark, tmp_path):
     """The histogram and CMS counter stores get the same streaming
     maintenance as the HLL sink: each run appends the batch's own

@@ -5,9 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.urls import (
-    canonicalize_url,
+    canonicalize_url_sql,
     dedupe_by_url,
-    registrable_domain,
+    registrable_domain_sql,
 )
 
 CASES = [
@@ -24,16 +24,25 @@ CASES = [
     ("http://example.com:8080/x", "http://example.com:8080/x"),  # real port kept
     ("not a url at all", "not a url at all"),  # unparseable passes through
     ("HTTPS://A.B.co.uk/P?q=1#f", "https://a.b.co.uk/P?q=1"),  # path case kept
+    (
+        "HTTP://WWW.Example.Com:80/a/b/?utm_source=x&b=2&a=1#f",
+        "http://www.example.com/a/b?a=1&b=2",
+    ),
+    ("https://Sub.Example.CO.UK:443/", "https://sub.example.co.uk/"),
+    ("ftp://Host:21/x?z=1", "ftp://host:21/x?z=1"),  # other schemes keep ports
+    ("http://h:80", "http://h/"),
+    (None, None),
 ]
+
+
+def _canon(col: str):
+    return F.expr(canonicalize_url_sql(f"`{col}`"))
 
 
 def test_canonicalize_url_cases(spark):
     df = spark.createDataFrame([(i, u) for i, (u, _) in enumerate(CASES)],
                                "i long, url string")
-    got = {
-        r.i: r.c
-        for r in df.select("i", canonicalize_url("url").alias("c")).collect()
-    }
+    got = {r.i: r.c for r in df.select("i", _canon("url").alias("c")).collect()}
     for i, (u, want) in enumerate(CASES):
         assert got[i] == want, (u, got[i], want)
 
@@ -45,6 +54,12 @@ def test_registrable_domain(spark):
         ("http://deep.sub.domain.org/", "domain.org"),
         ("http://localhost/x", "localhost"),
         ("nonsense", None),
+        ("HTTP://WWW.Example.Com:80/a/b/?utm_source=x&b=2&a=1#f", "example.com"),
+        ("https://Sub.Example.CO.UK:443/", "example.co.uk"),
+        ("not a url", None),
+        (None, None),
+        ("ftp://Host:21/x?z=1", "host"),
+        ("http://h:80", "h"),
     ]
     df = spark.createDataFrame(
         [(i, u) for i, (u, _) in enumerate(cases)], "i long, url string"
@@ -52,24 +67,11 @@ def test_registrable_domain(spark):
     got = {
         r.i: r.d
         for r in df.select(
-            "i", registrable_domain("url").alias("d")
+            "i", F.expr(registrable_domain_sql("`url`")).alias("d")
         ).collect()
     }
     for i, (u, want) in enumerate(cases):
         assert got[i] == want, (u, got[i], want)
-
-
-def test_dedupe_by_url_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [
-            (3, "http://Example.com/a?utm_source=x", "later alias"),
-            (1, "http://example.com/a", "first"),
-            (2, "http://example.com/b", "other"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    out = {r.doc_id for r in dedupe_by_url(df, "url", "doc_id").collect()}
-    assert out == {1, 2}
 
 
 def test_canonicalize_url_idempotent_fuzz(spark):
@@ -106,13 +108,26 @@ def test_canonicalize_url_idempotent_fuzz(spark):
     df = spark.createDataFrame(
         [(i, u) for i, u in enumerate(urls)], "i long, url string"
     )
-    out = df.select(
-        "i",
-        canonicalize_url("url").alias("c1"),
-        canonicalize_url(canonicalize_url("url")).alias("c2"),
-    ).collect()
+    out = (
+        df.select("i", _canon("url").alias("c1"))
+        .select("i", "c1", _canon("c1").alias("c2"))
+        .collect()
+    )
     bad = [(urls[r.i], r.c1, r.c2) for r in out if r.c1 != r.c2]
     assert not bad, bad[:5]
+
+
+def test_dedupe_by_url_keeps_min_id(spark):
+    df = spark.createDataFrame(
+        [
+            (3, "http://Example.com/a?utm_source=x", "later alias"),
+            (1, "http://example.com/a", "first"),
+            (2, "http://example.com/b", "other"),
+        ],
+        "doc_id long, url string, text string",
+    )
+    out = {r.doc_id for r in dedupe_by_url(df, "url", "doc_id").collect()}
+    assert out == {1, 2}
 
 
 def test_filter_urls_blocklist_and_patterns(spark):
@@ -157,334 +172,3 @@ def test_filter_urls_is_codegen_native(spark):
         df, "url", block_domains=["b.example"], block_patterns=["/junk"]
     )._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_robots_gate(spark):
-    """RFC 9309 politeness: per-domain robots rules gate URLs; domains
-    without robots rows, empty bodies, and NULL urls default to allowed;
-    agent-specific groups override the wildcard."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        filter_by_robots,
-        with_robots_allowed,
-    )
-
-    robots = spark.createDataFrame(
-        [
-            # stdlib robotparser applies rules FIRST-match (not the RFC's
-            # longest-match), so Allow overrides must precede — the order
-            # most real robots.txt files use anyway
-            ("a.example",
-             "User-agent: *\nAllow: /private/ok\nDisallow: /private/\n"),
-            ("b.example",
-             "User-agent: trainingbot\nDisallow: /\n"
-             "User-agent: *\nDisallow:\n"),
-            ("c.example", ""),  # empty body → allowed
-        ],
-        "domain string, robots_txt string",
-    )
-    urls = spark.createDataFrame(
-        [
-            (1, "http://a.example/public/page"),
-            (2, "http://a.example/private/secret"),
-            (3, "http://a.example/private/ok"),          # Allow overrides
-            (4, "http://www.a.example/private/x"),       # subdomain inherits
-            (5, "http://b.example/anything"),
-            (6, "http://c.example/x"),
-            (7, "http://norobots.example/y"),            # no robots row
-            (8, None),
-        ],
-        "id long, url string",
-    )
-    flags = {r["id"]: r["robots_allowed"] for r in
-             with_robots_allowed(urls, robots).collect()}
-    assert flags[1] and flags[3] and flags[5] and flags[6] and flags[7]
-    assert flags[8] is True
-    assert not flags[2] and not flags[4]
-
-    # agent-specific: trainingbot is banned from b.example entirely
-    bot = {r["id"]: r["robots_allowed"] for r in
-           with_robots_allowed(urls, robots, agent="trainingbot").collect()}
-    assert not bot[5] and bot[1]
-
-    kept = {r["id"] for r in filter_by_robots(urls, robots).collect()}
-    assert kept == {1, 3, 5, 6, 7, 8}
-
-
-def test_rfc9309_matcher_rule_matrix():
-    """RFC 9309 §2.2.2-2.2.3 longest-match matrix (no Spark needed):
-    most-octets rule wins, Allow wins ties, * and $ patterns, empty
-    Disallow matches nothing, unruled paths allowed."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        Rfc9309Matcher,
-    )
-
-    m = Rfc9309Matcher(
-        "User-agent: *\n"
-        "Disallow: /p\n"
-        "Allow: /page\n"       # longer than /p → /page* allowed
-        "Allow: /folder\n"
-        "Disallow: /folder\n"  # tie with Allow: /folder → Allow wins
-        "Disallow: /*.htm\n"   # 6 octets, beats Allow:/page (5) on .htm
-        "Allow: /$\n"
-        "Disallow: /\n"        # root-only allow, everything else blocked
-    )
-    assert m.can_fetch("/page")
-    assert m.can_fetch("/page/sub")
-    assert not m.can_fetch("/px")            # /p matches, nothing longer
-    assert m.can_fetch("/folder/x")          # tie → Allow
-    assert not m.can_fetch("/page.htm")      # /*.htm (6) > /page (5)
-    assert m.can_fetch("/")                  # /$ (2) > / (1)
-
-    anchored = Rfc9309Matcher("User-agent: *\nDisallow: /*.gif$\n")
-    assert not anchored.can_fetch("/img/a.gif")
-    assert anchored.can_fetch("/img/a.gif?x=1")  # $ anchors path+query
-    assert anchored.can_fetch("/img/a.gifx")
-
-    empty = Rfc9309Matcher("User-agent: *\nDisallow:\n")
-    assert empty.can_fetch("/anything")
-
-    norules = Rfc9309Matcher("")
-    assert norules.can_fetch("/x")
-
-
-def test_rfc9309_group_selection():
-    """§2.2.1: longest matching user-agent prefix wins over *; groups
-    sharing the winning UA value merge; rules before any UA line are
-    ignored; matching is case-insensitive."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        Rfc9309Matcher,
-    )
-
-    txt = (
-        "Disallow: /orphan\n"          # before any UA line: ignored
-        "User-agent: FooBot\n"
-        "Disallow: /foo\n"
-        "User-agent: *\n"
-        "Disallow: /all\n"
-        "User-agent: foobot\n"         # second group, same UA → merged
-        "Disallow: /foo2\n"
-    )
-    foo = Rfc9309Matcher(txt, "FooBot-News/1.0")
-    assert not foo.can_fetch("/foo/x") and not foo.can_fetch("/foo2/x")
-    assert foo.can_fetch("/all/x")     # * group NOT merged with specific
-    assert foo.can_fetch("/orphan")
-
-    other = Rfc9309Matcher(txt, "BarBot")
-    assert not other.can_fetch("/all/x")
-    assert other.can_fetch("/foo/x")
-
-
-def test_robots_gate_rfc9309_vs_stdlib(spark):
-    """The divergence case that motivates the mode: a broad Disallow
-    listed BEFORE a narrower Allow blocks under stdlib first-match but
-    allows under RFC longest-match."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        with_robots_allowed,
-    )
-
-    robots = spark.createDataFrame(
-        [("d.example",
-          "User-agent: *\nDisallow: /private/\nAllow: /private/ok\n")],
-        "domain string, robots_txt string",
-    )
-    urls = spark.createDataFrame(
-        [(1, "http://d.example/private/ok/page"),
-         (2, "http://d.example/private/secret"),
-         (3, "http://d.example/pub")],
-        "id long, url string",
-    )
-    rfc = {r["id"]: r["robots_allowed"] for r in
-           with_robots_allowed(urls, robots, semantics="rfc9309").collect()}
-    std = {r["id"]: r["robots_allowed"] for r in
-           with_robots_allowed(urls, robots, semantics="stdlib").collect()}
-    assert rfc == {1: True, 2: False, 3: True}
-    assert std[1] is False          # first-match: Disallow seen first
-    assert std[2] is False and std[3] is True
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        with_robots_allowed(urls, robots, semantics="nope")
-
-
-def test_robots_directives_delay_and_sitemaps(spark):
-    """Scheduler inputs: Crawl-delay follows RFC group selection
-    (specific UA beats *), Sitemap lines are file-global, malformed
-    values go NULL instead of failing."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        robots_directives,
-    )
-
-    robots = spark.createDataFrame(
-        [
-            ("a.example",
-             "User-agent: trainingbot\nCrawl-delay: 2.5\nDisallow: /x\n"
-             "User-agent: *\nCrawl-delay: 10\nDisallow:\n"
-             "Sitemap: https://a.example/sm1.xml\n"
-             "Sitemap: https://a.example/sm2.xml\n"),
-            ("b.example", "User-agent: *\nDisallow: /\n"),
-            ("c.example", "User-agent: *\nCrawl-delay: soon\n"),
-            ("d.example", None),
-        ],
-        "domain string, robots_txt string",
-    )
-    star = {r.domain: r for r in robots_directives(robots).collect()}
-    assert star["a.example"].crawl_delay == 10.0
-    assert star["a.example"].sitemaps == [
-        "https://a.example/sm1.xml", "https://a.example/sm2.xml",
-    ]
-    assert star["b.example"].crawl_delay is None
-    assert star["c.example"].crawl_delay is None  # malformed → NULL
-    assert star["d.example"].crawl_delay is None
-
-    bot = {r.domain: r for r in
-           robots_directives(robots, agent="trainingbot/1.0").collect()}
-    assert bot["a.example"].crawl_delay == 2.5  # specific group wins
-
-
-def test_parse_sitemaps_urlset_and_index(spark):
-    from evidence_datasource_parsers_spark.functions.urls import (
-        parse_sitemaps,
-    )
-
-    urlset = (
-        '<?xml version="1.0"?>'
-        '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        "<url><loc>https://s/p1</loc><lastmod>2024-01-01</lastmod>"
-        "<changefreq>daily</changefreq><priority>0.8</priority></url>"
-        "<url><loc>https://s/p2</loc></url>"
-        "<url><priority>0.5</priority></url>"          # no loc → dropped
-        "<url><loc>https://s/p3</loc>"
-        "<priority>high</priority></url>"              # bad prio → NULL
-        "</urlset>"
-    )
-    index = (
-        "<sitemapindex>"
-        "<sitemap><loc>https://s/child1.xml</loc></sitemap>"
-        "<sitemap><loc>https://s/child2.xml</loc></sitemap>"
-        "</sitemapindex>"
-    )
-    df = spark.createDataFrame(
-        [("https://s/sm.xml", urlset),
-         ("https://s/index.xml", index),
-         ("https://s/broken.xml", "<urlset><url>"),
-         ("https://s/null.xml", None)],
-        "sitemap_url string, body string",
-    )
-    rows = parse_sitemaps(df).collect()
-    by_loc = {r.loc: r for r in rows}
-    assert len(rows) == 5
-    p1 = by_loc["https://s/p1"]
-    assert p1.kind == "url" and p1.lastmod == "2024-01-01"
-    assert p1.changefreq == "daily" and p1.priority == 0.8
-    assert by_loc["https://s/p2"].priority is None
-    assert by_loc["https://s/p3"].priority is None
-    assert by_loc["https://s/child1.xml"].kind == "sitemap"
-    assert by_loc["https://s/child2.xml"].sitemap_url == \
-        "https://s/index.xml"
-
-
-def test_schedule_fetches_politeness(spark):
-    """Offsets step by the domain's crawl_delay (defaulted + capped),
-    rank order is the canonical URL (deterministic), per-domain budget
-    truncates, NULL domains stay unscheduled."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        robots_directives,
-        schedule_fetches,
-    )
-
-    robots = spark.createDataFrame(
-        [("slow.example", "User-agent: *\nCrawl-delay: 5\nDisallow:\n"),
-         ("hostile.example",
-          "User-agent: *\nCrawl-delay: 86400\nDisallow:\n")],
-        "domain string, robots_txt string",
-    )
-    urls = spark.createDataFrame(
-        [(1, "http://slow.example/b"), (2, "http://slow.example/a"),
-         (3, "http://fast.example/x"), (4, "http://fast.example/y"),
-         (5, "http://hostile.example/z"), (6, "not a url")],
-        "id long, url string",
-    )
-    rows = {r.id: r for r in
-            schedule_fetches(urls, robots_directives(robots)).collect()}
-    # canonical order: /a before /b → id 2 fetches first
-    assert rows[2].fetch_offset_s == 0.0 and rows[1].fetch_offset_s == 5.0
-    assert rows[3].crawl_delay == 1.0  # default
-    assert {rows[3].fetch_offset_s, rows[4].fetch_offset_s} == {0.0, 1.0}
-    assert rows[5].crawl_delay == 60.0  # hostile directive capped
-    assert rows[6].domain is None and rows[6].fetch_offset_s is None
-
-    capped = schedule_fetches(
-        urls, robots_directives(robots), max_urls_per_domain=1
-    )
-    per_dom = {r.domain for r in capped.collect() if r.domain}
-    got = [r.id for r in capped.collect()]
-    assert len([i for i in got if i in (1, 2)]) == 1
-    assert len(per_dom) == 3
-
-    # determinism across runs
-    a = sorted((r.id, r.fetch_offset_s) for r in
-               schedule_fetches(urls, robots_directives(robots)).collect())
-    b = sorted((r.id, r.fetch_offset_s) for r in
-               schedule_fetches(urls, robots_directives(robots)).collect())
-    assert a == b
-
-
-def test_schedule_cap_keeps_null_domain_passthrough(spark):
-    """The per-domain budget must not silently delete NULL-domain rows
-    past the cap — they are documented passthrough (NULL offsets)."""
-    from evidence_datasource_parsers_spark.functions.urls import (
-        schedule_fetches,
-    )
-
-    df = spark.createDataFrame(
-        [("http://d.example/1",), ("http://d.example/2",),
-         ("no host a",), ("no host b",), ("no host c",)],
-        "url string",
-    )
-    out = schedule_fetches(df, None, max_urls_per_domain=1).collect()
-    nulls = [r for r in out if r["domain"] is None]
-    assert len(nulls) == 3  # all retained
-    assert all(r["fetch_offset_s"] is None for r in nulls)
-    assert sum(1 for r in out if r["domain"] is not None) == 1  # cap held
-
-
-def test_url_sql_twins_plan_equal(spark):
-    """The r13 SQL-string twins must generate the same optimized plan as
-    the Column forms (modulo expr ids and lambda variable names — alpha
-    equivalence) and identical values on edge inputs."""
-    import re
-
-    from pyspark.sql import functions as F
-
-    from evidence_datasource_parsers_spark.functions.urls import (
-        canonicalize_url,
-        canonicalize_url_sql,
-        registrable_domain,
-        registrable_domain_sql,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("HTTP://WWW.Example.Com:80/a/b/?utm_source=x&b=2&a=1#f",),
-            ("https://Sub.Example.CO.UK:443/",),
-            ("not a url",),
-            (None,),
-            ("ftp://Host:21/x?z=1",),
-            ("http://h:80",),
-        ],
-        "u string",
-    )
-
-    def canon(frame):
-        s = frame._jdf.queryExecution().optimizedPlan().toString()
-        s = re.sub(r"#\d+", "#", s)
-        return re.sub(r"lambda \w+#", "lambda #", s)
-
-    for col_form, sql_form in (
-        (canonicalize_url(F.col("u")), F.expr(canonicalize_url_sql("`u`"))),
-        (registrable_domain(F.col("u")), F.expr(registrable_domain_sql("`u`"))),
-    ):
-        a, b = df.select(col_form.alias("x")), df.select(sql_form.alias("x"))
-        assert canon(a) == canon(b)
-        assert a.collect() == b.collect()

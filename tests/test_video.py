@@ -231,36 +231,24 @@ def test_streaming_video_mode(spark, tmp_path):
     assert sorted(st.columns) == ["frame_idx", "media_id", "phash"]
 
 
-def test_warc_video_stats(spark, tmp_path):
-    import gzip
-
-    from evidence_datasource_parsers_spark.sources.warc import warc_media
-
-    def _h(body, ctype):
-        return (b"HTTP/1.1 200 OK\r\nContent-Type: " + ctype
-                + b"\r\n\r\n" + body)
-
-    def record(payload, ctype, url):
-        body = _h(payload, ctype)
-        headers = [
-            b"WARC/1.0", b"WARC-Type: response",
-            b"WARC-Record-ID: <urn:uuid:v-%d>" % (hash(url) % 10**6),
-            b"WARC-Date: 2024-01-01T00:00:00Z",
-            b"Content-Length: " + str(len(body)).encode(),
-            b"WARC-Target-URI: " + url.encode(),
-        ]
-        return b"\r\n".join(headers) + b"\r\n\r\n" + body + b"\r\n\r\n"
-
-    raw = (
-        record(encode_avi_mjpeg(_clip(0, 3), fps=6), b"video/x-msvideo",
-               "http://a.example/clip.avi")
-        + record(b"\x00\x00\x00\x18ftypmp42", b"video/mp4",
-                 "http://a.example/clip.mp4")
+def test_warc_video_stats(spark):
+    """Crawled video responses (WARC-style rows) → video_meta_frame: real
+    container stats for MJPEG-AVI, a NULL row for a bare MP4 header."""
+    from evidence_datasource_parsers_spark.operators.multimodal import (
+        video_meta_frame,
     )
-    (tmp_path / "v.warc.gz").write_bytes(gzip.compress(raw))
-    out = {r["url"]: r for r in warc_media(
-        spark, str(tmp_path), content_prefix="video/"
-    ).collect()}
+
+    media = spark.createDataFrame(
+        [
+            (1, "http://a.example/clip.avi",
+             encode_avi_mjpeg(_clip(0, 3), fps=6)),
+            (2, "http://a.example/clip.mp4", b"\x00\x00\x00\x18ftypmp42"),
+        ],
+        "media_id long, url string, blob binary",
+    )
+    stats = video_meta_frame(media, "blob", "media_id")
+    out = {r["url"]: r for r in
+           media.join(stats, on="media_id", how="left").collect()}
     avi = out["http://a.example/clip.avi"]
     assert avi["n_frames"] == 3 and abs(avi["fps"] - 6.0) < 1e-3
     assert out["http://a.example/clip.mp4"]["n_frames"] is None  # NULL row

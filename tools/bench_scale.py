@@ -516,188 +516,6 @@ def incremental_phash_case(spark, materialize, replicas: int):
     return row
 
 
-def frontier_store_case(spark, materialize, replicas: int):
-    """Frontier twin of the incremental-store cases: a FIXED batch of
-    discovered URLs planned against a seen-URL store at base vs
-    ``replicas``× size.  The cost that must stay flat as the crawl
-    history grows is the anti-join against the carried store (the
-    dedup/gate/schedule stages are batch-sized).  10% of the batch
-    collides with stored hashes so the drop path executes; 1000 domains
-    keep the schedule window honest."""
-    from evidence_datasource_parsers_spark.functions.hashing import (
-        portable_hash,
-    )
-    from evidence_datasource_parsers_spark.functions.urls import (
-        canonicalize_url,
-    )
-    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
-        plan_fetch_batch,
-    )
-
-    base_n, batch_n = 200_000, 20_000
-
-    def url_of(col):
-        return F.concat(
-            F.lit("http://d"), (col % 1000).cast("string"),
-            F.lit(".example/p"), col.cast("string"),
-        )
-
-    def mk_store(n: int):
-        return spark.range(n).select(
-            portable_hash(
-                canonicalize_url(url_of(F.col("id")))
-            ).alias("url_hash")
-        )
-
-    batch = spark.range(batch_n).select(
-        F.when(
-            F.col("id") % 10 == 0,
-            url_of(F.col("id") * 7 % F.lit(base_n)),  # re-discovery
-        )
-        .otherwise(url_of(F.col("id") + F.lit(10**9)))
-        .alias("url")
-    ).localCheckpoint(eager=True)
-
-    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
-        advance_seen_store,
-    )
-
-    row: dict = {}
-    for label, n in (("base", base_n), ("scaled", base_n * replicas)):
-        try:
-            store = mk_store(n).localCheckpoint(eager=True)  # untimed
-            res_box = {}
-
-            def one_probe():
-                res_box["res"] = plan_fetch_batch(
-                    batch, store, None, max_urls_per_domain=100
-                )
-                materialize(res_box["res"].ready)
-
-            probe_median(spark, one_probe, row, label)
-            # the ADVANCE (the round-8 verdict's unmeasured path): store
-            # dir holds the n-row store on disk (untimed); the timed step
-            # appends ONLY the batch's rows — cost must track the batch,
-            # not the store.  Median-of-N re-appends of the same ready
-            # frame (advance cost is content-independent O(batch)).
-            adir = tempfile.mkdtemp(prefix=f"frontier_adv_{label}_")
-            try:
-                store_dir = os.path.join(adir, "seen")
-                store.write.mode("overwrite").parquet(store_dir)
-                ready = res_box["res"].ready.localCheckpoint(eager=True)
-                advance_median(
-                    lambda: advance_seen_store(ready, store_dir),
-                    row, label,
-                )
-            finally:
-                shutil.rmtree(adir, ignore_errors=True)
-        except Exception as exc:  # noqa: BLE001
-            print(f"frontier@{label} failed: {exc}", file=sys.stderr)
-            row[label] = -1.0
-    if row.get("base", -1) > 0 and row.get("scaled", -1) > 0:
-        row["factor"] = round(row["scaled"] / row["base"], 2)
-    if row.get("advance_base", -1) > 0 and row.get("advance_scaled", -1) > 0:
-        row["advance_factor"] = round(
-            row["advance_scaled"] / row["advance_base"], 2
-        )
-    return row
-
-
-def frontier_table_case(spark, materialize, replicas: int):
-    """Table-backed twin of :func:`frontier_store_case` — the SAME batch
-    and store contents, but the seen store carried as a bucketed catalog
-    TABLE on ``url_hash`` (the r12 seen-store lifecycle).  The flat case
-    localCheckpoints the whole history and pays an O(store) shuffle+sort
-    per probe — its scaled factor is real and inherent to that form; the
-    table form shuffles only batch rows into the store's bucket layout
-    (zero store-side Exchange, plan-asserted in test_plan_shapes), so
-    the probe factor must track the 1-column store scan, far below N."""
-    from evidence_datasource_parsers_spark.functions.hashing import (
-        portable_hash,
-    )
-    from evidence_datasource_parsers_spark.functions.urls import (
-        canonicalize_url,
-    )
-    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
-        DEFAULT_SEEN_BUCKETS,
-        SEEN_BUCKET_COLS,
-        TS_COL,
-        advance_seen_store,
-        plan_fetch_batch,
-    )
-    from evidence_datasource_parsers_spark.sources.sinks import (
-        read_bucketed_store,
-        write_bucketed_store,
-    )
-
-    base_n, batch_n = 200_000, 20_000
-
-    def url_of(col):
-        return F.concat(
-            F.lit("http://d"), (col % 1000).cast("string"),
-            F.lit(".example/p"), col.cast("string"),
-        )
-
-    def mk_store(n: int):
-        return spark.range(n).select(
-            portable_hash(
-                canonicalize_url(url_of(F.col("id")))
-            ).alias("url_hash"),
-            F.lit(None).cast("double").alias(TS_COL),
-        )
-
-    batch = spark.range(batch_n).select(
-        F.when(
-            F.col("id") % 10 == 0,
-            url_of(F.col("id") * 7 % F.lit(base_n)),  # re-discovery
-        )
-        .otherwise(url_of(F.col("id") + F.lit(10**9)))
-        .alias("url")
-    ).localCheckpoint(eager=True)
-
-    row: dict = {}
-    for label, n in (("base", base_n), ("scaled", base_n * replicas)):
-        table = f"bench_frontier_seen_{label}"
-        adir = tempfile.mkdtemp(prefix=f"frontier_tbl_{label}_")
-        store_dir = os.path.join(adir, "seen")
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            write_bucketed_store(  # untimed store build
-                mk_store(n), store_dir, table, SEEN_BUCKET_COLS,
-                DEFAULT_SEEN_BUCKETS,
-            )
-            res_box = {}
-
-            def one_probe():
-                res_box["res"] = plan_fetch_batch(
-                    batch, read_bucketed_store(spark, table), None,
-                    max_urls_per_domain=100,
-                )
-                materialize(res_box["res"].ready)
-
-            probe_median(spark, one_probe, row, label)
-            ready = res_box["res"].ready.localCheckpoint(eager=True)
-            advance_median(
-                lambda: advance_seen_store(
-                    ready, store_dir, store_table=table
-                ),
-                row, label,
-            )
-        except Exception as exc:  # noqa: BLE001
-            print(f"frontier_table@{label} failed: {exc}", file=sys.stderr)
-            row[label] = -1.0
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            shutil.rmtree(adir, ignore_errors=True)
-    if row.get("base", -1) > 0 and row.get("scaled", -1) > 0:
-        row["factor"] = round(row["scaled"] / row["base"], 2)
-    if row.get("advance_base", -1) > 0 and row.get("advance_scaled", -1) > 0:
-        row["advance_factor"] = round(
-            row["advance_scaled"] / row["advance_base"], 2
-        )
-    return row
-
-
 def incremental_remux_case(spark, materialize, replicas: int):
     """Round-8 elementary-stream tier: a FIXED batch of clip stream
     hashes deduped against a (media_id, stream_hash) store at base vs
@@ -1273,10 +1091,6 @@ def main() -> None:
          lambda: incremental_span_case(spark, base, out_dir, materialize)),
         ("incremental_remux_refresh",
          lambda: incremental_remux_case(spark, materialize, replicas)),
-        ("frontier_seen_store",
-         lambda: frontier_store_case(spark, materialize, replicas)),
-        ("frontier_seen_table",
-         lambda: frontier_table_case(spark, materialize, replicas)),
         ("counter_bloom_store",
          lambda: counter_bloom_case(spark, materialize, replicas)),
         ("fuzzy_edit_join",

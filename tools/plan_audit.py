@@ -139,8 +139,8 @@ def audit_plan(plan: str, optimized: str = "") -> list[str]:
 
 def pipeline_plans(spark) -> dict:
     """Fixture-driven plans for every pipeline surface the catalog sweep
-    cannot reach (frontier, incremental dedup stores, counter stores,
-    fuzzy joins, the document-frequency store).  Frames are tiny but STRUCTURALLY
+    cannot reach (incremental dedup stores, counter stores, fuzzy joins,
+    the document-frequency store).  Frames are tiny but STRUCTURALLY
     faithful: the audit checks plan shapes (cartesians, row-at-a-time
     Python, unbounded global sorts/windows), which do not depend on row
     counts.  Arrow stages (pandas_udf / mapInPandas) render as
@@ -163,9 +163,6 @@ def pipeline_plans(spark) -> dict:
     from evidence_datasource_parsers_spark.operators.span_dedup import (
         incremental_span_dedupe,
     )
-    from evidence_datasource_parsers_spark.pipelines.crawl_frontier import (
-        plan_fetch_batch,
-    )
 
     docs = spark.createDataFrame(
         [(i, f"document body text number {i % 3} with shared tokens")
@@ -173,34 +170,6 @@ def pipeline_plans(spark) -> dict:
         "doc_id long, text string",
     )
     plans: dict = {}
-
-    cands = spark.createDataFrame(
-        [(f"http://d{i % 3}.example/p{i}", float(i))
-         for i in range(6)],
-        "url string, lastmod_ts double",
-    )
-    seen = spark.createDataFrame([(123,)], "url_hash long")
-    seen_ts = spark.createDataFrame(
-        [(123, 100.0)], "url_hash long, last_fetch_ts double"
-    )
-    robots = spark.createDataFrame(
-        [("d0.example", "User-agent: *\nDisallow: /private/")],
-        "domain string, robots_txt string",
-    )
-    fr = plan_fetch_batch(cands, seen, robots)
-    plans["frontier_ready"] = fr.ready
-    plans["frontier_store"] = fr.store
-    frf = plan_fetch_batch(
-        cands, seen_ts, None,
-        refresh_after=500.0, now_ts=1000.0, lastmod_col="lastmod_ts",
-    )
-    plans["frontier_freshness_ready"] = frf.ready
-    frb = plan_fetch_batch(
-        cands, seen_ts, None,
-        refresh_after=500.0, now_ts=1000.0, lastmod_col="lastmod_ts",
-        max_urls_per_domain=100, recrawl_share=0.3,
-    )
-    plans["frontier_recrawl_budget_ready"] = frb.ready
 
     xres = incremental_exact_dedupe(docs, None, "text", "doc_id")
     plans["incremental_exact_fresh"] = xres.fresh
