@@ -4,24 +4,25 @@ a plain-Python stage registry over ONE SparkSession.
 Each registered pipeline is a named ``(spark, config) -> DataFrame`` function
 with two optional output contracts (M2 — the reference validates emitted
 JSON against a versioned JSON Schema per Snakefile rule): a Spark
-``StructType`` check (structural) and a JSON-Schema check (value-level:
-required/enum/pattern/bounds/nesting, validated distributed via
-``validation.assert_json_schema``), both before the sink.
+``StructType`` check (structural, on the driver) and a JSON-Schema check
+(value-level: required/enum/pattern/bounds/nesting).  With an output
+directory the JSON Schema is checked inside the sink's single write
+(``sources.sinks.write_evidence_strings``), which fills the run record;
+without one, ``validation.assert_json_schema`` checks it alone.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from evidence_datasource_parsers_spark import validation
 from evidence_datasource_parsers_spark.sources.sinks import write_evidence_strings
-
-
-class SchemaContractError(AssertionError):
-    pass
+from evidence_datasource_parsers_spark.validation import SchemaContractError
 
 
 @dataclass
@@ -38,6 +39,9 @@ class Runner:
     """Registry + topological executor with per-output schema contracts."""
 
     pipelines: dict[str, PipelineSpec] = field(default_factory=dict)
+    #: name → ``{"rows_out", "violations", "wall_s"}`` of its last written
+    #: output, from the sink's own observed metrics (no extra job)
+    records: dict[str, dict] = field(default_factory=dict)
 
     def register(
         self,
@@ -96,32 +100,24 @@ class Runner:
             if only and name not in only:
                 continue
             spec = self.pipelines[name]
+            t = time.perf_counter()
             df = spec.build(spark, config)
             if spec.output_schema is not None:
                 self.check_schema(df, spec.output_schema)
             results[name] = df
-            # JSON-Schema validation + sink are two actions over the same
-            # frame: persist around them so the pipeline's DAG runs once,
-            # and the rows sunk ARE the rows that were validated (matters
-            # if any upstream stage is nondeterministic)
-            both_actions = out_dir and spec.json_schema is not None
-            if both_actions:
-                df.persist()
+            record: dict = {}
             try:
-                if spec.json_schema is not None:
-                    # JSON-Schema contract (M2), distributed rather than a
-                    # driver re-read, and checked BEFORE the sink (the
-                    # reference's opentargets_validator step, Snakefile:110,
-                    # runs after the file is written) so a violating output
-                    # raises without leaving a file behind
-                    from evidence_datasource_parsers_spark.validation import (
-                        assert_json_schema,
-                    )
-
-                    assert_json_schema(df, spec.json_schema)
                 if out_dir:
-                    write_evidence_strings(df, f"{out_dir}/{name}.json.gz")
+                    write_evidence_strings(
+                        df, f"{out_dir}/{name}.json.gz",
+                        json_schema=spec.json_schema, record=record)
+                elif spec.json_schema is not None:
+                    validation.assert_json_schema(df, spec.json_schema)
             finally:
-                if both_actions:
-                    df.unpersist()
+                # pipelines with eager expectations (gene_burden, chembl)
+                # persist their output; once it is written, release it
+                df.unpersist()
+                if record:
+                    self.records[name] = {
+                        **record, "wall_s": time.perf_counter() - t}
         return results

@@ -4,7 +4,9 @@ The reference's output contract is ONE gzipped JSON-lines file per pipeline
 (``common/evidence.py:66-80``): coalesce(1) → write → assert single part →
 rename.  That deliberate anti-parallelism is kept *opt-in here*: at 100 TB the
 default sink writes partitioned output and the single-file contract is only
-applied to the (small) final evidence sets that need it.
+applied to the (small) final evidence sets that need it.  The evidence sink
+also checks the output's JSON-Schema contract inside its own write, so a
+release output costs one Spark action.
 """
 
 from __future__ import annotations
@@ -14,31 +16,73 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+from evidence_datasource_parsers_spark import validation
+
+_VIOLATION = "__contract_violation"
 
 
 def write_evidence_strings(
-    df: DataFrame, out_path: str, single_file: bool = True
+    df: DataFrame,
+    out_path: str,
+    single_file: bool = True,
+    json_schema: dict | None = None,
+    record: dict | None = None,
 ) -> None:
-    """Gzipped JSON-lines evidence sink (K1).
+    """Gzipped JSON-lines evidence sink (K1) with the JSON-Schema contract
+    (M2) checked in the same single Spark action.
+
+    The rows are written to ``<out_path>.spark-tmp`` while the violation
+    Column compiled from ``json_schema`` (``validation.violations``) is
+    counted beside them on an ``Observation``: rows out, violating rows and
+    the least violation message.  The output moves into place only when no
+    row violates; otherwise the staging directory is deleted and
+    ``SchemaContractError`` names the count and a sample of the messages
+    (one ``limit`` query, on this failure path only).
 
     single_file=True reproduces the reference contract exactly: one part file,
     renamed to *out_path*.  single_file=False keeps the write parallel and
     *out_path* becomes a directory of gzipped parts (the scale path).
+
+    *record*, when given, receives ``{"rows_out", "violations"}`` before
+    any contract error is raised.
     """
-    tmp = out_path + ".spark-tmp" if single_file else out_path
-    writer = df.coalesce(1) if single_file else df
+    tmp = out_path + ".spark-tmp"
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows_out")]
+    checked = df
+    if json_schema is not None:
+        checked = df.select("*", validation.violations(
+            json_schema, df.schema).alias(_VIOLATION))
+        metrics += [F.count(_VIOLATION).alias("violations"),
+                    F.min(_VIOLATION).alias("first")]
+    observed = checked.observe(obs, *metrics).drop(_VIOLATION)
     (
-        writer.write.format("json")
+        (observed.coalesce(1) if single_file else observed)
+        .write.format("json")
         .mode("overwrite")
         .option("compression", "org.apache.hadoop.io.compress.GzipCodec")
         .save(tmp)
     )
+    seen = obs.get
+    rows, bad = seen["rows_out"], seen.get("violations", 0)
+    if record is not None:
+        record.update(rows_out=rows, violations=bad)
+    if bad:
+        shutil.rmtree(tmp)
+        sample = validation.sample_violations(df, json_schema)
+        messages = [seen["first"]] + [m for m in sample if m != seen["first"]]
+        raise validation.contract_error(messages[:10], bad, rows)
     if single_file:
         parts = glob.glob(os.path.join(tmp, "part-*.json.gz"))
         assert len(parts) == 1, f"expected exactly 1 part file, got {parts}"
         shutil.move(parts[0], out_path)
         shutil.rmtree(tmp)
+    else:
+        shutil.rmtree(out_path, ignore_errors=True)
+        os.replace(tmp, out_path)
 
 
 def write_output(df: DataFrame, out_path: str, fmt: str | None = None) -> None:
@@ -149,8 +193,7 @@ def write_with_manifest(
 
     # write + checksum are two actions over the same frame: persist around
     # them so the manifest describes the rows that were ACTUALLY written
-    # even when the lineage is nondeterministic (same hazard the runner
-    # guards for sink+validate)
+    # even when the lineage is nondeterministic
     df.persist()
     try:
         write_partitioned(df, out_path, partition_by or [], fmt=fmt)

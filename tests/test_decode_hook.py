@@ -10,12 +10,14 @@ it they dedupe, store, and gate exactly like native formats."""
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 # The hook closes over THIS module; executors cannot import tests/*, so
 # ship it by value (production hooks live in importable modules and don't

@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import gzip
 import json
+from decimal import Decimal
 
 import pytest
+from pyspark.sql.types import StructType
 
 from evidence_datasource_parsers_spark.enrich import CachedEnricher
 from evidence_datasource_parsers_spark.runner import (
@@ -86,55 +88,65 @@ def test_runner_cycle_detection(spark):
         r.run(spark, {})
 
 
-def test_json_schema_validator_unit():
-    """Dependency-free validator: the subset the reference's evidence
-    schemas use — types, required, enum, pattern, bounds, nested arrays
-    and objects, anyOf — each keyword must both accept and reject."""
-    from evidence_datasource_parsers_spark.validation import compile_validator
+def _violations(spark, schema, ddl, *rows):
+    """The compiled contract's message per row (None = conforms) over a
+    typed frame of ``rows``."""
+    from evidence_datasource_parsers_spark.validation import violations
 
-    v = compile_validator(
-        {
-            "type": "object",
-            "required": ["targetId", "score"],
-            "additionalProperties": False,
-            "properties": {
-                "targetId": {"type": "string", "pattern": "^ENSG\\d{11}$"},
-                "score": {"type": "number", "minimum": 0, "maximum": 1},
-                "datasourceId": {"enum": ["impc", "encore", "ot_crispr"]},
-                "tags": {
-                    "type": "array",
-                    "items": {"type": "string", "minLength": 1},
-                    "uniqueItems": True,
-                },
-                "meta": {
-                    "type": "object",
-                    "properties": {
-                        "n": {"type": ["integer", "null"]},
-                        "flag": {"anyOf": [{"type": "boolean"}, {"const": "na"}]},
-                    },
+    df = spark.createDataFrame(list(rows), ddl)
+    return [r[0] for r in df.select(violations(schema, df.schema)).collect()]
+
+
+def _one(spark, sub, ddl, value):
+    """Message for a single value in column ``x`` checked against ``sub``."""
+    return _violations(spark, {"properties": {"x": sub}}, f"x {ddl}",
+                       (value,))[0]
+
+
+def test_json_schema_validator_unit(spark):
+    """The compiled contract covers the subset the reference's evidence
+    schemas use — types, required, enum, pattern, bounds, nested arrays
+    and objects, anyOf — and each keyword must both accept and reject."""
+    schema = {
+        "type": "object",
+        "required": ["targetId", "score"],
+        "additionalProperties": False,
+        "properties": {
+            "targetId": {"type": "string", "pattern": "^ENSG\\d{11}$"},
+            "score": {"type": "number", "minimum": 0, "maximum": 1},
+            "datasourceId": {"enum": ["impc", "encore", "ot_crispr"]},
+            "tags": {
+                "type": "array",
+                "items": {"type": "string", "minLength": 1},
+                "uniqueItems": True,
+            },
+            "meta": {
+                "type": "object",
+                "properties": {
+                    "n": {"type": ["integer", "null"]},
+                    "flag": {"anyOf": [{"type": "boolean"},
+                                       {"const": "na"}]},
                 },
             },
-        }
-    )
-    ok = {
-        "targetId": "ENSG00000139618", "score": 0.5, "datasourceId": "impc",
-        "tags": ["a", "b"], "meta": {"n": 3, "flag": True},
+        },
     }
-    assert v(ok) == []
-    assert v({"score": 0.5}) == ["$: missing required property 'targetId'"]
-    errs = v(
-        {
-            "targetId": "BRCA2", "score": 1.5, "datasourceId": "nope",
-            "tags": ["a", "a", ""], "meta": {"n": 1.5, "flag": "yes"},
-            "extra": 1,
-        }
+    ok, missing, bad = _violations(
+        spark, schema,
+        "targetId string, score double, datasourceId string,"
+        " tags array<string>, meta struct<n:double,flag:string>,"
+        " extra bigint",
+        ("ENSG00000139618", 0.5, "impc", ["a", "b"], (3.0, "na"), None),
+        (None, 0.5, None, None, None, None),
+        ("BRCA2", 1.5, "nope", ["a", "a", ""], (1.5, "yes"), 1),
     )
-    joined = "\n".join(errs)
+    assert ok is None
+    assert missing == "$: missing required property 'targetId'"
     for frag in (
-        "!~", "> maximum", "not in enum", "duplicate", "minLength",
-        "$.meta.n: expected type", "no anyOf branch", "unexpected properties",
+        "'BRCA2' !~", "> maximum", "'nope' not in enum", "duplicate",
+        "$.tags[2]: length 0 < minLength", "$.meta.n: expected type",
+        "no anyOf branch", "unexpected property 'extra'",
     ):
-        assert frag in joined, (frag, errs)
+        assert frag in bad, (frag, bad)
 
 
 def test_runner_json_schema_gate(spark, tmp_path):
@@ -199,43 +211,82 @@ def test_json_schema_catches_dropped_nulls(spark):
     assert len(errs) == 1 and "missing required" in errs[0]["error"]
 
 
-def test_json_schema_integer_accepts_whole_floats_and_rejects_bad_type():
+def test_json_schema_integer_accepts_whole_floats_and_rejects_bad_type(
+        spark):
     """JSON-Schema semantics: 3.0 IS an integer (Spark double columns
-    holding counts must pass); unsupported type names fail at compile
-    time with a clear message, not as executor KeyErrors."""
-    from evidence_datasource_parsers_spark.validation import compile_validator
+    holding counts must pass), NaN and ±Inf are not; unsupported type names
+    fail at compile time with a clear message, before any job."""
+    from evidence_datasource_parsers_spark.validation import violations
 
-    v = compile_validator({"type": "integer"})
-    assert v(3) == [] and v(3.0) == []
-    assert v(3.5) != [] and v(True) != []
+    integer = {"type": "integer"}
+    assert _one(spark, integer, "bigint", 3) is None
+    assert _one(spark, integer, "double", 3.0) is None
+    assert _one(spark, integer, "decimal(10,2)", Decimal("3.00")) is None
+    for ddl, value in (("double", 3.5), ("boolean", True),
+                       ("double", float("nan")), ("double", float("inf")),
+                       ("decimal(10,2)", Decimal("3.50"))):
+        assert "expected type" in _one(spark, integer, ddl, value)
 
     with pytest.raises(ValueError, match="unsupported JSON-Schema type 'date'"):
-        compile_validator(
-            {"type": "object", "properties": {"ts": {"type": "date"}}}
-        )
+        violations({"type": "object",
+                    "properties": {"ts": {"type": "date"}}},
+                   StructType.fromDDL("ts string"))
 
 
-def test_json_schema_allof_oneof_enforced():
-    """allOf requires every branch; oneOf exactly one — previously both
-    were accepted by the compiler but silently ignored at validation."""
-    from evidence_datasource_parsers_spark.validation import compile_validator
+def test_json_schema_bounds_exact_across_int_and_float(spark):
+    """Fractional bounds on integer columns are exact at the boundary, and
+    a NaN or ±Inf double is the JSON string its writer emits: bounds skip
+    it and ``type: number`` rejects it."""
+    schema = {"properties": {
+        "i": {"maximum": 2.5, "exclusiveMinimum": -0.5},
+        "d": {"maximum": 1},
+        "n": {"type": "number"}}}
+    got = _violations(
+        spark, schema, "i bigint, d double, n double",
+        (2, 1.0, 0.0), (0, float("nan"), 1e300), (3, float("inf"), None),
+        (-1, 1.5, float("nan")), (None, None, float("-inf")))
+    assert got[:2] == [None, None]
+    assert got[2] == "$.i: 3 > maximum 2.5"
+    assert "$.i: -1 <= exclusiveMinimum -0.5" in got[3]
+    assert "$.d: 1.5 > maximum 1" in got[3]
+    assert "$.n: expected type number, got string" in got[3]
+    assert got[4] == "$.n: expected type number, got string"
 
-    v_all = compile_validator(
-        {"allOf": [{"type": "object", "required": ["a"]},
-                   {"type": "object", "required": ["b"]}]}
-    )
-    assert v_all({"a": 1, "b": 2}) == []
-    assert v_all({"a": 1}) != []
 
-    v_one = compile_validator(
-        {"oneOf": [{"type": "integer"}, {"type": "string"}]}
-    )
-    assert v_one(3) == [] and v_one("x") == []
-    assert v_one([1]) != []          # matches neither
-    v_overlap = compile_validator(
-        {"oneOf": [{"type": "number"}, {"type": "integer"}]}
-    )
-    assert v_overlap(3) != []        # matches both → not exactly one
+def test_json_schema_compile_rejects_undecidable():
+    """Keywords the compiler cannot decide exactly from the Spark type fail
+    on the driver with a ValueError naming the JSON path."""
+    from evidence_datasource_parsers_spark.validation import violations
+
+    for sub, ddl, where in (
+        ({"required": ["k"]}, "x map<string,string>", r"\$\.x"),
+        ({"pattern": "^2"}, "x date", r"\$\.x"),
+        ({"minLength": 1}, "x timestamp", r"\$\.x"),
+        ({"items": {"enum": [[1]]}}, "x array<array<int>>", r"\$\.x\[\]"),
+        ({"const": {"a": 1}}, "x struct<a:int>", r"\$\.x"),
+        ({"minimum": 0}, "x float", r"\$\.x"),
+        ({"uniqueItems": True}, "x array<double>", r"\$\.x"),
+        ({"not": {"type": "string"}}, "x string", r"\$\.x"),
+    ):
+        with pytest.raises(ValueError, match=where):
+            violations({"properties": {"x": sub}}, StructType.fromDDL(ddl))
+
+
+def test_json_schema_allof_oneof_enforced(spark):
+    """allOf requires every branch; oneOf exactly one."""
+    all_of = {"allOf": [{"type": "object", "required": ["a"]},
+                        {"type": "object", "required": ["b"]}]}
+    assert _violations(spark, all_of, "a bigint, b bigint", (1, 2)) == [None]
+    assert "'b'" in _violations(spark, all_of, "a bigint, b bigint",
+                                (1, None))[0]
+
+    one_of = {"oneOf": [{"type": "integer"}, {"type": "string"}]}
+    assert _one(spark, one_of, "bigint", 3) is None
+    assert _one(spark, one_of, "string", "x") is None
+    assert "oneOf matched 0" in _one(spark, one_of, "array<bigint>", [1])
+    overlap = {"oneOf": [{"type": "number"}, {"type": "integer"}]}
+    assert "oneOf matched 2" in _one(spark, overlap, "bigint", 3)
+    assert _one(spark, overlap, "double", 3.5) is None
 
 
 def test_enricher_executor_tier_equivalence(spark):

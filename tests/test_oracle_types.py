@@ -18,12 +18,14 @@ DuckDB-only: no SparkSession, so the sweep is cheap enough to run always.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 from evidence_datasource_parsers_spark.forensics import (
     TABLES,

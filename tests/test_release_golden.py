@@ -6,7 +6,9 @@ pipelines, output schemas and JSON Schemas of ``perfbench/release.py``) and
 compares each written ``<name>.json.gz`` with a committed
 ``(rows, order-insensitive digest)`` pair (``perfbench/worker.py:digest``).
 A refactor of a pipeline, a reader, the runner or the sink that changes any
-output row fails here.
+output row fails here.  The same fixtures check the runner's run records,
+that it leaves no cached frame behind, and that the sink counts violations
+of six tightened contracts exactly as ``jsonschema`` Draft 7 does.
 
 ``ROWS`` is the primary-input size: 50 is the smallest multiple of 10 at
 which both seeds build all 12 outputs nonzero (below it chembl's
@@ -16,6 +18,8 @@ stop-reason expectation fails or otar_crispr comes out empty on one seed).
 from __future__ import annotations
 
 import contextlib
+import copy
+import json
 import os
 import sys
 
@@ -26,7 +30,7 @@ PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(
 sys.path.insert(0, PERFBENCH)
 
 from gen_release import generate  # noqa: E402
-from release import build_runner  # noqa: E402
+from release import CONTRACTS, build_runner  # noqa: E402
 from worker import digest  # noqa: E402
 
 ROWS = 50
@@ -73,3 +77,74 @@ def test_release_outputs_match_goldens(spark, tmp_path, seed):
     got = {name: digest(str(out / f"{name}.json.gz"))
            for name in runner.pipelines}
     assert got == GOLDEN[seed]
+    # the run record comes from the sink's own observed metrics
+    assert {n: (r["rows_out"], r["violations"])
+            for n, r in runner.records.items()} == {
+        n: (rows, 0) for n, (rows, _) in GOLDEN[seed].items()}
+    assert all(r["wall_s"] > 0 for r in runner.records.values())
+
+
+def test_runner_releases_pipeline_caches(spark, tmp_path):
+    """gene_burden and chembl persist their output for their eager
+    expectations; once the runner has written it, nothing stays cached."""
+    config = generate(str(tmp_path / "in"), 7, ROWS)
+    runner, _ = build_runner(lambda layer, name: contextlib.nullcontext())
+    spark.catalog.clearCache()
+    runner.run(spark, config, out_dir=str(tmp_path / "out"),
+               only=["gene_burden", "chembl"])
+    assert set(runner.records) == {"gene_burden", "chembl"}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _tightened() -> dict[str, dict]:
+    """Six release contracts made stricter than their outputs, each through
+    a different keyword path: bounds on doubles and longs, the runtime
+    integer test, patterns and enums inside arrays of structs, item counts,
+    array-element bounds and absent (NULL) struct fields."""
+    c = {n: copy.deepcopy(CONTRACTS[n][1]) for n in (
+        "slapenrich", "chembl", "impc", "otar_crispr", "essentiality",
+        "chemical_probes")}
+    p = {n: s["properties"] for n, s in c.items()}
+    p["slapenrich"]["resourceScore"]["exclusiveMaximum"] = 1e-9
+    p["slapenrich"]["pathways"]["items"]["properties"]["id"]["pattern"] = (
+        "^R-HSA-[0-2]")
+    p["chembl"]["clinicalPhase"]["maximum"] = 2
+    p["chembl"]["studyStopReasonCategories"]["items"] = {
+        "enum": ["Negative", "Safety_Sideeffects"]}
+    p["impc"]["resourceScore"]["type"] = "integer"
+    p["impc"]["diseaseModelAssociatedModelPhenotypes"]["maxItems"] = 1
+    p["otar_crispr"]["replicateStats"]["items"] = {"maximum": 0.02}
+    p["essentiality"]["tissues"]["maxItems"] = 5
+    p["chemical_probes"]["probes"]["items"]["required"] = ["probe", "score1"]
+    return c
+
+
+def test_tightened_contracts_match_jsonschema(spark, tmp_path):
+    """On violating outputs the sink's observed violation count equals an
+    independent Draft 7 validator's count over the same rows' JSON lines,
+    the run raises SchemaContractError, and no file is left behind."""
+    from jsonschema import Draft7Validator
+    from pyspark.sql import functions as F
+
+    from evidence_datasource_parsers_spark.validation import (
+        SchemaContractError,
+    )
+
+    config = generate(str(tmp_path / "in"), 7, ROWS)
+    runner, _ = build_runner(lambda layer, name: contextlib.nullcontext())
+    out = tmp_path / "out"
+    for name, schema in _tightened().items():
+        spec = runner.pipelines[name]
+        spec.json_schema = schema
+        df = spec.build(spark, config)
+        lines = [r[0] for r in
+                 df.select(F.to_json(F.struct(*df.columns))).collect()]
+        df.unpersist()
+        draft7 = Draft7Validator(schema)
+        expected = sum(not draft7.is_valid(json.loads(ln)) for ln in lines)
+        with pytest.raises(SchemaContractError, match="rows"):
+            runner.run(spark, config, out_dir=str(out), only=[name])
+        assert runner.records[name]["violations"] == expected > 0, name
+        assert runner.records[name]["rows_out"] == len(lines)
+        assert not (out / f"{name}.json.gz").exists()
+        assert not (out / f"{name}.json.gz.spark-tmp").exists()

@@ -25,10 +25,12 @@ cheap version of the per-operator .explain review SCALE.md documents.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 
 #: Queries whose flagged shape is a DOCUMENTED contract, not a bug.
