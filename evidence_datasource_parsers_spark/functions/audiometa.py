@@ -14,8 +14,8 @@ bitrate — at headers-only cost:
     rate/channels/bits/total-samples AND the spec-mandated **MD5 of the
     unencoded PCM** (RFC 9639 §8.2) — a re-encode-invariant stream
     fingerprint the file carries for free: a WAV and any lossless FLAC
-    encode of the same audio agree on it (see
-    ``multimodal.audio_stream_hash_frame``).
+    encode of the same audio agree on it (``multimodal.decode_blob``
+    surfaces it as ``pcm_md5``).
   * :func:`parse_ogg` — page walk: codec id from the first packet
     (``\\x01vorbis`` / ``OpusHead``), duration from the LAST page's
     granule position (Vorbis: samples at the stream rate; Opus:

@@ -21,8 +21,7 @@ Design:
 
 Row-preservation contract: compaction never changes row multiplicity or
 values, only file boundaries (asserted in tests by order-insensitive
-comparison; pair with ``sinks.corpus_checksum`` for an end-to-end audit
-trail).  Row ORDER across files is not preserved — consumers needing a
+comparison).  Row ORDER across files is not preserved — consumers needing a
 deterministic order should use ``operators/sharding.py`` instead, which
 makes order part of the data model.
 """

@@ -1278,8 +1278,7 @@ def incremental_simhash_dedupe_indexed(
 ) -> IncrementalSimhashResult:
     """:func:`incremental_simhash_dedupe` against a PRE-EXPLODED key-index
     store — the hamming modality joining the bucketed-store lifecycle the
-    canon segment index pioneered (round 11) and the streaming sink's
-    ``store_table`` rides (round 12).
+    canon segment index uses.
 
     The classic operator re-derives the store side's block-combination
     keys from the 16-byte fingerprints EVERY batch: O(store ×
@@ -1299,9 +1298,9 @@ def incremental_simhash_dedupe_indexed(
     dropped iff min hamming to the store <= max_hamming, exact dups
     being hamming-0 combo mates.  ``delta`` is the batch's exploded
     index rows — append it to advance (O(batch · combos) I/O);
-    (nbits, max_hamming, n_blocks) are store identity, recorded in the
-    ``_simhash_index_meta.json`` sidecar by the consumers (the sink
-    validates-or-stamps it like the canon k).
+    (nbits, max_hamming, n_blocks) are store identity: stamp them with
+    :func:`write_simhash_index_meta` when the store is created and check
+    them with :func:`read_simhash_index_meta` before a probe.
     """
     survivors, fp = _simhash_batch_survivors(
         new_batch, text_col, id_col, nbits, batch_fingerprints

@@ -78,7 +78,8 @@ def df_store_delta(
     document cannot silently double-count its terms and inflate N/Σdl
     (the additive algebra has no natural absorption for replays, unlike
     HLL register maxima).  Pipelines that feed this from a dedup
-    operator's ``fresh`` output (the dedup sinks' ``out_dir``) are disjoint by construction and can leave it None.
+    operator's ``fresh`` output are disjoint by construction and can
+    leave it None.
     """
     # function-local import: functions/tfidf itself imports from the
     # operators package, so a module-level import here is a cycle when

@@ -193,8 +193,8 @@ def assign_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """The persisted IVF index frame: ``(id, vec, cell)`` — one narrow pass,
-    no shuffle.  Write with ``sinks.write_partitioned(..., buckets=...)`` on
-    ``cell`` so ivf search joins leave the corpus side in place."""
+    no shuffle.  Write with ``sinks.write_bucketed_store(..., ["cell"], n)``
+    so ivf search joins leave the corpus side in place."""
     assign = _cells_udf(centroids, 1)
     return corpus.select(
         F.col(id_col),

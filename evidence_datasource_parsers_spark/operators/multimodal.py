@@ -1,4 +1,4 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary + metadata.
+"""Multimodal column plumbing: image/audio/video as opaque binary.
 
 The container has no media libraries (no PIL/ffmpeg), so decode is REAL for
 every format a pure-Python/numpy parser can handle — PPM (P6, 8- and
@@ -12,11 +12,12 @@ synthetic MM01 container below.  Remaining unsupported variants
 clearly-marked ``NotImplementedError`` where a
 PIL/ffmpeg-backed kernel with the same signature plugs in.  Everything
 Spark-side is real and tested: schemas, Arrow batch shapes, ``mapInPandas``
-plumbing, partitioning.
+plumbing, partitioning.  The Spark frames here are the image pHash, the video
+elementary-stream hash and their incremental fingerprint stores.
 
-Synthetic container format (used by tests): a binary blob whose first 14 bytes
-are a header ``MM01`` + media-type byte + int32 width/height (big-endian) +
-byte depth, followed by the payload.
+Synthetic container format (q62's corpus and the tests): a binary blob whose
+first 14 bytes are a header ``MM01`` + media-type byte + int32 width/height
+(big-endian) + byte depth, followed by the payload.
 """
 
 from __future__ import annotations
@@ -36,28 +37,6 @@ DecodeHook = Optional[Callable[[bytes], Optional[dict]]]
 
 MAGIC = b"MM01"
 MEDIA_TYPES = {0: "image", 1: "audio", 2: "video"}
-
-META_SCHEMA = (
-    "media_type string, width int, height int, depth int, payload_bytes long"
-)
-
-
-def pack_blob(media_type: int, width: int, height: int, depth: int, payload: bytes) -> bytes:
-    """Build a synthetic multimodal blob (test/fixture helper)."""
-    return MAGIC + struct.pack(">BiiB", media_type, width, height, depth) + payload
-
-
-def _parse_header(blob: bytes) -> tuple[str, int, int, int, int]:
-    if blob is None or len(blob) < 14 or blob[:4] != MAGIC:
-        return ("unknown", -1, -1, -1, -1 if blob is None else len(blob))
-    mt, w, h, d = struct.unpack(">BiiB", blob[4:14])
-    return (MEDIA_TYPES.get(mt, "unknown"), w, h, d, len(blob) - 14)
-
-
-def encode_ppm(pixels) -> bytes:
-    """(h, w, 3) uint8 array → binary PPM (P6, maxval 255)."""
-    h, w = pixels.shape[0], pixels.shape[1]
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
 
 
 def decode_ppm(blob: bytes):
@@ -493,11 +472,9 @@ def decode_blob(blob: bytes, decode_hook: DecodeHook = None) -> dict:
     to take the blob (MP4/H.264, arithmetic JPEG, WebP, ... — anything the
     stdlib decoders cannot express), or None to defer to them; exceptions
     propagate (a broken hook must fail the task, not silently degrade to
-    NULL rows).  The hook's output flows into the SAME stats / pHash /
-    fingerprint-store tiers with no plan change — every consumer
-    (decoded_image_stats, image_phash_frame, video_frame_phashes,
-    resize_images, the incremental dedups) threads this parameter
-    through.
+    NULL rows).  The hook's output flows into the SAME pHash /
+    fingerprint-store tiers with no plan change — :func:`image_phash_frame`
+    and :func:`incremental_phash_dedupe` thread this parameter through.
     """
     import numpy as np
 
@@ -670,339 +647,6 @@ def decode_blob(blob: bytes, decode_hook: DecodeHook = None) -> dict:
     return {"media_type": "unknown"}
 
 
-def extract_media_meta(
-    df: DataFrame, binary_col: str = "blob", id_col: str = "media_id"
-) -> DataFrame:
-    """Decode typed metadata from binary blobs via Arrow-batched mapInPandas.
-
-    The batch loop is vectorized per Arrow batch (no per-row Python calls into
-    Spark); at scale this runs one Python worker per core with zero shuffle.
-    """
-    out_schema = f"{id_col} long, {META_SCHEMA}"
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [_parse_header(b) for b in pdf[binary_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "media_type": [m[0] for m in meta],
-                    "width": pd.array([m[1] for m in meta], dtype="int32"),
-                    "height": pd.array([m[2] for m in meta], dtype="int32"),
-                    "depth": pd.array([m[3] for m in meta], dtype="int32"),
-                    "payload_bytes": [m[4] for m in meta],
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(decode, out_schema)
-
-
-def resize_images(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    fake: bool = True,
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """Resize kernel over mapInPandas.
-
-    fake=True keeps the legacy deterministic stand-in for MM01 blobs (header
-    rewritten, payload truncated/padded to target_w*target_h) so pipelines
-    are testable with zero decode cost.  fake=False REALLY decodes
-    (PPM/BMP/MM01 via :func:`decode_blob`), nearest-neighbor-resamples in
-    numpy, and re-encodes — PPM for RGB sources, MM01 for grayscale;
-    compressed inputs raise at the decode step (the PIL plug-in point).
-    Non-image blobs map to null either way.
-    """
-    out_schema = f"{id_col} long, {binary_col} binary"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for blob in pdf[binary_col]:
-                if fake:
-                    mt_name, w, h, d, _ = _parse_header(blob)
-                    if mt_name != "image":
-                        out.append(None)
-                        continue
-                    payload = bytes(blob[14:])[: target_w * target_h].ljust(
-                        target_w * target_h, b"\0"
-                    )
-                    out.append(pack_blob(0, target_w, target_h, d, payload))
-                    continue
-                try:
-                    decoded = decode_blob(
-                        bytes(blob) if blob is not None else None,
-                        decode_hook,
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    out.append(None)
-                    continue
-                if (
-                    decoded["media_type"] != "image"
-                    or decoded.get("pixels") is None  # meta-only tier
-                ):
-                    out.append(None)
-                    continue
-                px = decoded["pixels"]
-                h, w = px.shape[0], px.shape[1]
-                if h == 0 or w == 0:  # degenerate raster → null, not crash
-                    out.append(None)
-                    continue
-                # nearest-neighbor: index-sample rows/cols (pixel-center rule)
-                ri = np.minimum((np.arange(target_h) + 0.5) * h // target_h, h - 1).astype(int)
-                ci = np.minimum((np.arange(target_w) + 0.5) * w // target_w, w - 1).astype(int)
-                resized = px[ri][:, ci]
-                if resized.shape[2] == 3:
-                    out.append(encode_ppm(resized))
-                elif resized.shape[2] in (2, 4):  # alpha → PNG keeps it
-                    out.append(encode_png(resized))
-                else:
-                    out.append(
-                        pack_blob(0, target_w, target_h, 1, resized.tobytes())
-                    )
-            yield pd.DataFrame({id_col: pdf[id_col].values, binary_col: out})
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, out_schema)
-
-
-def decoded_image_stats(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """REAL-decode statistics per image blob: pixel count/sum/mean/min/max
-    over the decoded raster (PPM/BMP/MM01 via :func:`decode_blob`).  One
-    narrow Arrow pass, no shuffle; non-images and undecodable blobs emit
-    nulls.  The stats are exact functions of the decoded bytes, so a
-    deterministic synthesis upstream gives them an exact SQL oracle — the
-    honesty check that the decoder really ran."""
-    out_schema = (
-        f"{id_col} long, img_format string, width int, height int, "
-        "channels int, pixel_count long, pixel_sum long, pixel_mean double, "
-        "pixel_min int, pixel_max int"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    d = decode_blob(
-                        bytes(blob) if blob is not None else None,
-                        decode_hook,
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    d = {"media_type": "unknown"}
-                if d["media_type"] != "image":
-                    rows.append((mid, None, None, None, None, None, None,
-                                 None, None, None))
-                    continue
-                if d.get("pixels") is None:
-                    # container-meta tier (WebP/AVIF/HEIC): dimensions
-                    # are real, pixel stats honestly NULL — gates on
-                    # width/height work, stats-dependent paths skip
-                    rows.append((mid, d["format"], d.get("width"),
-                                 d.get("height"), d.get("channels"),
-                                 None, None, None, None, None))
-                    continue
-                if d["pixels"].size == 0:  # degenerate raster: null row
-                    rows.append((mid, None, None, None, None, None, None,
-                                 None, None, None))
-                    continue
-                px = d["pixels"].astype(np.int64)
-                rows.append(
-                    (
-                        mid, d["format"], d["width"], d["height"],
-                        d["channels"], int(px.size), int(px.sum()),
-                        float(px.sum()) / float(px.size),
-                        int(px.min()), int(px.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "img_format", "width", "height", "channels",
-                    "pixel_count", "pixel_sum", "pixel_mean", "pixel_min",
-                    "pixel_max",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, out_schema)
-
-
-def extract_features(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    n_bins: int = 16,
-) -> DataFrame:
-    """Per-blob feature vector via Arrow-batched mapInPandas: a normalized
-    ``n_bins``-bucket byte histogram of the payload plus mean/std — a
-    deterministic, codec-free stand-in with the SAME signature and output
-    shape (``array<float>``) as a real CNN/audio embedding kernel.  The
-    output feeds the similarity stack directly (brute_force_topk /
-    ann_lsh_topk / ivf_topk on the ``features`` column), so the whole
-    blob → embed → index → search pipeline is exercisable end-to-end.
-
-    One narrow pass, no shuffle; at scale one Python worker per core, Arrow
-    both ways."""
-    out_schema = f"{id_col} long, features array<float>"
-    shift = 8 - (n_bins - 1).bit_length()  # byte >> shift buckets into n_bins
-    if n_bins & (n_bins - 1):
-        raise ValueError(f"n_bins must be a power of two, got {n_bins}")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            feats = []
-            for blob in pdf[binary_col]:
-                mt_name, _, _, _, n_payload = _parse_header(blob)
-                if mt_name == "unknown" or n_payload <= 0:
-                    feats.append(None)
-                    continue
-                payload = np.frombuffer(bytes(blob[14:]), dtype=np.uint8)
-                hist = np.bincount(payload >> shift, minlength=n_bins)
-                vec = np.concatenate(
-                    [
-                        hist / len(payload),
-                        [payload.mean() / 255.0, payload.std() / 255.0],
-                    ]
-                ).astype(np.float32)
-                feats.append(vec)
-            yield pd.DataFrame({id_col: pdf[id_col].values, "features": feats})
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, out_schema)
-
-
-def _decode_audio(blob: bytes | None, decode_hook: DecodeHook):
-    """(rate, channels, samples) via the hook-aware dispatch: a hook
-    returning a ``media_type='audio'`` dict (MP3/AAC/Opus, ...) wins; a
-    hook claim of another media type raises ValueError (callers NULL-row
-    it); otherwise the stdlib PCM16-WAV decoder runs."""
-    if decode_hook is not None and blob is not None:
-        hooked = decode_hook(bytes(blob))
-        if hooked is not None:
-            if hooked.get("media_type") != "audio":
-                raise ValueError("decode_hook: blob is not audio")
-            if "samples" not in hooked or hooked.get("sample_rate") is None:
-                # meta-only audio dicts (decode_blob's own FLAC/OGG/MP3
-                # shape) carry no PCM — NULL-row, don't KeyError the task
-                raise ValueError("decode_hook: audio dict has no PCM samples")
-            return (
-                hooked["sample_rate"],
-                hooked.get("channels", 1),
-                hooked["samples"],
-            )
-    return decode_wav(bytes(blob) if blob is not None else b"")
-
-
-def audio_features(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """REAL audio features per PCM16 WAV blob: duration, RMS level,
-    zero-crossing rate, and the dominant frequency (argmax of the numpy
-    rFFT magnitude over the first channel) — the codec-free subset of what
-    an audio embedding front-end computes, over the actual decoded
-    samples.  One narrow Arrow pass, no shuffle; non-WAV blobs emit
-    nulls."""
-    out_schema = (
-        f"{id_col} long, sample_rate int, channels int, n_frames long, "
-        "duration_s double, rms double, zero_crossing_rate double, "
-        "dominant_hz double"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    rate, ch, samples = _decode_audio(blob, decode_hook)
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid, None, None, None, None, None, None, None))
-                    continue
-                x = samples[:, 0].astype(np.float64) / 32768.0
-                n = len(x)
-                if n == 0:
-                    rows.append((mid, rate, ch, 0, 0.0, None, None, None))
-                    continue
-                rms = float(np.sqrt(np.mean(x * x)))
-                zcr = (
-                    float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                    if n > 1
-                    else 0.0
-                )
-                spectrum = np.abs(np.fft.rfft(x))
-                if len(spectrum) > 1:
-                    dom_bin = int(np.argmax(spectrum[1:])) + 1  # skip DC
-                    dom_hz = dom_bin * rate / n
-                else:
-                    dom_hz = 0.0
-                rows.append(
-                    (mid, rate, ch, n, n / rate, rms, zcr, float(dom_hz))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "sample_rate", "channels", "n_frames",
-                    "duration_s", "rms", "zero_crossing_rate", "dominant_hz",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every_n: int,
-    frame_bytes: int,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Video frame sampling: explode every Nth fixed-size payload chunk.
-
-    1 row → M frame rows; the fan-out happens inside mapInPandas so frames of
-    one video stay in one partition (locality for downstream per-frame UDFs).
-    """
-    out_schema = f"{id_col} long, frame_idx int, frame binary"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                mt_name, _, _, _, n_payload = _parse_header(blob)
-                if mt_name != "video":
-                    continue
-                payload = bytes(blob[14:])
-                n_frames = len(payload) // frame_bytes
-                for i in range(0, n_frames, every_n):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(payload[i * frame_bytes : (i + 1) * frame_bytes])
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, out_schema)
-
-
 _PHASH_DCT32 = None
 
 
@@ -1097,31 +741,6 @@ def image_phash_frame(
     )
 
 
-def image_near_dup_pairs(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    max_hamming: int = 6,
-    n_blocks: int = 9,
-) -> DataFrame:
-    """At-rest image near-dup pairs: (id_a, id_b, hamming) over the pHash
-    frame via the pigeonhole equi-joins — never an all-pairs product.
-    ``max_hamming`` 6 @ 63 bits separates re-encodes (≤ ~4 bits moved)
-    from distinct photos (~31 bits); raise it for aggressive variants
-    (heavy crops shift more bits)."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_near_dup_pairs,
-    )
-
-    fp = image_phash_frame(df, binary_col, id_col).where(
-        F.col("phash").isNotNull()
-    )
-    return hamming_near_dup_pairs(
-        fp, id_col, "phash",
-        nbits=63, max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
 class IncrementalPhashResult(NamedTuple):
     """Same contract as the text-side incremental results: ``pinned`` is
     the persisted batch pHash frame both outputs derive from; unpersist it
@@ -1158,13 +777,13 @@ def incremental_phash_dedupe(
 
     Within-batch images with IDENTICAL pHashes collapse to the min-id
     representative first; within-batch near-dups are an at-rest pass
-    (:func:`image_near_dup_pairs` over the batch).  Undecodable blobs
-    (NULL pHash) pass through as fresh and are NOT stored — route them to
-    a PIL-backed kernel rather than silently treating them as unique
-    forever.
+    (``dedupe.hamming_near_dup_pairs`` over the batch's pHashes).
+    Undecodable blobs (NULL pHash) pass through as fresh and are NOT
+    stored — route them to a PIL-backed kernel rather than silently
+    treating them as unique forever.
 
     ``batch_phashes``: optional precomputed :func:`image_phash_frame`
-    rows (single-decode reuse when the pipeline also computes stats).
+    rows (single-decode reuse when the pipeline already hashed them).
     """
     fp_all = (
         batch_phashes
@@ -1179,25 +798,6 @@ def incremental_phash_dedupe(
     )
 
 
-def _fp_batch_survivors(new_batch, fp_all, id_col, fp_col):
-    """Shared within-batch preamble of the classic AND key-index
-    perceptual cores — one implementation so the indexed twin's
-    equivalence can never drift: exact-hash twins collapse to the min
-    id, NULL-fingerprint rows pass through unstored, retained
-    fingerprints persist.  Returns ``(survivors, fp)`` with ``fp``
-    pinned (caller unpersists via the result's ``pinned``)."""
-    fp_ok = fp_all.where(F.col(fp_col).isNotNull())
-    surv_ids = (
-        fp_ok.groupBy(fp_col).agg(F.min(F.col(id_col)).alias(id_col))
-        .select(id_col)
-    )
-    null_ids = fp_all.where(F.col(fp_col).isNull()).select(id_col)
-    fp = fp_ok.join(surv_ids, on=id_col, how="left_semi").persist()
-    keep_ids = surv_ids.unionByName(null_ids)
-    survivors = new_batch.join(keep_ids, on=id_col, how="left_semi")
-    return survivors, fp
-
-
 def _incremental_fingerprint_dedupe(
     new_batch: DataFrame,
     store: DataFrame | None,
@@ -1209,17 +809,27 @@ def _incremental_fingerprint_dedupe(
     n_blocks: int,
     nbits: int = 63,
 ) -> IncrementalPhashResult:
-    """Shared core of the perceptual fingerprint stores (image pHash,
-    audio spectral hash): within-batch exact-hash collapse to the min id
-    (NULL-hash rows exempt and never stored), then the Manku
-    block-combination pigeonhole join of batch hashes against the carried
-    store, verified with one ``bit_count(xor)``."""
+    """Shared core of the fingerprint stores (image pHash, video stream
+    hash): within-batch exact-hash collapse to the min id (NULL-hash rows
+    pass through and are never stored; the retained fingerprints are
+    persisted as ``pinned``), then the Manku block-combination pigeonhole
+    join of batch hashes against the carried store, verified with one
+    ``bit_count(xor)``."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
         hamming_distance,
         simhash_combo_keys,
     )
 
-    survivors, fp = _fp_batch_survivors(new_batch, fp_all, id_col, fp_col)
+    fp_ok = fp_all.where(F.col(fp_col).isNotNull())
+    surv_ids = (
+        fp_ok.groupBy(fp_col).agg(F.min(F.col(id_col)).alias(id_col))
+        .select(id_col)
+    )
+    null_ids = fp_all.where(F.col(fp_col).isNull()).select(id_col)
+    fp = fp_ok.join(surv_ids, on=id_col, how="left_semi").persist()
+    survivors = new_batch.join(
+        surv_ids.unionByName(null_ids), on=id_col, how="left_semi"
+    )
     if store is None:
         return IncrementalPhashResult(
             fresh=survivors, store=fp, pinned=fp, delta=fp
@@ -1252,809 +862,9 @@ def _incremental_fingerprint_dedupe(
     )
 
 
-def _incremental_fingerprint_dedupe_indexed(
-    new_batch: DataFrame,
-    key_store: DataFrame | None,
-    fp_all: DataFrame,
-    id_col: str,
-    fp_col: str,
-    *,
-    max_hamming: int,
-    n_blocks: int,
-    nbits: int = 63,
-) -> IncrementalPhashResult:
-    """:func:`_incremental_fingerprint_dedupe` against a PRE-EXPLODED
-    key-index store ``(combo, key, <fp_col>, id)`` — the perceptual twin
-    of ``dedupe.incremental_simhash_dedupe_indexed``.  The classic core
-    re-derives the store side's block-combination keys every batch
-    (O(store × combos) Generate per probe); here the explosion is paid
-    once at advance time and the probe joins stored columns, so a store
-    carried as a ``(combo, key)``-bucketed table is read in place.
-    Within-batch collapse, NULL-fingerprint pass-through, and the drop
-    rule are identical to the classic core (equivalence-tested); the
-    combo split (nbits/max_hamming/n_blocks) is store identity,
-    recorded by consumers in the shared ``_simhash_index_meta.json``
-    hamming-index sidecar (``dedupe.write_simhash_index_meta``)."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_distance,
-        simhash_combo_keys,
-    )
-
-    survivors, fp = _fp_batch_survivors(new_batch, fp_all, id_col, fp_col)
-
-    def explode_index(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.col(id_col),
-            F.col(fp_col),
-            F.explode(
-                simhash_combo_keys(
-                    F.col(fp_col), nbits, max_hamming, n_blocks
-                )
-            ).alias("__k"),
-        ).select("__k.combo", "__k.key", fp_col, id_col)
-
-    if key_store is None:
-        delta = explode_index(fp)
-        return IncrementalPhashResult(
-            fresh=survivors, store=delta, pinned=fp, delta=delta
-        )
-    batch_keys = fp.select(
-        F.col(id_col),
-        F.col(fp_col).alias("__np"),
-        F.explode(
-            simhash_combo_keys(F.col(fp_col), nbits, max_hamming, n_blocks)
-        ).alias("__k"),
-    ).select(id_col, "__np", "__k.combo", "__k.key")
-    store_side = key_store.select(
-        "combo", "key", F.col(fp_col).alias("__sp")
-    )
-    dropped = (
-        batch_keys.join(store_side, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__np"), F.col("__sp"))
-            <= F.lit(max_hamming)
-        )
-        .select(id_col)
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    # the batch's exploded rows already exist in batch_keys — derive the
-    # delta from them instead of paying a second Generate over fp
-    delta = batch_keys.join(dropped, on=id_col, how="left_anti").select(
-        "combo", "key", F.col("__np").alias(fp_col), id_col
-    )
-    new_store = key_store.select(
-        "combo", "key", fp_col, id_col
-    ).unionByName(delta)
-    return IncrementalPhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
-    )
-
-
-def incremental_phash_dedupe_indexed(
-    new_batch: DataFrame,
-    key_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    max_hamming: int = 6,
-    n_blocks: int = 9,
-    batch_phashes: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_phash_dedupe` against the pre-exploded
-    ``(combo, key, phash, id)`` key-index store — semantics identical,
-    probe reads a ``(combo, key)``-bucketed table in place."""
-    fp_all = (
-        batch_phashes
-        if batch_phashes is not None
-        else image_phash_frame(
-            new_batch, binary_col, id_col, decode_hook=decode_hook
-        )
-    )
-    return _incremental_fingerprint_dedupe_indexed(
-        new_batch, key_store, fp_all, id_col, "phash",
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
 # ---------------------------------------------------------------------------
-# Audio fingerprinting — the FIFTH modality of the fingerprint-store family
-# (exact → lexical → semantic → perceptual-image → perceptual-audio)
+# Video (MP4, MJPEG-AVI) — exact remux dedup over the elementary stream
 # ---------------------------------------------------------------------------
-
-_AFP_FRAMES = 64
-_AFP_BANDS = 16
-_AFP_LO_HZ = 100.0
-_AFP_HI_HZ = 3000.0
-
-
-def _audio_spectral_hash(x, rate: int) -> int | None:
-    """63-bit spectral hash of a mono float signal — Haitsma-Kalker-style
-    band energies made pHash-shaped so the whole hamming infrastructure
-    (pigeonhole pairs, combo-key stores) is shared:
-
-    fixed-COUNT framing (64 frames spanning the clip — robust to
-    resampling, which scales every frame the same way) → per-frame rFFT →
-    energy in 16 log-spaced ABSOLUTE-Hz bands (100–3000 Hz: present at
-    every common rate, so an 8 kHz and a 16 kHz rendering see the same
-    spectral region) → per-frame energy normalization (level invariance)
-    → mean-pool to an 8×8 time-band grid → 8×8 DCT → 63 AC sign bits vs
-    their median, packed into one long.
-
-    Returns None for clips too short to frame (< 8 samples/frame).
-    """
-    import numpy as np
-
-    n = len(x)
-    if n < _AFP_FRAMES * 8:
-        return None
-    frame_len = n // _AFP_FRAMES
-    frames = x[: frame_len * _AFP_FRAMES].reshape(_AFP_FRAMES, frame_len)
-    spec = np.abs(np.fft.rfft(frames, axis=1))
-    freqs = np.fft.rfftfreq(frame_len, 1.0 / rate)
-    edges = np.geomspace(_AFP_LO_HZ, _AFP_HI_HZ, _AFP_BANDS + 1)
-    E = np.zeros((_AFP_FRAMES, _AFP_BANDS))
-    for b in range(_AFP_BANDS):
-        m = (freqs >= edges[b]) & (freqs < edges[b + 1])
-        if m.any():
-            E[:, b] = spec[:, m].sum(axis=1)
-    tot = E.sum(axis=1, keepdims=True)
-    tot[tot == 0] = 1.0
-    E = E / tot
-    G = E.reshape(8, _AFP_FRAMES // 8, 8, _AFP_BANDS // 8).mean(axis=(1, 3))
-    k = np.arange(8)
-    C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16.0)
-    C[0, :] = 1.0
-    C *= np.where(k[:, None] == 0, np.sqrt(1.0 / 8.0), np.sqrt(2.0 / 8.0))
-    low = (C @ G @ C.T).flatten()[1:]  # 63 AC coefficients
-    bits = low > np.median(low)
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v
-
-
-def audio_fingerprint_frame(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """(id, afp) frame over PCM16 WAV blobs — the audio twin of
-    :func:`image_phash_frame`.  Undecodable/too-short blobs yield NULL.
-    One narrow Arrow pass, no shuffle."""
-    id_dt = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    rate, _ch, samples = _decode_audio(blob, decode_hook)
-                    x = samples[:, 0].astype(np.float64) / 32768.0
-                    out.append((mid, _audio_spectral_hash(x, rate)))
-                except (ValueError, NotImplementedError, struct.error):
-                    out.append((mid, None))
-            yield pd.DataFrame(
-                {
-                    id_col: [r[0] for r in out],
-                    "afp": [r[1] for r in out],
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} {id_dt}, afp long"
-    )
-
-
-def audio_near_dup_pairs(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    max_hamming: int = 8,
-    n_blocks: int = 10,
-) -> DataFrame:
-    """At-rest audio near-dup pairs (id_a, id_b, hamming) via the shared
-    pigeonhole equi-joins — re-encodes/resamples/level-changes of the same
-    recording land within a few bits, different recordings tens apart."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_near_dup_pairs,
-    )
-
-    fp = audio_fingerprint_frame(df, binary_col, id_col).where(
-        F.col("afp").isNotNull()
-    )
-    return hamming_near_dup_pairs(
-        fp, id_col, "afp",
-        nbits=63, max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
-def incremental_audio_dedupe(
-    new_batch: DataFrame,
-    afp_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    max_hamming: int = 8,
-    n_blocks: int = 10,
-    batch_fingerprints: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """Batch-over-batch AUDIO near-dup dedup against a carried (id, afp)
-    store — same contract and store discipline as
-    :func:`incremental_phash_dedupe` (shared core); re-uploads and
-    re-encodes of stored recordings drop, silent/undecodable blobs pass
-    through unstored."""
-    fp_all = (
-        batch_fingerprints
-        if batch_fingerprints is not None
-        else audio_fingerprint_frame(
-            new_batch, binary_col, id_col, decode_hook=decode_hook
-        )
-    )
-    return _incremental_fingerprint_dedupe(
-        new_batch, afp_store, fp_all, id_col, "afp",
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
-def incremental_audio_dedupe_indexed(
-    new_batch: DataFrame,
-    key_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    max_hamming: int = 8,
-    n_blocks: int = 10,
-    batch_fingerprints: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_audio_dedupe` against the pre-exploded
-    ``(combo, key, afp, id)`` key-index store — semantics identical,
-    probe reads a ``(combo, key)``-bucketed table in place."""
-    fp_all = (
-        batch_fingerprints
-        if batch_fingerprints is not None
-        else audio_fingerprint_frame(
-            new_batch, binary_col, id_col, decode_hook=decode_hook
-        )
-    )
-    return _incremental_fingerprint_dedupe_indexed(
-        new_batch, key_store, fp_all, id_col, "afp",
-        max_hamming=max_hamming, n_blocks=n_blocks,
-    )
-
-
-def audio_meta_frame(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """(id, format, sample_rate, channels, duration_s, pcm_md5) per audio
-    blob — container walk only, no codec: WAV (RIFF), MP3 (exact frame
-    walk, true VBR duration), FLAC (STREAMINFO, including the
-    spec-mandated PCM MD5), OGG Vorbis/Opus (page walk, last-granule
-    duration).  Unrecognized/malformed blobs yield NULL columns.  This is
-    the audio twin of :func:`video_meta_frame`: real-crawl duration /
-    rate / channel gates work on compressed audio a stdlib deployment
-    cannot decode.  One narrow Arrow pass, headers-only cost."""
-    id_dt = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from evidence_datasource_parsers_spark.functions.audiometa import (
-            parse_flac,
-            parse_mp3,
-            parse_ogg,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(blob) if blob is not None else b""
-                m = None
-                try:
-                    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                        # header-only RIFF walk: duration comes from the
-                        # data-chunk SIZE (size / block_align / rate) —
-                        # decoding the full PCM array just to read its
-                        # length would double this frame's cost over a
-                        # 100 TB audio corpus (audio_features decodes
-                        # the samples again for the feature columns)
-                        rate = ch = block_align = None
-                        data_size = 0
-                        pos = 12
-                        while pos + 8 <= len(b):
-                            cid = b[pos : pos + 4]
-                            csz = struct.unpack_from("<I", b, pos + 4)[0]
-                            if cid == b"fmt " and pos + 24 <= len(b):
-                                (_, ch, rate, _, block_align, _) = (
-                                    struct.unpack_from("<HHIIHH", b, pos + 8)
-                                )
-                            elif cid == b"data":
-                                # truncated captures: clamp to real bytes
-                                data_size = min(csz, len(b) - pos - 8)
-                            pos += 8 + csz + (csz & 1)
-                        if rate and block_align:
-                            m = {
-                                "format": "wav", "sample_rate": rate,
-                                "channels": ch,
-                                "duration_s": data_size
-                                / block_align / rate,
-                                "pcm_md5": None,
-                            }
-                    elif b[:4] == b"fLaC":
-                        m = parse_flac(b)
-                    elif b[:4] == b"OggS":
-                        m = parse_ogg(b)
-                    elif b[:3] == b"ID3" or (
-                        len(b) >= 2
-                        and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
-                    ):
-                        m = parse_mp3(b)
-                except (ValueError, struct.error):
-                    m = None
-                m = m or {}
-                rows.append(
-                    (
-                        mid, m.get("format"), m.get("sample_rate"),
-                        m.get("channels"), m.get("duration_s"),
-                        m.get("pcm_md5"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "format", "sample_rate", "channels",
-                    "duration_s", "pcm_md5",
-                ],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel,
-        f"{id_col} {id_dt}, format string, sample_rate int, channels int,"
-        " duration_s double, pcm_md5 string",
-    )
-
-
-def audio_stream_hash_frame(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """(id, container, stream_hash) per audio blob: an 8-byte hash of the
-    UNENCODED PCM — md5 over the RIFF ``data`` chunk for WAV, and FLAC's
-    own STREAMINFO MD5 (RFC 9639 mandates it be the md5 of exactly those
-    interleaved little-endian PCM bytes), so **a WAV and any lossless
-    FLAC encode of the same audio hash identically without decoding a
-    single FLAC frame** — cross-container exact dedup the byte-level blob
-    hash cannot see.  Lossy formats (MP3/OGG) yield NULL: their PCM is
-    decoder-dependent, and pretending otherwise would poison the store —
-    they belong to the spectral-fingerprint tier
-    (:func:`incremental_audio_dedupe`, with a decode_hook).
-
-    Feed the result as ``batch_stream_hashes=`` to
-    :func:`incremental_remux_dedupe` for the carried-store dedup loop —
-    the exact-hash core is container-agnostic."""
-    id_dt = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from evidence_datasource_parsers_spark.functions.audiometa import (
-            parse_flac,
-        )
-
-        def wav_data_chunk(b: bytes) -> bytes | None:
-            pos = 12
-            while pos + 8 <= len(b):
-                cid = b[pos : pos + 4]
-                sz = struct.unpack_from("<I", b, pos + 4)[0]
-                if cid == b"data":
-                    if pos + 8 + sz > len(b):
-                        return None
-                    return b[pos + 8 : pos + 8 + sz]
-                pos += 8 + sz + (sz & 1)
-            return None
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                b = bytes(blob) if blob is not None else b""
-                container = None
-                h = None
-                try:
-                    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                        pcm = wav_data_chunk(b)
-                        if pcm is not None:
-                            container = "wav"
-                            h = hashlib.md5(pcm).digest()
-                    elif b[:4] == b"fLaC":
-                        m = parse_flac(b)
-                        if m["pcm_md5"] is not None:
-                            container = "flac"
-                            h = bytes.fromhex(m["pcm_md5"])
-                except (ValueError, struct.error):
-                    container, h = None, None
-                rows.append(
-                    (
-                        mid, container,
-                        int.from_bytes(h[:8], "big", signed=True)
-                        if h is not None else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "container", "stream_hash"]
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel,
-        f"{id_col} {id_dt}, container string, stream_hash long",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Video (MJPEG-AVI) — frame sampling and near-dup over per-frame pHashes
-# ---------------------------------------------------------------------------
-
-
-def video_frame_phashes(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    stride: int = 1,
-    max_frames: int | None = None,
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """AVI blobs → one row per SAMPLED frame: (id, frame_idx, phash) —
-    the video analogue of :func:`image_phash_frame`.  The container walk
-    is a cheap byte scan; only every ``stride``-th frame (capped at
-    ``max_frames``) pays a JPEG decode + pHash, so cost scales with the
-    SAMPLE, not the clip length.  MJPEG frames without DHT segments use
-    the Annex K defaults (the in-the-wild convention).  Undecodable
-    containers emit zero rows; an undecodable individual frame is
-    skipped.  One narrow Arrow pass, no shuffle.
-
-    ``decode_hook`` (see :func:`decode_blob`) extends the container walk
-    beyond MJPEG-AVI: a hook that returns a ``media_type='video'`` dict
-    takes the blob — supply ``frame_pixels`` (decoded rasters) for codecs
-    like H.264/VP9, or ``frames`` (per-frame JPEG bytes) to reuse the
-    stdlib frame decode.  Hook-decoded clips flow into the SAME sampled
-    pHash rows, so video_near_dup_pairs / incremental_video_dedupe /
-    refresh_video_batch work over MP4 with no plan change."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    id_dt = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from evidence_datasource_parsers_spark.functions.avi import (
-            decode_avi,
-        )
-        from evidence_datasource_parsers_spark.functions.jpeg import (
-            decode_jpeg,
-        )
-
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                v = None
-                if decode_hook is not None and blob is not None:
-                    hooked = decode_hook(bytes(blob))
-                    if hooked is not None:
-                        if hooked.get("media_type") != "video":
-                            continue  # hook claimed it; not a video
-                        v = hooked
-                if v is None:
-                    try:
-                        v = decode_avi(
-                            bytes(blob) if blob is not None else b""
-                        )
-                    except (ValueError, struct.error):
-                        continue
-                pxs = v.get("frame_pixels")
-                frames = v.get("frames")
-                n_frames = v.get("n_frames")
-                # a hook may return a metadata-only video dict (decode_blob's
-                # own MP4 shape: n_frames but no frames/pixels, or no frame
-                # count at all) — skip it, don't KeyError/TypeError the task
-                if n_frames is None or (pxs is None and frames is None):
-                    continue
-                sel = range(0, n_frames, stride)
-                if max_frames is not None:
-                    sel = list(sel)[:max_frames]
-                for fi in sel:
-                    if pxs is not None:
-                        if fi >= len(pxs):
-                            continue
-                        px = pxs[fi]
-                    else:
-                        if fi >= len(frames):
-                            continue
-                        try:
-                            px = decode_jpeg(
-                                frames[fi], default_tables=True
-                            )
-                        except (ValueError, NotImplementedError):
-                            continue
-                    ids.append(mid)
-                    idxs.append(fi)
-                    hashes.append(_phash64(px))
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "phash": hashes}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} {id_dt}, frame_idx int, phash long"
-    )
-
-
-def video_near_dup_pairs(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    stride: int = 1,
-    max_frames: int | None = None,
-    frame_max_hamming: int = 6,
-    n_blocks: int = 9,
-    min_overlap: float = 0.5,
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """Video near-dup pairs (id_a, id_b, matched_frames, overlap): two
-    clips are near-dups when ≥ ``min_overlap`` of the shorter clip's
-    SAMPLED frames have a pHash within ``frame_max_hamming`` bits of some
-    frame of the other — re-encodes/re-containered copies match nearly
-    every frame, unrelated clips essentially none.
-
-    Scale shape: frame-level candidates come from the same Manku
-    combo-key equi-join as every hamming store (never frames × frames);
-    the per-video-pair rollup is one groupBy on (id_a, id_b).  Sampled
-    frame counts bound all cardinalities: a clip contributes
-    ⌈n_frames/stride⌉ rows regardless of duration."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_distance,
-        simhash_combo_keys,
-    )
-
-    fp = video_frame_phashes(
-        df, binary_col, id_col,
-        stride=stride, max_frames=max_frames, decode_hook=decode_hook,
-    ).persist()
-    counts = fp.groupBy(id_col).agg(F.count(F.lit(1)).alias("__nf"))
-    combos = lambda c: F.explode(  # noqa: E731
-        simhash_combo_keys(c, 63, frame_max_hamming, n_blocks)
-    )
-    keys = fp.select(
-        F.col(id_col).alias("__vid"),
-        F.col("frame_idx").alias("__fi"),
-        F.col("phash").alias("__ph"),
-        combos(F.col("phash")).alias("__k"),
-    ).select("__vid", "__fi", "__ph", "__k.combo", "__k.key")
-    a, b = keys.alias("a"), keys.alias("b")
-    # a-side frame matched by ANY b-side frame; dedup before the rollup
-    matched = (
-        a.join(b, on=["combo", "key"])
-        .where(F.col("a.__vid") < F.col("b.__vid"))
-        .filter(
-            hamming_distance(F.col("a.__ph"), F.col("b.__ph"))
-            <= F.lit(frame_max_hamming)
-        )
-        .select(
-            F.col("a.__vid").alias("id_a"),
-            F.col("b.__vid").alias("id_b"),
-            F.col("a.__fi").alias("__fi"),
-        )
-        .distinct()
-    )
-    rolled = matched.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("matched_frames")
-    )
-    ca = counts.select(
-        F.col(id_col).alias("id_a"), F.col("__nf").alias("__na")
-    )
-    cb = counts.select(
-        F.col(id_col).alias("id_b"), F.col("__nf").alias("__nb")
-    )
-    out = (
-        rolled.join(ca, on="id_a").join(cb, on="id_b")
-        .withColumn(
-            "overlap",
-            F.col("matched_frames") / F.least("__na", "__nb"),
-        )
-        .where(F.col("overlap") >= min_overlap)
-        .select("id_a", "id_b", "matched_frames", "overlap")
-    )
-    return out
-
-
-def video_meta_frame(
-    df: DataFrame,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    decode_hook: DecodeHook = None,
-) -> DataFrame:
-    """(id, n_frames, fps, width, height) per video blob — container walk
-    only, no frame decode.  Native for MJPEG-AVI and ISO-BMFF/MP4 (the
-    moov sample tables carry everything these columns need, no codec
-    required — see ``functions/mp4.py``); undecodable blobs yield NULL
-    columns.  ``decode_hook`` (see :func:`decode_blob`) supplies the same
-    fields for other containers."""
-    id_dt = df.schema[id_col].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from evidence_datasource_parsers_spark.functions.avi import (
-            decode_avi,
-        )
-        from evidence_datasource_parsers_spark.functions.mp4 import (
-            parse_mp4,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[binary_col]):
-                v = None
-                b = bytes(blob) if blob is not None else b""
-                if decode_hook is not None and blob is not None:
-                    hooked = decode_hook(b)
-                    if hooked is not None:
-                        v = (
-                            hooked
-                            if hooked.get("media_type") == "video"
-                            else {}
-                        )
-                if v is None:
-                    try:
-                        if len(b) >= 12 and b[4:8] == b"ftyp":
-                            v = parse_mp4(b)
-                        else:
-                            v = decode_avi(b)
-                    except (ValueError, struct.error):
-                        v = {}
-                rows.append(
-                    (
-                        mid, v.get("n_frames"), v.get("fps"),
-                        v.get("width"), v.get("height"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_frames", "fps", "width", "height"],
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel,
-        f"{id_col} {id_dt}, n_frames int, fps double, width int, height int",
-    )
-
-
-def incremental_video_dedupe(
-    new_batch: DataFrame,
-    frame_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    stride: int = 1,
-    max_frames: int | None = 32,
-    frame_max_hamming: int = 6,
-    n_blocks: int = 9,
-    min_overlap: float = 0.5,
-    batch_frame_phashes: DataFrame | None = None,
-    decode_hook: DecodeHook = None,
-) -> IncrementalPhashResult:
-    """Batch-over-batch VIDEO near-dup dedup — the SIXTH modality of the
-    fingerprint-store family (exact → lexical → semantic → image → audio
-    → video).  The carried state is the retained clips' sampled-frame
-    pHash rows ``(id, frame_idx, phash)``; a new clip drops when ≥
-    ``min_overlap`` of its sampled frames match (within
-    ``frame_max_hamming`` bits) frames of ONE stored clip — a re-encoded
-    / re-containered / re-muxed copy matches nearly every frame.
-
-    Within-batch clips with an IDENTICAL sampled-frame hash sequence
-    collapse to the min id first (exact re-uploads); looser within-batch
-    near-dups are an at-rest pass (:func:`video_near_dup_pairs`).
-    Undecodable containers pass through as fresh and are NOT stored.
-
-    Scale shape: frame-level candidates ride the same Manku combo-key
-    equi-join as every hamming store; ``max_frames`` bounds every clip's
-    row count regardless of duration, so store size scales with the
-    CLIP count, not watch time.
-    """
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_distance,
-        simhash_combo_keys,
-    )
-
-    fp_all = (
-        batch_frame_phashes
-        if batch_frame_phashes is not None
-        else video_frame_phashes(
-            new_batch, binary_col, id_col,
-            stride=stride, max_frames=max_frames, decode_hook=decode_hook,
-        )
-    )
-    # within-batch exact collapse: clips sharing the identical ordered
-    # frame-hash sequence keep only the min id
-    sig = fp_all.groupBy(id_col).agg(
-        F.sha2(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("frame_idx", "phash"))
-                    ),
-                    lambda s: F.concat_ws(
-                        ":", s["frame_idx"].cast("string"),
-                        s["phash"].cast("string"),
-                    ),
-                ),
-            ),
-            256,
-        ).alias("__sig"),
-        F.count(F.lit(1)).alias("__nf"),
-    )
-    surv_ids = sig.groupBy("__sig").agg(F.min(F.col(id_col)).alias(id_col))
-    fp = fp_all.join(
-        surv_ids.select(id_col), on=id_col, how="left_semi"
-    ).persist()
-    decodable_ids = sig.select(id_col)
-    undecodable = new_batch.join(decodable_ids, on=id_col, how="left_anti")
-    survivors = new_batch.join(
-        surv_ids.select(id_col), on=id_col, how="left_semi"
-    ).unionByName(undecodable)
-    if frame_store is None:
-        return IncrementalPhashResult(
-            fresh=survivors, store=fp, pinned=fp, delta=fp
-        )
-
-    combos = lambda c: F.explode(  # noqa: E731
-        simhash_combo_keys(c, 63, frame_max_hamming, n_blocks)
-    )
-    batch_keys = fp.select(
-        F.col(id_col).alias("__bid"),
-        F.col("frame_idx").alias("__bfi"),
-        F.col("phash").alias("__bp"),
-        combos(F.col("phash")).alias("__k"),
-    ).select("__bid", "__bfi", "__bp", "__k.combo", "__k.key")
-    store_keys = frame_store.select(
-        F.col(id_col).alias("__sid"),
-        F.col("phash").alias("__sp"),
-        combos(F.col("phash")).alias("__k"),
-    ).select("__sid", "__sp", "__k.combo", "__k.key")
-    matched = (
-        batch_keys.join(store_keys, on=["combo", "key"])
-        .filter(
-            hamming_distance(F.col("__bp"), F.col("__sp"))
-            <= F.lit(frame_max_hamming)
-        )
-        .select("__bid", "__sid", "__bfi")
-        .distinct()
-    )
-    batch_counts = sig.select(
-        F.col(id_col).alias("__bid"), F.col("__nf").alias("__nb")
-    )
-    store_counts = frame_store.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__ns")
-    ).select(F.col(id_col).alias("__sid"), "__ns")
-    dropped = (
-        matched.groupBy("__bid", "__sid")
-        .agg(F.count(F.lit(1)).alias("__m"))
-        .join(batch_counts, on="__bid")
-        .join(store_counts, on="__sid")
-        .where(
-            F.col("__m") / F.least("__nb", "__ns") >= F.lit(min_overlap)
-        )
-        .select(F.col("__bid").alias(id_col))
-        .distinct()
-    )
-    fresh = survivors.join(dropped, on=id_col, how="left_anti")
-    delta = fp.join(dropped, on=id_col, how="left_anti")
-    new_store = frame_store.unionByName(delta)
-    return IncrementalPhashResult(
-        fresh=fresh, store=new_store, pinned=fp, delta=delta
-    )
 
 
 def video_stream_hash_frame(
@@ -2134,13 +944,11 @@ def incremental_remux_dedupe(
 ) -> IncrementalPhashResult:
     """Batch-over-batch EXACT remux dedup: drop every clip whose
     elementary-stream hash (:func:`video_stream_hash_frame`) is already
-    in the carried ``(id, stream_hash)`` store.  This is the cheap tier
-    in front of :func:`incremental_video_dedupe` — it catches the
+    in the carried ``(id, stream_hash)`` store.  It catches the
     overwhelmingly common re-upload (same encoded stream, new container
-    metadata) with 8 bytes of state per clip and an equi-join, leaving
-    only genuinely re-ENCODED copies to the frame-sampling pHash tier —
-    and it is the one video-dedup tier that is fully real for MP4/H.264
-    without a ``decode_hook``.
+    metadata) with 8 bytes of state per clip and an equi-join, and it is
+    fully real for MP4/H.264 without a ``decode_hook``; genuinely
+    re-ENCODED copies hash differently and pass.
 
     Same store contract as every perceptual store: within-batch twins
     collapse to the min id, NULL-hash (unrecognized container) rows pass
@@ -2164,27 +972,3 @@ def incremental_remux_dedupe(
     )
 
 
-def incremental_remux_dedupe_indexed(
-    new_batch: DataFrame,
-    key_store: DataFrame | None,
-    binary_col: str = "blob",
-    id_col: str = "media_id",
-    *,
-    batch_stream_hashes: DataFrame | None = None,
-) -> IncrementalPhashResult:
-    """:func:`incremental_remux_dedupe` against the key-index store.
-    At max_hamming=0 / n_blocks=1 the "index" is one (combo=0,
-    key=full-hash) row per clip — the same cardinality as the classic
-    store — so the gain here is purely the direct equi-join on stored
-    columns (zero store-side Generate/Exchange under a bucketed table),
-    and the uniform store format across the hamming family."""
-    fp_all = (
-        batch_stream_hashes
-        if batch_stream_hashes is not None
-        else video_stream_hash_frame(new_batch, binary_col, id_col)
-    )
-    return _incremental_fingerprint_dedupe_indexed(
-        new_batch, key_store,
-        fp_all.select(id_col, "stream_hash"),
-        id_col, "stream_hash", max_hamming=0, n_blocks=1,
-    )

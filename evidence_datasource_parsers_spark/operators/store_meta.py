@@ -4,8 +4,8 @@ Some store parameters are part of the store's IDENTITY — values the
 counted/sampled rows were built under, where a mismatched read or
 compaction silently corrupts the algebra (the span gram cap, the
 bottom-k sample size).  Each such store records the parameter in an
-underscore-prefixed JSON sidecar Spark's parquet listing ignores; sinks
-and the compact CLI validate it and refuse mismatches.
+underscore-prefixed JSON sidecar Spark's parquet listing ignores;
+callers validate it before a probe or compaction and refuse mismatches.
 
 Shared discipline:
 

@@ -15,6 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """The local JVM heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else 32g or
+    half the host's physical memory, whichever is less.  A 32g heap on a
+    16 GB host lets the one local JVM grow until the host kills it."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(32 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "evidence-engine",
     master: str | None = None,
@@ -44,10 +54,11 @@ def get_spark(
     # broadcast) in one JVM whose default heap is 1 GiB — 32 concurrent
     # tasks thrash the GCLocker long before the machine's RAM is touched
     # (observed: flaky BroadcastExchange failures at 10× sf0.1).  Size the
-    # heap like an executor would be sized on a cluster.  Only effective
-    # when this process launches the JVM; on a real cluster driver/executor
-    # memory comes from submit conf and this setting is inert.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    # heap like an executor would be sized on a cluster, within the host's
+    # RAM.  Only effective when this process launches the JVM; on a real
+    # cluster driver/executor memory comes from submit conf and this
+    # setting is inert.
+    driver_mem = driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -24,7 +24,7 @@ kernels over stdlib ``tarfile``:
     returning a manifest frame ``(shard, path, n_samples, n_bytes)``.
     Members are written key-sorted with fixed mtime/uid, so shard bytes
     are deterministic functions of their contents (re-runs produce
-    byte-identical shards — the corpus_checksum property).
+    byte-identical shards).
 
 POSIX tar is append-only with 512-byte blocking — cheap to stream both
 ways; compression is left to the filesystem/codec layer by default

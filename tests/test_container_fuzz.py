@@ -99,12 +99,12 @@ def test_byte_flips_never_crash(data):
 
 
 def test_decode_blob_surfaces_only_null_or_dict(spark):
-    """End-to-end: a frame of hostile blobs through the stats kernels
-    yields rows (NULL where undecodable), never a task failure."""
+    """End-to-end: hostile blobs through ``decode_blob`` give a dict or a
+    caught error, and a frame of them through the Arrow kernels yields
+    rows (NULL where undecodable), never a task failure."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        audio_meta_frame,
-        decoded_image_stats,
-        video_meta_frame,
+        decode_blob,
+        image_phash_frame,
         video_stream_hash_frame,
     )
 
@@ -116,12 +116,16 @@ def test_decode_blob_surfaces_only_null_or_dict(spark):
         b"ID3\x04\x00\x00\x7f\x7f\x7f\x7f",  # tag bigger than file
         encode_mp4([b"x"] * 2, 8, 8)[:-6],   # sample table past EOF
     ]
+    for blob in hostile:
+        try:
+            assert "media_type" in decode_blob(blob)
+        except ALLOWED:
+            pass
     df = spark.createDataFrame(
         [(i, bytearray(b)) for i, b in enumerate(hostile)],
         "media_id long, blob binary",
     )
-    for op in (decoded_image_stats, audio_meta_frame, video_meta_frame,
-               video_stream_hash_frame):
+    for op in (image_phash_frame, video_stream_hash_frame):
         assert op(df, "blob", "media_id").count() == len(hostile)
 
 

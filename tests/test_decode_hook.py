@@ -1,12 +1,12 @@
 """The pluggable decode hook (round-6 verdict ask #3): a deployment with
 PIL/ffmpeg plugs ONE top-level callable into decode_blob's dispatch and
 codecs the stdlib decoders cannot parse (MP4/H.264, WebP, MP3, ...) flow
-into the SAME stats / pHash / fingerprint-store tiers with no plan change.
+into the SAME pHash / fingerprint-store tiers with no plan change.
 
 The fake formats here stand in for such codecs: ``FIMG`` (gray image) and
 ``FMP4`` (gray video, decoded frame rasters) have magics no stdlib decoder
-recognizes, so WITHOUT the hook they are NULL-row/zero-row blobs and WITH
-it they dedupe, store, and gate exactly like native formats."""
+recognizes, so WITHOUT the hook they are unknown/NULL-row blobs and WITH
+it they hash, dedupe and store exactly like native formats."""
 
 from __future__ import annotations
 
@@ -28,12 +28,8 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 from evidence_datasource_parsers_spark.operators.multimodal import (  # noqa: E402
     decode_blob,
-    decoded_image_stats,
     image_phash_frame,
     incremental_phash_dedupe,
-    incremental_video_dedupe,
-    video_frame_phashes,
-    video_meta_frame,
 )
 
 
@@ -101,26 +97,12 @@ def test_decode_blob_hook_dispatch():
 
 
 def test_image_stats_and_phash_via_hook(spark):
-    """decoded_image_stats / image_phash_frame produce REAL rows for
-    hook-only formats, NULL rows without the hook."""
+    """image_phash_frame produces REAL rows for hook-only formats, NULL
+    rows without the hook."""
     df = spark.createDataFrame(
         [(1, fake_image_blob(kind=0)), (2, b"garbage")],
         "media_id long, blob binary",
     )
-    rows = {
-        r["media_id"]: r
-        for r in decoded_image_stats(
-            df, decode_hook=fake_decode_hook
-        ).collect()
-    }
-    px = _gray(48, 40, 0).astype(np.int64)
-    assert rows[1]["img_format"] == "fimg"
-    assert rows[1]["pixel_sum"] == int(px.sum())
-    assert rows[2]["img_format"] is None
-    no_hook = {
-        r["media_id"]: r for r in decoded_image_stats(df).collect()
-    }
-    assert no_hook[1]["img_format"] is None  # unknown without the hook
     ph = {
         r["media_id"]: r["phash"]
         for r in image_phash_frame(
@@ -128,61 +110,10 @@ def test_image_stats_and_phash_via_hook(spark):
         ).collect()
     }
     assert ph[1] is not None and ph[2] is None
-
-
-def test_video_frames_and_meta_via_hook(spark):
-    df = spark.createDataFrame(
-        [(1, fake_video_blob(n=4, kind=0)), (2, b"garbage")],
-        "media_id long, blob binary",
-    )
-    rows = video_frame_phashes(
-        df, stride=2, decode_hook=fake_decode_hook
-    ).collect()
-    assert {r["media_id"] for r in rows} == {1}
-    assert sorted(r["frame_idx"] for r in rows) == [0, 2]
-    assert video_frame_phashes(df, stride=2).count() == 0  # hookless
-    meta = {
-        r["media_id"]: r
-        for r in video_meta_frame(
-            df, decode_hook=fake_decode_hook
-        ).collect()
+    no_hook = {
+        r["media_id"]: r["phash"] for r in image_phash_frame(df).collect()
     }
-    assert meta[1]["n_frames"] == 4 and meta[1]["fps"] == 10.0
-    assert meta[2]["n_frames"] is None
-
-
-def test_incremental_video_dedupe_with_hook(spark):
-    """Hook-decoded clips flow into the frame-pHash store: run 1 seeds the
-    store from an FMP4 clip, run 2 drops a copy of it and keeps a
-    distinct clip — the exact store semantics native AVI clips get."""
-    clip_a = fake_video_blob(n=4, kind=0)
-    r1 = incremental_video_dedupe(
-        spark.createDataFrame(
-            [(1, clip_a)], "media_id long, blob binary"
-        ),
-        None,
-        decode_hook=fake_decode_hook,
-    )
-    assert {r["media_id"] for r in r1.fresh.collect()} == {1}
-    assert r1.store.count() == 4  # one row per hook-decoded frame
-    store = r1.store.localCheckpoint(eager=True)
-    r1.pinned.unpersist()
-
-    r2 = incremental_video_dedupe(
-        spark.createDataFrame(
-            [
-                (10, clip_a),                      # re-upload → drop
-                (11, fake_video_blob(n=4, kind=1)),  # distinct → keep
-                (13, b"not a video"),              # undecodable → pass
-            ],
-            "media_id long, blob binary",
-        ),
-        store,
-        decode_hook=fake_decode_hook,
-    )
-    assert {r["media_id"] for r in r2.fresh.collect()} == {11, 13}
-    assert {r["media_id"] for r in r2.store.collect()} == {1, 11}
-    r2.pinned.unpersist()
+    assert no_hook[1] is None  # unknown without the hook
 
 
 def test_incremental_phash_dedupe_with_hook(spark):
@@ -217,39 +148,3 @@ def test_incremental_phash_dedupe_with_hook(spark):
     r2.pinned.unpersist()
 
 
-def test_meta_only_audio_hook_yields_null_row(spark):
-    """decode_blob's own FLAC shape (audio dict, no PCM samples) through
-    audio_features as the hook: NULL row, not a KeyError task death."""
-    from evidence_datasource_parsers_spark.functions.audiometa import (
-        encode_flac_header,
-    )
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        audio_features,
-        decode_blob,
-    )
-
-    df = spark.createDataFrame(
-        [(1, encode_flac_header(rate=44100, channels=2,
-                                total_samples=44100))],
-        "media_id long, blob binary",
-    )
-    row = audio_features(df, decode_hook=decode_blob).collect()[0]
-    assert row["duration_s"] is None  # NULL row, task survived
-
-
-def test_metadata_only_video_hook_skips_not_crashes(spark):
-    """decode_blob's MP4 shape (n_frames, no frames/pixels) through
-    video_frame_phashes as the hook: zero rows, not a KeyError."""
-    from evidence_datasource_parsers_spark.functions.mp4 import encode_mp4
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        decode_blob,
-        video_frame_phashes,
-    )
-
-    df = spark.createDataFrame(
-        [(1, encode_mp4([b"\x01" * 20] * 4, 64, 48))],
-        "media_id long, blob binary",
-    )
-    assert video_frame_phashes(
-        df, decode_hook=decode_blob
-    ).count() == 0

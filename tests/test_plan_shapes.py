@@ -261,22 +261,22 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
     join key join with ZERO Exchange operators (only scans + sort + SMJ)."""
     import uuid
 
-    from evidence_datasource_parsers_spark.sources.sinks import write_partitioned
-
     suffix = uuid.uuid4().hex[:8]
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
     try:
-        write_partitioned(
-            orders.select("o_orderkey", "o_totalprice"), str(tmp_path / "o"),
-            [], buckets=(8, ["o_orderkey"], f"bk_orders_{suffix}"),
-        )
-        write_partitioned(
-            lineitem, str(tmp_path / "l"),
-            [], buckets=(8, ["l_orderkey"], f"bk_lineitem_{suffix}"),
-        )
+        for df, key, name in (
+            (orders.select("o_orderkey", "o_totalprice"), "o_orderkey",
+             f"bk_orders_{suffix}"),
+            (lineitem, "l_orderkey", f"bk_lineitem_{suffix}"),
+        ):
+            (
+                df.write.mode("overwrite").format("parquet")
+                .bucketBy(8, key).sortBy(key)
+                .option("path", str(tmp_path / name)).saveAsTable(name)
+            )
         o = spark.table(f"bk_orders_{suffix}")
         l = spark.table(f"bk_lineitem_{suffix}")
         joined = o.join(l, o.o_orderkey == l.l_orderkey)
@@ -504,16 +504,12 @@ def _df_plan(df):
 
 
 def test_perceptual_pair_ops_never_cartesian(spark):
-    """Every round-6 pair/dedup operator must stay on combo-key equi-joins:
-    no CartesianProduct and no non-broadcast nested loop anywhere in the
-    audio pair search, video pair search, or the three perceptual
-    incremental stores."""
+    """The media fingerprint stores must stay on combo-key equi-joins: no
+    CartesianProduct and no non-broadcast nested loop in the image pHash
+    or the video remux incremental store."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
-        audio_near_dup_pairs,
-        incremental_audio_dedupe,
         incremental_phash_dedupe,
-        incremental_video_dedupe,
-        video_near_dup_pairs,
+        incremental_remux_dedupe,
     )
 
     batch = spark.createDataFrame(
@@ -522,23 +518,15 @@ def test_perceptual_pair_ops_never_cartesian(spark):
     phash_store = spark.createDataFrame(
         [(9, 12345)], "media_id long, phash long"
     )
-    afp_store = spark.createDataFrame(
-        [(9, 12345)], "media_id long, afp long"
-    )
-    frame_store = spark.createDataFrame(
-        [(9, 0, 12345)], "media_id long, frame_idx int, phash long"
+    stream_store = spark.createDataFrame(
+        [(9, 12345)], "media_id long, stream_hash long"
     )
     plans = {
-        "audio_pairs": _df_plan(audio_near_dup_pairs(batch)),
-        "video_pairs": _df_plan(video_near_dup_pairs(batch)),
         "incr_phash": _df_plan(
             incremental_phash_dedupe(batch, phash_store).fresh
         ),
-        "incr_audio": _df_plan(
-            incremental_audio_dedupe(batch, afp_store).fresh
-        ),
-        "incr_video": _df_plan(
-            incremental_video_dedupe(batch, frame_store).fresh
+        "incr_remux": _df_plan(
+            incremental_remux_dedupe(batch, stream_store).fresh
         ),
     }
     for name, plan in plans.items():
@@ -549,78 +537,13 @@ def test_perceptual_pair_ops_never_cartesian(spark):
                 raise AssertionError(f"{name}: BNLJ in plan")
 
 
-def test_sink_bucketed_store_read_never_shuffles(spark, tmp_path):
-    """Round-12 closure of the r11 perf weak: the STREAMING sink's store
-    read now rides the bucketed table.  After one sink batch with
-    store_table, the frame ``read_store`` hands the operator must
-    plan a store-side scan with bucket metadata — the batch's anti-join
-    has exactly ONE Exchange (the batch re-clustering into the store's
-    buckets), zero on the store side — including through the sidecar
-    RE-REGISTRATION path a restarted stream takes."""
-    import json as _json
-    import uuid
-
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        content_hash,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
-        incremental_dedupe_sink,
-    )
-
-    table = f"sinkplan_{uuid.uuid4().hex[:8]}"
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    (src / "b1.json").write_text(
-        "\n".join(
-            _json.dumps({"doc_id": i, "text": f"document body {i}"})
-            for i in range(64)
-        )
-    )
-    stream = (
-        spark.readStream.schema("doc_id long, text string").json(str(src))
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        incremental_dedupe_sink(
-            stream, str(tmp_path / "out"), store, str(tmp_path / "ck"),
-            "text", "doc_id", store_table=table, store_buckets=8,
-        ).awaitTermination()
-
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        batch = spark.range(100).select(
-            F.coalesce(
-                content_hash(F.concat(F.lit("doc "), F.col("id"))),
-                F.lit(-1),
-            ).alias("content_hash")
-        )
-        for leg in ("registered", "re-registered"):
-            if leg == "re-registered":  # restart: in-memory catalog empty
-                spark.sql(f"DROP TABLE {table}")
-            st = read_store(spark, store, table)
-            plan = (
-                batch.join(st, on="content_hash", how="left_anti")
-                ._jdf.queryExecution()
-                .explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                    .fromString("formatted")
-                )
-            )
-            assert _nodes(plan).count("Exchange") == 1, (leg, plan)
-            assert "Bucketed: true" in plan, (leg, plan)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_seen_store_table_read_never_shuffles(spark, tmp_path):
     """A seen-URL store written by ``write_bucketed_store`` and read back
-    through ``read_store``: a batch's anti-join on the canonical-URL hash
-    reads the store in place.  Comparative assert — the table-read plan
-    has exactly ONE fewer Exchange than the identical plain-read plan (the
-    store side's) — plus bucket metadata on the scan, through the
-    fresh-session re-registration path too."""
+    through ``read_bucketed_store``: a batch's anti-join on the
+    canonical-URL hash reads the store in place.  Comparative assert — the
+    table-read plan has exactly ONE fewer Exchange than the identical
+    plain-read plan (the store side's) — plus bucket metadata on the
+    scan."""
     import uuid
 
     from evidence_datasource_parsers_spark.functions.hashing import (
@@ -630,10 +553,8 @@ def test_seen_store_table_read_never_shuffles(spark, tmp_path):
         canonicalize_url_sql,
     )
     from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucketed_store,
         write_bucketed_store,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
     )
 
     table = f"seenplan_{uuid.uuid4().hex[:8]}"
@@ -666,12 +587,9 @@ def test_seen_store_table_read_never_shuffles(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         write_bucketed_store(rows, store, table, ["url_hash"], 8)
         n_plain, _ = exchanges(spark.read.parquet(plain))
-        for leg in ("registered", "re-registered"):
-            if leg == "re-registered":
-                spark.sql(f"DROP TABLE {table}")
-            n_table, plan = exchanges(read_store(spark, store, table))
-            assert n_table == n_plain - 1, (leg, plan)
-            assert "Bucketed: true" in plan, (leg, plan)
+        n_table, plan = exchanges(read_bucketed_store(spark, table))
+        assert n_table == n_plain - 1, plan
+        assert "Bucketed: true" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -754,10 +672,8 @@ def test_bloom_store_table_probe_never_shuffles_store(spark, tmp_path):
         bloom_store,
     )
     from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucketed_store,
         write_bucketed_store,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
     )
 
     table = f"bloomplan_{uuid.uuid4().hex[:8]}"
@@ -790,7 +706,7 @@ def test_bloom_store_table_probe_never_shuffles_store(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         write_bucketed_store(history, store, table, ["g", "__w"], 8)
         n_plain, _ = exchanges(spark.read.parquet(plain))
-        n_table, plan = exchanges(read_store(spark, store, table))
+        n_table, plan = exchanges(read_bucketed_store(spark, table))
         assert n_table == n_plain - 1, plan
         assert "Bucketed: true" in plan, plan
     finally:
@@ -811,10 +727,8 @@ def test_hll_store_table_estimate_never_shuffles(spark, tmp_path):
         sketch_store_estimates,
     )
     from evidence_datasource_parsers_spark.sources.sinks import (
+        read_bucketed_store,
         write_bucketed_store,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        read_store,
     )
 
     table = f"hllplan_{uuid.uuid4().hex[:8]}"
@@ -826,7 +740,7 @@ def test_hll_store_table_estimate_never_shuffles(spark, tmp_path):
     history = hll_store(src, ["g"], "v")
     try:
         write_bucketed_store(history, store, table, ["g"], 4)
-        est = sketch_store_estimates(read_store(spark, store, table), ["g"])
+        est = sketch_store_estimates(read_bucketed_store(spark, table), ["g"])
         plan = est._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted")

@@ -5,7 +5,8 @@
     runtime root: ``__spark_entry__``, ``bench.py``, ``perfbench/``, the CLI,
     the release pipelines, ``runner``, ``validation`` and ``enrich``.  The
     only exceptions are the modules in ``KEPT``, each kept for the reason
-    given, and the curation and web-format modules in ``DEFERRED``, which
+    given, the modules only ``tools/`` uses (``TOOL_ONLY``), and the
+    curation and web-format modules in ``DEFERRED``, which
     no root reaches either and which are next in line for deletion
     (ROADMAP).  A module that nothing reaches is dead code: delete it, or
     add it to ``KEPT`` with the SURVEY row it implements.
@@ -17,13 +18,22 @@
     n``, a submodule or top-level name of ``X``.  Function-level imports
     only run when their function does, so without this a deleted module or
     name would fail no import at collection time.
+(d) Every top-level def and class of a reached module is named by a
+    runtime root, directly or through other reached defs, unless it is
+    listed in ``UNREACHED_DEFS``.  That list may only shrink: an entry
+    that gains a caller or no longer exists fails too.
+(e) The test files bind no top-level name twice (Python keeps only the
+    last binding, so an earlier test of the same name never runs), and
+    every ``tests/slow_tests.txt`` entry names an existing test.
 """
 
 from __future__ import annotations
 
 import ast
+import collections
 import glob
 import os
+import re
 import subprocess
 import sys
 
@@ -37,7 +47,15 @@ KEPT = {
     f"{PKG}.sources.owl": "SURVEY IMPC row: OWL ontology parse",
     f"{PKG}.functions.adatiss": "SURVEY D12: expression-specificity metric",
     f"{PKG}.functions.text_struct": "SURVEY D5/D6: structured-text parse",
+}
+
+#: Modules only ``tools/`` imports, kept while those tools use them.
+TOOL_ONLY = {
     f"{PKG}.plans.q62_audit": "tools/verify_local.py per-leg forensics",
+    f"{PKG}.operators.df_store": "tools/bench_scale.py and "
+                                 "tools/plan_audit.py: the df-store probe",
+    f"{PKG}.operators.quantize": "tools/bench_scale.py: the quantized "
+                                 "vector store",
 }
 
 #: Unreached curation modules still on their way out; each is covered by
@@ -53,7 +71,68 @@ DEFERRED = {
     )
 }
 
-SUBPACKAGES = ("operators", "functions", "sources", "pipelines", "streaming")
+#: Top-level defs that no runtime root names, outside ``KEPT`` and
+#: ``DEFERRED`` modules (module → names).  Each is covered only by its own
+#: tests; the next cuts delete them with those tests, or give them a caller.
+UNREACHED_DEFS = {
+    "functions.fingerprint": {
+        "document_fingerprints", "fingerprint_overlap", "hashes_from_chars",
+        "kgram_hashes", "normalized_chars", "shared_fingerprint_pairs",
+    },
+    "functions.hashing": {"minhash_base", "minhash_base_sql"},
+    "functions.imagemeta": {
+        "_riff_chunk", "encode_avif_shell", "encode_webp_shell",
+    },
+    "functions.metrics": {"binned_auc", "gini_grouped_pandas"},
+    "functions.ngram_lm": {"doc_perplexity"},
+    "functions.pvalues": {"magnitude_exponent"},
+    "functions.quality": {
+        "lexical_quality_score", "placeholder_weight_table",
+        "score_with_weight_table", "train_quality_classifier",
+    },
+    "functions.textstats": {
+        "compression_ratio", "duplicate_line_fraction", "pii_counts",
+        "punct_ratio", "repetition_signals", "scrub_pii",
+        "top_ngram_char_fraction", "word_ngrams",
+    },
+    "functions.tfidf": {"bm25_query_scores", "release_tf_pins"},
+    "functions.urls": {"dedupe_by_url", "filter_urls"},
+    "operators.dedupe": {
+        "hamming_near_dup_pairs", "lsh_candidate_pairs", "lsh_drop_provenance",
+        "minhash_bands", "minhash_signature", "ngram_jaccard",
+        "read_simhash_index_meta", "shingle_bases", "soft_dedupe_weights",
+        "with_minhash_signature", "with_simhash", "word_shingles",
+        "write_simhash_index_meta",
+    },
+    "operators.interval": {"_axis", "interval_overlap_join"},
+    "operators.ivf": {
+        "cell_occupancy", "fit_ivf_centroids", "ivf_add_batch", "needs_refit",
+    },
+    "operators.quantize": {"quantized_topk"},
+    "operators.reshape": {"nullify_empty_string", "regex_cleanup_chain"},
+    "operators.semdedup": {"semantic_dedupe"},
+    "operators.sharding": {"write_shards"},
+    "operators.similarity": {
+        "ann_lsh_topk", "cosine", "dot", "dot_sql", "norm_sql", "sql_tree",
+    },
+    "operators.sketches": {
+        "_bloom_bit", "_cms_bucket", "bloom_params", "bottomk_merge_stores",
+        "cms_params", "compact_bottomk_store", "histogram_percentiles",
+        "histogram_store_percentiles", "incremental_histogram",
+        "read_bottomk_store_meta", "write_bottomk_store_meta",
+    },
+    "operators.span_dedup": {
+        "compact_gram_store", "read_gram_store_meta", "write_gram_store_meta",
+    },
+    "operators.windows": {"top_1_per_group_agg"},
+    "sources.readers": {
+        "_strip_compression", "_xlsx_cell_col", "_xlsx_grid", "from_pandas",
+        "read_excel", "read_orc", "read_path", "read_xml_elements",
+        "stage_remote",
+    },
+}
+
+SUBPACKAGES = ("operators", "functions", "sources", "pipelines")
 
 
 def _package_modules() -> dict[str, str]:
@@ -147,13 +226,11 @@ def test_every_module_reached_or_kept_on_purpose():
     reached = _closure(roots, modules) | {
         m for m, p in modules.items() if p in roots
     }
-    assert set(modules) - reached == set(KEPT) | DEFERRED
-    # q62_audit's reason holds: tools/ reaches it, and no other KEPT module
+    assert set(modules) - reached == set(KEPT) | set(TOOL_ONLY) | DEFERRED
+    # TOOL_ONLY's reasons hold: tools/ reaches those, and no KEPT module
     tools = sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
     with_tools = _closure(roots + tools, modules) | reached
-    assert set(modules) - with_tools - DEFERRED == (
-        set(KEPT) - {f"{PKG}.plans.q62_audit"}
-    )
+    assert set(modules) - with_tools - DEFERRED == set(KEPT)
 
 
 def _loaded_after(code: str) -> list[str]:
@@ -212,3 +289,120 @@ def test_package_imports_resolve():
                         if a.name != "*" and a.name not in names[mod]
                         and f"{mod}.{a.name}" not in modules]
     assert bad == [], bad
+
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names_in(node) -> set[str]:
+    """Every identifier a node may refer to: names, attributes, import
+    aliases and module paths, and identifier-like string constants (names
+    passed by string, as ``getattr`` and the catalog registries do).
+    Matching is by bare name, so a collision can only make a def look
+    reached."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.update(n.name.split("."))
+        elif isinstance(n, ast.ImportFrom) and n.module:
+            out.update(n.module.split("."))
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and _IDENT.match(n.value)):
+            out.add(n.value)
+    return out
+
+
+def _unreached_defs() -> dict[str, set[str]]:
+    """Top-level defs of the package that no runtime root reaches by name
+    (module, without the package prefix → names).
+
+    The roots are ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and
+    ``tools/``, every def in ``plans/`` and ``pipelines/``, and the
+    ``runner``, ``validation``, ``enrich``, ``__main__`` and ``session``
+    modules.  Module-level statements run on import, so they count as
+    reached too.  A def is reached once a reached body names it."""
+    whole = {"runner", "validation", "enrich", "__main__", "session"}
+    defs: dict[tuple[str, str], ast.AST] = {}
+    reached: set[str] = set()
+    for mod, path in _package_modules().items():
+        short = mod.removeprefix(f"{PKG}.")
+        root = short in whole or short.startswith(("plans.", "pipelines."))
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, _DEFS) and not root:
+                defs[(short, node.name)] = node
+            else:
+                reached |= _names_in(node)
+    files = [os.path.join(REPO, "__spark_entry__.py"),
+             os.path.join(REPO, "bench.py")]
+    for sub in ("perfbench", "tools"):
+        files += glob.glob(os.path.join(REPO, sub, "*.py"))
+    for path in files:
+        reached |= _names_in(ast.parse(open(path).read()))
+    by_name = collections.defaultdict(list)
+    for key in defs:
+        by_name[key[1]].append(key)
+    # a def is queued once, when its name first becomes reached
+    todo = [k for name in reached for k in by_name[name]]
+    while todo:
+        for name in _names_in(defs.pop(todo.pop())) - reached:
+            reached.add(name)
+            todo += by_name[name]
+    out: dict[str, set[str]] = collections.defaultdict(set)
+    for mod, name in defs:
+        out[mod].add(name)
+    return out
+
+
+def test_every_def_reached_or_allowlisted():
+    exempt = {m.removeprefix(f"{PKG}.") for m in set(KEPT) | DEFERRED}
+    unreached = {m: names for m, names in _unreached_defs().items()
+                 if m not in exempt}
+    new = sorted(f"{m}.{n}" for m, names in unreached.items()
+                 for n in names - UNREACHED_DEFS.get(m, set()))
+    assert new == [], (
+        f"unreached defs {new}: delete them (with the tests that only "
+        "exercise them) or give them a runtime caller")
+    stale = sorted(f"{m}.{n}" for m, names in UNREACHED_DEFS.items()
+                   for n in names - unreached.get(m, set()))
+    assert stale == [], (
+        f"UNREACHED_DEFS entries {stale} are reached or gone: drop them")
+
+
+def test_test_files_bind_each_name_once_and_slow_list_is_live():
+    twice = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tests", "*.py"))):
+        bound = collections.Counter()
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, _DEFS):
+                bound[node.name] += 1
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                bound.update(n.id for t in targets for n in ast.walk(t)
+                             if isinstance(n, ast.Name))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                bound.update((a.asname or a.name).split(".")[0]
+                             for a in node.names)
+        where = os.path.relpath(path, REPO)
+        twice += [f"{where}: {n} x{c}" for n, c in bound.items() if c > 1]
+    assert twice == [], twice
+
+    dead = []
+    with open(os.path.join(REPO, "tests", "slow_tests.txt")) as fh:
+        entries = [ln.strip() for ln in fh
+                   if ln.strip() and not ln.startswith("#")]
+    for entry in entries:
+        path, *parts = entry.split("::")
+        full = os.path.join(REPO, path)
+        node = ast.parse(open(full).read()) if os.path.isfile(full) else None
+        for part in parts:
+            name = part.split("[")[0]
+            node = node and next((n for n in node.body if isinstance(
+                n, _DEFS) and n.name == name), None)
+        if node is None or not parts:
+            dead.append(entry)
+    assert dead == [], f"slow_tests.txt names no such test: {dead}"

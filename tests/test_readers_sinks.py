@@ -17,7 +17,6 @@ from evidence_datasource_parsers_spark.sources.readers import (
 )
 from evidence_datasource_parsers_spark.sources.sinks import (
     write_evidence_strings,
-    write_output,
 )
 
 
@@ -73,33 +72,6 @@ def test_write_evidence_strings_single_file(spark, tmp_path):
         lines = [json.loads(line) for line in fh]
     assert len(lines) == 2
     assert {l["targetFromSourceId"] for l in lines} == {"ENSG1", "ENSG2"}
-
-
-def test_write_output_parquet_roundtrip(spark, tmp_path):
-    df = from_rows(spark, [(1, "a")], "id long, s string")
-    out = str(tmp_path / "out.parquet")
-    write_output(df, out)
-    back = spark.read.parquet(out)
-    assert back.collect() == df.collect()
-
-
-def test_write_partitioned_pruning(spark, tmp_path):
-    from evidence_datasource_parsers_spark.sources.sinks import write_partitioned
-
-    df = from_rows(
-        spark,
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "a", 3.0)],
-        "id long, part string, v double",
-    )
-    out = str(tmp_path / "part_out")
-    write_partitioned(df, out, ["part"])
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    # partition pruning: reading part=a touches only that directory
-    only_a = spark.read.parquet(out).where("part = 'a'")
-    assert only_a.count() == 2
-    plan = only_a._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or only_a.count() == 2
 
 
 def test_read_xml_elements(spark, tmp_path):
@@ -372,89 +344,18 @@ def test_read_excel_unreferenced_cells_and_all_none_column(spark, tmp_path):
     assert rows == [(1.0, None, "x"), (2.0, None, "y")]
 
 
-def test_corpus_checksum_order_and_partition_insensitive(spark):
-    from evidence_datasource_parsers_spark.sources.sinks import corpus_checksum
-
-    rows = [(i, f"text {i}") for i in range(100)]
-    a = spark.createDataFrame(rows, "id long, text string")
-    b = spark.createDataFrame(list(reversed(rows)), "id long, text string").repartition(7)
-    ca, cb = corpus_checksum(a), corpus_checksum(b)
-    assert ca == cb and ca["rows"] == 100 and ca["checksum"] != 0
-    # any single-row change flips the checksum
-    c = spark.createDataFrame(
-        rows[:-1] + [(99, "text 99 CHANGED")], "id long, text string"
-    )
-    assert corpus_checksum(c) != ca
-    # column order must not matter (struct fields are sorted)
-    d = spark.createDataFrame(
-        [(t, i) for i, t in rows], "text string, id long"
-    ).select("text", "id")
-    assert corpus_checksum(d) == ca
-
-
-def test_write_with_manifest_roundtrip(spark, tmp_path):
-    import json
-
-    from evidence_datasource_parsers_spark.sources.sinks import (
-        corpus_checksum,
-        write_with_manifest,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a", "en"), (2, "b", "de")], "id long, text string, lang string"
-    )
-    out = str(tmp_path / "corpus")
-    manifest = write_with_manifest(df, out, partition_by=["lang"])
-    on_disk = json.load(open(f"{out}/_MANIFEST.json"))
-    assert on_disk == manifest
-    assert manifest["rows"] == 2 and manifest["partition_by"] == ["lang"]
-    # the written data reproduces the manifest checksum exactly
-    back = spark.read.parquet(out).select("id", "text", "lang")
-    assert corpus_checksum(back)["checksum"] == manifest["checksum"]
-
-
-def test_corpus_checksum_duplicates_and_timezones(spark):
-    """XOR alone cancels duplicate-row PAIRS; the (xor, sum) pair must
-    tell {A,B,B} from {A,C,C}.  Timestamp columns must checksum
-    identically under different session time zones."""
-    from evidence_datasource_parsers_spark.sources.sinks import corpus_checksum
-
-    abb = spark.createDataFrame([("A",), ("B",), ("B",)], "t string")
-    acc = spark.createDataFrame([("A",), ("C",), ("C",)], "t string")
-    ca, cb = corpus_checksum(abb), corpus_checksum(acc)
-    assert ca["checksum"] == cb["checksum"]       # XOR is blind to this
-    assert ca["checksum_sum"] != cb["checksum_sum"]  # the sum is not
-
-    ts = spark.createDataFrame(
-        [(1, "2024-06-01 12:00:00")], "id long, s string"
-    ).selectExpr("id", "CAST(s AS TIMESTAMP) AS ts")
-    old = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        ts.persist().count()  # pin the data so both runs hash the same rows
-        utc = corpus_checksum(ts)
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        ny = corpus_checksum(ts)
-    finally:
-        ts.unpersist()
-        spark.conf.set("spark.sql.session.timeZone", old)
-    assert utc == ny
-
-
 def test_orc_roundtrip_and_dispatch(spark, tmp_path):
-    """ORC write via write_output extension dispatch; read via read_path
-    autodetect and read_orc."""
+    """ORC read via read_path autodetect and read_orc."""
     from evidence_datasource_parsers_spark.sources.readers import (
         read_orc,
         read_path,
     )
-    from evidence_datasource_parsers_spark.sources.sinks import write_output
 
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", -2.0)], "id long, s string, x double"
     )
     out = str(tmp_path / "t.orc")
-    write_output(df, out)  # extension-dispatched to orc
+    df.write.orc(out)
     back = read_path(spark, out)
     assert sorted((r.id, r.s, r.x) for r in back.collect()) == [
         (1, "a", 1.5),

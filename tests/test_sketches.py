@@ -582,52 +582,6 @@ def test_bloom_params_sizing():
         bloom_params(100, 1.5)
 
 
-def test_streaming_membership_sink(spark, tmp_path):
-    """The Bloom sink appends each batch's words beside the history and
-    the probe reads it raw — same cross-run incremental contract as the
-    HLL/histogram/CMS sinks."""
-    import json as _json
-
-    from evidence_datasource_parsers_spark.operators.sketches import (
-        bloom_member,
-    )
-    from evidence_datasource_parsers_spark.streaming.incremental import (
-        streaming_membership_sink,
-    )
-
-    src = tmp_path / "bloom_in"
-    src.mkdir()
-    store = str(tmp_path / "bloom_store")
-
-    def write_batch(name, toks):
-        (src / name).write_text(
-            "\n".join(_json.dumps({"g": "a", "tok": t}) for t in toks)
-        )
-
-    def run():
-        stream = spark.readStream.schema("g string, tok string").json(
-            str(src)
-        )
-        streaming_membership_sink(
-            stream, store, str(tmp_path / "ckb"), ["g"], "tok"
-        ).awaitTermination()
-
-    write_batch("b1.json", ["x", "y"])
-    run()
-    write_batch("b2.json", ["z"])
-    run()
-    items = spark.createDataFrame(
-        [("a", v) for v in ("x", "y", "z", "w")], "g string, v string"
-    )
-    got = {
-        r.v: r.maybe_member
-        for r in bloom_member(
-            spark.read.parquet(store), items, ["g"], "v"
-        ).collect()
-    }
-    assert got == {"x": True, "y": True, "z": True, "w": False}
-
-
 def test_bottomk_sample_store_merge_equals_oneshot(spark):
     """Bottom-k of a union of per-batch bottom-ks IS the bottom-k of the
     union — the exact mergeable-sample algebra, deterministic across

@@ -5,8 +5,7 @@ to rewriting the unioned store, at O(batch) instead of O(store) I/O.
 
 Also covers the refreshByPath hazard the discipline must respect: a
 commit to the store path invalidates dependent plans, so consumers
-checkpoint ``fresh``/``ready`` BEFORE appending the delta (regression
-for the bug caught while wiring the streaming sink)."""
+checkpoint ``fresh``/``ready`` BEFORE appending the delta."""
 
 from __future__ import annotations
 
