@@ -15,5 +15,3 @@ Design principles:
 """
 
 __version__ = "0.4.0"
-
-from evidence_datasource_parsers_spark.session import get_spark  # noqa: F401

@@ -48,15 +48,6 @@ def portable_hash_sql(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, {HEX_CHARS}))::BIGINT)"
 
 
-def minhash_base(col: Column | str) -> Column:
-    """Reduce a portable hash into the MinHash base domain (< 2^30)."""
-    return portable_hash(col) % F.lit(P_BASE)
-
-
-def minhash_base_sql(expr: str) -> str:
-    return f"({portable_hash_sql(expr)} % {P_BASE})"
-
-
 def perm_coefficients(i: int) -> tuple[int, int]:
     """Deterministic (A_i, B_i) for permutation *i* — identical in the oracle.
 
@@ -66,11 +57,6 @@ def perm_coefficients(i: int) -> tuple[int, int]:
     a = 2 * i + 1 + 104729 * (i + 1)  # odd, grows with i, < 2^30 for i < ~10k
     b = 7919 * (i + 1)
     return a % P_PERM or 1, b % P_PERM
-
-
-def minhash_perm(base: Column, i: int) -> Column:
-    a, b = perm_coefficients(i)
-    return (F.lit(a) * base + F.lit(b)) % F.lit(P_PERM)
 
 
 def minhash_perm_sql(base_expr: str, i: int) -> str:

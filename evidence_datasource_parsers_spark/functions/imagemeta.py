@@ -123,64 +123,3 @@ def is_still_image_brand(blob: bytes) -> bool:
         and blob[4:8] == b"ftyp"
         and (blob[8:12] in _AVIF_BRANDS or blob[8:12] in _HEIC_BRANDS)
     )
-
-
-# ---------------------------------------------------------------------------
-# Minimal writers — fixture-free tests.
-# ---------------------------------------------------------------------------
-
-
-def _riff_chunk(cid: bytes, data: bytes) -> bytes:
-    pad = b"\x00" if len(data) % 2 else b""
-    return cid + struct.pack("<I", len(data)) + data + pad
-
-
-def encode_webp_shell(
-    width: int, height: int, *, lossless: bool = False,
-    vp8x: bool = False, alpha: bool = False, animated: bool = False,
-) -> bytes:
-    """Structurally valid WebP container with a dimensions-only bitstream
-    header and dummy payload — parser fixtures, not a decodable image."""
-    chunks = b""
-    if vp8x:
-        flags = (0x10 if alpha else 0) | (0x02 if animated else 0)
-        chunks += _riff_chunk(
-            b"VP8X",
-            bytes([flags]) + b"\x00" * 3
-            + (width - 1).to_bytes(3, "little")
-            + (height - 1).to_bytes(3, "little"),
-        )
-    if lossless:
-        bits = (width - 1) | ((height - 1) << 14) | (
-            (1 if alpha else 0) << 28
-        )
-        chunks += _riff_chunk(
-            b"VP8L", bytes([0x2F]) + struct.pack("<I", bits) + b"\x00" * 8
-        )
-    else:
-        hdr = (
-            b"\x00\x00\x00" + b"\x9d\x01\x2a"
-            + struct.pack("<HH", width & 0x3FFF, height & 0x3FFF)
-        )
-        chunks += _riff_chunk(b"VP8 ", hdr + b"\x00" * 8)
-    return (
-        b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WEBP" + chunks
-    )
-
-
-def encode_avif_shell(
-    width: int, height: int, *, brand: bytes = b"avif"
-) -> bytes:
-    """Structurally valid AVIF/HEIC shell (ftyp + meta/iprp/ipco/ispe) —
-    parser fixtures, not a decodable image."""
-    from evidence_datasource_parsers_spark.functions.mp4 import _box, _full
-
-    ispe = _full(b"ispe", 0, struct.pack(">II", width, height))
-    ipco = _box(b"ipco", ispe)
-    iprp = _box(b"iprp", ipco)
-    hdlr = _full(
-        b"hdlr", 0, struct.pack(">I", 0) + b"pict" + b"\x00" * 13
-    )
-    meta = _full(b"meta", 0, hdlr + iprp)
-    ftyp = _box(b"ftyp", brand + struct.pack(">I", 0) + brand + b"mif1")
-    return ftyp + meta

@@ -62,91 +62,3 @@ def specificity_class(
         .when(mx >= enrichment_factor * mean, "enriched")
         .otherwise("low_specificity")
     )
-
-
-def gini_grouped_pandas(df, group_col: str, value_col: str):
-    """Pandas-tier alternative (D12's original habitat): per-group gini via
-    ``applyInPandas`` — for when the kernel needs numpy/scipy machinery the
-    HOF form can't express.  Output contract matches :func:`gini` applied to
-    the collected per-group array; equality is asserted in tests.
-
-    Scale: one shuffle on the group key; each group materializes as one
-    Arrow batch in a Python worker — fine for distribution metrics whose
-    groups fit memory (gene × tissues), wrong for billion-row groups.
-    """
-
-    def kernel(pdf):
-        import pandas as pd
-
-        x = pdf[value_col].sort_values().to_numpy()
-        n = len(x)
-        total = x.sum()
-        weighted = (x * range(1, n + 1)).sum()
-        g = 2.0 * weighted / (n * total) - (n + 1.0) / n
-        return pd.DataFrame({group_col: [pdf[group_col].iloc[0]], "gini": [g]})
-
-    return df.select(group_col, value_col).groupBy(group_col).applyInPandas(
-        kernel, f"{group_col} int, gini double"
-    )
-
-
-def binned_auc(
-    df,
-    score_col: str,
-    label_col: str,
-    bins: int = 1000,
-) -> float:
-    """ROC AUC of a scorer against binary labels, computed scalably by
-    score-histogram — the calibration number for a quality/perplexity
-    filter (does the score actually rank kept-worthy docs above junk?).
-
-    Exact AUC needs a global rank — a full sort, or a single-partition
-    window, neither of which survives 100 TB.  Instead: ONE aggregation
-    bins scores into ``bins`` equal-width buckets over the observed
-    [min, max] (both from the same pass), counting positives and
-    negatives per bucket; AUC then follows from the histogram with the
-    standard tie correction (pairs inside one bucket count half).  The
-    result is EXACT when the scorer emits ≤ ``bins`` distinct values and
-    within O(1/bins) otherwise; only ``bins`` rows ever reach the driver.
-
-    Returns 0.5 for degenerate inputs (single class, empty, or constant
-    scores) — the "no information" convention.
-    """
-    from pyspark.sql import functions as F
-
-    labeled = df.select(
-        F.col(score_col).cast("double").alias("__s"),
-        (F.col(label_col).cast("double") > 0).cast("int").alias("__y"),
-    ).where(F.col("__s").isNotNull() & F.col(label_col).isNotNull())
-    stats = labeled.agg(
-        F.min("__s").alias("lo"), F.max("__s").alias("hi")
-    ).collect()[0]
-    if stats.lo is None or stats.lo == stats.hi:
-        return 0.5
-    width = (stats.hi - stats.lo) / bins
-    hist = (
-        labeled.withColumn(
-            "__b",
-            F.least(
-                F.floor((F.col("__s") - F.lit(stats.lo)) / F.lit(width)),
-                F.lit(bins - 1),
-            ),
-        )
-        .groupBy("__b")
-        .agg(
-            F.sum("__y").alias("pos"),
-            F.sum(1 - F.col("__y")).alias("neg"),
-        )
-        .orderBy("__b")
-        .collect()
-    )
-    total_pos = sum(r.pos for r in hist)
-    total_neg = sum(r.neg for r in hist)
-    if total_pos == 0 or total_neg == 0:
-        return 0.5
-    auc_pairs = 0.0
-    neg_below = 0
-    for r in hist:  # ascending score buckets
-        auc_pairs += r.pos * neg_below + 0.5 * r.pos * r.neg
-        neg_below += r.neg
-    return auc_pairs / (total_pos * total_neg)

@@ -33,10 +33,6 @@ from __future__ import annotations
 
 import struct
 
-_FULLBOX_CONTAINERS = frozenset(
-    (b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"udta")
-)
-
 
 def _boxes(buf: bytes, start: int, end: int):
     """Yield (type, payload_start, payload_end) for each box in

@@ -9,11 +9,11 @@ All built-ins, no UDFs:
   the context-marginal counts and vocabulary size derived from the same
   frame.  The model is a DataFrame, not a driver-side dict: vocabulary-
   sized, joinable, persistable with the bucketed-store sinks.
-* **score**: explode the target corpus into its n-grams, LEFT join the
-  model on (context, word) and the context marginals on context (both
-  joins go through `broadcast_if_small` — n-gram models are usually
-  broadcastable; a giant one degrades to a shuffle join, not an OOM),
-  add-α smooth, sum log-probs per document.
+* **score**: the n-grams of a target document come from :func:`_ngrams`;
+  q50's perplexity leg (plans/catalog_ext.py) explodes them, LEFT joins
+  the model on (context, word) and the context marginals on context (both
+  through `broadcast_if_small`), add-α smooths and sums log-probs per
+  document.
 
 Smoothing (add-α, stated exactly):
 
@@ -22,23 +22,15 @@ Smoothing (add-α, stated exactly):
 with c(·) = 0 for unseen pairs/contexts, V = training vocabulary size
 (padding symbols included).  Documents are padded with n−1 BOS and one
 EOS so every token is predicted exactly once; perplexity is
-exp(−logprob / n_grams).
-
-Float caveat, stated honestly: the per-doc sum of log-probs is a DOUBLE
-aggregation and therefore partition-order dependent in the last ulps —
-fine for filtering thresholds, NOT suitable for an exact value-hash gate
-(the q11 Zipf leg shows the decimal-sum construction to use if exactness
-is ever needed).
+exp(−logprob / n_grams).  A DOUBLE sum of log-probs is partition-order
+dependent in the last ulps, so q50 rounds each log-prob to 12 dp and sums
+them as DECIMAL(28,12), which both engines add exactly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from evidence_datasource_parsers_spark.operators.joins import (
-    broadcast_if_small,
-)
 
 BOS = "<s>"
 EOS = "</s>"
@@ -83,66 +75,3 @@ def lm_vocab_size(lm: DataFrame) -> int:
     """V for the smoothing denominator: distinct predicted words (EOS
     included, BOS excluded — BOS is never predicted)."""
     return lm.select("word").distinct().count()
-
-
-def doc_perplexity(
-    df: DataFrame,
-    lm: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 2,
-    alpha: float = 1.0,
-    vocab_size: int | None = None,
-) -> DataFrame:
-    """Per-doc (``id_col``, n_grams, logprob, perplexity) under the model.
-
-    Two left joins — (ctx, word) against the model, ctx against its
-    marginals — both size-gated broadcasts; unseen pairs/contexts fall
-    back to the add-α floor.  NULL/empty text yields a single EOS
-    prediction, never a dropped row.
-
-    The model is persisted here: ``lm`` feeds THREE consumers (the vocab
-    count, the pair join, the context marginals) and its lineage is the
-    training-corpus scan — without caching, scoring would re-tokenize the
-    clean corpus three times (the same no-subplan-sharing hazard
-    term_relevance guards against).
-    """
-    lm = lm.persist()
-    if vocab_size is None:
-        vocab_size = lm_vocab_size(lm)
-    v = float(vocab_size)
-    ctx_tot = lm.groupBy("ctx").agg(F.sum("c").cast("long").alias("c_ctx"))
-    g = df.select(
-        F.col(id_col),
-        F.explode(
-            _ngrams(F.coalesce(F.col(text_col), F.lit("")), n)
-        ).alias("g"),
-    ).select(
-        id_col, F.col("g.ctx").alias("ctx"), F.col("g.word").alias("word")
-    )
-    joined = (
-        g.join(broadcast_if_small(lm), on=["ctx", "word"], how="left")
-        .join(broadcast_if_small(ctx_tot), on="ctx", how="left")
-        .select(
-            F.col(id_col),
-            (
-                F.log(
-                    (F.coalesce(F.col("c"), F.lit(0)).cast("double") + alpha)
-                    / (
-                        F.coalesce(F.col("c_ctx"), F.lit(0)).cast("double")
-                        + alpha * v
-                    )
-                )
-            ).alias("lp"),
-        )
-    )
-    out = joined.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_grams"),
-        F.sum("lp").alias("logprob"),
-    )
-    return out.select(
-        id_col,
-        "n_grams",
-        "logprob",
-        F.exp(-F.col("logprob") / F.col("n_grams")).alias("perplexity"),
-    )

@@ -26,19 +26,14 @@ def pvalue_mantissa_exponent(
     Classic reference semantics (AzGeneBurden.py:215-221):
         exponent = floor(log10(p));  mantissa = round(p / 10**exponent, k)
 
-    Implemented with log10 for generality; callers needing oracle-exact output
-    on values near powers of ten should use :func:`magnitude_exponent` on a
+    Implemented with log10 for generality; log10 can land one ulp off on
+    values near powers of ten, so oracle-exact output there needs a
     scaled-integer representation instead.
     """
     c = F.col(p) if isinstance(p, str) else p
     exponent = F.floor(F.log10(c)).cast("int")
     mantissa = F.round(c / F.pow(F.lit(10.0), exponent.cast("double")), precision)
     return mantissa, exponent
-
-
-def magnitude_exponent(x_int: Column) -> Column:
-    """Exponent of a positive integer column: len(str(x)) - 1. Exact."""
-    return (F.length(x_int.cast("string")) - F.lit(1)).cast("int")
 
 
 def impute_zero_with_min(df, col_name: str, out_name: str | None = None):

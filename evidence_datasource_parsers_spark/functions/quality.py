@@ -6,17 +6,10 @@ bag-of-tokens feature vector and a learned weight vector, with the vocabulary
 collapsed into ``n_buckets`` hash buckets (the "hashing trick") so the model
 is a fixed-size array instead of an unbounded vocabulary.
 
-Two execution tiers, same semantics:
-
-  * :func:`lexical_quality_score` — weights as a pure column EXPRESSION:
-    each token maps to ``bucket = portable_hash(token:salt) % n_buckets``
-    and an integer weight derived from the bucket.  Zero shuffle, zero
-    state, codegen-friendly; this tier is what the q29 oracle replays.
-  * :func:`score_with_weight_table` — weights as a TABLE ``(bucket,
-    weight)``: explode tokens, broadcast-join the weight table, sum per
-    document.  This is the production path for real trained weights (ship
-    the model as a tiny dimension table; one narrow explode + broadcast
-    join + re-agg, no driver collect).
+Each token maps to ``bucket = portable_hash(token:salt) % n_buckets`` and
+an integer weight derived from the bucket; q29's lexical-score leg sums
+the weights per document as a pure column expression (zero shuffle, zero
+state, codegen-friendly) and its oracle replays the same arithmetic.
 
 Determinism contract: accumulation is INTEGER until one final division
 (integer-ratio doubles are IEEE-exact and engine-portable); never sum
@@ -24,14 +17,12 @@ floating-point weights in data-dependent order.
 
 The built-in weight family is a deterministic PLACEHOLDER (a Knuth
 multiplicative mix of the bucket id, centered on zero) standing in for
-trained weights — the pipeline shape, hashing, and aggregation are the real
-thing; swap the family for a learned table via
-:func:`placeholder_weight_table` / :func:`score_with_weight_table`.
+trained weights — the hashing and aggregation are the real thing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.hashing import portable_hash
@@ -56,186 +47,3 @@ def placeholder_weight(bucket: Column) -> Column:
     """Deterministic stand-in weight for a bucket: integer in
     [-{WEIGHT_SCALE}, {WEIGHT_SCALE}], uncorrelated with the bucket id."""
     return (bucket * KNUTH) % (2 * WEIGHT_SCALE + 1) - WEIGHT_SCALE
-
-
-def lexical_quality_score(
-    text: Column | str,
-    n_buckets: int = 4096,
-    salt: str = "quality",
-) -> Column:
-    """Mean per-token weight in [-1, 1] — the expression-tier score.
-
-    ``Σ weight(bucket(token)) / (WEIGHT_SCALE · n_tokens)``: one pass over
-    the token array, integer accumulator, single exact division at the end.
-    NULL/empty text scores NULL (no tokens to judge).
-    """
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        normalized_text,
-    )
-
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(normalized_text(c), " ")
-    total = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc
-        + placeholder_weight(token_bucket(t, n_buckets, salt)),
-    )
-    n = F.size(toks)
-    return F.when(n > 0, total / (F.lit(WEIGHT_SCALE) * n))
-
-
-def placeholder_weight_table(
-    spark, n_buckets: int = 4096
-) -> DataFrame:
-    """The placeholder family materialized as a ``(bucket, weight)`` table —
-    shaped exactly like a trained model export, for the table tier."""
-    return spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        placeholder_weight(F.col("id")).alias("weight"),
-    )
-
-
-def score_with_weight_table(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    weights: DataFrame,
-    n_buckets: int = 4096,
-    salt: str = "quality",
-    out_col: str = "lexical_score",
-) -> DataFrame:
-    """Table-tier scoring: explode tokens → bucket → broadcast-join the
-    weight table → integer sum per document → one exact division.
-
-    Equivalent to :func:`lexical_quality_score` when ``weights`` is
-    :func:`placeholder_weight_table` (equivalence-tested).  Scale shape:
-    the weight table is n_buckets rows (a few MB even at 1M buckets) and
-    broadcast; the only shuffle is the per-document re-aggregation, keyed
-    on the unique id — no skew.  Tokens missing from the table score 0
-    (left join + coalesce), matching a sparse model export.
-    """
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        normalized_text,
-    )
-
-    toks = df.select(
-        F.col(id_col),
-        F.explode_outer(
-            F.split(normalized_text(F.col(text_col)), " ")
-        ).alias("__tok"),
-    )
-    bucketed = toks.withColumn(
-        "bucket",
-        F.when(
-            F.col("__tok").isNotNull(),
-            token_bucket(F.col("__tok"), n_buckets, salt),
-        ),
-    )
-    joined = bucketed.join(F.broadcast(weights), on="bucket", how="left")
-    scored = joined.groupBy(id_col).agg(
-        (
-            F.sum(F.coalesce(F.col("weight"), F.lit(0)))
-            / (F.lit(WEIGHT_SCALE) * F.count(F.col("__tok")))
-        ).alias(out_col)
-    )
-    return df.join(scored, on=id_col, how="left")
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    text_col: str,
-    label_col: str,
-    n_buckets: int = 4096,
-    salt: str = "quality",
-    alpha: float = 1.0,
-    clip_quantile: float | None = None,
-) -> DataFrame:
-    """Train the REAL weight table for :func:`score_with_weight_table`:
-    a distributed multinomial Naive Bayes over hashed token buckets — the
-    classic cheap quality classifier (label seed sets like "wiki vs raw
-    crawl", score everything else).
-
-    Per bucket ``b`` the weight is the smoothed log-likelihood ratio
-    ``log P(b|pos) − log P(b|neg)`` (add-``alpha``), rescaled so the
-    largest magnitude maps to ±WEIGHT_SCALE and half-up-quantized to an
-    INTEGER — the score tier's exact-integer-accumulation contract is
-    preserved, and a document's score is then its mean per-token LLR in
-    [-1, 1] (monotone in the NB posterior; the class prior shifts every
-    doc equally and drops out of any threshold calibrated on scores).
-
-    Everything is declarative aggregation — one explode + one
-    groupBy(bucket) shuffle; class totals and the max-|llr| normalizer
-    ride as in-plan 1-row broadcast scalars (no driver collect).  Buckets
-    never seen in training are absent from the table and score 0 at
-    inference (the sparse-export convention of the table tier).
-
-    ``label_col``: 1/true = positive ("good") docs, 0/false = negative.
-
-    ``clip_quantile``: robustness guard for the max-|llr| normalizer.  A
-    single extreme rare-token bucket (one token seen only in one class —
-    an adversarial seed doc, or just a unique id string) otherwise OWNS
-    the normalizer and compresses every informative weight toward 0 after
-    integer quantization.  When set (e.g. ``0.999``), |llr| values are
-    clipped at that EXACT per-bucket quantile (≤ n_buckets values — the
-    exact percentile is a cheap 1-row agg, deterministic unlike the
-    sketch-merge approx) and the clip value becomes the normalizer, so
-    outlier buckets saturate at ±WEIGHT_SCALE instead of flattening the
-    rest of the table.  ``None`` (default) preserves the exact max-|llr|
-    scaling the oracle replays.
-    """
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        normalized_text,
-    )
-
-    lab = F.col(label_col).cast("int")
-    toks = df.select(
-        lab.alias("__y"),
-        F.explode(
-            F.split(normalized_text(F.col(text_col)), " ")
-        ).alias("__tok"),
-    ).where(F.col("__tok") != "")
-    counts = toks.groupBy(
-        token_bucket(F.col("__tok"), n_buckets, salt).alias("bucket")
-    ).agg(
-        F.sum(F.col("__y")).alias("__pos"),
-        F.sum(1 - F.col("__y")).alias("__neg"),
-    )
-    totals = counts.agg(
-        F.sum("__pos").alias("__ptot"), F.sum("__neg").alias("__ntot")
-    )
-    denom = float(alpha) * n_buckets
-    scored = counts.crossJoin(F.broadcast(totals)).withColumn(
-        "__llr",
-        (
-            F.log((F.col("__pos") + F.lit(float(alpha)))
-                  / (F.col("__ptot") + F.lit(denom)))
-            - F.log((F.col("__neg") + F.lit(float(alpha)))
-                    / (F.col("__ntot") + F.lit(denom)))
-        ),
-    )
-    if clip_quantile is None:
-        norm = scored.agg(F.max(F.abs(F.col("__llr"))).alias("__m"))
-    else:
-        if not 0.0 < clip_quantile <= 1.0:
-            raise ValueError(
-                f"clip_quantile must be in (0, 1], got {clip_quantile}"
-            )
-        norm = scored.agg(
-            F.percentile(
-                F.abs(F.col("__llr")), F.lit(float(clip_quantile))
-            ).alias("__m")
-        )
-    llr = F.col("__llr")
-    if clip_quantile is not None:
-        llr = F.signum(llr) * F.least(F.abs(llr), F.col("__m"))
-    return (
-        scored.crossJoin(F.broadcast(norm))
-        .select(
-            "bucket",
-            F.floor(
-                llr / F.col("__m") * F.lit(float(WEIGHT_SCALE))
-                + F.lit(0.5)
-            ).cast("long").alias("weight"),
-        )
-    )

@@ -1,15 +1,14 @@
 """Text analysis primitives for a training-data pipeline, all JVM-side.
 
-Language-ID (stopword heuristic), quality scoring (length / punctuation /
-stopword ratios), token counting, and document fingerprinting — every one a
-composition of built-in functions (no Python UDFs), so they run inside
-whole-stage codegen and scale linearly with input splits.
+Language-ID (stopword and Unicode-script heuristics), stopword ratios and
+token counting — every one a composition of built-in functions (no Python
+UDFs), so they run inside whole-stage codegen and scale linearly with input
+splits.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
-import pandas as _pd
 from pyspark.sql import functions as F
 
 # Tiny per-language stopword inventories for the n-gram/stopword heuristic.
@@ -52,14 +51,6 @@ def bpe_like_token_count(text: Column | str) -> Column:
     digit density the way real tokenizers do."""
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_count(c, F.lit(BPE_TOKEN_PATTERN))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are not [a-z0-9 ] (lowercased input)."""
-    c = F.col(text) if isinstance(text, str) else text
-    lowered = F.lower(c)
-    stripped = F.regexp_replace(lowered, "[a-z0-9 ]", "")
-    return F.length(stripped) / F.length(lowered)
 
 
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
@@ -140,217 +131,3 @@ def dominant_script(
     )
     best = F.array_max(scored)
     return F.when(best["n"] > 0, best["script"]).otherwise(F.lit("none"))
-
-
-# --- PII scrubbing -----------------------------------------------------------
-
-# Conservative ASCII patterns: corpus cleaning wants high precision (a false
-# positive deletes training signal); recall beyond these shapes belongs to a
-# dedicated NER pass.  Insertion order IS scrub order — most specific first:
-# a loose phone digit-run would otherwise swallow IPs and SSNs.
-#
-# The phone shape is deliberately strict: 10-15 total digits (ITU E.164
-# bounds), at most 3 separator chars between digits, never starting with a
-# 4-digit run followed by a date separator, and never a sub-run of a longer
-# digit sequence — so '2024-01-01 16:30' and ISO timestamps survive
-# scrubbing intact (dates are training signal, not PII).
-PII_PATTERNS = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "ssn": r"\b\d{3}-\d{2}-\d{4}\b",
-    "ipv4": r"\b(?:\d{1,3}\.){3}\d{1,3}\b",
-    "phone": r"(?<!\d)\+?(?!\d{4}[-/. ])\d(?:[\s().-]{0,3}\d){9,14}(?!\d)",
-}
-
-
-def scrub_pii(text: Column | str, kinds: list[str] | None = None) -> Column:
-    """Replace each PII match with ``<KIND>`` — a chained native
-    regexp_replace, one JVM pass per kind, no UDF, in PII_PATTERNS order
-    (most specific first)."""
-    c = F.col(text) if isinstance(text, str) else text
-    for kind in kinds or list(PII_PATTERNS):
-        c = F.regexp_replace(c, PII_PATTERNS[kind], f"<{kind.upper()}>")
-    return c
-
-
-def pii_counts(text: Column | str) -> Column:
-    """Map kind → match count (audit column for scrub monitoring)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.create_map(
-        *[
-            x
-            for kind, pat in PII_PATTERNS.items()
-            for x in (F.lit(kind), F.regexp_count(c, F.lit(pat)))
-        ]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Repetition filters (Gopher-style corpus quality signals).
-#
-# All native higher-order functions — no UDF, no shuffle: each signal is a
-# per-document expression over the split lines/tokens.  Occurrence counting
-# is SORT + LINEAR RUN-SCAN (array_sort, then one aggregate pass tracking
-# the current equal-run), so the cost is O(k log k) in the number of lines /
-# n-grams of ONE document — the naive all-pairs filter-inside-aggregate
-# form is O(k²) and measurably melts on kilotoken documents (the whole
-# lineage re-evaluates it at every downstream action).  `cap` bounds
-# pathological single documents.
-# ---------------------------------------------------------------------------
-
-
-def duplicate_line_fraction(
-    text: Column | str, sep: str = "\n", cap: int = 2048
-) -> Column:
-    """Fraction of line characters that belong to DUPLICATED lines — the
-    boilerplate signal (nav bars, cookie banners repeat verbatim).
-    Empty lines are ignored; 0.0 for documents with no lines.  ``sep`` is
-    a literal separator string (escaped before the regex split — '|' or
-    '.' as a record separator must not split on every character)."""
-    import re as _re
-
-    c = F.col(text) if isinstance(text, str) else text
-    lines = F.slice(
-        F.filter(
-            F.split(c, _re.escape(sep)), lambda x: F.length(F.trim(x)) > 0
-        ),
-        1,
-        cap,
-    )
-    # sort, then scan runs of equal lines: a run of r > 1 identical lines
-    # contributes r*len chars to the duplicated mass.  The accumulator
-    # carries (prev value, current run length, dup chars so far); the
-    # finish lambda flushes the final run.
-    s = F.array_sort(lines)
-    # accumulators are LONG: run * line-length and the char totals overflow
-    # int32 on pathological documents (a ~1 MB minified-JS line repeated a
-    # few thousand times exceeds 2^31), and with ANSI off the wrap is silent
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("dup"),
-    )
-
-    def step(acc, x):
-        same = acc["prev"].isNotNull() & (x == acc["prev"])
-        flushed = acc["dup"] + F.when(
-            ~same & (acc["run"] > 1),
-            acc["run"] * F.length(acc["prev"]).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            flushed.alias("dup"),
-        )
-
-    dup_chars = F.aggregate(
-        s,
-        acc0,
-        step,
-        lambda acc: acc["dup"]
-        + F.when(
-            acc["run"] > 1, acc["run"] * F.length(acc["prev"]).cast("long")
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    total = F.aggregate(
-        lines,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x).cast("long"),
-    )
-    return F.when(total > 0, dup_chars / total).otherwise(F.lit(0.0))
-
-
-def word_ngrams(text: Column | str, n: int) -> Column:
-    """Word n-grams of the whitespace tokenization, as ' '-joined strings."""
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.trim(c), r"\s+")
-    idx = F.sequence(F.lit(0), F.size(toks) - F.lit(n))
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            idx,
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def top_ngram_char_fraction(
-    text: Column | str, n: int = 2, cap: int = 2048
-) -> Column:
-    """Fraction of text characters covered by the single most frequent word
-    n-gram (count × gram length / total chars) — the 'same phrase repeated
-    forever' template signal.  0.0 when there are fewer than n tokens."""
-    c = F.col(text) if isinstance(text, str) else text
-    grams = F.slice(word_ngrams(c, n), 1, cap)
-    # sort + run-scan: the most frequent gram is the longest equal-run of
-    # the sorted gram array; maximize run*len(gram) over runs as we scan
-    s = F.array_sort(grams)
-    # long accumulators for the same int32-overflow reason as
-    # duplicate_line_fraction: run * gram-length must not wrap silently
-    acc0 = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-    )
-
-    def step(acc, x):
-        run = F.when(
-            acc["prev"].isNotNull() & (x == acc["prev"]), acc["run"] + 1
-        ).otherwise(F.lit(1).cast("long"))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run * F.length(x).cast("long")).alias(
-                "best"
-            ),
-        )
-
-    top_chars = F.aggregate(s, acc0, step, lambda acc: acc["best"])
-    total = F.length(c)
-    return F.when(
-        (total > 0) & (F.size(grams) > 0), top_chars / total
-    ).otherwise(F.lit(0.0))
-
-
-def repetition_signals(
-    df, text_col: str = "text", ngram_n: int = 2
-):
-    """Attach the Gopher-style repetition columns in one narrow pass:
-    ``dup_line_frac`` and ``top_{n}gram_frac``.  Filter downstream with
-    plain predicates (e.g. dup_line_frac > 0.3 → drop)."""
-    return df.withColumn(
-        "dup_line_frac", duplicate_line_fraction(F.col(text_col))
-    ).withColumn(
-        f"top_{ngram_n}gram_frac",
-        top_ngram_char_fraction(F.col(text_col), ngram_n),
-    )
-
-
-def compression_ratio(text: Column | str, level: int = 6) -> Column:
-    """zlib-compressed size / raw utf-8 size — the cheapest whole-document
-    repetitiveness signal (C4/Gopher-family filters): boilerplate, keyword
-    stuffing, and template spam compress far below prose (~0.3-0.4 for
-    English text; < ~0.2 is machine-generated repetition).  NULL/empty
-    text → NULL (no evidence either way).
-
-    An Arrow-batched stdlib-zlib UDF — compression is the one text signal
-    native expressions genuinely cannot express; everything upstream of it
-    in the quality pass stays JVM-side.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _ratio(s: _pd.Series) -> _pd.Series:
-        import zlib
-
-        def one(v):
-            if not v:
-                return None
-            raw = v.encode("utf-8")
-            return len(zlib.compress(raw, level)) / len(raw)
-
-        return s.map(one)
-
-    col = F.col(text) if isinstance(text, str) else text
-    return _ratio(col)

@@ -62,12 +62,6 @@ def _register_tf_pin(tf: DataFrame) -> None:
         _PINNED_TF.pop(0).unpersist()
 
 
-def release_tf_pins() -> None:
-    """Unpersist every tf frame pinned by handle-less term_relevance calls."""
-    while _PINNED_TF:
-        _PINNED_TF.pop().unpersist()
-
-
 def term_relevance(
     df: DataFrame,
     id_col: str,
@@ -95,9 +89,8 @@ def term_relevance(
     pass ``tf_pin=[]`` and the pinned frame is appended there for you to
     ``unpersist()`` once the output is materialized; without ``tf_pin``
     the handle goes into a bounded module FIFO (at most ``_PINNED_TF_MAX``
-    live pins — older ones are released as new calls land, and
-    :func:`release_tf_pins` frees them all).  Pass ``persist_tf=False``
-    inside loops that manage their own persistence.
+    live pins — older ones are released as new calls land).  Pass
+    ``persist_tf=False`` inside loops that manage their own persistence.
     """
     tok = df.select(
         F.col(id_col),
@@ -153,30 +146,3 @@ def term_relevance(
             bm25.alias("bm25"),
         )
     )
-
-
-def bm25_query_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    query_terms: list[str],
-    *,
-    delim: str = " ",
-    k1: float = 1.2,
-    b: float = 0.75,
-    tf_pin: list | None = None,
-) -> DataFrame:
-    """Per-doc BM25 score for a bag-of-terms query: Σ over matching terms.
-
-    The isin() filter lands BEFORE the joins (Catalyst pushes it through
-    the tf aggregate's key), so only query-term postings shuffle — the
-    classic inverted-index probe, expressed relationally.  Docs sharing no
-    term with the query are absent (score 0 by convention).
-
-    The underlying tf cache follows term_relevance's pin contract: pass
-    ``tf_pin=[]`` to own the handle, else the bounded module FIFO holds it.
-    """
-    rel = term_relevance(
-        df, id_col, text_col, delim=delim, k1=k1, b=b, tf_pin=tf_pin
-    ).where(F.col("term").isin([t for t in query_terms]))
-    return rel.groupBy(id_col).agg(F.sum("bm25").alias("bm25_score"))

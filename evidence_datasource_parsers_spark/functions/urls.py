@@ -5,8 +5,7 @@ Both functions take a URL SQL expression (a column reference such as
 native expression over it: regexp extraction plus higher-order array
 functions, a narrow per-row projection with no UDF and no shuffle.  The
 caller wraps the text in ``F.expr`` or splices it into a query; building it
-costs no py4j round trips.  :func:`dedupe_by_url` and :func:`filter_urls`
-are the two frame-level gates built on them.
+costs no py4j round trips.  q29 uses both.
 
 Canonical form applied by :func:`canonicalize_url_sql`:
 
@@ -31,9 +30,6 @@ Public Suffix List.  Hosts that do not parse give NULL.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 TRACKING_PARAM_RE = (
     r"^(utm_[^=]*|fbclid|gclid|msclkid|mc_cid|mc_eid|igshid|ref_src)="
@@ -102,68 +98,3 @@ def registrable_domain_sql(expr: str) -> str:
         f"CASE WHEN {host} = '' THEN CAST(NULL AS STRING) "
         f"ELSE array_join(slice({labels}, {n} - {take} + 1, {take}), '.') END"
     )
-
-
-def dedupe_by_url(
-    df: DataFrame, url_col: str, id_col: str
-) -> DataFrame:
-    """Keep one row (min id) per canonical URL — the cheap first pass
-    before content dedup; same min-id representative rule as
-    ``operators.dedupe.exact_dedupe``, grouped on the canonical string."""
-    canon = F.expr(canonicalize_url_sql(f"`{url_col}`"))
-    hashed = df.withColumn("__cu", canon)
-    row = F.struct(*[F.col(c) for c in df.columns])
-    return (
-        hashed.groupBy("__cu")
-        .agg(F.min_by(row, F.col(id_col)).alias("__row"))
-        .select("__row.*")
-    )
-
-
-def filter_urls(
-    df: DataFrame,
-    url_col: str,
-    *,
-    allow_domains: list[str] | None = None,
-    block_domains: list[str] | None = None,
-    block_patterns: list[str] | None = None,
-    keep_null_urls: bool = False,
-) -> DataFrame:
-    """URL gate run before spending compute on content:
-
-      * ``block_domains`` — drop rows whose REGISTRABLE domain is listed
-        (so ``spam.example`` also blocks ``cdn.spam.example``);
-      * ``allow_domains`` — if given, keep ONLY listed registrable
-        domains;
-      * ``block_patterns`` — Java regexes matched case-insensitively
-        against the canonical URL (path-level junk: /tag/, /login, ...);
-      * NULL/unparseable-host URLs drop unless ``keep_null_urls``.
-
-    Domain lists are literal in-plan sets (isin); patterns fold into one
-    alternation regex evaluated once per row.  Everything is a native
-    expression, so the filter runs in whole-stage codegen with no Python
-    and no shuffle.
-    """
-    dom = F.expr(registrable_domain_sql(f"`{url_col}`"))
-    cond = F.lit(True)
-    if not keep_null_urls:
-        cond = dom.isNotNull()
-    if allow_domains is not None:
-        # NULL-host rows: a bare isin is NULL for NULL dom and where()
-        # drops it, silently overriding keep_null_urls — make the branch
-        # explicit either way
-        allowed = F.coalesce(
-            dom.isin([d.lower() for d in allow_domains]), F.lit(False)
-        )
-        if keep_null_urls:
-            allowed = allowed | dom.isNull()
-        cond = cond & allowed
-    if block_domains:
-        cond = cond & ~F.coalesce(
-            dom.isin([d.lower() for d in block_domains]), F.lit(False)
-        )
-    if block_patterns:
-        merged = "(?i)(" + "|".join(f"(?:{p})" for p in block_patterns) + ")"
-        canon = F.expr(canonicalize_url_sql(f"`{url_col}`"))
-        cond = cond & ~F.coalesce(canon.rlike(merged), F.lit(False))
-    return df.where(cond)

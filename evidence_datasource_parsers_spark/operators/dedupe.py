@@ -1,15 +1,14 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
-SimHash, and n-gram Jaccard — all expressed with built-in DataFrame ops and
-the *portable* md5-derived hash family (functions/hashing.py) so results are
+Exact (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket
+join) and SimHash — all expressed with built-in DataFrame ops and the
+*portable* md5-derived hash family (functions/hashing.py) so results are
 reproducible across engines (and verifiable against the DuckDB oracle).
 
 Scale design:
   * the scale-path signature (:func:`minhash_signatures_exploded`) is
     explode + codegen'd scalar hashing + map-side-combined min aggregates —
-    no interpreted HOF lambdas in the hot path (Column-expression variants
-    are kept for small fixtures and as pattern documentation);
+    no interpreted HOF lambdas in the hot path;
   * candidate generation shuffles on (band, band-hash) buckets, never on raw
     text; pair verification only touches bucket-mates;
   * everything is deterministic (fixed permutation family, fixed shingle
@@ -26,8 +25,6 @@ from pyspark.sql import functions as F
 from evidence_datasource_parsers_spark.functions.hashing import (
     HEX_CHARS,
     P_BASE,
-    P_PERM,
-    minhash_perm,
     minhash_perm_sql,
     portable_hash,
 )
@@ -82,73 +79,6 @@ def char_shingles(col: Column | str, k: int = 5) -> Column:
     n = F.length(c)
     idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
     return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(k))))
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """n-word shingle set — ~6× fewer shingles than char-5 on prose, the
-    standard choice for near-dup at corpus scale (fewer hashes per doc)."""
-    toks = F.split(normalized_text(col), " ")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-    )
-
-
-def shingle_bases(
-    col: Column | str, k: int = 5, mode: str = "char"
-) -> Column:
-    """Per-shingle hash bases (array<long>): the expensive md5 leg, computed
-    ONCE and materialized before the permutation family touches it."""
-    sh = char_shingles(col, k) if mode == "char" else word_shingles(col, k)
-    return F.transform(sh, lambda s: portable_hash(s) % F.lit(P_BASE))
-
-
-def minhash_signature(col: Column | str, num_perm: int = 16, k: int = 5) -> Column:
-    """MinHash signature: array<long> of length num_perm (single-Column form).
-
-    WARNING — scale hazard: as one Column expression, each of the num_perm
-    array_min legs INLINES the full shingle+md5 pipeline (no CSE in
-    interpreted HOF evaluation), multiplying the hash work ×num_perm.  Use
-    :func:`with_minhash_signature` in real plans; this form is for small
-    fixtures/tests.
-    """
-    bases = shingle_bases(col, k)
-    return F.array(
-        *[
-            F.array_min(F.transform(bases, lambda b: minhash_perm(b, i)))
-            for i in range(num_perm)
-        ]
-    )
-
-
-def with_minhash_signature(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "minhash_sig",
-    num_perm: int = 16,
-    k: int = 5,
-    mode: str = "char",
-) -> DataFrame:
-    """Two-stage MinHash: materialize shingle hash bases behind a projection
-    boundary, then take the num_perm minima over the (cheap) linear perms.
-
-    CollapseProject keeps the boundary because ``__bases`` is expensive and
-    multiply-referenced — verified via .explain: md5 runs once per shingle,
-    not once per permutation.
-    """
-    based = df.withColumn("__bases", shingle_bases(F.col(text_col), k, mode))
-    sig = based.withColumn(
-        out_col,
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(F.col("__bases"), lambda b: minhash_perm(b, i))
-                )
-                for i in range(num_perm)
-            ]
-        ),
-    )
-    return sig.drop("__bases")
 
 
 def minhash_signatures_exploded(
@@ -237,31 +167,12 @@ def minhash_signatures_exploded(
     )
 
 
-def minhash_bands(sig_col: Column, num_perm: int, bands: int) -> Column:
-    """Split a signature into LSH bands: array<struct<band:int, key:string>>."""
-    rows_per_band = num_perm // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.element_at(sig_col, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_bands_sql(sig_name: str, num_perm: int, bands: int) -> str:
-    """SQL-string twin of :func:`minhash_bands` over a column NAME — one
-    py4j round trip instead of one per node (r13 driver-time shave; the
-    parsed tree is identical: named_struct IS what aliased F.struct
-    compiles to)."""
+    """Split a signature column NAME into LSH bands:
+    array<struct<band:int, key:string>>, built as ONE SQL string — one py4j
+    round trip instead of one per node (r13 driver-time shave; the parsed
+    tree is identical to the Column form it replaced: named_struct IS what
+    aliased F.struct compiles to)."""
     rows_per_band = num_perm // bands
     structs = []
     for b in range(bands):
@@ -273,44 +184,6 @@ def minhash_bands_sql(sig_name: str, num_perm: int, bands: int) -> str:
             f"struct({b} AS band, concat_ws('_', {els}) AS key)"
         )
     return f"array({', '.join(structs)})"
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 16,
-    bands: int = 4,
-    k: int = 5,
-    mode: str = "char",
-) -> DataFrame:
-    """MinHash-LSH near-dup candidates: (id_a, id_b) sharing >= 1 band bucket.
-
-    Plan shape: exploded-aggregate signature (cached) → band keys → equi-join
-    of bucket rows on (band, key) → distinct pairs.  The shuffle key is the
-    band bucket — small and bounded by the banding threshold; no O(n²)
-    comparisons outside buckets.
-    """
-    # Materialize the signature behind projection boundaries BEFORE building
-    # band keys: each band key references the signature array 'rows_per_band'
-    # times, and inlining would re-evaluate the md5-per-shingle pipeline per
-    # reference (CollapseProject keeps the boundary: expensive + multi-ref).
-    # PERSIST the signature: the band-key projection references __sig
-    # rows_per_band times per band and CollapseProject can inline the whole
-    # md5 pipeline per reference; caching pins the boundary.  The self-join
-    # also consumes the lineage twice.  At scale the signature frame is
-    # id + num_perm longs per doc — tiny relative to the corpus.
-    sig = minhash_signatures_exploded(
-        df, id_col, text_col, "__sig", num_perm, k, mode
-    ).persist()
-    banded = sig.select(
-        id_col,
-        minhash_bands(F.col("__sig"), num_perm, bands).alias("__bands"),
-    )
-    buckets = banded.select(
-        id_col, F.explode("__bands").alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    return lsh_candidate_pairs_from_buckets(buckets, id_col)
 
 
 def lsh_candidate_pairs_from_buckets(
@@ -378,8 +251,9 @@ def _simhash_bits(hashes: Column, nbits: int) -> Column:
 def simhash(col: Column | str, nbits: int = 16) -> Column:
     """SimHash over distinct whitespace tokens (single-Column form).
 
-    Scale hazard as with :func:`minhash_signature`: each bit leg inlines the
-    token-hash pipeline.  Use :func:`with_simhash` in real plans.
+    Scale hazard: each bit leg inlines the token-hash pipeline (no CSE in
+    interpreted HOF evaluation).  Corpus-scale plans use
+    :func:`simhash_fingerprints`.
     """
     c = normalized_text(col)
     hashes = F.transform(
@@ -388,34 +262,9 @@ def simhash(col: Column | str, nbits: int = 16) -> Column:
     return _simhash_bits(hashes, nbits)
 
 
-def with_simhash(
-    df: DataFrame, text_col: str, out_col: str = "simhash", nbits: int = 16
-) -> DataFrame:
-    """Two-stage SimHash: materialize token hashes once, then nbits cheap
-    bit-count filters over the materialized array."""
-    hashed = df.withColumn(
-        "__th",
-        F.transform(
-            F.array_distinct(F.split(normalized_text(F.col(text_col)), " ")),
-            lambda t: portable_hash(t),
-        ),
-    )
-    return hashed.withColumn(out_col, _simhash_bits(F.col("__th"), nbits)).drop(
-        "__th"
-    )
-
-
 def hamming_distance(a: Column, b: Column) -> Column:
     """Popcount of XOR via bit_count (Spark >= 3.3)."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def ngram_jaccard(a: Column, b: Column, k: int = 5) -> Column:
-    """Jaccard similarity of k-shingle sets of two text columns."""
-    sa, sb = char_shingles(a, k), char_shingles(b, k)
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return inter / union
 
 
 def duplicate_clusters(
@@ -759,7 +608,8 @@ def incremental_lsh_dedupe(
 
     Within the batch itself, exact dups collapse to the min-id
     representative first (same rule as :func:`exact_dedupe`); within-batch
-    NEAR-dups are out of scope by design — run :func:`lsh_candidate_pairs`
+    NEAR-dups are out of scope by design — run
+    :func:`lsh_candidate_pairs_from_buckets` over :func:`lsh_fingerprints`
     at rest for that (an incremental refresh batch is small next to the
     corpus, so the at-rest pass over it is cheap).
 
@@ -1064,9 +914,9 @@ def simhash_fingerprints(
     combo keys are rederived from the fingerprint by shift/mask at join
     time, so the persisted state is 16 bytes of hashes per document.
 
-    Two-stage like :func:`with_simhash`: the token-hash array materializes
-    once, then the nbits majority-vote legs read the materialized column —
-    never nbits copies of the tokenize+hash pipeline.
+    Two-stage: the token-hash array materializes once, then the nbits
+    majority-vote legs read the materialized column — never nbits copies
+    of the tokenize+hash pipeline.
     """
     # SQL-string construction (r13): one parsed select per stage instead
     # of ~1000 py4j round trips for the nbits majority-vote legs — the
@@ -1208,45 +1058,6 @@ def incremental_simhash_dedupe(
     )
 
 
-#: sidecar recording the combo-split identity of a simhash KEY-INDEX
-#: store (below).  (nbits, max_hamming, n_blocks) determine which block
-#: subsets the stored keys pack, so probing a store built under a
-#: different split silently MISSES near-dups — the same
-#: refuse-on-mismatch discipline as the span gram cap and the canon k.
-SIMHASH_INDEX_META_FILE = "_simhash_index_meta.json"
-
-
-def write_simhash_index_meta(
-    store_dir: str, nbits: int, max_hamming: int, n_blocks: int
-) -> None:
-    """Stamp the combo-split identity beside a simhash key-index store."""
-    import json
-    import os
-
-    os.makedirs(store_dir, exist_ok=True)
-    with open(os.path.join(store_dir, SIMHASH_INDEX_META_FILE), "w") as f:
-        json.dump(
-            {
-                "nbits": int(nbits),
-                "max_hamming": int(max_hamming),
-                "n_blocks": int(n_blocks),
-            },
-            f,
-        )
-
-
-def read_simhash_index_meta(store_dir: str) -> dict | None:
-    """The identity recorded by :func:`write_simhash_index_meta`, or None."""
-    import json
-    import os
-
-    path = os.path.join(store_dir, SIMHASH_INDEX_META_FILE)
-    if not os.path.isfile(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
 def simhash_key_index(
     fp: DataFrame, id_col: str, nbits: int, max_hamming: int, n_blocks: int
 ) -> DataFrame:
@@ -1256,7 +1067,7 @@ def simhash_key_index(
     rows per document.  The one-shot builder for migrating a classic
     fingerprint store into :func:`incremental_simhash_dedupe_indexed`'s
     layout (write it with ``sinks.write_bucketed_store(...,
-    ["combo", "key"], n)`` and stamp :func:`write_simhash_index_meta`)."""
+    ["combo", "key"], n)``)."""
     return fp.selectExpr(
         f"`{id_col}`",
         "simhash",
@@ -1298,9 +1109,8 @@ def incremental_simhash_dedupe_indexed(
     dropped iff min hamming to the store <= max_hamming, exact dups
     being hamming-0 combo mates.  ``delta`` is the batch's exploded
     index rows — append it to advance (O(batch · combos) I/O);
-    (nbits, max_hamming, n_blocks) are store identity: stamp them with
-    :func:`write_simhash_index_meta` when the store is created and check
-    them with :func:`read_simhash_index_meta` before a probe.
+    (nbits, max_hamming, n_blocks) are store identity: probing a store
+    built under a different split silently MISSES near-dups.
     """
     survivors, fp = _simhash_batch_survivors(
         new_batch, text_col, id_col, nbits, batch_fingerprints
@@ -1340,217 +1150,4 @@ def incremental_simhash_dedupe_indexed(
     ).unionByName(delta)
     return IncrementalSimhashResult(
         fresh=fresh, store=new_store, pinned=fp, delta=delta
-    )
-
-
-def hamming_near_dup_pairs(
-    fp: DataFrame,
-    id_col: str,
-    fp_col: str,
-    *,
-    nbits: int = 64,
-    max_hamming: int = 3,
-    n_blocks: int = 6,
-) -> DataFrame:
-    """Generic at-rest near-dup pairs over ANY long-fingerprint column
-    (SimHash, image pHash, audio fingerprints): all (id_a < id_b) pairs
-    with hamming(fp_a, fp_b) <= ``max_hamming``.
-
-    The same Manku-Jain-Das-Sarma pigeonhole as the incremental SimHash
-    path: the fingerprint splits into ``n_blocks`` bit blocks, any pair
-    within hamming d agrees on some (n_blocks - d)-block subset, so
-    candidates come from C(n_blocks, d) exact equi-joins on packed block
-    keys — never an all-pairs product — and each candidate is verified
-    with one bit_count(xor).  Pairs colliding in several combos dedup
-    BEFORE verification (hamming is cheap, but the dedup keeps the pair
-    frame honest for downstream clustering).
-    """
-    keys = fp.selectExpr(
-        f"`{id_col}`",
-        f"`{fp_col}` AS __fp",
-        f"explode({simhash_combo_keys_sql(fp_col, nbits, max_hamming, n_blocks)})"
-        " AS __ck",
-    ).select(
-        id_col, "__fp", F.col("__ck.combo").alias("__combo"),
-        F.col("__ck.key").alias("__key"),
-    )
-    a = keys.select(
-        F.col(id_col).alias("id_a"), F.col("__fp").alias("__fa"),
-        "__combo", "__key",
-    )
-    b = keys.select(
-        F.col(id_col).alias("id_b"), F.col("__fp").alias("__fb"),
-        "__combo", "__key",
-    )
-    cand = (
-        a.join(b, on=["__combo", "__key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__fa", "__fb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("__fa").bitwiseXOR(F.col("__fb")))
-    return cand.select(
-        "id_a", "id_b", ham.cast("int").alias("hamming")
-    ).where(F.col("hamming") <= max_hamming)
-
-
-def lsh_drop_provenance(
-    new_batch: DataFrame,
-    fingerprint_store: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_perm: int = 16,
-    bands: int = 4,
-    k: int = 5,
-    mode: str = "char",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Audit twin of :func:`incremental_lsh_dedupe`: WHICH stored document
-    caused each batch drop, and why — ``(batch_id, store_id,
-    est_jaccard, reason)`` with reason ``'exact'`` (content-hash match) or
-    ``'near'`` (band-bucket mate at est_jaccard ≥ threshold).  A doc
-    matched by several stored docs yields several rows (that IS the
-    provenance); docs that would survive yield none.
-
-    Deliberately a separate diagnostic — the production drop path stays a
-    bare anti-join with no wide provenance rows shuffled per batch doc;
-    run this on the (small) set of disputed drops, or sampled batches,
-    when auditing store behavior.  Same plan shape as the operator: one
-    fingerprint pass, one (band, key) equi-join, no text joins.
-    """
-    fp = lsh_fingerprints(
-        new_batch, text_col, id_col, num_perm, bands, k, mode
-    )
-    cand = fp.select(
-        F.col(id_col).alias("batch_id"),
-        "content_hash",
-        "band",
-        "key",
-        F.col("sig").alias("__nsig"),
-    ).join(
-        fingerprint_store.select(
-            "band",
-            "key",
-            F.col(id_col).alias("store_id"),
-            F.col("content_hash").alias("__sch"),
-            F.col("sig").alias("__ssig"),
-        ),
-        on=["band", "key"],
-    )
-    est = estimated_jaccard("__nsig", "__ssig", num_perm)
-    return (
-        cand.withColumn("est_jaccard", est)
-        .where(
-            (F.col("est_jaccard") >= F.lit(threshold))
-            | (F.col("content_hash") == F.col("__sch"))
-        )
-        .select(
-            "batch_id",
-            "store_id",
-            "est_jaccard",
-            F.when(
-                F.col("content_hash") == F.col("__sch"), F.lit("exact")
-            ).otherwise(F.lit("near")).alias("reason"),
-        )
-        .distinct()
-    )
-
-
-def soft_dedupe_weights(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    mode: str = "lsh",
-    alpha: float = 1.0,
-    num_perm: int = 16,
-    bands: int = 4,
-    k: int = 5,
-    shingle_mode: str = "char",
-    nbits: int = 64,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SOFT dedup: keep every document, downweight duplicate clusters —
-    append ``dup_cluster_id``, ``dup_cluster_size``, and ``sample_weight
-    = size^-alpha`` (``alpha=1`` is the classic 1/n rule: each cluster
-    contributes ONE document's worth of training signal however many
-    copies the crawl holds; ``alpha=0.5`` is the gentler sqrt
-    downweighting; ``alpha=0`` annotates without reweighting).
-
-    Hard dedup (``exact_dedupe`` / the incremental stores) is the right
-    default for training corpora, but mixture planners often want the
-    duplicates KEPT and counted — boilerplate-heavy domains shrink in
-    effective size rather than losing their best representative, and the
-    weight column feeds straight into weighted samplers and loss
-    weighting.
-
-    ``mode`` selects the notion of "duplicate": ``'exact'`` (content
-    hash), ``'lsh'`` (MinHash-LSH candidates → connected components —
-    near-dups cluster transitively, same machinery as the hard path),
-    ``'simhash'`` (hamming pigeonhole pairs → components).  Singleton
-    documents keep their own id, size 1, weight 1.0.
-
-    Plan shape: the pair/cluster machinery of the hard-dedup path plus
-    ONE size aggregation and one join-back on ``id_col`` — no new
-    shuffle classes; at 100 TB the cluster frame is |clustered docs|
-    rows, which near-dup rates keep well under |corpus|.  NULL-text
-    rows are singletons (they are not duplicates of each other — a
-    NULL-keyed group would zero out every failed extraction).  If the
-    input already carries the three output columns (re-weighting a prior
-    run at a different alpha/mode), they are OVERWRITTEN, not duplicated.
-    """
-    base = df.drop(
-        "dup_cluster_id", "dup_cluster_size", "sample_weight"
-    )
-    if mode == "exact":
-        # agg + join-back on the hash — NEVER a per-cluster member
-        # array: a 10⁸-copy boilerplate cluster must not build a
-        # 10⁸-element collect_list row on one task
-        hashed = base.select(
-            F.col(id_col), content_hash(text_col).alias("__h")
-        ).where(F.col("__h").isNotNull())
-        sizes = hashed.groupBy("__h").agg(
-            F.min(id_col).alias("dup_cluster_id"),
-            F.count(F.lit(1)).alias("dup_cluster_size"),
-        )
-        clusters = hashed.join(sizes, on="__h").select(
-            id_col, "dup_cluster_id", "dup_cluster_size"
-        )
-        labeled = base.join(clusters, on=id_col, how="left")
-    elif mode in ("lsh", "simhash"):
-        if mode == "lsh":
-            pairs = lsh_candidate_pairs(
-                base, text_col, id_col, num_perm, bands, k, shingle_mode
-            )
-        else:
-            fp = base.select(
-                F.col(id_col), simhash(text_col, nbits).alias("__fp")
-            )
-            pairs = hamming_near_dup_pairs(
-                fp, id_col, "__fp", nbits=nbits, max_hamming=max_hamming
-            )
-        comp = duplicate_clusters(pairs, "id_a", "id_b")
-        sizes = comp.groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("dup_cluster_size")
-        )
-        clusters = comp.join(sizes, on="cluster_id").select(
-            F.col("doc_id").alias(id_col),
-            F.col("cluster_id").alias("dup_cluster_id"),
-            "dup_cluster_size",
-        )
-        labeled = base.join(clusters, on=id_col, how="left")
-    else:
-        raise ValueError(
-            f"mode must be exact|lsh|simhash, got {mode!r}"
-        )
-    cid = F.coalesce(F.col("dup_cluster_id"), F.col(id_col))
-    size = F.coalesce(F.col("dup_cluster_size"), F.lit(1)).cast("long")
-    return labeled.select(
-        *[c for c in base.columns if c not in (
-            "dup_cluster_id", "dup_cluster_size", "sample_weight")],
-        cid.alias("dup_cluster_id"),
-        size.alias("dup_cluster_size"),
-        F.pow(size.cast("double"), F.lit(-float(alpha)))
-        .alias("sample_weight"),
     )

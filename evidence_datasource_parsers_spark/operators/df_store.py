@@ -168,9 +168,9 @@ def bm25_against_store(
 
     Exact formula parity with ``functions/tfidf.py`` (same idf_bm25 /
     avgdl expressions), so a store built from a corpus in ONE batch
-    scores that corpus identically to the at-rest
-    ``bm25_query_scores`` — equivalence-tested.  A query term the store
-    has never seen takes df = 0 (maximal idf), via the left join's
+    scores that corpus identically to the at-rest ``term_relevance``
+    BM25 summed over the query terms — equivalence-tested.  A query term
+    the store has never seen takes df = 0 (maximal idf), via the left join's
     coalesce.  Docs sharing no query term are absent (score 0 by
     convention, same as the at-rest scorer).
 

@@ -28,7 +28,7 @@ per-row pandas lookups are the O(n·m) shape this operator replaces.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.sqlstr import (
@@ -41,17 +41,10 @@ from evidence_datasource_parsers_spark.functions.sqlstr import (
 MICROS = 1_000_000
 
 
-def _axis(c: Column, dtype: str) -> Column:
-    """Comparable numeric time axis: epoch micros for timestamp/date
-    columns (dates cast via midnight-UTC timestamps), the raw value cast
-    to double otherwise."""
-    if dtype.startswith("timestamp") or dtype == "date":
-        return F.unix_micros(c.cast("timestamp"))
-    return c.cast("double")
-
-
 def _axis_sql(col: str, dtype: str) -> str:
-    """SQL-string twin of :func:`_axis` (``col`` = raw column name)."""
+    """Comparable numeric time axis for column ``col`` (raw name): epoch
+    micros for timestamp/date columns (dates cast via midnight-UTC
+    timestamps), the raw value cast to double otherwise."""
     if dtype.startswith("timestamp") or dtype == "date":
         return f"unix_micros(CAST({qid(col)} AS TIMESTAMP))"
     return f"CAST({qid(col)} AS DOUBLE)"
@@ -151,91 +144,6 @@ def interval_join(
     return joined.select(
         *[P[c] for c in points.columns],
         *[I[c] for c in intervals.columns if c != on],
-    )
-
-
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    on: str | None = None,
-    *,
-    bucket_width: float,
-    max_span_buckets: int = 4096,
-) -> DataFrame:
-    """Join interval rows that OVERLAP (inclusive ends): a.start ≤ b.end
-    AND b.start ≤ a.end — sessions × incidents, promo windows × outages.
-
-    Same bucketed plan as :func:`interval_join`, but with intervals on
-    BOTH sides each pair would meet once per shared bucket; instead each
-    pair is emitted only in its FIRST shared bucket — max(bucket(a.start),
-    bucket(b.start)), which is spanned by both sides iff they overlap at
-    bucket granularity — so no post-join dedup and no DISTINCT shuffle.
-    Inner join only (overlap counting composes from it).
-    """
-    if bucket_width <= 0:
-        raise ValueError("bucket_width must be positive")
-    overlap = (set(left.columns) & set(right.columns)) - {on}
-    if overlap:
-        raise ValueError(f"column collision between sides: {sorted(overlap)}")
-    ldt, rdt = dict(left.dtypes), dict(right.dtypes)
-    width = float(bucket_width) * (
-        MICROS if _is_temporal(ldt[left_start]) else 1
-    )
-
-    def _explode_buckets(df, start, end, dts, s_name, e_name, b_name):
-        s_num = _axis(F.col(start), dts[start])
-        e_num = _axis(F.col(end), dts[end])
-        span = F.floor(e_num / width) - F.floor(s_num / width) + 1
-        return (
-            df.withColumn(s_name, s_num)
-            .withColumn(e_name, e_num)
-            .where(F.col(e_name) >= F.col(s_name))
-            .withColumn(
-                b_name,
-                F.explode(
-                    F.when(
-                        span <= F.lit(max_span_buckets),
-                        F.sequence(
-                            F.floor(F.col(s_name) / width),
-                            F.floor(F.col(e_name) / width),
-                        ),
-                    ).otherwise(
-                        F.raise_error(
-                            F.format_string(
-                                "interval spans %d buckets >"
-                                " max_span_buckets=%d — raise bucket_width",
-                                span.cast("int"),
-                                F.lit(max_span_buckets),
-                            )
-                        )
-                    )
-                ),
-            )
-        )
-
-    l = _explode_buckets(left, left_start, left_end, ldt, "__ls", "__le", "__lb")
-    r = _explode_buckets(right, right_start, right_end, rdt, "__rs", "__re", "__rb")
-    if on:
-        r = r.withColumnRenamed(on, "__ron")
-    L, R = l.alias("L"), r.alias("R")
-    first_shared = F.greatest(
-        F.floor(F.col("L.__ls") / width), F.floor(F.col("R.__rs") / width)
-    )
-    cond = (
-        (F.col("L.__lb") == F.col("R.__rb"))
-        & (F.col("L.__lb") == first_shared)
-        & (F.col("L.__ls") <= F.col("R.__re"))
-        & (F.col("R.__rs") <= F.col("L.__le"))
-    )
-    if on:
-        cond = cond & (F.col(f"L.{on}") == F.col("R.__ron"))
-    return L.join(R, on=cond, how="inner").select(
-        *[L[c] for c in left.columns],
-        *[R[c] for c in right.columns if c != on],
     )
 
 

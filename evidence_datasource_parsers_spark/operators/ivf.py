@@ -5,7 +5,7 @@ LSH in operators/similarity.py): partition the corpus into Voronoi cells
 around centroids, then score each query only against its ``n_probe``
 nearest cells.  This is the classic IVF-Flat index expressed relationally:
 
-    fit      : MLlib KMeans over (a sample of) the corpus     [train-once]
+    centroids: deterministic unit-norm vectors (oracle-replayable)
     assign   : one narrow pass adding cell_id to the corpus   [no shuffle]
     probe    : query × centroids (tiny, broadcast) → top-n_probe cells
     search   : join on cell_id → cosine → window top-k        [one shuffle]
@@ -16,9 +16,9 @@ search join is shuffle-free on the corpus side.
 
 The cell assignment is an Arrow-batched pandas UDF, not an unrolled SQL
 expression, for the same two reasons the ANN-LSH bucketing is
-(similarity.ann_lsh_topk): n_cells literal-laden dim-term trees (a) compile
-to generated methods past HotSpot's 8 KB JIT ceiling, so they execute in the
-JVM's bytecode interpreter, and (b) serialize thousands of literal nodes
+(similarity.hyperplane_bucket_rows): n_cells literal-laden dim-term trees
+(a) compile to generated methods past HotSpot's 8 KB JIT ceiling, so they
+execute in the JVM's bytecode interpreter, and (b) serialize thousands of literal nodes
 into every task binary (multi-MB per stage).  In the kernel the centroid
 matrix is a 4 KB numpy closure constant, and the squared-distance fold
 replays the IDENTICAL IEEE arithmetic the DuckDB oracle computes — products,
@@ -37,36 +37,15 @@ from evidence_datasource_parsers_spark.operators.similarity import (
 )
 
 
-def fit_ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-):
-    """KMeans centroids over the corpus (MLlib; deterministic via seed).
-
-    Returns a list[list[float]] — small enough to broadcast as literals.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(train)
-    return [list(map(float, c)) for c in model.clusterCenters()]
-
-
 def deterministic_centroids(dim: int, n_cells: int) -> list[list[float]]:
     """Unit-norm pseudo-random centroids from the same LCG family as the ANN
     hyperplanes — no RNG state, no data-dependent fit, reproducible across
     engines.  For unit-norm embeddings the Voronoi assignment then reduces to
     argmax dot product, so cells stay direction-driven and roughly balanced.
 
-    KMeans-fitted centroids (fit_ivf_centroids) give better cells in
-    production; deterministic centroids exist so an IVF result can be
-    replayed bit-for-bit by a second engine (the correctness oracle).
+    KMeans-fitted centroids would give better cells; deterministic
+    centroids let a second engine (the correctness oracle) replay an IVF
+    result bit-for-bit.
     """
     cells = []
     for row in deterministic_planes(dim, n_cells):
@@ -200,44 +179,3 @@ def assign_cells(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias(vec_col),
     ).withColumn("cell", F.element_at(assign(F.col(vec_col)), 1))
-
-
-def ivf_add_batch(
-    index: DataFrame,
-    new_batch: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Append a new batch to an existing index: assign against the SAME
-    centroids and union — existing rows never move.  Quality decays only as
-    the data distribution drifts from the fitted centroids; monitor with
-    :func:`cell_occupancy` / :func:`needs_refit` and rebuild when flagged."""
-    return index.unionByName(
-        assign_cells(new_batch, centroids, id_col, vec_col)
-    )
-
-
-def cell_occupancy(index: DataFrame) -> DataFrame:
-    """Per-cell row counts — one aggregate, the index health metric."""
-    return index.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-
-
-def needs_refit(
-    occupancy: DataFrame,
-    n_cells: int,
-    max_imbalance: float = 4.0,
-) -> bool:
-    """Refit heuristic: True when the fullest cell exceeds ``max_imbalance``
-    × the ideal (total/n_cells), or any fitted cell is empty — either way
-    probes stop pruning evenly and search cost skews.  One tiny aggregate
-    (n_cells rows) — safe to run after every batch append."""
-    rows = occupancy.agg(
-        F.max("n").alias("mx"),
-        F.sum("n").alias("total"),
-        F.count(F.lit(1)).alias("nonempty"),
-    ).first()
-    if not rows or not rows.total:
-        return False
-    ideal = rows.total / n_cells
-    return bool(rows.mx > max_imbalance * ideal or rows.nonempty < n_cells)

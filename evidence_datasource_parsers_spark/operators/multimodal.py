@@ -704,9 +704,9 @@ def image_phash_frame(
     bits against their MEDIAN → packed into one long (63 bits: no sign
     games).  Undecodable/non-image blobs yield NULL.
 
-    Feed the frame to ``operators.dedupe.hamming_near_dup_pairs(nbits=63)``
-    for at-rest pairs, or persist it as the store of an incremental image
-    dedup (same combo-key machinery as the text SimHash store).  One
+    Persist it as the store of an incremental image dedup
+    (:func:`incremental_phash_dedupe`; same combo-key machinery as the
+    text SimHash store).  One
     narrow Arrow pass, no shuffle.
     """
 
@@ -776,8 +776,7 @@ def incremental_phash_dedupe(
     combo-key mates within a few bits; exact re-uploads sit at hamming 0.
 
     Within-batch images with IDENTICAL pHashes collapse to the min-id
-    representative first; within-batch near-dups are an at-rest pass
-    (``dedupe.hamming_near_dup_pairs`` over the batch's pHashes).
+    representative first; within-batch near-dups are out of scope.
     Undecodable blobs (NULL pHash) pass through as fresh and are NOT
     stored — route them to a PIL-backed kernel rather than silently
     treating them as unique forever.

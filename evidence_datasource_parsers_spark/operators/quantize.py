@@ -11,9 +11,9 @@ component.  The layout is the standard IVF-PQ-adjacent baseline:
 
 Everything is native Spark HOFs (transform / array_max / aggregate) — a
 narrow per-row projection, no Python, no shuffle, fully column-prunable.
-Downstream search either dequantizes back to arrays (exact same operators:
-brute_force_topk / ann_lsh_topk / ivf_topk) or consumes q directly with an
-int-dot kernel; the recall test pins that top-k survives the round trip.
+Downstream search dequantizes back to arrays (exact same operators:
+brute_force_topk / ann_lsh_topk_dual / ivf_topk); the recall test pins that
+top-k survives the round trip.
 """
 
 from __future__ import annotations
@@ -52,62 +52,6 @@ def quantize_embeddings(
     )
     return df.withColumn(q_col, q).withColumn(
         scale_col, F.coalesce(s, F.lit(0.0)).cast("float")
-    )
-
-
-def quantized_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    query_id: str = "query_id",
-    corpus_id: str = "neighbor_id",
-    q_col: str = "q_embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k DIRECTLY on int8 vectors — no dequantize
-    pass.  Symmetric quantization makes cosine scale-free:
-
-        cos(x̂a, x̂b) = (sa·qa)·(sb·qb) / (sa‖qa‖ · sb‖qb‖)
-                     = qa·qb / (‖qa‖‖qb‖)
-
-    so the kernel runs integer dot products (int32 accumulation; 127²·dim
-    stays far under 2³¹ for any realistic dim) and touches 4× fewer bytes
-    than the float scorer — the point of quantizing at 100 TB.  Same
-    topology as similarity.brute_force_topk: broadcast probe set, window
-    top-k, ties to the ascending corpus id."""
-    from pyspark.sql import Window
-
-    def kernel(qs, cs):
-        import numpy as np
-        import pandas as pd
-
-        if len(qs) == 0:
-            return pd.Series([], dtype="float64")
-        Q = np.asarray([np.asarray(v, dtype=np.int32) for v in qs])
-        C = np.asarray([np.asarray(v, dtype=np.int32) for v in cs])
-        dot = (Q * C).sum(axis=1)
-        nq = np.sqrt((Q * Q).sum(axis=1))
-        nc = np.sqrt((C * C).sum(axis=1))
-        denom = nq * nc
-        out = np.where(denom > 0, dot / np.maximum(denom, 1e-300), 0.0)
-        return pd.Series(out)
-
-    score = F.pandas_udf(kernel, "double")
-    q = queries.select(F.col(query_id), F.col(q_col).alias("__qq"))
-    c = corpus.select(F.col(corpus_id), F.col(q_col).alias("__qc"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col(query_id) != F.col(corpus_id))
-        .select(
-            query_id,
-            corpus_id,
-            score(F.col("__qq"), F.col("__qc")).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
     )
 
 

@@ -68,21 +68,3 @@ def nullify_empty_array(col: Column | str) -> Column:
     """Empty collection → null (P9), parity cancerBiomarkers.py:281-287."""
     c = F.col(col) if isinstance(col, str) else col
     return F.when(F.size(c) == 0, F.lit(None)).otherwise(c)
-
-
-def nullify_empty_string(col: Column | str) -> Column:
-    """Empty string → null (P9), parity PanelApp.py:213-216."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) == "", F.lit(None)).otherwise(c)
-
-
-def regex_cleanup_chain(
-    col: Column | str, rules: list[tuple[str, str]]
-) -> Column:
-    """Config-table-driven regexp cleanup applied in order (P-series §2.11),
-    parity ``modules/PanelApp.py:129-149`` (a curated rules table looped over
-    the phenotype column).  Order matters — later rules see earlier output."""
-    c = F.col(col) if isinstance(col, str) else col
-    for pattern, replacement in rules:
-        c = F.regexp_replace(c, pattern, replacement)
-    return c

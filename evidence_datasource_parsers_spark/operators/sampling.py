@@ -55,13 +55,12 @@ def weighted_hash_sample(
     salt: str = "wsample",
 ) -> DataFrame:
     """Deterministic WEIGHTED Bernoulli sample: row keep-probability is
-    ``min(1, fraction * weight)`` — the consumer of soft-dedup's
-    ``sample_weight`` column (operators/dedupe.soft_dedupe_weights) and
-    any other per-row weighting (quality scores, mixture multipliers).
+    ``min(1, fraction * weight)`` for a per-row ``sample_weight`` column
+    (duplicate downweighting, quality scores, mixture multipliers).
 
-    With alpha=1 soft-dedup weights, sampling at ``fraction`` draws each
-    duplicate CLUSTER with total expectation ``fraction`` (cluster members
-    split the chance), so duplicated boilerplate stops dominating the
+    With 1/n weights on each n-document duplicate cluster, sampling at
+    ``fraction`` draws each duplicate CLUSTER with total expectation
+    ``fraction`` (cluster members split the chance), so duplicated boilerplate stops dominating the
     sample without hard-dropping any document.
 
     Same machinery as :func:`hash_sample`: the keep decision is a pure

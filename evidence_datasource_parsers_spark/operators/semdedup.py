@@ -11,13 +11,14 @@ that no lexical fingerprint (MinHash, SimHash, n-gram Jaccard) catches:
        the enforced-cap salted kernel; never all-pairs across clusters)
     3. group mutually-similar docs                  (duplicate_clusters —
        pointer-doubled connected components)
-    4. keep ONE representative per group            (min id — deterministic)
+    4. flag ONE representative per group            (min id — deterministic;
+       a left_anti join on the non-representatives drops the rest)
 
 The clustering step is what makes this 100 TB-shaped: candidate pairs are
 confined to Voronoi cells, so total pair work is Σ|cell|² instead of N²,
 and a runaway cell is salted into bounded sub-blocks by the pair kernel.
-Centroids come from ``ivf.fit_ivf_centroids`` in production or
-``ivf.deterministic_centroids`` for engine-portable replays.
+Centroids come from ``ivf.deterministic_centroids``, which the DuckDB
+oracle replays; k-means-fitted centroids drop in unchanged.
 
 Caveat stated honestly: near-dups that straddle a cell boundary are
 missed — the same recall trade SemDeDup itself makes (its paper dedups
@@ -69,25 +70,3 @@ def semantic_dupe_groups(
         "cluster_id",
         (F.col("doc_id") == F.col("cluster_id")).alias("is_representative"),
     )
-
-
-def semantic_dedupe(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    threshold: float,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    max_block_rows: int = 2048,
-    quantize_decimals: int | None = None,
-) -> DataFrame:
-    """The deduplicated corpus: every semantic-dup group reduced to its
-    min-id representative; all other rows pass through untouched.
-
-    One left_anti against the dup-sized drop set (AQE broadcasts it when
-    small — the common case); the corpus itself is scanned once and never
-    shuffled by the drop."""
-    drops = semantic_dupe_groups(
-        corpus, centroids, threshold, id_col, vec_col, max_block_rows,
-        quantize_decimals=quantize_decimals,
-    ).where(~F.col("is_representative")).select(id_col)
-    return corpus.join(drops, on=id_col, how="left_anti")

@@ -62,31 +62,3 @@ def assign_shards(
         with_shard.withColumn(pos_col, F.row_number().over(w))
         .drop("__sh_h")
     )
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    num_shards: int,
-    salt: str = "shard",
-    fmt: str = "parquet",
-) -> None:
-    """Materialize the shuffled corpus as one directory per shard
-    (``shard=<k>/``), rows stored in ``shard_pos`` order.
-
-    ``repartition(shard)`` clusters each shard into one task (collisions of
-    Spark's partitioner may co-locate a few shards per task — harmless, the
-    ``partitionBy`` writer still splits them into per-shard directories);
-    ``sortWithinPartitions`` fixes the row order inside each file.  The
-    result is byte-stable across cluster sizes and retries.
-    """
-    sharded = assign_shards(df, id_col, num_shards, salt)
-    (
-        sharded.repartition(F.col("shard"))
-        .sortWithinPartitions("shard", "shard_pos")
-        .write.mode("overwrite")
-        .format(fmt)
-        .partitionBy("shard")
-        .save(path)
-    )

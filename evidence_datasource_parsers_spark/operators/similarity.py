@@ -8,8 +8,8 @@ trees compile past HotSpot's JIT method ceiling and evaluate interpreted —
 SCALE.md hazards 7–9); the per-query top-k is a window over the similarity.
 
 Scale design: brute force is O(|Q|·|C|); keep |Q| bounded (a probe set) or
-use ``ann_lsh_topk`` which shuffles on hyperplane-sign buckets so each query
-only scores its bucket-mates (or IVF cells — operators/ivf.py).
+use ``ann_lsh_topk_dual`` which shuffles on hyperplane-sign buckets so each
+query only scores its bucket-mates (or IVF cells — operators/ivf.py).
 """
 
 from __future__ import annotations
@@ -20,77 +20,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.sqlstr import qid, slit
-
-
-def balanced_sum(terms: list):
-    """Pairwise (balanced-tree) summation: depth log2(n) instead of n.
-
-    Deep left-nested chains make Janino reject the generated method (codegen
-    falls back to interpreted); a balanced tree compiles.  The ORACLE SQL is
-    generated with the identical tree (catalog_text._dot_sql) so results stay
-    bit-identical."""
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def sql_tree(terms: list[str]) -> str:
-    """``balanced_sum`` over SQL fragments: the identical pairwise
-    association order, emitted as ONE string.  Building a 64-term tree
-    through the Column API costs a py4j round trip per node (~hundreds per
-    expression — driver-side seconds before the job even starts); one
-    ``F.expr`` call parses the whole tree JVM-side."""
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def dot_sql(a: str, b: str, dim: int) -> str:
-    """Dot-product SQL fragment over two array column NAMES (0-based Spark
-    subscripts; the oracle's 1-based ``qa[i+1]`` twin lives in
-    plans/catalog_text._dot_sql)."""
-    return sql_tree([f"{a}[{i}] * {b}[{i}]" for i in range(dim)])
-
-
-def norm_sql(a: str, dim: int) -> str:
-    return f"sqrt({sql_tree([f'{a}[{i}] * {a}[{i}]' for i in range(dim)])})"
-
-
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product.  With ``dim`` known, unrolls to a balanced multiply-add
-    tree — whole-stage-codegen-able and mirrored exactly by the oracle."""
-    if dim is not None:
-        return balanced_sum(
-            [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)]
-        )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        return F.sqrt(
-            balanced_sum(
-                [
-                    F.element_at(a, i + 1) * F.element_at(a, i + 1)
-                    for i in range(dim)
-                ]
-            )
-        )
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
 # ---------------------------------------------------------------------------
@@ -137,9 +66,11 @@ def quantize_sql(expr: str, decimals: int = COS_QUANT_DECIMALS) -> str:
 
 def pairwise_fold(x):
     """Pairwise balanced-tree fold over the LAST axis of a numpy array — the
-    association order of ``balanced_sum`` / the oracle's parenthesized sum,
-    vectorized.  IEEE double ops are deterministic, so results are
-    bit-identical to the unrolled expression tree."""
+    association order of the oracle's parenthesized sum
+    (``plans/catalog_text._balanced_sum_sql``), vectorized.  Adjacent
+    terms add pairwise, an odd tail carries to the next level.  IEEE
+    double ops are deterministic, so results are bit-identical to the
+    unrolled expression tree."""
     import numpy as np
 
     while x.shape[-1] > 1:
@@ -188,7 +119,7 @@ def brute_force_topk(
     """Exact cosine top-k: broadcast the (small) query set against the corpus.
 
     O(|Q|·|C|) by definition — keep |Q| a bounded probe set; the scale paths
-    are ann_lsh_topk and operators/ivf.  Scoring runs in the shared Arrow
+    are ann_lsh_topk_dual and operators/ivf.  Scoring runs in the shared Arrow
     cosine kernel (cosine_pairs_udf) — bit-identical to the oracle's
     expression tree, but JIT-friendly and free of multi-MB plan literals.
 
@@ -285,7 +216,7 @@ def hyperplane_bucket_rows(
         V = np.asarray([np.asarray(v, dtype=np.float64) for v in s])
         x = V[:, None, :] * P[None, :, :]  # (n, T*J, dim) products
         # balanced-tree fold: add adjacent pairs, odd tail carried last —
-        # the exact association order of similarity.balanced_sum / the
+        # the exact association order of pairwise_fold / the
         # oracle's pairwise-parenthesized sum
         while x.shape[2] > 1:
             m = x.shape[2] // 2
@@ -430,81 +361,6 @@ def index_rows_to_bucket_rows(
     )
 
 
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    query_id: str = "query_id",
-    corpus_id: str = "neighbor_id",
-    vec_col: str = "embedding",
-    multiprobe: int = 0,
-    corpus_bucket_rows: DataFrame | None = None,
-) -> DataFrame:
-    """Approximate top-k: score only pairs sharing a hyperplane-sign bucket in
-    at least one of ``n_tables`` independent hash tables (OR-amplification).
-
-    ``corpus_bucket_rows``: precomputed :func:`hyperplane_bucket_rows` for
-    the corpus (vec_alias '__cv', same plane geometry) — share ONE corpus
-    bucketing pass between searches (e.g. base and multi-probe variants, or
-    repeated query batches against a persisted index).
-
-    Recall ≈ 1-(1-p^n_planes)^n_tables where p = 1-θ/π per plane; tune
-    n_planes down / n_tables up for higher recall at more compute.  One
-    shuffle on (table, bucket) — corpus rows replicate ×n_tables, candidates
-    dedupe before scoring so each pair is scored once.
-
-    ``multiprobe > 0`` additionally probes, per table, the buckets reached
-    by flipping the sign of that many smallest-margin planes
-    (:func:`hyperplane_probe_rows`) — more recall at query-side cost only;
-    the corpus replication and store layout are unchanged.
-    """
-    q = (
-        hyperplane_probe_rows(
-            queries, query_id, vec_col, dim, n_planes, n_tables,
-            multiprobe, "__qv",
-        )
-        if multiprobe
-        else hyperplane_bucket_rows(
-            queries, query_id, vec_col, dim, n_planes, n_tables, "__qv"
-        )
-    )
-    c = (
-        corpus_bucket_rows
-        if corpus_bucket_rows is not None
-        else hyperplane_bucket_rows(
-            corpus, corpus_id, vec_col, dim, n_planes, n_tables, "__cv"
-        )
-    )
-    candidates = (
-        c.join(q.select(query_id, "__t", "__bucket"), on=["__t", "__bucket"])
-        .where(F.col(query_id) != F.col(corpus_id))
-        .select(query_id, corpus_id, "__cv")
-        .distinct()
-    )
-    # scoring runs in the shared Arrow cosine kernel — same balanced-tree
-    # IEEE arithmetic as the oracle, JIT-friendly (SCALE.md hazard 7)
-    scored = candidates.join(
-        F.broadcast(queries.select(
-            F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
-        )),
-        on=query_id,
-    ).select(
-        query_id,
-        corpus_id,
-        cosine_pairs_udf()(F.col("__qv"), F.col("__cv")).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine_sim").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
 def ann_lsh_topk_dual(
     queries: DataFrame,
     corpus: DataFrame,
@@ -522,7 +378,7 @@ def ann_lsh_topk_dual(
 ) -> DataFrame:
     """Base AND multi-probe top-k from ONE candidate + scoring pass (r13).
 
-    Running :func:`ann_lsh_topk` twice (base, then ``multiprobe=m``)
+    Running a base search and a ``multiprobe=m`` search separately
     duplicates the whole pipeline — two candidate joins, two dedups, two
     Arrow scoring passes, two window sorts — even though the base
     candidate set is a SUBSET of the multi-probe one (probe position 0 in
@@ -546,9 +402,9 @@ def ann_lsh_topk_dual(
          ``base_method`` / ``mp_method``.
 
     Output: (method, query_id, corpus_id, cosine_sim, rank) — the exact
-    row multiset of the two separate calls, at one candidate join, one
+    row multiset of the two separate searches, at one candidate join, one
     dedup aggregate, one Python-boundary crossing and one shuffle fewer.
-    Equivalence is pinned by test_ann_lsh_topk_dual_matches_separate_legs.
+    q39's oracle replays both legs and gates the values.
     """
     q = hyperplane_probe_rows(
         queries, query_id, vec_col, dim, n_planes, n_tables,
@@ -588,10 +444,8 @@ def ann_lsh_topk_dual(
     # the asof/interval/sketch twins this rewrite is VALUE-verified,
     # not plan-identical: expressing both ranks over one OVER clause
     # lets Catalyst fuse the two Window nodes into one (an intentional
-    # improvement the Column form did not get).  Output equality with
-    # the separate legs is pinned by
-    # test_ann_lsh_topk_dual_matches_separate_legs and the plan shape
-    # by test_q39_ann_plan_shape.
+    # improvement the Column form did not get).  q39's oracle gates the
+    # values and test_q39_ann_plan_shape the plan shape.
     over = (
         f"OVER (PARTITION BY {qid(query_id)} ORDER BY "
         f"cosine_sim DESC NULLS LAST, {qid(corpus_id)} ASC NULLS FIRST"
@@ -748,8 +602,8 @@ def blocked_cosine_pairs(
 # lexical near-dup → incremental_lsh_dedupe / incremental_simhash_dedupe,
 # semantic near-dup → here).  The state carried between runs is the retained
 # corpus's embedding column itself; candidates come from the same
-# multi-table hyperplane buckets as ann_lsh_topk, verification is exact
-# cosine.
+# multi-table hyperplane buckets as ann_lsh_topk_dual, verification is
+# exact cosine.
 # ---------------------------------------------------------------------------
 
 
@@ -793,7 +647,7 @@ def incremental_embedding_dedupe(
     score NaN cosine and also never match.
 
     Within-batch near-dups are out of scope by design (run
-    ``blocked_cosine_pairs``/``ann_lsh_topk`` at rest over the batch).
+    ``blocked_cosine_pairs``/``ann_lsh_topk_dual`` at rest over the batch).
 
     Scale shape: the batch is bucketed once (Arrow numpy kernel, persisted);
     the store side is bucketed at join time OR supplied precomputed via
@@ -835,7 +689,7 @@ def incremental_embedding_dedupe(
         .join(store_bk.select("__sv", "__t", "__bucket"), on=["__t", "__bucket"])
         .select(id_col, "__nv", "__sv")
         # one score per (batch doc, store doc) pair even when they collide
-        # in several tables — dedup BEFORE the kernel, same as ann_lsh_topk
+        # in several tables — dedup BEFORE the kernel (as ann_lsh_topk_dual)
         .distinct()
     )
     score = cosine_pairs_udf()(F.col("__nv"), F.col("__sv"))

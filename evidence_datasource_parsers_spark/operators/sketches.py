@@ -32,15 +32,10 @@ on an explicit cadence.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from evidence_datasource_parsers_spark.functions.hashing import (
-    HEX_CHARS,
-    portable_hash,
-)
+from evidence_datasource_parsers_spark.functions.hashing import HEX_CHARS
 
 # Spark-SQL string twins (r13, guide §1.3 driver path): the Column-API
 # loops below (depth/k/bin fan-outs) cost one py4j round trip per
@@ -49,9 +44,7 @@ from evidence_datasource_parsers_spark.functions.hashing import (
 # hot select now parses from ONE SQL string; optimized plans are
 # asserted identical to the Column forms in
 # tests/test_sketches.py::test_sketch_sql_twins_plan_equal_column_forms,
-# so executor-side work is unchanged by construction.  The Column
-# helpers (_cms_bucket/_bloom_bit) stay: they are the reference forms
-# the twin test reconstructs.
+# so executor-side work is unchanged by construction.
 _PH_SQL = (
     "CAST(conv(substring(md5({c}), 1, %d), 16, 10) AS BIGINT)" % HEX_CHARS
 )
@@ -179,8 +172,8 @@ def incremental_distinct_count(
 # A fixed-edge histogram IS mergeable — counts add elementwise — at the
 # cost of choosing edges up front (cheap for pipeline metrics: bounds are
 # known and log-spaced edges cover decades).  Merging is associative,
-# commutative, and EXACT (integer adds, no estimator drift); percentile
-# reads interpolate within a bin, so error is bounded by bin width.
+# commutative, and EXACT (integer adds, no estimator drift);
+# :func:`histogram_drift` compares two stores' bin proportions.
 #
 # Store contract mirrors hll_store: (group_cols…, counts array<long>) with
 # len(edges)+1 bins — [underflow, between-edges…, overflow].  NULL values
@@ -252,74 +245,6 @@ def histogram_merge_stores(
     )
 
 
-def histogram_percentiles(
-    store: DataFrame,
-    edges: list[float],
-    percentiles: list[float],
-    group_cols: list[str],
-    counts_col: str = "counts",
-) -> DataFrame:
-    """Read side: approximate percentiles per group from the carried
-    histogram — linear interpolation inside the containing bin (error ≤
-    bin width; exact at bin boundaries).  Underflow clamps to edges[0],
-    overflow to edges[-1] (open-ended bins have no interior to
-    interpolate).  Output: one column ``p{int(100p)}`` per requested
-    percentile.  Relational shape: posexplode + running sum window per
-    group — store frames are group-sized, so the window is cheap."""
-    from pyspark.sql import Window
-
-    lo = [float("-inf")] + [float(x) for x in edges]
-    hi = [float(x) for x in edges] + [float("inf")]
-    lo_a = F.array(*[F.lit(x) for x in lo])
-    hi_a = F.array(*[F.lit(x) for x in hi])
-    w = Window.partitionBy(*group_cols).orderBy("__bin")
-    cum = (
-        store.select(
-            *group_cols, F.posexplode(counts_col).alias("__bin", "__c")
-        )
-        .withColumn("__cum", F.sum("__c").over(w))
-        .withColumn(
-            "__total", F.sum("__c").over(Window.partitionBy(*group_cols))
-        )
-        .where(F.col("__c") > 0)
-    )
-    aggs = []
-    for p in percentiles:
-        target = F.lit(p) * F.col("__total")
-        # first bin whose cumulative count reaches the target
-        in_bin = (F.col("__cum") >= target) & (
-            (F.col("__cum") - F.col("__c")) < target
-        )
-        binlo = F.element_at(lo_a, F.col("__bin") + 1)
-        binhi = F.element_at(hi_a, F.col("__bin") + 1)
-        frac = (target - (F.col("__cum") - F.col("__c"))) / F.col("__c")
-        interp = F.when(
-            binlo == F.lit(float("-inf")), binhi
-        ).when(
-            binhi == F.lit(float("inf")), binlo
-        ).otherwise(binlo + (binhi - binlo) * frac)
-        aggs.append(
-            F.min(F.when(in_bin, interp)).alias(f"p{int(round(p * 100))}")
-        )
-    return cum.groupBy(*group_cols).agg(*aggs)
-
-
-def incremental_histogram(
-    prev_store: DataFrame | None,
-    batch: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    edges: list[float],
-    counts_col: str = "counts",
-) -> DataFrame:
-    """Fold one batch into the carried histogram store (None on the first
-    run) — same shape as :func:`incremental_distinct_count`."""
-    b = histogram_store(batch, group_cols, value_col, edges, counts_col)
-    if prev_store is None:
-        return b
-    return histogram_merge_stores([prev_store, b], group_cols, counts_col)
-
-
 def compact_histogram_store(
     store: DataFrame,
     group_cols: list[str],
@@ -332,26 +257,6 @@ def compact_histogram_store(
     on-disk store by appending each batch's own ``histogram_store``
     output (O(batch) I/O), compact on an explicit cadence."""
     return histogram_merge_stores([store], group_cols, counts_col)
-
-
-def histogram_store_percentiles(
-    store: DataFrame,
-    edges: list[float],
-    percentiles: list[float],
-    group_cols: list[str],
-    counts_col: str = "counts",
-) -> DataFrame:
-    """Probe an append-only histogram history: collapse per group (one
-    shuffle), then interpolate.  :func:`histogram_percentiles` itself
-    assumes ONE counts row per group — duplicate bins from a raw history
-    would satisfy percentile targets at partial cumulative sums."""
-    return histogram_percentiles(
-        compact_histogram_store(store, group_cols, counts_col),
-        edges,
-        percentiles,
-        group_cols,
-        counts_col,
-    )
 
 
 def histogram_drift(
@@ -428,19 +333,10 @@ def histogram_drift(
 # ---------------------------------------------------------------------------
 
 
-def _cms_bucket(value: Column, d: int, width: int, salt: str) -> Column:
-    """Row ``d``'s bucket for ``value`` — the depth index rides in the
-    hashed salt so the depth rows are independent hash functions."""
-    return (
-        portable_hash(
-            F.concat(value.cast("string"), F.lit(f":cms{d}:{salt}"))
-        )
-        % width
-    ).cast("long")
-
-
 def _cms_bucket_sql(expr: str, d: int, width: int, salt: str) -> str:
-    """SQL-string twin of :func:`_cms_bucket` (``expr`` = quoted SQL)."""
+    """Row ``d``'s bucket for ``expr`` (quoted SQL) — the depth index
+    rides in the hashed salt so the depth rows are independent hash
+    functions."""
     h = _PH_SQL.format(
         c=f"concat(CAST({expr} AS STRING), {_slit(f':cms{d}:{salt}')})"
     )
@@ -580,40 +476,9 @@ def frequent_items(
     )
 
 
-#: sidecar recording the sample size a bottom-k store was built under —
-#: the same identity discipline as the span gram store's cap sidecar:
-#: compacting with a smaller k irreversibly truncates the sample, and a
-#: probe with a larger k returns a batch-stratified (non-uniform) union
-#: of per-batch bottom-ks instead of the global bottom-k.
-BOTTOMK_META_FILE = "_bottomk_meta.json"
-
-
-def read_bottomk_store_meta(store_dir: str) -> int | None:
-    """The ``k`` recorded beside a bottom-k store dir, or None (missing
-    or unreadable sidecar — fail-safe refusal downstream)."""
-    from evidence_datasource_parsers_spark.operators.store_meta import (
-        read_store_identity,
-    )
-
-    return read_store_identity(store_dir, BOTTOMK_META_FILE, "k")
-
-
-def write_bottomk_store_meta(store_dir: str, k: int) -> None:
-    """Persist ``k`` beside the store (atomic); raises ``ValueError`` on
-    a conflicting existing sidecar (k is store identity)."""
-    from evidence_datasource_parsers_spark.operators.store_meta import (
-        write_store_identity,
-    )
-
-    write_store_identity(
-        store_dir, BOTTOMK_META_FILE, "k", k,
-        "compaction below the build k truncates the sample irreversibly",
-    )
-
-
 def _bottomk(rows: DataFrame, group_cols: list[str], k: int) -> DataFrame:
     """Keep each group's ``k`` smallest ``(__hk, value)`` rows — the
-    bottom-k reduction shared by build, merge and compaction.  Identical
+    bottom-k reduction shared by build and probe.  Identical
     ``(__hk, value)`` rows collapse first: that is what makes the
     reduction IDEMPOTENT (a replayed batch's rows are exact duplicates
     and must not occupy two sample slots); a genuine 60-bit hash
@@ -672,29 +537,6 @@ def bottomk_sample_store(
     return _bottomk(rows, group_cols, k)
 
 
-def bottomk_merge_stores(
-    stores: list[DataFrame],
-    group_cols: list[str],
-    k: int = 256,
-) -> DataFrame:
-    """Union N sample stores and re-take the bottom-k: EXACTLY the
-    bottom-k of the union of the underlying corpora (each per-batch store
-    is a superset of its contribution to the global bottom-k)."""
-    unioned = _union_stores(stores)
-    return _bottomk(unioned, group_cols, k)
-
-
-def compact_bottomk_store(
-    store: DataFrame,
-    group_cols: list[str],
-    k: int = 256,
-) -> DataFrame:
-    """Collapse an append-only sample history to one bottom-k row set per
-    group — EXACT (the reduction is idempotent), output is a valid
-    store."""
-    return bottomk_merge_stores([store], group_cols, k)
-
-
 def sample_quantiles(
     store: DataFrame,
     group_cols: list[str],
@@ -709,8 +551,7 @@ def sample_quantiles(
     ``F.percentile`` over the sample, which both Spark and DuckDB
     (``quantile_cont``) implement bit-for-bit over integer values.
 
-    ``k`` MUST NOT exceed the store's BUILD k (the ``_bottomk_meta.json``
-    sidecar beside a persisted store records it): each batch contributed
+    ``k`` MUST NOT exceed the store's BUILD k: each batch contributed
     at most its own bottom-``build_k`` rows, so probing with a larger k
     would return a batch-stratified union — small batches overrepresented
     — instead of a uniform sample.  Probing with a smaller k is exact
@@ -726,19 +567,10 @@ def sample_quantiles(
     ])
 
 
-def _bloom_bit(value: Column, d: int, m_bits: int, salt: str) -> Column:
-    """Hash ``d``'s bit position for ``value`` — the hash index rides in
-    the salt, same independence trick as :func:`_cms_bucket`."""
-    return (
-        portable_hash(
-            F.concat(value.cast("string"), F.lit(f":bf{d}:{salt}"))
-        )
-        % m_bits
-    ).cast("long")
-
-
 def _bloom_bit_sql(expr: str, d: int, m_bits: int, salt: str) -> str:
-    """SQL-string twin of :func:`_bloom_bit` (``expr`` = quoted SQL)."""
+    """Hash ``d``'s bit position for ``expr`` (quoted SQL) — the hash
+    index rides in the salt, same independence trick as the CMS
+    buckets."""
     h = _PH_SQL.format(
         c=f"concat(CAST({expr} AS STRING), {_slit(f':bf{d}:{salt}')})"
     )
@@ -780,7 +612,8 @@ def bloom_store(
 
     NULL values are ignored (the family's convention).  ``k``/``m_bits``/
     ``salt`` are the filter identity and must match across every store
-    that will ever merge; size with :func:`bloom_params`.  One explode
+    that will ever merge (standard sizing: m = −n·ln p / (ln 2)²,
+    k = ⌈(m/n)·ln 2⌉ for n items at false-positive rate p).  One explode
     over ``k`` rows + one map-side-combined aggregation; the store is at
     most ``#groups · m_bits/64`` rows and usually far fewer (only touched
     words materialize)."""
@@ -831,7 +664,7 @@ def bloom_member(
 ) -> DataFrame:
     """Membership probe: for each ``items`` row, true iff ALL ``k`` of
     its bits are set in the group's filter — no false negatives; false
-    positives at the filter's design rate (:func:`bloom_params`).  Reads
+    positives at the filter's design rate.  Reads
     an append HISTORY directly: the per-word OR happens in the
     aggregate, exactly like :func:`cms_estimate` sums cells.  The probe
     explodes items × k (item-bounded), joins the store on (group, word)
@@ -859,36 +692,4 @@ def bloom_member(
     )
     return per_bit.groupBy(*group_cols, value_col).agg(
         F.bool_and("__hit").alias(out_col)
-    )
-
-
-def bloom_params(n_items: int, fpr: float) -> tuple[int, int]:
-    """Standard Bloom sizing: ``(k, m_bits)`` for ``n_items`` expected
-    insertions at false-positive rate ``fpr`` — m = ⌈−n·ln p / (ln 2)²⌉,
-    k = ⌈(m/n)·ln 2⌉.  e.g. ``bloom_params(10_000_000, 0.01)`` →
-    (7, 95 850 584): ~11.4 MB of words per group for 1% FPR over 10M
-    URLs — the bounded-memory alternative to the exact seen-store
-    anti-join."""
-    if n_items < 1:
-        raise ValueError("n_items must be >= 1")
-    if not (0 < fpr < 1):
-        raise ValueError("fpr must be in (0, 1)")
-    m = max(64, math.ceil(-n_items * math.log(fpr) / (math.log(2) ** 2)))
-    k = max(1, math.ceil(m / n_items * math.log(2)))
-    return (k, m)
-
-
-def cms_params(epsilon: float, delta: float) -> tuple[int, int]:
-    """Standard count-min sizing: ``(depth, width)`` such that the
-    estimate exceeds the true count by more than ``epsilon·N`` (N =
-    total counted items in the group) with probability at most
-    ``delta`` — width = ⌈e/ε⌉, depth = ⌈ln(1/δ)⌉ (Cormode &
-    Muthukrishnan 2005).  e.g. ``cms_params(0.001, 0.01)`` → (5, 2719):
-    ~109 KB of longs per group for 0.1%-of-corpus accuracy at 99%
-    confidence."""
-    if not (0 < epsilon < 1) or not (0 < delta < 1):
-        raise ValueError("epsilon and delta must be in (0, 1)")
-    return (
-        max(1, math.ceil(math.log(1.0 / delta))),
-        max(1, math.ceil(math.e / epsilon)),
     )

@@ -297,8 +297,7 @@ class IncrementalSpanResult(NamedTuple):
     the carried store: APPEND it to advance the on-disk store in
     O(batch), the same discipline as the hash-family stores.  Duplicate
     rows per gram across appends are the FORMAT (probes take the capped
-    sum; see the saturation algebra note on the operator) and
-    :func:`compact_gram_store` collapses them on an explicit cadence."""
+    sum; see the saturation algebra note on the operator)."""
 
     cleaned: DataFrame
     store: DataFrame
@@ -347,8 +346,7 @@ def incremental_span_dedupe(
     ``delta`` (grams already saturated in the store contribute no new
     row, so the history stops growing for boilerplate grams), and probe
     it with a store-side semi-join + a batch-bounded capped-sum
-    aggregate — store-sized data is never shuffled per round.  Compact
-    on an explicit cadence with :func:`compact_gram_store`.
+    aggregate — store-sized data is never shuffled per round.
     """
     n = min_tokens
     anchors = _anchor_inventory(new_batch, text_col, id_col, n).persist()
@@ -405,52 +403,4 @@ def incremental_span_dedupe(
     cleaned = _excise(new_batch, spans, text_col, id_col)
     return IncrementalSpanResult(
         cleaned=cleaned, store=store, pinned=anchors, delta=delta
-    )
-
-
-#: sidecar recording the saturation cap a gram store was built under.
-#: Underscore-prefixed so Spark's parquet listing ignores it (like
-#: ``_SUCCESS``).  The cap is part of the store's IDENTITY: compacting with
-#: a smaller cap silently truncates saturated counts, and a later probe at
-#: the real threshold under-counts grams and misses duplicate spans.
-GRAM_META_FILE = "_span_gram_meta.json"
-
-
-def read_gram_store_meta(store_dir: str) -> int | None:
-    """The ``min_occurrences`` cap recorded beside a gram store dir, or
-    None for stores written before the sidecar existed (or whose sidecar
-    is unreadable — fail-safe: consumers refuse and ask for a re-stamp)."""
-    from evidence_datasource_parsers_spark.operators.store_meta import (
-        read_store_identity,
-    )
-
-    return read_store_identity(store_dir, GRAM_META_FILE, "min_occurrences")
-
-
-def write_gram_store_meta(store_dir: str, min_occurrences: int) -> None:
-    """Persist the saturation cap beside the store (atomic).  Raises
-    ``ValueError`` if the dir already records a DIFFERENT cap — mixing
-    caps corrupts the capped-sum algebra (a store capped at 2 probed at
-    3 under-counts)."""
-    from evidence_datasource_parsers_spark.operators.store_meta import (
-        write_store_identity,
-    )
-
-    write_store_identity(
-        store_dir, GRAM_META_FILE, "min_occurrences", min_occurrences,
-        "the capped counts are not comparable",
-    )
-
-
-def compact_gram_store(
-    gram_store: DataFrame, min_occurrences: int = 2
-) -> DataFrame:
-    """Collapse an append-only gram store to one saturated row per gram —
-    the explicit-cadence O(store) maintenance step (run it every N
-    rounds / when file counts grow, never inside the round).  Exact by
-    the same capped-sum algebra the probe uses; output is a valid
-    ``gram_store`` input."""
-    return gram_store.groupBy("gram_hash").agg(
-        F.least(F.sum("n_seen"), F.lit(min_occurrences))
-        .cast("long").alias("n_seen")
     )

@@ -112,28 +112,3 @@ def global_rank(
             local + F.element_at(off_map, F.shiftright("__mid", 33)) + F.lit(1)
         ).cast("long"),
     ).drop("__mid")
-
-
-def top_1_per_group_agg(
-    df: DataFrame,
-    partition_by: list[str],
-    order_col: str,
-    payload_cols: list[str],
-) -> DataFrame:
-    """Shuffle-light alternative to W1: max_by via struct-max aggregation.
-
-    ``groupBy(keys).agg(max(struct(order, payload)))`` does map-side partial
-    aggregation — at 100 TB this beats the window (which must sort every
-    group's rows) whenever only the argmax row is needed.  Ties resolve by the
-    payload's struct ordering; include a unique id in ``payload_cols`` head
-    for determinism.
-    """
-    packed = F.max(
-        F.struct(F.col(order_col).alias("__o"), *[F.col(c) for c in payload_cols])
-    ).alias("__top")
-    out = df.groupBy(*partition_by).agg(packed)
-    return out.select(
-        *partition_by,
-        F.col("__top.__o").alias(order_col),
-        *[F.col(f"__top.{c}").alias(c) for c in payload_cols],
-    )

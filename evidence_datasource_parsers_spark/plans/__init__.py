@@ -1,7 +1,5 @@
 from evidence_datasource_parsers_spark.plans.catalog import (  # noqa: F401
     CATALOG,
-    CatalogQuery,
-    load,
 )
 
 # registration side-effects: text/dedup/similarity + extended analytics

@@ -81,7 +81,7 @@ def _shingles_sql(t: str = "t") -> str:
 
 
 def _word_shingles_sql(t: str = "t") -> str:
-    """Distinct 3-word shingle list (oracle twin of dedupe.word_shingles)."""
+    """Distinct 3-word shingle list of the normalized text ``t``."""
     n = WORD_SHINGLE_N
     return (
         f"list_distinct(list_transform("
@@ -790,7 +790,8 @@ EMB_DIM = 64
 
 
 def _balanced_sum_sql(terms: list[str]) -> str:
-    """Pairwise summation tree, mirroring similarity.balanced_sum exactly."""
+    """Pairwise summation tree: the association order that
+    similarity.pairwise_fold replays in the cosine kernel."""
     while len(terms) > 1:
         terms = [
             f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
@@ -1369,15 +1370,6 @@ def q39(spark: SparkSession, sf: str) -> DataFrame:
             F.col("rank").cast("int").alias("rank"),
         )
     )
-
-
-# q62 charset leg: one suffix per detection branch (media_id % 5) — each
-# contains non-ASCII so the mojibake twin always triggers the repair
-# trigger rule; branches 2 and 4 are cp1252-encodable by construction.
-# The oracle SQL embeds the same literals.
-from evidence_datasource_parsers_spark.plans.q62_legs import (  # noqa: E402,E501
-    CHARSET_SUFFIXES as _CHARSET_SUFFIXES,
-)
 
 
 # the q62 script-ID leg replays dominant_script's argmax as list_max over

@@ -1,9 +1,9 @@
 """Source operators S1-S14 (SURVEY §2.1), Spark-first.
 
-The reference's format-autodetect reader (``common/evidence.py:230-285``)
-dispatches on extension and directory contents; this module re-expresses that
-as a thin declarative wrapper over ``spark.read`` so every scan benefits from
-predicate pushdown, column pruning and partition pruning.  Remote staging
+Thin declarative wrappers over ``spark.read`` so every scan benefits from
+predicate pushdown, column pruning and partition pruning.  Each pipeline
+names its reader; the reference's extension-dispatching autodetect reader
+(``common/evidence.py:230-285``, SURVEY S8) has no counterpart.  Remote staging
 (S9) and driver-parsed formats (Excel S10, XML S11, REST S12/S13) are isolated
 behind small functions that land in a DataFrame as early as possible.
 """
@@ -15,15 +15,6 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-_CSV_EXTS = {".csv": ",", ".tsv": "\t", ".tab": "\t", ".txt": "\t"}
-
-
-def _strip_compression(path: str) -> str:
-    for ext in (".gz", ".bz2", ".zst", ".bgz"):
-        if path.endswith(ext):
-            return path[: -len(ext)]
-    return path
 
 
 def read_csv(
@@ -121,54 +112,6 @@ def read_parquet(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
-def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """ORC scan — Spark-native columnar alternative (predicate pushdown and
-    column pruning like parquet; common in Hive-heritage lakes)."""
-    if isinstance(paths, str):
-        paths = [paths]
-    return spark.read.orc(*paths)
-
-
-def read_path(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **csv_opts,
-) -> DataFrame:
-    """Format-autodetect reader (S8) — extension dispatch, directory peeking.
-
-    Capability parity with ``common/evidence.py:230-285``: a directory is
-    classified by the extensions of its data files (mixed directories are an
-    error); a file dispatches on its own extension, compression-suffix aware.
-    """
-    probe = path
-    if os.path.isdir(path):
-        entries = [
-            e
-            for e in os.listdir(path)
-            if not e.startswith((".", "_")) and not e.endswith(".crc")
-        ]
-        if not entries:
-            raise ValueError(f"empty directory: {path}")
-        exts = {
-            os.path.splitext(_strip_compression(e))[1].lower() for e in entries
-        }
-        if len(exts) != 1:
-            raise ValueError(f"mixed-format directory {path}: {sorted(exts)}")
-        probe = entries[0]
-    ext = os.path.splitext(_strip_compression(probe))[1].lower()
-    if ext in _CSV_EXTS:
-        opts = {"sep": _CSV_EXTS[ext], **csv_opts}
-        return read_csv(spark, path, schema=schema, **opts)
-    if ext in (".json", ".jsonl", ".ndjson"):
-        return read_json(spark, path, schema=schema, recursive=os.path.isdir(path))
-    if ext in (".parquet", ".pq"):
-        return read_parquet(spark, path)
-    if ext == ".orc":
-        return read_orc(spark, path)
-    raise ValueError(f"unsupported extension {ext!r} for {path}")
-
-
 def from_rows(
     spark: SparkSession,
     rows: Iterable,
@@ -180,11 +123,6 @@ def from_rows(
     fact data must arrive through a file/stream source.
     """
     return spark.createDataFrame(list(rows), schema=schema)
-
-
-def from_pandas(spark: SparkSession, pdf) -> DataFrame:
-    """pandas → Spark boundary (S10 Excel tier); Arrow-accelerated."""
-    return spark.createDataFrame(pdf)
 
 
 def _xlsx_cell_col(ref: str) -> int:

@@ -27,8 +27,6 @@ from evidence_datasource_parsers_spark.functions.audiometa import (
 )
 from evidence_datasource_parsers_spark.functions.avi import decode_avi
 from evidence_datasource_parsers_spark.functions.imagemeta import (
-    encode_avif_shell,
-    encode_webp_shell,
     parse_avif,
     parse_webp,
 )
@@ -41,6 +39,7 @@ from evidence_datasource_parsers_spark.functions.pdf import (
     encode_pdf,
     parse_pdf,
 )
+from media_shells import encode_avif_shell, encode_webp_shell
 
 ALLOWED = (ValueError, struct.error)
 

@@ -7,13 +7,13 @@ from pyspark.sql import functions as F
 from evidence_datasource_parsers_spark.operators.dedupe import (
     exact_dedupe,
     hamming_distance,
-    lsh_candidate_pairs,
-    minhash_signature,
-    ngram_jaccard,
+    lsh_candidate_pairs_from_buckets,
+    lsh_fingerprints,
+    minhash_signatures_exploded,
     simhash,
 )
 from evidence_datasource_parsers_spark.operators.similarity import (
-    ann_lsh_topk,
+    ann_lsh_topk_dual,
     brute_force_topk,
 )
 
@@ -40,9 +40,9 @@ def test_exact_dedupe_normalization(spark):
 def test_minhash_identical_and_near(spark):
     sigs = {
         r["doc_id"]: r["sig"]
-        for r in _docs(spark)
-        .select("doc_id", minhash_signature("text", 16).alias("sig"))
-        .collect()
+        for r in minhash_signatures_exploded(
+            _docs(spark), "doc_id", "text", "sig", num_perm=16
+        ).collect()
     }
     assert sigs[1] == sigs[2] == sigs[5]
     overlap_near = sum(a == b for a, b in zip(sigs[1], sigs[3])) / 16
@@ -54,7 +54,9 @@ def test_minhash_identical_and_near(spark):
 def test_lsh_candidates_find_near_dups(spark):
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(_docs(spark), "text", "doc_id").collect()
+        for r in lsh_candidate_pairs_from_buckets(
+            lsh_fingerprints(_docs(spark), "text", "doc_id"), "doc_id"
+        ).collect()
     }
     assert (1, 2) in pairs and (1, 5) in pairs and (2, 5) in pairs
     assert (1, 3) in pairs  # near-dup shares >= 1 band at 16/4 perms
@@ -79,21 +81,6 @@ def test_simhash_hamming(spark):
     ]
     assert out[1] == out[2] == out[5]
     assert d_near < d_far
-
-
-def test_ngram_jaccard_bounds(spark):
-    df = _docs(spark)
-    a = df.where(F.col("doc_id") == 1).select(F.col("text").alias("ta"))
-    pairs = a.crossJoin(df.select(F.col("text").alias("tb"), "doc_id"))
-    out = {
-        r["doc_id"]: r["j"]
-        for r in pairs.select(
-            "doc_id", ngram_jaccard(F.col("ta"), F.col("tb")).alias("j")
-        ).collect()
-    }
-    assert out[1] == 1.0 and out[2] == 1.0 and out[5] == 1.0
-    assert 0.0 < out[3] < 1.0
-    assert out[4] < out[3]
 
 
 def test_brute_force_topk_selfsim(spark):
@@ -127,7 +114,9 @@ def test_ann_recall_vs_bruteforce(spark, sf_dir):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_lsh_topk(q, c, dim=64, k=5, n_planes=2).collect()
+        for r in ann_lsh_topk_dual(q, c, dim=64, k=5, n_planes=2)
+        .where(F.col("method") == "lsh")
+        .collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"ANN recall too low: {recall}"
@@ -135,7 +124,7 @@ def test_ann_recall_vs_bruteforce(spark, sf_dir):
 
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     from evidence_datasource_parsers_spark.operators.ivf import (
-        fit_ivf_centroids,
+        deterministic_centroids,
         ivf_topk,
     )
 
@@ -144,7 +133,7 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    centroids = fit_ivf_centroids(c, n_cells=8)
+    centroids = deterministic_centroids(64, 8)
     assert len(centroids) == 8 and len(centroids[0]) == 64
     exact = {
         (r["query_id"], r["neighbor_id"])
@@ -165,15 +154,28 @@ def test_cosine_kernel_bitwise_matches_expression_tree(spark):
     from pyspark.sql import functions as F
 
     from evidence_datasource_parsers_spark.operators.similarity import (
-        cosine,
         cosine_pairs_udf,
         deterministic_planes,
     )
 
+    def tree_sum(terms):
+        while len(terms) > 1:
+            terms = [
+                terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
+                for i in range(0, len(terms), 2)
+            ]
+        return terms[0]
+
+    def dot(x, y):
+        return tree_sum([F.element_at(x, i + 1) * F.element_at(y, i + 1)
+                         for i in range(7)])
+
     vecs = deterministic_planes(7, 40)  # odd dim exercises the fold tail
     rows = [(vecs[i], vecs[i + 20]) for i in range(20)]
     df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    tree = [r.c for r in df.select(cosine(F.col("a"), F.col("b"), 7).alias("c")).collect()]
+    a, b = F.col("a"), F.col("b")
+    cos = dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+    tree = [r.c for r in df.select(cos.alias("c")).collect()]
     kern = [r.c for r in df.select(cosine_pairs_udf()(F.col("a"), F.col("b")).alias("c")).collect()]
     assert tree == kern  # bit-identical doubles, not approx
 
@@ -317,11 +319,13 @@ def test_duplicate_clusters_from_lsh_pairs(spark, sf_dir):
     members."""
     from evidence_datasource_parsers_spark.operators.dedupe import (
         duplicate_clusters,
-        lsh_candidate_pairs,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = lsh_candidate_pairs(docs, "text", "doc_id", num_perm=16, bands=4)
+    pairs = lsh_candidate_pairs_from_buckets(
+        lsh_fingerprints(docs, "text", "doc_id", num_perm=16, bands=4),
+        "doc_id",
+    )
     clusters = duplicate_clusters(pairs)  # pair columns are id_a/id_b
     rows = clusters.collect()
     assert len(rows) == len({r.doc_id for r in rows})  # one row per doc
@@ -731,31 +735,6 @@ def test_incremental_dedupe_fingerprint_reuse_paths_agree(spark):
     c.pinned.unpersist(); e.pinned.unpersist()
 
 
-def test_lsh_candidate_pairs_from_buckets_matches_text_path(spark):
-    """Bucket-reuse pair mining equals the from-text path."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        lsh_candidate_pairs,
-        lsh_candidate_pairs_from_buckets,
-        lsh_fingerprints,
-    )
-
-    d = _docs(spark)
-    via_text = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(
-            d, "text", "doc_id", mode="word", k=3
-        ).collect()
-    }
-    fp = lsh_fingerprints(d, "text", "doc_id", mode="word", k=3)
-    via_buckets = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs_from_buckets(
-            fp.select("doc_id", "band", "key"), "doc_id"
-        ).collect()
-    }
-    assert via_text == via_buckets and via_buckets
-
-
 def test_incremental_embedding_dedupe_reingest(spark):
     """A re-ingested near-identical vector (cosine ~1) is dropped; an
     orthogonal vector survives; the store grows by the survivors; replay
@@ -807,16 +786,12 @@ def test_incremental_embedding_dedupe_reingest(spark):
 
 def test_ivf_index_maintenance(spark):
     """Incremental IVF: batch appends assign against fixed centroids
-    (existing rows never move), search over the maintained index equals a
-    from-scratch search over the combined corpus, and the occupancy/refit
-    heuristics fire on imbalance."""
+    (existing rows never move), and search over the maintained index
+    equals a from-scratch search over the combined corpus."""
     from evidence_datasource_parsers_spark.operators.ivf import (
         assign_cells,
-        cell_occupancy,
         deterministic_centroids,
-        ivf_add_batch,
         ivf_topk,
-        needs_refit,
     )
 
     dim, n_cells = 8, 4
@@ -831,7 +806,7 @@ def test_ivf_index_maintenance(spark):
     b1, b2 = df.filter(F.col("vec_id") < 25), df.filter(F.col("vec_id") >= 25)
 
     idx1 = assign_cells(b1, cents).localCheckpoint(eager=True)
-    idx2 = ivf_add_batch(idx1, b2, cents)
+    idx2 = idx1.unionByName(assign_cells(b2, cents))
     # appended index ≡ from-scratch assignment of the union
     scratch = assign_cells(df, cents)
     assert sorted(
@@ -862,16 +837,6 @@ def test_ivf_index_maintenance(spark):
         (r.query_id, r.neighbor_id, r.rank) for r in got.collect()
     ) == sorted((r.query_id, r.neighbor_id, r.rank) for r in ref.collect())
 
-    occ = cell_occupancy(idx2)
-    assert occ.agg(F.sum("n")).first()[0] == 40
-    assert not needs_refit(occ, n_cells, max_imbalance=1000.0) or occ.count() < n_cells
-    # a pathologically skewed index must flag
-    skew = spark.createDataFrame(
-        [(i, 0) for i in range(100)] + [(100, 1)], "vec_id long, cell int"
-    )
-    assert needs_refit(cell_occupancy(skew), n_cells=4)
-
-
 
 def test_ivf_topk_rejects_unassigned_corpus(spark):
     """A corpus_assigned frame without the index columns fails loudly,
@@ -898,7 +863,6 @@ def test_multiprobe_lsh_recall_dominates_base(spark, sf_dir):
     so recall vs brute force can only improve; probe rows carry exactly
     1 + multiprobe buckets per (vector, table)."""
     from evidence_datasource_parsers_spark.operators.similarity import (
-        ann_lsh_topk,
         brute_force_topk,
         hyperplane_bucket_rows,
         hyperplane_probe_rows,
@@ -934,17 +898,16 @@ def test_multiprobe_lsh_recall_dominates_base(spark, sf_dir):
         for r in brute_force_topk(queries, corpus, k=5).collect()
     }
 
-    def recall(mp):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ann_lsh_topk(
-                queries, corpus, dim, k=5, n_planes=4, n_tables=2,
-                multiprobe=mp,
-            ).collect()
-        }
+    legs = ann_lsh_topk_dual(
+        queries, corpus, dim, k=5, n_planes=4, n_tables=2, multiprobe=2
+    ).collect()
+
+    def recall(method):
+        got = {(r.query_id, r.neighbor_id) for r in legs
+               if r.method == method}
         return len(got & truth) / len(truth)
 
-    r0, r2 = recall(0), recall(2)
+    r0, r2 = recall("lsh"), recall("lsh_mp")
     assert r2 >= r0  # probe candidates are a superset — recall is monotone
     assert r2 >= 0.5  # measured 0.72 vs 0.24 base on the synthetic corpus
     import pytest as _pytest
@@ -995,162 +958,6 @@ def test_incremental_lsh_hot_bucket_cap(spark):
         fresh = {x["doc_id"] for x in r.fresh.collect()}
         assert fresh == {102}, f"cap={cap}: {fresh}"
         r.pinned.unpersist()
-
-
-def test_lsh_drop_provenance(spark):
-    """The audit twin names the stored doc behind each drop with a reason,
-    and stays silent for survivors."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        incremental_lsh_dedupe,
-        lsh_drop_provenance,
-    )
-
-    stored = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog by the river"),
-         (2, "completely unrelated text about warehouse inventory systems")],
-        "doc_id long, text string",
-    )
-    r = incremental_lsh_dedupe(stored, None, "text", "doc_id",
-                               mode="word", k=3)
-    store = r.store.localCheckpoint(eager=True)
-    r.pinned.unpersist()
-
-    batch = spark.createDataFrame(
-        [(10, "the quick brown fox jumps over the lazy dog by the river"),
-         (11, "the quick brown fox jumps over the lazy dog by the sea"),
-         (12, "a brand new document on solar panel efficiency curves")],
-        "doc_id long, text string",
-    )
-    prov = lsh_drop_provenance(batch, store, "text", "doc_id",
-                               mode="word", k=3, threshold=0.5)
-    rows = {(p.batch_id, p.store_id): p for p in prov.collect()}
-    assert (10, 1) in rows and rows[(10, 1)].reason == "exact"
-    assert (11, 1) in rows and rows[(11, 1)].reason == "near"
-    assert rows[(11, 1)].est_jaccard >= 0.5
-    assert not [k for k in rows if k[0] == 12]  # survivor: no rows
-    # provenance agrees with the operator's actual drops
-    r2 = incremental_lsh_dedupe(batch, store, "text", "doc_id",
-                                mode="word", k=3, threshold=0.5)
-    dropped = {10, 11, 12} - {x.doc_id for x in r2.fresh.collect()}
-    assert dropped == {k[0] for k in rows}
-    r2.pinned.unpersist()
-
-
-def test_soft_dedupe_weights_exact(spark):
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "same text body"),
-            (2, "same text body"),
-            (3, "same text body"),
-            (4, "a different document"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r
-        for r in soft_dedupe_weights(df, mode="exact").collect()
-    }
-    assert len(got) == 4  # nothing dropped
-    for i in (1, 2, 3):
-        assert got[i]["dup_cluster_id"] == 1
-        assert got[i]["dup_cluster_size"] == 3
-        assert abs(got[i]["sample_weight"] - 1 / 3) < 1e-12
-    assert got[4]["dup_cluster_size"] == 1
-    assert got[4]["sample_weight"] == 1.0
-    # alpha=0.5: sqrt downweighting
-    half = soft_dedupe_weights(df, mode="exact", alpha=0.5)
-    w = {r["doc_id"]: r["sample_weight"] for r in half.collect()}
-    assert abs(w[1] - 3 ** -0.5) < 1e-12
-
-
-def test_soft_dedupe_weights_lsh_near_dups(spark):
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the cat "
-        "watches from the warm windowsill in the late afternoon sun"
-    )
-    df = spark.createDataFrame(
-        [
-            (10, base),
-            (11, base.replace("afternoon", "evening")),  # near-dup of 10
-            (12, "completely unrelated content about query planners "
-                 "partitioning shuffle exchanges and adaptive execution"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r
-        for r in soft_dedupe_weights(df, mode="lsh", k=3).collect()
-    }
-    assert got[10]["dup_cluster_id"] == got[11]["dup_cluster_id"] == 10
-    assert got[10]["dup_cluster_size"] == 2
-    assert abs(got[10]["sample_weight"] - 0.5) < 1e-12
-    assert got[12]["dup_cluster_size"] == 1
-    assert got[12]["sample_weight"] == 1.0
-
-
-def test_soft_dedupe_weights_effective_size_conserved(spark):
-    """alpha=1: every cluster contributes exactly one document's worth of
-    weight — the soft-dedup invariant mixture planners rely on."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [(i, f"cluster {i % 3} body") for i in range(9)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = soft_dedupe_weights(df, mode="exact")
-    total = out.agg(F.sum("sample_weight")).collect()[0][0]
-    n_clusters = out.select("dup_cluster_id").distinct().count()
-    assert abs(total - n_clusters) < 1e-9
-
-
-def test_soft_dedupe_null_text_rows_are_singletons(spark):
-    """Failed extractions (NULL text) are not duplicates of each other —
-    they must keep weight 1, never collapse into one mega-cluster."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
-    )
-
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (3, "real body"), (4, "real body")],
-        "doc_id long, text string",
-    )
-    got = {
-        r["doc_id"]: r
-        for r in soft_dedupe_weights(df, mode="exact").collect()
-    }
-    assert got[1]["dup_cluster_size"] == 1
-    assert got[1]["sample_weight"] == 1.0
-    assert got[1]["dup_cluster_id"] == 1
-    assert got[2]["dup_cluster_id"] == 2  # own id, not a shared NULL group
-    assert got[3]["dup_cluster_size"] == 2
-
-
-def test_soft_dedupe_is_idempotent_on_its_own_output(spark):
-    """Re-weighting a prior run (different alpha) must overwrite the
-    three output columns, not raise AMBIGUOUS_REFERENCE or duplicate
-    them."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "same"), (2, "same"), (3, "other")],
-        "doc_id long, text string",
-    )
-    once = soft_dedupe_weights(df, mode="exact", alpha=1.0)
-    twice = soft_dedupe_weights(once, mode="exact", alpha=0.5)
-    assert twice.columns.count("sample_weight") == 1
-    w = {r["doc_id"]: r["sample_weight"] for r in twice.collect()}
-    assert abs(w[1] - 2 ** -0.5) < 1e-12
 
 
 def test_estimated_jaccard_bounds_num_perm():
@@ -1230,16 +1037,33 @@ def test_sql_string_builders_plan_equal_column_forms(spark):
     """The r13 SQL-string expression builders (one py4j round trip per
     select) must generate the SAME optimized logical plan as the Column-API
     forms they replaced — identical plans cannot produce different values.
-    Covers minhash_signatures_exploded's staging/agg chain (via the
-    equivalent Column reconstruction), minhash_bands_sql, and
-    estimated_jaccard's column-name fast path."""
+    Covers minhash_bands_sql (the Column reconstruction below is the
+    pre-r13 code, verbatim) and estimated_jaccard's column-name fast
+    path."""
     import re
 
     from evidence_datasource_parsers_spark.operators.dedupe import (
         estimated_jaccard,
-        minhash_bands,
         minhash_bands_sql,
     )
+
+    def minhash_bands(sig_col, num_perm, bands):
+        rows_per_band = num_perm // bands
+        return F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(
+                        "_",
+                        *[
+                            F.element_at(sig_col, b * rows_per_band + r + 1)
+                            for r in range(rows_per_band)
+                        ],
+                    ).alias("key"),
+                )
+                for b in range(bands)
+            ]
+        )
 
     canon = lambda s: re.sub(r"#\d+", "#", s)  # noqa: E731
 
@@ -1259,37 +1083,6 @@ def test_sql_string_builders_plan_equal_column_forms(spark):
     banded_col = sigs.select(minhash_bands(F.col("a"), 4, 2).alias("bands"))
     assert opt(banded_sql) == opt(banded_col)
     assert banded_sql.collect() == banded_col.collect()
-
-
-def test_ann_lsh_topk_dual_matches_separate_legs(spark, sf_dir):
-    """ann_lsh_topk_dual (one candidate + scoring pass + one window for
-    both legs, r13) must emit the EXACT row multiset of the two separate
-    ann_lsh_topk calls it replaced in q39."""
-    from evidence_datasource_parsers_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_dual,
-    )
-    from evidence_datasource_parsers_spark.plans.catalog import load
-
-    e = load(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    base = ann_lsh_topk(q, c, dim=64, k=5, n_planes=8, n_tables=4)
-    mp = ann_lsh_topk(q, c, dim=64, k=5, n_planes=8, n_tables=4, multiprobe=2)
-    old = base.withColumn("method", F.lit("lsh")).unionByName(
-        mp.withColumn("method", F.lit("lsh_mp"))
-    ).select(
-        "method", "query_id", "neighbor_id", "cosine_sim",
-        F.col("rank").cast("int").alias("rank"),
-    )
-    new = ann_lsh_topk_dual(
-        q, c, dim=64, k=5, n_planes=8, n_tables=4, multiprobe=2
-    ).select("method", "query_id", "neighbor_id", "cosine_sim", "rank")
-    assert sorted(map(tuple, old.collect())) == sorted(
-        map(tuple, new.collect())
-    )
 
 
 def test_lsh_candidate_pairs_plan_is_join_free(spark):

@@ -1,7 +1,7 @@
 """Incremental document-frequency store (operators/df_store.py).
 
 Ground truth is the at-rest scorer (functions/tfidf.py): a store built
-from a corpus must score that corpus identically to bm25_query_scores,
+from a corpus must score that corpus identically to term_relevance's BM25,
 and the additive-delta algebra must make two disjoint batches
 indistinguishable from one."""
 
@@ -60,9 +60,10 @@ def test_two_batch_advance_equals_one_shot(spark):
 
 def test_bm25_against_store_matches_at_rest(spark):
     """Store built from the corpus scores the corpus exactly like the
-    at-rest bm25_query_scores — same formulas, same N/avgdl/df."""
+    at-rest term_relevance BM25 summed over the query terms — same
+    formulas, same N/avgdl/df."""
     from evidence_datasource_parsers_spark.functions.tfidf import (
-        bm25_query_scores,
+        term_relevance,
     )
 
     corpus = _corpus(spark)
@@ -71,9 +72,11 @@ def test_bm25_against_store_matches_at_rest(spark):
     pin: list = []
     at_rest = {
         r.doc_id: round(r.bm25_score, 9)
-        for r in bm25_query_scores(
-            corpus, "doc_id", "text", q, tf_pin=pin
-        ).collect()
+        for r in term_relevance(corpus, "doc_id", "text", tf_pin=pin)
+        .where(F.col("term").isin(q))
+        .groupBy("doc_id")
+        .agg(F.sum("bm25").alias("bm25_score"))
+        .collect()
     }
     for p in pin:
         p.unpersist()

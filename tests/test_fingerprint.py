@@ -1,18 +1,14 @@
-"""Winnowing fingerprints: pure-Python reference equality, the SIGMOD
-guarantee (substring matches of length >= w+k-1 share a fingerprint),
-formatting invariance, and edge cases."""
+"""Winnowing fingerprints (the corpus kernel ``fingerprint_documents``):
+pure-Python reference equality, the SIGMOD guarantee (substring matches of
+length >= w+k-1 share a fingerprint), formatting invariance, and edge
+cases."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.fingerprint import (
     BASE,
     MOD_SMALL,
-    document_fingerprints,
-    fingerprint_overlap,
-    kgram_hashes,
+    fingerprint_documents,
 )
 
 
@@ -40,8 +36,8 @@ def _py_winnow(hashes: list[int], w: int) -> list[int]:
 
 
 def _fp(spark, text, k=5, w=4):
-    df = spark.createDataFrame([(text,)], "t string")
-    return df.select(document_fingerprints("t", k, w).alias("f")).first().f
+    df = spark.createDataFrame([(0, text)], "doc_id long, text string")
+    return fingerprint_documents(df, k=k, w=w).first().fingerprints
 
 
 def test_matches_python_reference(spark):
@@ -67,62 +63,16 @@ def test_formatting_invariance(spark):
 
 
 def test_disjoint_docs_low_overlap(spark):
-    df = spark.createDataFrame(
-        [("abcdefghijklmnop qrstuv wxyz one",),
-         ("0123456789 totally unrelated 999",)],
-        "t string",
-    )
-    row = df.agg(
-        F.collect_list(document_fingerprints("t")).alias("fs")
-    ).first()
-    inter = set(row.fs[0]) & set(row.fs[1])
-    assert len(inter) == 0
-
-
-def test_overlap_metric_and_edges(spark):
-    df = spark.createDataFrame(
-        [("same words entirely", "same words entirely"),
-         (None, "x"), ("", "")],
-        "a string, b string",
-    )
-    got = df.select(
-        fingerprint_overlap(
-            document_fingerprints("a"), document_fingerprints("b")
-        ).alias("j")
-    ).collect()
-    assert got[0].j == pytest.approx(1.0)
-    assert got[1].j == 0.0  # null vs too-short
-    assert got[2].j == 0.0  # both empty is NOT a match
+    a = _fp(spark, "abcdefghijklmnop qrstuv wxyz one")
+    b = _fp(spark, "0123456789 totally unrelated 999")
+    assert a and b
+    assert not set(a) & set(b)
 
 
 def test_short_doc_still_fingerprints(spark):
     # len(norm)=6 with k=5 → 2 grams < w=4 → global min kept
     assert len(_fp(spark, "abcdef")) == 1
     assert _fp(spark, "abc") == []  # shorter than k
-
-
-def test_shared_fingerprint_pairs_finds_copied_passage(spark):
-    from evidence_datasource_parsers_spark.functions.fingerprint import (
-        shared_fingerprint_pairs,
-    )
-
-    passage = "this exact paragraph was copied between two documents"
-    df = spark.createDataFrame(
-        [
-            (1, "intro text before " + passage + " and a unique tail"),
-            (2, passage + " with its own different surroundings"),
-            (3, "entirely unrelated content zq zq zq 12345"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {(r.id_a, r.id_b): r.n_shared
-             for r in shared_fingerprint_pairs(df).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
-    assert all(3 not in p for p in pairs)
-    # plan: inverted-index equi-join, never a cartesian
-    plan = shared_fingerprint_pairs(df)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "CartesianProduct" not in plan
 
 
 def test_winnow_fuzz_matches_reference(spark):
@@ -137,22 +87,3 @@ def test_winnow_fuzz_matches_reference(spark):
         assert got == _py_winnow(_py_kgrams(text, k), w)
 
     check()
-
-
-def test_kernel_equals_column_form(spark):
-    """The Arrow corpus kernel and the single-expression Column form must
-    agree exactly (same polynomial, winnow, and normalization)."""
-    from evidence_datasource_parsers_spark.functions.fingerprint import (
-        fingerprint_documents,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "The quick brown fox JUMPS over\tthe lazy dog"),
-         (2, None), (3, "abc"), (4, "abcdef")],
-        "doc_id long, text string",
-    )
-    via_kernel = {r.doc_id: r.fingerprints
-                  for r in fingerprint_documents(df, "text").collect()}
-    via_col = {r.doc_id: r.f for r in df.select(
-        "doc_id", document_fingerprints("text").alias("f")).collect()}
-    assert via_kernel == via_col

@@ -6,11 +6,10 @@ from __future__ import annotations
 import pytest
 
 from evidence_datasource_parsers_spark.functions.imagemeta import (
-    encode_avif_shell,
-    encode_webp_shell,
     parse_avif,
     parse_webp,
 )
+from media_shells import encode_avif_shell, encode_webp_shell
 
 
 def test_webp_variants():

@@ -134,53 +134,6 @@ def test_plan_has_no_cartesian_or_bnlj(spark):
     assert "BroadcastNestedLoop" not in plan
 
 
-def _ivl(spark, rows, pfx):
-    return spark.createDataFrame(
-        rows, f"{pfx}id int, k string, {pfx}lo double, {pfx}hi double"
-    )
-
-
-@pytest.mark.parametrize("width", [1.0, 5.0, 50.0, 1000.0])
-def test_overlap_join_matches_naive(spark, width):
-    from evidence_datasource_parsers_spark.operators.interval import (
-        interval_overlap_join,
-    )
-
-    a = _ivl(spark, [
-        (1, "a", 0.0, 10.0), (2, "a", 9.0, 20.0), (3, "a", 30.0, 31.0),
-        (4, "b", 0.0, 100.0), (5, "b", 200.0, 150.0),  # inverted
-    ], "a")
-    b = _ivl(spark, [
-        (11, "a", 10.0, 12.0),   # touches 1 (inclusive) and 2
-        (12, "a", 25.0, 29.0),   # overlaps nothing
-        (13, "b", 50.0, 60.0),   # inside 4
-        (14, "c", 0.0, 999.0),   # wrong key
-    ], "b")
-    got = interval_overlap_join(
-        a, b, "alo", "ahi", "blo", "bhi", on="k", bucket_width=width
-    )
-    pairs = sorted((r.aid, r.bid) for r in got.collect())
-    assert pairs == [(1, 11), (2, 11), (4, 13)]
-    # each qualifying pair appears exactly ONCE regardless of width
-    assert len(pairs) == len(set(pairs))
-
-
-def test_overlap_join_no_key(spark):
-    from evidence_datasource_parsers_spark.operators.interval import (
-        interval_overlap_join,
-    )
-
-    a = spark.createDataFrame(
-        [(1, 0.0, 5.0), (2, 10.0, 20.0)], "aid int, alo double, ahi double"
-    )
-    b = spark.createDataFrame(
-        [(11, 4.0, 11.0)], "bid int, blo double, bhi double"
-    )
-    got = interval_overlap_join(a, b, "alo", "ahi", "blo", "bhi",
-                                bucket_width=3.0)
-    assert sorted((r.aid, r.bid) for r in got.collect()) == [(1, 11), (2, 11)]
-
-
 def test_interval_sql_twin_plan_equal_column_form(spark):
     """The r13 SQL-string construction of interval_join /
     count_in_interval (axis/bucket/explode expressions parse from one
@@ -191,11 +144,15 @@ def test_interval_sql_twin_plan_equal_column_form(spark):
 
     from evidence_datasource_parsers_spark.operators.interval import (
         MICROS,
-        _axis,
         _is_temporal,
         count_in_interval,
         interval_join,
     )
+
+    def _axis(c, dtype):
+        if dtype.startswith("timestamp") or dtype == "date":
+            return F.unix_micros(c.cast("timestamp"))
+        return c.cast("double")
 
     def canon(s):
         return re.sub(r"#\d+", "#", s)

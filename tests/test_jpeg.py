@@ -206,10 +206,7 @@ def _other_photo():
 def test_image_phash_near_dup_vs_distinct(spark):
     """Perceptual hashing: a JPEG re-encode of the same photo lands within
     a few bits; a different photo lands tens of bits away; corrupt blobs
-    yield NULL; the pigeonhole pair search finds exactly the re-encode."""
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_near_dup_pairs,
-    )
+    yield NULL."""
     from evidence_datasource_parsers_spark.operators.multimodal import (
         image_phash_frame,
     )
@@ -227,12 +224,6 @@ def test_image_phash_near_dup_vs_distinct(spark):
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(fp[1], fp[2]) <= 6
     assert ham(fp[1], fp[3]) >= 20
-    pairs = hamming_near_dup_pairs(
-        image_phash_frame(df).where("phash IS NOT NULL"), "media_id",
-        "phash", nbits=63, max_hamming=6, n_blocks=9,
-    ).collect()
-    assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
-    assert pairs[0].hamming == ham(fp[1], fp[2])
 
 
 def test_image_phash_format_invariant(spark):
@@ -250,38 +241,6 @@ def test_image_phash_format_invariant(spark):
     )
     fp = {r.media_id: r.phash for r in image_phash_frame(df).collect()}
     assert bin(fp[1] ^ fp[2]).count("1") <= 4
-
-
-def test_hamming_near_dup_pairs_generic_exactness(spark):
-    """The pigeonhole pair search must equal brute force on a seeded
-    fingerprint set (any long column, not just pHash)."""
-    from itertools import combinations
-
-    from evidence_datasource_parsers_spark.operators.dedupe import (
-        hamming_near_dup_pairs,
-    )
-
-    base = 0b1011_0110_1110_0001_1111_0000_1010_0101
-    fps = [
-        (1, base),
-        (2, base ^ 0b101),            # hamming 2... bits 0,2
-        (3, base ^ (1 << 40)),        # hamming 1
-        (4, base ^ 0xFFFF),           # hamming 16 — out of range
-        (5, 0),
-    ]
-    df = spark.createDataFrame(fps, "id long, fp long")
-    got = {
-        (r.id_a, r.id_b): r.hamming
-        for r in hamming_near_dup_pairs(
-            df, "id", "fp", nbits=63, max_hamming=3, n_blocks=6
-        ).collect()
-    }
-    want = {}
-    for (ia, fa), (ib, fb) in combinations(fps, 2):
-        h = bin(fa ^ fb).count("1")
-        if h <= 3:
-            want[(min(ia, ib), max(ia, ib))] = h
-    assert got == want and got  # non-empty: pairs (1,2) and (1,3)
 
 
 def test_incremental_phash_dedupe_two_runs(spark):
@@ -358,5 +317,3 @@ def test_image_phash_frame_string_ids(spark):
     fp = {r["media_id"]: r["phash"] for r in image_phash_frame(df).collect()}
     assert fp["http://a/x.jpg"] is not None
     assert fp["http://a/y.jpg"] is None
-
-

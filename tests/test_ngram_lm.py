@@ -1,18 +1,49 @@
 """n-gram LM: hand-computed bigram probabilities, OOV/empty handling,
 unigram mode, and the filter property (clean text scores lower perplexity
-than garbage under a model trained on clean text)."""
+than garbage under a model trained on clean text).
+
+Documents are scored the way the catalog's perplexity leg does: the
+document n-grams from ``_ngrams``, the model counts from
+``train_ngram_lm``, V from ``lm_vocab_size``, and add-one smoothing
+p(w | ctx) = (c(ctx, w) + 1) / (c(ctx) + V), applied here on the driver."""
 
 from __future__ import annotations
 
 import math
+from collections import Counter, namedtuple
 
 import pytest
+from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.ngram_lm import (
-    doc_perplexity,
+    _ngrams,
     lm_vocab_size,
     train_ngram_lm,
 )
+
+
+Scored = namedtuple("Scored", "doc_id n_grams logprob perplexity")
+
+
+def score_docs(docs, lm, text_col, n):
+    """One ``Scored`` per document (by ``doc_id``) under the model ``lm``."""
+    pairs = Counter({(r.ctx, r.word): r.c for r in lm.collect()})
+    ctx = Counter()
+    for (c, _), k in pairs.items():
+        ctx[c] += k
+    v = lm_vocab_size(lm)
+    grams = docs.select(
+        "doc_id",
+        F.explode(_ngrams(F.coalesce(F.col(text_col), F.lit("")), n))
+        .alias("g"),
+    ).collect()
+    acc = {}
+    for r in grams:
+        lp = math.log((pairs[(r.g.ctx, r.g.word)] + 1) / (ctx[r.g.ctx] + v))
+        n_grams, logprob = acc.get(r.doc_id, (0, 0.0))
+        acc[r.doc_id] = (n_grams + 1, logprob + lp)
+    return [Scored(d, g, lp, math.exp(-lp / g))
+            for d, (g, lp) in sorted(acc.items())]
 
 
 @pytest.fixture()
@@ -31,7 +62,7 @@ def test_trained_counts_and_vocab(lm):
 
 def test_hand_computed_bigram_perplexity(spark, lm):
     docs = spark.createDataFrame([(10, "a b")], "doc_id int, text string")
-    row = doc_perplexity(docs, lm, "text", "doc_id", n=2).collect()[0]
+    row = score_docs(docs, lm, "text", n=2)[0]
     # grams: (<s>,a) p=(1+1)/(1+3); (a,b) p=(1+1)/(2+3); (b,</s>) p=(0+1)/(1+3)
     lp = math.log(0.5) + math.log(0.4) + math.log(0.25)
     assert row.n_grams == 3
@@ -41,7 +72,7 @@ def test_hand_computed_bigram_perplexity(spark, lm):
 
 def test_oov_and_unseen_context_floor(spark, lm):
     docs = spark.createDataFrame([(11, "z z")], "doc_id int, text string")
-    row = doc_perplexity(docs, lm, "text", "doc_id", n=2).collect()[0]
+    row = score_docs(docs, lm, "text", n=2)[0]
     # (<s>,z): (0+1)/(1+3); (z,z) and (z,</s>): unseen ctx → (0+1)/(0+3)
     lp = math.log(0.25) + 2 * math.log(1 / 3)
     assert row.logprob == pytest.approx(lp, rel=1e-12)
@@ -52,7 +83,7 @@ def test_null_and_empty_text_score_eos_only(spark, lm):
         [(1, None), (2, "")], "doc_id int, text string"
     )
     rows = {r.doc_id: r for r in
-            doc_perplexity(docs, lm, "text", "doc_id", n=2).collect()}
+            score_docs(docs, lm, "text", n=2)}
     # single gram (<s>, </s>): unseen pair, seen ctx <s> → (0+1)/(1+3)
     for r in rows.values():
         assert r.n_grams == 1
@@ -65,7 +96,7 @@ def test_unigram_mode(spark):
     counts = {(r.ctx, r.word): r.c for r in lm1.collect()}
     assert counts == {("", "x"): 2, ("", "y"): 1, ("", "</s>"): 1}
     docs = spark.createDataFrame([(5, "x")], "doc_id int, text string")
-    row = doc_perplexity(docs, lm1, "text", "doc_id", n=1).collect()[0]
+    row = score_docs(docs, lm1, "text", n=1)[0]
     # V=3, c_ctx=4: p(x)=(2+1)/(4+3); p(</s>)=(1+1)/(4+3)
     lp = math.log(3 / 7) + math.log(2 / 7)
     assert row.logprob == pytest.approx(lp, rel=1e-12)
@@ -82,5 +113,5 @@ def test_clean_text_beats_garbage(spark):
         "doc_id int, text string",
     )
     ppl = {r.doc_id: r.perplexity for r in
-           doc_perplexity(docs, lm, "text", "doc_id", n=2).collect()}
+           score_docs(docs, lm, "text", n=2)}
     assert ppl[1] < ppl[2]

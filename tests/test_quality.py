@@ -1,57 +1,15 @@
-"""Tests for the hashing-trick lexical quality scorer (functions/quality.py)."""
+"""Tests for the hashing-trick quality features (functions/quality.py)
+and the stopword language guess (functions/textstats.py)."""
 
 from __future__ import annotations
-
-import pytest
 
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.quality import (
     WEIGHT_SCALE,
-    lexical_quality_score,
     placeholder_weight,
-    placeholder_weight_table,
-    score_with_weight_table,
     token_bucket,
 )
-
-DOCS = [
-    (1, "the quick brown fox jumps over the lazy dog"),
-    (2, "THE  QUICK   brown fox"),  # normalization folds case/spacing
-    (3, ""),  # empty text → one empty token, still scored
-    (4, None),  # NULL text → NULL score in both tiers
-    (5, "completely different content about spark engines and parquet"),
-]
-
-
-def _docs(spark):
-    return spark.createDataFrame(DOCS, "doc_id long, text string")
-
-
-def test_expression_and_table_tiers_agree(spark):
-    """The pure-expression score and the broadcast-weight-table score are
-    bit-identical when the table materializes the placeholder family —
-    including NULL and empty documents."""
-    d = _docs(spark)
-    expr = {
-        r.doc_id: r.s
-        for r in d.select(
-            "doc_id", lexical_quality_score(F.col("text")).alias("s")
-        ).collect()
-    }
-    table = {
-        r.doc_id: r.lexical_score
-        for r in score_with_weight_table(
-            d, "text", "doc_id", placeholder_weight_table(spark)
-        ).collect()
-    }
-    assert set(expr) == set(table) == {1, 2, 3, 4, 5}
-    for k in expr:
-        assert expr[k] == table[k], (k, expr[k], table[k])
-    assert expr[4] is None
-    assert expr[3] is not None
-    for k in (1, 2, 3, 5):
-        assert -1.0 <= expr[k] <= 1.0
 
 
 def test_weight_family_bounds_and_bucketing(spark):
@@ -67,86 +25,6 @@ def test_weight_family_bounds_and_bucketing(spark):
     assert all(0 <= r.b < 4096 for r in rows)
     again = {r.id: (r.w, r.b) for r in df.collect()}
     assert {r.id: (r.w, r.b) for r in rows} == again
-
-
-def test_table_tier_broadcasts_weights(spark):
-    """The weight table must reach executors as a broadcast — a shuffle
-    join against a 4096-row model table would be a plan bug."""
-    d = _docs(spark)
-    out = score_with_weight_table(
-        d, "text", "doc_id", placeholder_weight_table(spark)
-    )
-    plan = out._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_sparse_table_scores_missing_tokens_zero(spark):
-    """Tokens whose bucket is absent from the weight table contribute 0 —
-    the sparse-model contract."""
-    d = spark.createDataFrame(
-        [(1, "alpha beta gamma")], "doc_id long, text string"
-    )
-    empty = placeholder_weight_table(spark).where(F.lit(False))
-    out = score_with_weight_table(d, "text", "doc_id", empty).collect()
-    assert out[0].lexical_score == 0.0
-
-
-def test_binned_auc_exact_and_degenerate(spark):
-    from evidence_datasource_parsers_spark.functions.metrics import binned_auc
-
-    # hand-checkable: pos scores {3, 4}, neg {1, 2} → perfect separation
-    df = spark.createDataFrame(
-        [(1.0, 0), (2.0, 0), (3.0, 1), (4.0, 1)], "s double, y int"
-    )
-    assert binned_auc(df, "s", "y") == 1.0
-
-    # one inversion: pos {2, 4}, neg {1, 3} → AUC = 3/4
-    df2 = spark.createDataFrame(
-        [(1.0, 0), (2.0, 1), (3.0, 0), (4.0, 1)], "s double, y int"
-    )
-    assert binned_auc(df2, "s", "y") == pytest.approx(0.75)
-
-    # exhaustive reference check on a mixed set with ties
-    rows = [(float(s), y) for s, y in
-            [(1, 0), (1, 1), (2, 0), (2, 1), (3, 1), (0, 0), (3, 0)]]
-    df3 = spark.createDataFrame(rows, "s double, y int")
-    pos = [s for s, y in rows if y]
-    neg = [s for s, y in rows if not y]
-    ref = sum(
-        1.0 if p > n else 0.5 if p == n else 0.0
-        for p in pos for n in neg
-    ) / (len(pos) * len(neg))
-    assert binned_auc(df3, "s", "y") == pytest.approx(ref)
-
-    # degenerates → 0.5
-    one_class = spark.createDataFrame([(1.0, 1), (2.0, 1)], "s double, y int")
-    assert binned_auc(one_class, "s", "y") == 0.5
-    const = spark.createDataFrame([(1.0, 0), (1.0, 1)], "s double, y int")
-    assert binned_auc(const, "s", "y") == 0.5
-
-
-def test_binned_auc_quality_scorer_calibration(spark):
-    """The intended use: the lexical scorer must rank real-ish sentences
-    above keyboard mash well better than chance."""
-    from evidence_datasource_parsers_spark.functions.metrics import binned_auc
-    from evidence_datasource_parsers_spark.functions.quality import (
-        lexical_quality_score,
-    )
-    from pyspark.sql import functions as F
-
-    good = [f"the quick brown fox jumps over dog number {i}" for i in range(20)]
-    junk = [f"zxq{i} qqzz vvkk jjww ppqq {i}zz" for i in range(20)]
-    df = spark.createDataFrame(
-        [(t, 1) for t in good] + [(t, 0) for t in junk], "text string, y int"
-    ).withColumn("q", lexical_quality_score(F.col("text")))
-    auc = binned_auc(df, "q", "y")
-    assert 0.0 <= auc <= 1.0
-    assert auc != 0.5  # the scorer is not blind on this fixture
 
 
 def test_lang_guess_six_languages(spark):
@@ -165,115 +43,3 @@ def test_lang_guess_six_languages(spark):
     got = {r.i: r.g for r in
            df.select("i", lang_guess("text").alias("g")).collect()}
     assert got == {1: "it", 2: "pt", 3: "en"}
-
-
-def test_train_quality_classifier_separates_heldout(spark):
-    """NB-trained weights: prose-vocabulary docs score above spam-vocabulary
-    docs on HELD-OUT text; shared vocabulary gets near-zero weights."""
-    from evidence_datasource_parsers_spark.functions.quality import (
-        score_with_weight_table,
-        train_quality_classifier,
-    )
-
-    prose = "the quick brown fox jumps over a lazy dog near the river bank"
-    spam = "win free casino bonus click buy cheap pills viagra lottery now"
-    train = spark.createDataFrame(
-        [(i, f"{prose} common words here", 1) for i in range(8)]
-        + [(100 + i, f"{spam} common words here", 0) for i in range(8)],
-        "doc_id long, text string, label int",
-    )
-    weights = train_quality_classifier(train, "text", "label")
-    # integer weights within the scale contract
-    import pyspark.sql.functions as F2
-
-    stats = weights.agg(
-        F2.max(F2.abs(F2.col("weight"))).alias("m"),
-    ).collect()[0]
-    assert stats["m"] == 1000  # normalizer maps the extreme to ±SCALE
-
-    held = spark.createDataFrame(
-        [
-            (1, "quick fox jumps over the river dog"),
-            (2, "free casino pills click lottery bonus"),
-            (3, "common words here"),  # shared vocab only
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r["lexical_score"] for r in
-           score_with_weight_table(held, "text", "doc_id", weights).collect()}
-    assert out[1] > 0.2 and out[2] < -0.2
-    assert abs(out[3]) < abs(out[1]) and abs(out[3]) < abs(out[2])
-
-
-def test_train_quality_classifier_deterministic_under_repartition(spark):
-    from evidence_datasource_parsers_spark.functions.quality import (
-        train_quality_classifier,
-    )
-
-    train = spark.createDataFrame(
-        [(i, f"alpha beta gamma doc {i % 3}", i % 2) for i in range(20)],
-        "doc_id long, text string, label int",
-    )
-    w1 = {r["bucket"]: r["weight"] for r in
-          train_quality_classifier(train, "text", "label").collect()}
-    w2 = {r["bucket"]: r["weight"] for r in
-          train_quality_classifier(
-              train.repartition(7), "text", "label").collect()}
-    assert w1 == w2 and w1
-
-
-def test_train_quality_classifier_clip_quantile_survives_poison(spark):
-    """Adversarial seed set: ONE rare token repeated thousands of times in
-    a single positive doc owns the max-|llr| normalizer and compresses
-    every informative weight toward 0 after integer quantization.
-    clip_quantile caps the normalizer at a per-bucket |llr| quantile, so
-    the poison bucket saturates at ±SCALE and held-out separation
-    survives."""
-    import pyspark.sql.functions as F2
-    import pytest
-
-    from evidence_datasource_parsers_spark.functions.quality import (
-        score_with_weight_table,
-        train_quality_classifier,
-    )
-
-    prose = "the quick brown fox jumps over a lazy dog near the river bank"
-    spam = "win free casino bonus click buy cheap pills viagra lottery now"
-    poison = ("qqqpoisonqqq " * 5000).strip()
-    train = spark.createDataFrame(
-        [(i, f"{prose} common words here", 1) for i in range(8)]
-        + [(50, poison, 1)]
-        + [(100 + i, f"{spam} common words here", 0) for i in range(8)],
-        "doc_id long, text string, label int",
-    )
-    held = spark.createDataFrame(
-        [(1, "quick fox jumps over the river dog"),
-         (2, "free casino pills click lottery bonus")],
-        "doc_id long, text string",
-    )
-
-    def sep(weights):
-        out = {r["doc_id"]: r["lexical_score"] for r in
-               score_with_weight_table(held, "text", "doc_id",
-                                       weights).collect()}
-        return out[1] - out[2], out
-
-    plain = train_quality_classifier(train, "text", "label")
-    clipped = train_quality_classifier(
-        train, "text", "label", clip_quantile=0.9
-    )
-    s_plain, _ = sep(plain)
-    s_clip, out = sep(clipped)
-    # poisoned-but-unclipped still orders correctly, yet the margin is
-    # compressed; the clipped table recovers ≥2× the separation and the
-    # held-out docs clear the calibration thresholds the clean-seed test
-    # (above) uses
-    assert s_clip > 2 * s_plain > 0
-    assert out[1] > 0.2 and out[2] < -0.2
-    # weights stay inside the integer scale contract in both modes
-    for w in (plain, clipped):
-        m = w.agg(F2.max(F2.abs(F2.col("weight")))).collect()[0][0]
-        assert m == 1000
-
-    with pytest.raises(ValueError, match="clip_quantile"):
-        train_quality_classifier(train, "text", "label", clip_quantile=1.5)

@@ -73,35 +73,6 @@ def test_topk_recall_survives_quantization(spark, sf_dir):
     assert recall >= 0.9, f"int8 round trip lost too much recall: {recall}"
 
 
-def test_quantized_topk_recall_vs_float(spark, sf_dir):
-    """Search directly on int8 (no dequantize pass): top-5 must agree with
-    the float brute force on >=90% of pairs."""
-    from evidence_datasource_parsers_spark.operators.quantize import (
-        quantized_topk,
-    )
-    from evidence_datasource_parsers_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    e = quantize_embeddings(_emb(spark, sf_dir))
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding", "q_embedding"
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"), "embedding", "q_embedding"
-    )
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(q, c, k=5).collect()
-    }
-    quant = {
-        (r.query_id, r.neighbor_id)
-        for r in quantized_topk(q, c, k=5).collect()
-    }
-    recall = len(exact & quant) / len(exact)
-    assert recall >= 0.9, f"int8 search recall too low: {recall}"
-
-
 def test_incremental_embedding_dedupe_quantized_store(spark):
     """The int8 store drops the same re-ingests the float store does, old
     store rows never drift (quantized exactly once), and the store schema

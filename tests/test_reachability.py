@@ -20,11 +20,15 @@
     name would fail no import at collection time.
 (d) Every top-level def and class of a reached module is named by a
     runtime root, directly or through other reached defs, unless it is
-    listed in ``UNREACHED_DEFS``.  That list may only shrink: an entry
-    that gains a caller or no longer exists fails too.
+    listed in ``UNREACHED_DEFS`` with the SURVEY row it implements, or
+    only such a def names it.  An entry that gains a caller or no longer
+    exists fails too.
 (e) The test files bind no top-level name twice (Python keeps only the
     last binding, so an earlier test of the same name never runs), and
     every ``tests/slow_tests.txt`` entry names an existing test.
+(f) Every module-level assignment or import in the package binds a name
+    that something reads: an orphaned constant or import left behind by a
+    deleted def fails here.
 """
 
 from __future__ import annotations
@@ -72,64 +76,15 @@ DEFERRED = {
 }
 
 #: Top-level defs that no runtime root names, outside ``KEPT`` and
-#: ``DEFERRED`` modules (module → names).  Each is covered only by its own
-#: tests; the next cuts delete them with those tests, or give them a caller.
+#: ``DEFERRED`` modules, kept on purpose ("module.def" → reason).  Defs
+#: only these use count as reached through them.
 UNREACHED_DEFS = {
-    "functions.fingerprint": {
-        "document_fingerprints", "fingerprint_overlap", "hashes_from_chars",
-        "kgram_hashes", "normalized_chars", "shared_fingerprint_pairs",
-    },
-    "functions.hashing": {"minhash_base", "minhash_base_sql"},
-    "functions.imagemeta": {
-        "_riff_chunk", "encode_avif_shell", "encode_webp_shell",
-    },
-    "functions.metrics": {"binned_auc", "gini_grouped_pandas"},
-    "functions.ngram_lm": {"doc_perplexity"},
-    "functions.pvalues": {"magnitude_exponent"},
-    "functions.quality": {
-        "lexical_quality_score", "placeholder_weight_table",
-        "score_with_weight_table", "train_quality_classifier",
-    },
-    "functions.textstats": {
-        "compression_ratio", "duplicate_line_fraction", "pii_counts",
-        "punct_ratio", "repetition_signals", "scrub_pii",
-        "top_ngram_char_fraction", "word_ngrams",
-    },
-    "functions.tfidf": {"bm25_query_scores", "release_tf_pins"},
-    "functions.urls": {"dedupe_by_url", "filter_urls"},
-    "operators.dedupe": {
-        "hamming_near_dup_pairs", "lsh_candidate_pairs", "lsh_drop_provenance",
-        "minhash_bands", "minhash_signature", "ngram_jaccard",
-        "read_simhash_index_meta", "shingle_bases", "soft_dedupe_weights",
-        "with_minhash_signature", "with_simhash", "word_shingles",
-        "write_simhash_index_meta",
-    },
-    "operators.interval": {"_axis", "interval_overlap_join"},
-    "operators.ivf": {
-        "cell_occupancy", "fit_ivf_centroids", "ivf_add_batch", "needs_refit",
-    },
-    "operators.quantize": {"quantized_topk"},
-    "operators.reshape": {"nullify_empty_string", "regex_cleanup_chain"},
-    "operators.semdedup": {"semantic_dedupe"},
-    "operators.sharding": {"write_shards"},
-    "operators.similarity": {
-        "ann_lsh_topk", "cosine", "dot", "dot_sql", "norm_sql", "sql_tree",
-    },
-    "operators.sketches": {
-        "_bloom_bit", "_cms_bucket", "bloom_params", "bottomk_merge_stores",
-        "cms_params", "compact_bottomk_store", "histogram_percentiles",
-        "histogram_store_percentiles", "incremental_histogram",
-        "read_bottomk_store_meta", "write_bottomk_store_meta",
-    },
-    "operators.span_dedup": {
-        "compact_gram_store", "read_gram_store_meta", "write_gram_store_meta",
-    },
-    "operators.windows": {"top_1_per_group_agg"},
-    "sources.readers": {
-        "_strip_compression", "_xlsx_cell_col", "_xlsx_grid", "from_pandas",
-        "read_excel", "read_orc", "read_path", "read_xml_elements",
-        "stage_remote",
-    },
+    "sources.readers.stage_remote":
+        "SURVEY S9: remote file staging (addFile + SparkFiles.get)",
+    "sources.readers.read_excel":
+        "SURVEY S10: Excel scan (sheets, multi-row headers, skip rows)",
+    "sources.readers.read_xml_elements":
+        "SURVEY S11: XML scan (ElementTree walk to a DataFrame)",
 }
 
 SUBPACKAGES = ("operators", "functions", "sources", "pipelines")
@@ -317,18 +272,19 @@ def _names_in(node) -> set[str]:
     return out
 
 
-def _unreached_defs() -> dict[str, set[str]]:
+def _unreached_defs(also_reached=()) -> dict[str, set[str]]:
     """Top-level defs of the package that no runtime root reaches by name
     (module, without the package prefix → names).
 
     The roots are ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` and
     ``tools/``, every def in ``plans/`` and ``pipelines/``, and the
     ``runner``, ``validation``, ``enrich``, ``__main__`` and ``session``
-    modules.  Module-level statements run on import, so they count as
-    reached too.  A def is reached once a reached body names it."""
+    modules, plus the ``also_reached`` defs ("module.def").  Module-level
+    statements run on import, so they count as reached too.  A def is
+    reached once a reached body names it."""
     whole = {"runner", "validation", "enrich", "__main__", "session"}
     defs: dict[tuple[str, str], ast.AST] = {}
-    reached: set[str] = set()
+    reached = {d.rsplit(".", 1)[1] for d in also_reached}
     for mod, path in _package_modules().items():
         short = mod.removeprefix(f"{PKG}.")
         root = short in whole or short.startswith(("plans.", "pipelines."))
@@ -360,17 +316,95 @@ def _unreached_defs() -> dict[str, set[str]]:
 
 def test_every_def_reached_or_allowlisted():
     exempt = {m.removeprefix(f"{PKG}.") for m in set(KEPT) | DEFERRED}
-    unreached = {m: names for m, names in _unreached_defs().items()
-                 if m not in exempt}
-    new = sorted(f"{m}.{n}" for m, names in unreached.items()
-                 for n in names - UNREACHED_DEFS.get(m, set()))
+
+    def unreached(also_reached=()):
+        return {f"{m}.{n}" for m, names in _unreached_defs(also_reached)
+                .items() if m not in exempt for n in names}
+
+    stale = sorted(set(UNREACHED_DEFS) - unreached())
+    assert stale == [], (
+        f"UNREACHED_DEFS entries {stale} are reached or gone: drop them")
+    new = sorted(unreached(UNREACHED_DEFS))
     assert new == [], (
         f"unreached defs {new}: delete them (with the tests that only "
         "exercise them) or give them a runtime caller")
-    stale = sorted(f"{m}.{n}" for m, names in UNREACHED_DEFS.items()
-                   for n in names - unreached.get(m, set()))
-    assert stale == [], (
-        f"UNREACHED_DEFS entries {stale} are reached or gone: drop them")
+
+
+def _module_bindings(body):
+    """(statement, name) for each name a module body binds by assignment
+    or import, including under a top-level ``if``/``try``/``with``.
+    Dunders and ``__future__`` imports are exempt, and so is ``import
+    a.b``: it loads a submodule for its side effects."""
+    for node in body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = getattr(node, "targets", None) or [node.target]
+            names = [n.id for t in targets for n in ast.walk(t)
+                     if isinstance(n, ast.Name)]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            names = [a.asname or a.name for a in node.names]
+        elif isinstance(node, ast.Import):
+            names = [a.asname or a.name for a in node.names
+                     if a.asname or "." not in a.name]
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            for field in ("body", "orelse", "finalbody"):
+                yield from _module_bindings(getattr(node, field, []))
+            for handler in getattr(node, "handlers", []):
+                yield from _module_bindings(handler.body)
+            continue
+        else:
+            continue
+        yield from ((node, n) for n in names
+                    if not (n.startswith("__") and n.endswith("__")))
+
+
+def test_every_module_level_name_is_named():
+    """A module-level assignment or import binds a name that its own
+    module reads, or that some other file names: as a ``from <module>
+    import`` name, as an identifier string, or (assignments only) as an
+    attribute.  An import's name is also some other module's attribute
+    (``DataFrame``, ``F``), so an attribute elsewhere says nothing about
+    it.  Files looked at: the package, ``tests/``, ``tools/``,
+    ``perfbench/``, ``bench.py`` and ``__spark_entry__.py``.  Matching
+    other files by bare name can only make a binding look used."""
+    modules = _package_modules()
+    files = list(modules.values()) + [
+        os.path.join(REPO, "__spark_entry__.py"),
+        os.path.join(REPO, "bench.py"),
+    ]
+    for sub in ("tests", "tools", "perfbench"):
+        files += glob.glob(os.path.join(REPO, sub, "*.py"))
+    trees = {path: ast.parse(open(path).read()) for path in files}
+    imported: set[tuple[str, str]] = set()
+    strings: set[str] = set()
+    attrs: set[str] = set()
+    own: dict[str, set[str]] = {}
+    for path, tree in trees.items():
+        used = own[path] = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+                attrs.add(n.attr)
+            elif isinstance(n, ast.ImportFrom) and n.module:
+                imported.update((n.module, a.name) for a in n.names)
+            elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                  and _IDENT.match(n.value)):
+                used.add(n.value)
+                strings.add(n.value)
+
+    def named(mod, path, node, name):
+        is_import = isinstance(node, (ast.Import, ast.ImportFrom))
+        return (name in own[path] or (mod, name) in imported
+                or name in strings or not is_import and name in attrs)
+
+    dead = sorted(
+        f"{os.path.relpath(path, REPO)}:{node.lineno}: {name}"
+        for mod, path in modules.items()
+        for node, name in _module_bindings(trees[path].body)
+        if not named(mod, path, node, name)
+    )
+    assert dead == [], f"module-level names nothing names: {dead}"
 
 
 def test_test_files_bind_each_name_once_and_slow_list_is_live():

@@ -1,5 +1,5 @@
-"""I/O tier tests: autodetect reader dispatch, forced schemas, skipRows,
-single-file gzip JSON sink contract."""
+"""I/O tier tests: forced schemas, skipRows, Excel/XML scans, remote
+staging, single-file gzip JSON sink contract."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from evidence_datasource_parsers_spark.sources.readers import (
     read_excel,
     from_rows,
     read_csv,
-    read_path,
 )
 from evidence_datasource_parsers_spark.sources.sinks import (
     write_evidence_strings,
@@ -39,24 +38,6 @@ def test_read_csv_multiline_quoted(spark, tmp_path):
     p.write_text('id,desc\n1,"line one\nline two"\n')
     df = read_csv(spark, str(p), multiline=True)
     assert df.collect()[0]["desc"] == "line one\nline two"
-
-
-def test_read_path_dispatch(spark, tmp_path):
-    (tmp_path / "a.tsv").write_text("x\ty\n1\t2\n")
-    (tmp_path / "b.json").write_text('{"k": 1}\n{"k": 2}\n')
-    tsv = read_path(spark, str(tmp_path / "a.tsv"), infer_schema=True)
-    assert tsv.columns == ["x", "y"] and tsv.count() == 1
-    js = read_path(spark, str(tmp_path / "b.json"))
-    assert js.count() == 2
-
-
-def test_read_path_mixed_dir_rejected(spark, tmp_path):
-    d = tmp_path / "mixed"
-    d.mkdir()
-    (d / "a.csv").write_text("x\n1\n")
-    (d / "b.json").write_text("{}\n")
-    with pytest.raises(ValueError, match="mixed-format"):
-        read_path(spark, str(d))
 
 
 def test_write_evidence_strings_single_file(spark, tmp_path):
@@ -121,18 +102,8 @@ def test_stage_remote_file_url(spark, tmp_path):
     src = tmp_path / "remote.tsv"
     src.write_text("gene\tscore\ng1\t0.5\n")
     local = stage_remote(spark, f"file://{src}")
-    df = read_path(spark, local, infer_schema=True)
+    df = read_csv(spark, local, sep="\t", infer_schema=True)
     assert df.collect()[0]["gene"] == "g1"
-
-
-def test_from_pandas_arrow_boundary(spark):
-    import pandas as pd
-
-    from evidence_datasource_parsers_spark.sources.readers import from_pandas
-
-    pdf = pd.DataFrame({"a": [1, 2], "b": ["x", "y"]})
-    df = from_pandas(spark, pdf)
-    assert df.orderBy("a").collect()[1]["b"] == "y"
 
 
 def test_write_evidence_strings_parallel_mode(spark, tmp_path):
@@ -342,26 +313,6 @@ def test_read_excel_unreferenced_cells_and_all_none_column(spark, tmp_path):
     assert dict(df.dtypes)["empty"] == "string"  # all-None column survives
     rows = sorted((r["a"], r["empty"], r["b"]) for r in df.collect())
     assert rows == [(1.0, None, "x"), (2.0, None, "y")]
-
-
-def test_orc_roundtrip_and_dispatch(spark, tmp_path):
-    """ORC read via read_path autodetect and read_orc."""
-    from evidence_datasource_parsers_spark.sources.readers import (
-        read_orc,
-        read_path,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", -2.0)], "id long, s string, x double"
-    )
-    out = str(tmp_path / "t.orc")
-    df.write.orc(out)
-    back = read_path(spark, out)
-    assert sorted((r.id, r.s, r.x) for r in back.collect()) == [
-        (1, "a", 1.5),
-        (2, "b", -2.0),
-    ]
-    assert read_orc(spark, out).schema == back.schema
 
 
 def test_compaction_flat_dir(spark, tmp_path):

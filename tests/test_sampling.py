@@ -233,40 +233,6 @@ def test_assign_shards_deterministic_and_balanced(spark):
         assign_shards(df, "doc_id", 0)
 
 
-def test_write_shards_layout_and_order(spark, tmp_path):
-    """write_shards materializes one directory per shard with rows stored
-    in shard_pos order (byte-stable across cluster sizes)."""
-    from evidence_datasource_parsers_spark.operators.sharding import (
-        assign_shards,
-        write_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(200)], "doc_id long, text string"
-    )
-    out = str(tmp_path / "shards")
-    write_shards(df, out, "doc_id", 4)
-    back = spark.read.parquet(out)
-    assert {r.shard for r in back.select("shard").distinct().collect()} == set(
-        range(4)
-    )
-    expect = {
-        r.doc_id: (r.shard, r.shard_pos)
-        for r in assign_shards(df, "doc_id", 4).collect()
-    }
-    assert {
-        r.doc_id: (r.shard, r.shard_pos) for r in back.collect()
-    } == expect
-    # within each file, rows are physically in shard_pos order
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    for part in Path(out).glob("shard=*/**/*.parquet"):
-        t = pq.read_table(part, columns=["shard_pos"])
-        poss = t.column("shard_pos").to_pylist()
-        assert poss == sorted(poss), str(part)
-
-
 def test_quality_binned_sample_fractions_and_bins(spark):
     from evidence_datasource_parsers_spark.operators.sampling import (
         quality_binned_sample,
@@ -436,12 +402,14 @@ def test_weighted_hash_sample_determinism_and_rates(spark):
 
 
 def test_weighted_sample_neutralizes_duplicate_mass(spark):
-    """End-to-end with soft_dedupe_weights: a 10x-duplicated boilerplate
-    cluster contributes ~one document's expectation, same as a singleton."""
+    """With 1/n duplicate weights (each exact-duplicate cluster of n docs
+    weighs 1/n per doc), a 500x-duplicated boilerplate cluster contributes
+    ~one document's expectation, same as a singleton."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from evidence_datasource_parsers_spark.operators.dedupe import (
-        soft_dedupe_weights,
+        content_hash,
     )
     from evidence_datasource_parsers_spark.operators.sampling import (
         weighted_hash_sample,
@@ -450,7 +418,10 @@ def test_weighted_sample_neutralizes_duplicate_mass(spark):
     rows = [(i, "the same boilerplate page body") for i in range(500)]
     rows += [(1000 + i, f"unique document number {i}") for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    weighted = soft_dedupe_weights(df, mode="exact")
+    cluster = Window.partitionBy(content_hash("text"))
+    weighted = df.withColumn(
+        "sample_weight", 1.0 / F.count(F.lit(1)).over(cluster)
+    )
     out = weighted_hash_sample(weighted, "doc_id", 0.5)
     dup_kept = out.where(F.col("doc_id") < 1000).count()
     uniq_kept = out.where(F.col("doc_id") >= 1000).count()

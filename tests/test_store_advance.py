@@ -160,10 +160,9 @@ def test_exact_store_delta_matches_store(spark):
 def test_span_delta_append_advance_equivalence(spark, tmp_path):
     """The gram store is append-only too: three batches advanced by
     appending deltas to a dir clean documents exactly as carrying the
-    in-plan merged store would, saturated grams stop contributing delta
-    rows, and compaction mid-stream changes nothing."""
+    in-plan merged store would, and saturated grams stop contributing
+    delta rows."""
     from evidence_datasource_parsers_spark.operators.span_dedup import (
-        compact_gram_store,
         incremental_span_dedupe,
     )
 
@@ -224,17 +223,6 @@ def test_span_delta_append_advance_equivalence(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
     assert all(per_gram[h] == 2 for h in shared_hashes)  # b1 + b2 only
-
-    # compaction is exact: decisions after compacting == raw history
-    compacted = compact_gram_store(store, 2).localCheckpoint(eager=True)
-    b4 = _docs(spark, [(4, f"g1 g2 g3 g4 z1 z2 z3 z4")])
-    r_raw = incremental_span_dedupe(b4, store, min_tokens=4)
-    r_cmp = incremental_span_dedupe(b4, compacted, min_tokens=4)
-    raw = {(r["doc_id"], r["clean_text"]) for r in r_raw.cleaned.collect()}
-    cmp_ = {(r["doc_id"], r["clean_text"]) for r in r_cmp.cleaned.collect()}
-    assert raw == cmp_
-    r_raw.pinned.unpersist()
-    r_cmp.pinned.unpersist()
 
 
 def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):

@@ -1,6 +1,5 @@
-"""TF-IDF / BM25: hand-computed values, query scoring, and the
-filter-pushdown safety property (corpus statistics must come from the FULL
-corpus even when scoring a tiny query)."""
+"""TF-IDF / BM25: hand-computed values, boilerplate demotion, plan shape
+and the tf cache pin contract."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.tfidf import (
-    bm25_query_scores,
     term_relevance,
     tokenize,
 )
@@ -46,24 +44,6 @@ def test_term_relevance_hand_computed(corpus):
     assert (4 not in {d for d, _ in rel}) is True
 
 
-def test_bm25_query_scores_full_corpus_stats(spark, corpus):
-    """The isin() filter must NOT shrink doc_freq / avgdl: scoring a
-    one-term query must reproduce the unfiltered relevance numbers."""
-    full = {(r.doc_id, r.term): r.bm25 for r in
-            term_relevance(corpus, "doc_id", "text").collect()}
-    got = {r.doc_id: r.bm25_score for r in
-           bm25_query_scores(corpus, "doc_id", "text", ["cat"]).collect()}
-    assert set(got) == {1, 2}
-    assert got[1] == pytest.approx(full[(1, "cat")], abs=1e-12)
-    assert got[2] == pytest.approx(full[(2, "cat")], abs=1e-12)
-    # multi-term query sums per-term contributions
-    got2 = {r.doc_id: r.bm25_score for r in
-            bm25_query_scores(corpus, "doc_id", "text",
-                              ["cat", "bark"]).collect()}
-    assert got2[3] == pytest.approx(full[(3, "bark")], abs=1e-12)
-    assert got2[2] == pytest.approx(full[(2, "cat")], abs=1e-12)
-
-
 def test_tokenize_drops_empties(spark):
     df = spark.createDataFrame([("  a  b ",)], "t string")
     toks = df.select(tokenize("t").alias("x")).collect()[0].x
@@ -95,22 +75,17 @@ def test_term_relevance_plan_shape(spark, corpus):
     assert "InMemoryTableScan" in plan  # cached tf feeds the consumers
 
 
-def test_bm25_query_edge_cases(spark, corpus):
-    # no term matches any document → empty result, not an error
-    none = bm25_query_scores(corpus, "doc_id", "text", ["zzzz"])
-    assert none.count() == 0
-    # empty query → empty result
-    empty = bm25_query_scores(corpus, "doc_id", "text", [])
-    assert empty.count() == 0
-
-
 def test_tf_pin_contract_bounded_fifo(spark, corpus):
     """ADVICE r4: the tf cache handle must not accumulate for the session
     lifetime.  Caller-owned pin via tf_pin=[]; handle-less calls go into a
     bounded FIFO that unpersists the oldest past the cap."""
     from evidence_datasource_parsers_spark.functions import tfidf as T
 
-    T.release_tf_pins()
+    def release_fifo():
+        while T._PINNED_TF:
+            T._PINNED_TF.pop().unpersist()
+
+    release_fifo()
     # caller-owned handle
     pin = []
     out = term_relevance(corpus, "doc_id", "text", tf_pin=pin)
@@ -126,5 +101,5 @@ def test_tf_pin_contract_bounded_fifo(spark, corpus):
             term_relevance(corpus.limit(3 + i), "doc_id", "text")
         )
     assert len(T._PINNED_TF) == T._PINNED_TF_MAX
-    T.release_tf_pins()
-    assert not T._PINNED_TF
+    assert all(f.is_cached for f in T._PINNED_TF)
+    release_fifo()

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from evidence_datasource_parsers_spark.functions.urls import (
     canonicalize_url_sql,
-    dedupe_by_url,
     registrable_domain_sql,
 )
 
@@ -115,60 +114,3 @@ def test_canonicalize_url_idempotent_fuzz(spark):
     )
     bad = [(urls[r.i], r.c1, r.c2) for r in out if r.c1 != r.c2]
     assert not bad, bad[:5]
-
-
-def test_dedupe_by_url_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [
-            (3, "http://Example.com/a?utm_source=x", "later alias"),
-            (1, "http://example.com/a", "first"),
-            (2, "http://example.com/b", "other"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    out = {r.doc_id for r in dedupe_by_url(df, "url", "doc_id").collect()}
-    assert out == {1, 2}
-
-
-def test_filter_urls_blocklist_and_patterns(spark):
-    from evidence_datasource_parsers_spark.functions.urls import filter_urls
-
-    rows = [
-        (1, "http://good.example/article/1"),
-        (2, "http://cdn.spam.example/x"),        # subdomain of blocked
-        (3, "http://spam.example/y"),            # blocked exactly
-        (4, "http://good.example/tag/cats"),     # path pattern junk
-        (5, "http://good.example/Login?next=/"), # pattern, case-insensitive
-        (6, None),                               # null URL
-        (7, "http://other.example/fine"),
-    ]
-    df = spark.createDataFrame(rows, "id long, url string")
-    kept = filter_urls(
-        df, "url",
-        block_domains=["spam.example"],
-        block_patterns=[r"/tag/", r"/login"],
-    )
-    assert {r.id for r in kept.collect()} == {1, 7}
-    # allowlist mode
-    only = filter_urls(df, "url", allow_domains=["good.example"])
-    assert {r.id for r in only.collect()} == {1, 4, 5}
-    # null URLs kept on request
-    withnull = filter_urls(df, "url", keep_null_urls=True)
-    assert 6 in {r.id for r in withnull.collect()}
-    # ADVICE r5: allowlist + keep_null_urls must still keep NULL-host rows
-    # (a bare isin is NULL for a NULL domain and where() would drop it)
-    both = filter_urls(
-        df, "url", allow_domains=["good.example"], keep_null_urls=True
-    )
-    assert {r.id for r in both.collect()} == {1, 4, 5, 6}
-
-
-def test_filter_urls_is_codegen_native(spark):
-    """The gate must stay in whole-stage codegen: no Python eval nodes."""
-    from evidence_datasource_parsers_spark.functions.urls import filter_urls
-
-    df = spark.createDataFrame([(1, "http://a.example/x")], "id long, url string")
-    plan = filter_urls(
-        df, "url", block_domains=["b.example"], block_patterns=["/junk"]
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
